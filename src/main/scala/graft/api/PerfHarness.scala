@@ -72,12 +72,6 @@ object PerfHarness {
     // journey() already makes; one tiny job, stats-not-guesses.
     engine.walkTo.count()
     val g = engine.projected(java.sql.Date.valueOf(date), speed)
-    // localIndex resolves the regime itself (count-only isUnderCap gate)
-    // and then runs the CSR edge collect CONCURRENTLY with the
-    // node-attribute collect. The previous explicit `g.sssp.isLocal` here
-    // forced the CSR collect to COMPLETE first, serializing the two
-    // bounded collects localIndex exists to overlap (r21; the overlap is
-    // the tail of every fresh projection's warm-up).
     g.localIndex match {
       case Some(ix) => ix.byName; ix.stopDim // warm the driver-side indexes
       case None => g.stopDim.count()

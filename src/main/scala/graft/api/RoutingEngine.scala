@@ -61,12 +61,11 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
 
   private val spark: SparkSession = gtfs.stops.sparkSession
 
-  /** SESSION-LOCAL regime evidence (r19, r18 verdict #2): counters only
+  /** Per-engine regime evidence (r19, r18 verdict #2): counters only
     * THIS engine's routing calls advance — its projections' TransitSssp
-    * runners bump it alongside the process-global telemetry. Regime-proof
-    * `require`s (the zero-cycle catalog row, forced-regime specs) read
-    * this instead of diffing global AtomicLongs a concurrent session
-    * could advance. */
+    * runners bump it. Regime-proof `require`s (the zero-cycle catalog row,
+    * forced-regime specs) and the scale tools read it; no process-global
+    * copy exists for a concurrent session to advance. */
   val evidence = new graft.graph.TransitSssp.RegimeEvidence
 
   /** WALK_TO is day-independent — build once, reuse across projections. */

@@ -324,18 +324,13 @@ object ShortestPaths {
     // threshold+1 tuples, ~100-200 MB, to the driver even when the
     // answer was "distributed regime, discard"; a limit(cap+1).count()
     // probe would be no better, gathering the rows into one partition
-    // for the GlobalLimit.) Separate from the collect so a caller can
-    // resolve the regime first and overlap its own bounded collects with
-    // the CSR build (TimeExpandedGraph.localIndex does).
-    private[graft] lazy val isUnderCap: Boolean = {
-      val cap = math.min(localThreshold, (Int.MaxValue - 2).toLong)
-      e.count() <= cap
-    }
+    // for the GlobalLimit.)
     private lazy val localCsr: Option[Csr] = {
       import spark.implicits._
+      val cap = math.min(localThreshold, (Int.MaxValue - 2).toLong)
       // The collect runs only when the count proves every edge fits — and
       // reads the projection's cache, which the count itself populated.
-      if (isUnderCap) Some(buildCsr(e.as[(Long, Long, Double)].collect()))
+      if (e.count() <= cap) Some(buildCsr(e.as[(Long, Long, Double)].collect()))
       else None
     }
     def run(sources: Set[Long]): DataFrame = localCsr match {
@@ -606,16 +601,6 @@ object ShortestPaths {
   final class PredCycleException(msg: String)
     extends IllegalStateException(msg)
 
-  /** High-water mark of per-vertex dequeue counts across every [[spfaCsr]]
-    * run in this JVM (r16, r15 verdict #8): SPFA's worst case is O(V·E) —
-    * a pathological-but-legal dirty feed degenerates long before the
-    * negative-cycle abort at dequeues > n fires, and without telemetry
-    * that shows up only as a wall-time mystery. Read it after a routing
-    * campaign; a value approaching the subgraph's vertex count says the
-    * feed is driving SPFA toward its quadratic regime. */
-  private[graft] val spfaMaxDequeues =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
   private[graph] def buildCsr(rows: Array[(Long, Long, Double)]): Csr = {
     val all = new Array[Long](rows.length * 2)
     var i = 0
@@ -769,7 +754,6 @@ object ShortestPaths {
     val pred = Array.fill(n)(-1)
     val inQueue = new Array[Boolean](n)
     val dequeues = new Array[Int](n)
-    var maxDeq = 0 // worst-case guard telemetry — see spfaMaxDequeues
     var queue = new Array[Int](math.max(1024, math.min(n, 1 << 16)))
     var head = 0; var tail = 0; var size = 0
     def enqueue(v: Int): Unit = {
@@ -792,7 +776,6 @@ object ShortestPaths {
       size -= 1
       inQueue(v) = false
       dequeues(v) += 1
-      if (dequeues(v) > maxDeq) maxDeq = dequeues(v)
       if (dequeues(v) > n)
         throw new NegativeCycleException("no SSSP fixpoint: negative-total " +
           s"cycle reachable from vertex ${g.ids(srcIdx)}")
@@ -813,7 +796,6 @@ object ShortestPaths {
         j += 1
       }
     }
-    spfaMaxDequeues.getAndUpdate(prev => math.max(prev, maxDeq.toLong))
     (dist, pred)
   }
 

@@ -61,8 +61,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object TransitBetweenness {
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val trace: Boolean = sys.env.get("SPARK_GRAFT_BW_TRACE").contains("1")
-  private def tlog(msg: => String): Unit = if (trace) println(s"[transit-bw] $msg")
 
   /** Pivots per pass: bounds the working grid at batch × |stoptimes| rows
     * (Modena cardinality: 128 × 250k = 32M narrow rows across the
@@ -120,12 +118,9 @@ object TransitBetweenness {
     val stateCols = Seq("src", "trip_id", "stop_sequence", "dist", "key", "seed")
 
     val batches = sources.distinct.grouped(math.max(1, pivotBatch)).toSeq
-    val batchScores = batches.zipWithIndex.map { case (batch, bi) =>
-      val t0 = System.nanoTime()
-      def phaseSec: Double = (System.nanoTime() - t0) / 1e9
+    val batchScores = batches.map { batch =>
       // ---- forward: hop distances via trip-collapse SSSP ----
-      val (grid, distRounds) = sssp.convergeCounted(batch.toSet, maxIterations)
-      tlog(f"batch $bi%d dist done: $distRounds%d rounds $phaseSec%.1f s")
+      val grid = sssp.converge(batch.toSet, maxIterations)
       // The grid's dist is REL (hop metric: A(u) = pos − 1, so
       // dist_abs = rel + pos − 1); key IS rel — exactly the block key the
       // prefix/suffix sums partition on. The pivot's own row is the only
@@ -173,7 +168,6 @@ object TransitBetweenness {
         rel(state)
         state = next
         sigmaIters += 1
-        tlog(f"batch $bi%d sigma round $sigmaIters%d changed=$changed%d $phaseSec%.1f s")
       }
 
       // ---- delta: block suffix sums, sigmaIters (= maxChanges + 1)
@@ -203,7 +197,6 @@ object TransitBetweenness {
           .localCheckpoint(true)
         rel(dstate)
         dstate = next
-        tlog(f"batch $bi%d delta round done $phaseSec%.1f s")
       }
 
       // runLocal's row set: every visited vertex except the pivot itself
@@ -218,8 +211,6 @@ object TransitBetweenness {
         .select(col("id").as("vertex_id"), col("score"))
         .localCheckpoint(true)
       rel(dstate)
-      tlog(f"batch $bi%d (${batch.size}%d pivots): distRounds=$distRounds%d " +
-        f"sigmaIters=$sigmaIters%d ${(System.nanoTime() - t0) / 1e9}%.1f s")
       scores
     }
 

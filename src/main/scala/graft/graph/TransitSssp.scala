@@ -89,98 +89,29 @@ object TransitSssp {
   /** Session-unique run counter for observation names (see run()). */
   private val runSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** PER-INSTANCE regime evidence (r19, r18 verdict #2): every regime
-    * counter below is process-global telemetry, which regime-proof
-    * `require`s (the zero-cycle catalog row) used to diff — a concurrent
-    * session's advance could false-pass them. Each TransitSssp instance
-    * now ALSO bumps the evidence object it was constructed with, so a
-    * caller that owns the engine/projection can require on counters only
-    * its own calls can advance. The globals stay (tools/campaigns read
-    * whole-JVM totals); values mirror the companion counters' scaladoc. */
+  /** Per-instance regime evidence: every TransitSssp instance bumps the
+    * evidence object it was constructed with, so a caller that owns the
+    * engine/projection can require a regime engaged on counters only its
+    * own calls can advance (the zero-cycle catalog row, the routing
+    * specs). No process-global copy exists. */
   final class RegimeEvidence {
+    /** Capped-CSR runs actually SERVED (every gate passed) — specs assert
+      * the forced regime engaged instead of silently falling back. */
     val cappedCsrServed = new java.util.concurrent.atomic.AtomicLong(0L)
+    /** Of the served capped-CSR runs, those whose subgraph carried a
+      * negative PRECEDES Δacum (non-monotone feed) and therefore ran the
+      * label-correcting SPFA fixpoint instead of settle-once Dijkstra. */
     val cappedCsrNegativeServed =
       new java.util.concurrent.atomic.AtomicLong(0L)
+    /** ACYCLIC pred re-resolutions served ([[TransitSssp!.resolveStateAcyclic]]):
+      * a PredCycleException fired and the retry routed. */
     val acyclicResolveServed = new java.util.concurrent.atomic.AtomicLong(0L)
+    /** Nanos spent building capped-bucket state (CHANGE slice + position
+      * pin + driver CSR) — the ONE-TIME component of a routing call's
+      * wall, memoized per bucket; TimeScale subtracts it to score the pure
+      * routing component. */
+    val cappedBuildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
   }
-
-  /** Counts capped-CSR runs actually SERVED (every gate passed) — specs
-    * assert the forced regime engaged instead of silently falling back. */
-  private[graft] val cappedCsrServed =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Cumulative nanos spent building capped-bucket state (CHANGE slice +
-    * position pin + driver CSR) — the ONE-TIME component of a routing
-    * call's wall, memoized per bucket and re-paid only on cold page
-    * cache. Telemetry (r18, r17 verdict #7): TimeScale reads per-pair
-    * deltas so the campaign's spread gate can score the pure ROUTING
-    * component instead of whatever disk state the previous tool run
-    * left behind. */
-  private[graft] val cappedBuildNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Of the served capped-CSR runs, those whose subgraph carried a
-    * negative PRECEDES Δacum (non-monotone feed) and therefore ran the
-    * label-correcting SPFA fixpoint instead of settle-once Dijkstra
-    * (r15 — the r14 decline path, closed). Specs assert the dirty-feed
-    * fixture took this path rather than a clean-feed Dijkstra. */
-  private[graft] val cappedCsrNegativeServed =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Counts ACYCLIC pred re-resolutions served (r16 — the distributed
-    * zero-total-cycle repair, [[TransitSssp!.resolveStateAcyclic]]): specs
-    * assert the repair actually engaged (a PredCycleException fired and
-    * the retry routed) rather than the canonical walk having silently
-    * succeeded. */
-  private[graft] val acyclicResolveServed =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** SPARK_GRAFT_SSSP_TRACE=1 prints one line per iteration (round index,
-    * improved-row count, wall seconds) plus the one-time pin cost — dev
-    * diagnostics for decomposing a routing call's cost; off by default. */
-  private val trace: Boolean = sys.env.get("SPARK_GRAFT_SSSP_TRACE").contains("1")
-
-  /** Grid checkpoints are stored SERIALIZED (MEMORY_AND_DISK_SER) by
-    * default — a measured decision: the ~600 MB/round deserialized grids
-    * drove GC spikes that inflated individual 10×-Modena rounds up to 8×
-    * (12-54 s rounds amid 5 s neighbors; worst pair 190.6 s). Two
-    * serialized runs measured max spike ~2.5× (rounds ≤ 21 s) and the two
-    * best pairs recorded (67.7, 72.5 s) — spike magnitude capped, though
-    * pair-level variance from box scheduling remains (COVERAGE.md
-    * distributed section carries both runs). The deserialization CPU on
-    * the 2-3 grid scans per round is noise next to that; at 3× the levels
-    * measure equivalent. SPARK_GRAFT_SSSP_SER=0 opts back into the
-    * deserialized level; specs pass the per-instance constructor param
-    * to pin both storage paths for distance parity (r18 — no mutable
-    * global). */
-  private[graft] val serializedGrid: Boolean =
-    !sys.env.get("SPARK_GRAFT_SSSP_SER").contains("0")
-
-  /** The sparse-tail BASE looks like the opposite storage trade from the
-    * round churn that justified the serialized default above: written ONCE
-    * at tail entry, then fully SCANNED 2×/round for the rest of the run
-    * (slice pull + candidate-target probe) — a long tail (the 30× grid
-    * center dribbles ~17 rounds) re-pays the decode dozens of times.
-    * Measured at exactly that worst case (back-to-back 30× center-pair
-    * runs, COVERAGE.md tail section): NO repeatable win — tail sums
-    * 216 s serialized vs 206 s deserialized vs 248 s with pins also
-    * deserialized, all inside the per-round GC/scheduler spike band. The
-    * tail round's floor is scheduling/planning-bound (3 broadcasts + 3
-    * AQE jobs per round), not decode-bound, so the default stays OFF
-    * (follow the grid level); SPARK_GRAFT_SSSP_TAIL_DESER=1 re-runs the
-    * A/B. */
-  private[graft] val deserializedTailBase: Boolean =
-    sys.env.get("SPARK_GRAFT_SSSP_TAIL_DESER").contains("1")
-
-  /** Same scan-many/write-once profile for the STATIC pins (trip prefix +
-    * CHANGE slice): pinned once per projection, streamed in full on every
-    * round of every routing call. SPARK_GRAFT_SSSP_PIN_DESER=1 stores them
-    * deserialized for A/B against the serialized default — measured at the
-    * 30× center pair: 458 s vs the 462 s all-serialized baseline, i.e. no
-    * repeatable delta (COVERAGE.md tail section); default stays
-    * serialized. */
-  private[graft] val deserializedPins: Boolean =
-    sys.env.get("SPARK_GRAFT_SSSP_PIN_DESER").contains("1")
 
   /** Max ride∘change depths batched per materialized sparse-tail round
     * (see sparseTail): each materialized round pays the O(grid) slice
@@ -189,10 +120,8 @@ object TransitSssp {
     * the un-batched tail at ~216 s of a 30× center pair (~17 rounds ×
     * O(grid) × scheduling floor) and ≈600 s of the 100× probe — round
     * count and per-round base touch are exactly what batching divides.
-    * SPARK_GRAFT_SSSP_TAIL_K overrides (1 = the r11 un-batched shape,
-    * kept reachable for A/B). */
-  private[graft] val tailK: Int =
-    sys.env.get("SPARK_GRAFT_SSSP_TAIL_K").map(_.toInt).getOrElse(8)
+    * The un-batched shape stays reachable below [[tailBatchMinBase]]. */
+  private[graft] val TailK: Int = 8
 
   /** Tail batching only engages when the frozen base has at least this
     * many rows: below it a tail round is already sub-second and the
@@ -201,9 +130,7 @@ object TransitSssp {
     * per-round oracle keep the exact r11 un-batched loop. Specs force
     * the batched path onto fixture graphs by constructing instances
     * with 0 (r18 — per-instance param, no mutable global). */
-  private[graft] val tailBatchMinBase: Long =
-    sys.env.get("SPARK_GRAFT_SSSP_TAIL_MINBASE").map(_.toLong)
-      .getOrElse(1L << 20)
+  private[graft] val tailBatchMinBase: Long = 1L << 20
 
   /** Largest frontier key list the tail turns into a chunked-In
     * batch-pruning predicate; above it the probe falls back to a full
@@ -212,8 +139,7 @@ object TransitSssp {
     * the worst case where pruning skips nothing — measured at 3×, a
     * ~1600-key chunked-In cost 20–47 s/round against a scan the
     * fallback shape does in 2–4 s. */
-  private[graft] val tailPruneMaxKeys: Int =
-    sys.env.get("SPARK_GRAFT_SSSP_PRUNE_MAXKEYS").map(_.toInt).getOrElse(256)
+  private[graft] val tailPruneMaxKeys: Int = 256
 
   /** Cached-batch row target for the tail's sorted probe caches. At the
     * session default (10000) a batch spans ~90 trips at 3× Modena, so a
@@ -222,8 +148,7 @@ object TransitSssp {
     * frontier skips >95 % of batches. Applied only to the two
     * tail-local caches (the conf is captured per-relation at persist
     * time and restored immediately). */
-  private[graft] val tailPruneBatchSize: Int =
-    sys.env.get("SPARK_GRAFT_SSSP_PRUNE_BATCH").map(_.toInt).getOrElse(1024)
+  private[graft] val tailPruneBatchSize: Int = 1024
 
   /** Specs construct instances with true to exercise the pruned-probe
     * path on fixture-scale graphs where the granularity gate
@@ -245,8 +170,7 @@ object TransitSssp {
     * machinery was pure overhead on every ≤14-round tail measured).
     * Specs pass 0 per instance to force the machinery onto fixture
     * graphs. */
-  private[graft] val tailLazyRounds: Int =
-    sys.env.get("SPARK_GRAFT_SSSP_TAIL_LAZY").map(_.toInt).getOrElse(12)
+  private[graft] val tailLazyRounds: Int = 12
 
   /** Membership predicate that SURVIVES cached-batch stat pruning.
     * Spark's SimpleMetricsCachedBatchSerializer.buildFilter prunes
@@ -278,14 +202,11 @@ object TransitSssp {
     * list via broadcast position joins, instead of forcing the full
     * uncapped slice pin — at the 100× point the uncapped pin is 141 s of
     * one-time cost and every round then streams its 61M rows to meet a
-    * frontier that can only touch the capped ~3 % (r13 diagnosis,
-    * DiagOneTime). The gate bounds the capped position dimension the
+    * frontier that can only touch the capped ~3 % (r13 diagnosis). The gate bounds the capped position dimension the
     * build broadcasts (two broadcasts of ~50 B/row live at once); above
     * it the run falls back to the shared uncapped pin — the status-quo
     * plan, never a wrong one. */
-  private[graft] val cappedSliceMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_SSSP_CAPPED_SLICE_MAX").map(_.toLong)
-      .getOrElse(2L * 1024L * 1024L)
+  private[graft] val cappedSliceMaxRows: Long = 2L * 1024L * 1024L
 
   /** Byte companion to the row gate above (r13 ADVICE): explicit
     * broadcast() bypasses autoBroadcastJoinThreshold, and the cost is
@@ -295,9 +216,7 @@ object TransitSssp {
     * agg that counts the rows; either gate failing keeps the shared
     * uncapped pin. The 128 MB default assumes a driver with ≥ ~4 GB
     * headroom for the two simultaneous position broadcasts. */
-  private[graft] val cappedSliceMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_SSSP_CAPPED_SLICE_MAXB").map(_.toLong)
-      .getOrElse(128L * 1024L * 1024L)
+  private[graft] val cappedSliceMaxBytes: Long = 128L * 1024L * 1024L
 
   /** Edge budget for the clock-capped DRIVER-CSR regime (r14): when a
     * capped run's horizon-bounded subgraph — capped positions (one
@@ -316,9 +235,7 @@ object TransitSssp {
     * capped subgraph is a horizon's share of the feed, not the whole
     * projection. 0 disables the regime (specs pin the distributed capped
     * path against it). */
-  private[graft] val cappedCsrMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_SSSP_CAPPED_CSR_MAX").map(_.toLong)
-      .getOrElse(6L * 1024L * 1024L)
+  private[graft] val cappedCsrMaxEdges: Long = 6L * 1024L * 1024L
 
   /** Driver-state budget for a capped-CSR run: each source holds a
     * (dist, pred) pair of arrays over the subgraph's vertices
@@ -332,9 +249,7 @@ object TransitSssp {
     * sources × vertices above this bound falls back to the distributed
     * staged flow — routing calls carry per-route-earliest source sets
     * (tens of rows), so the bound only trips on degenerate inputs. */
-  private[graft] val cappedCsrMaxStateCells: Long =
-    sys.env.get("SPARK_GRAFT_SSSP_CAPPED_CSR_CELLS").map(_.toLong)
-      .getOrElse(64L * 1024L * 1024L)
+  private[graft] val cappedCsrMaxStateCells: Long = 64L * 1024L * 1024L
 
   /** Node-count floor below which capped runs keep the shared uncapped
     * pin: on fixture/Modena-1× feeds the whole-day pin costs ~1-4 s once
@@ -343,28 +258,14 @@ object TransitSssp {
     * r12 tailLazyRounds lesson — heavy machinery only where measurement
     * says it pays). Specs force the capped path at fixture scale by
     * zeroing this. */
-  private[graft] val cappedSliceMinNodes: Long =
-    sys.env.get("SPARK_GRAFT_SSSP_CAPPED_SLICE_MIN_NODES").map(_.toLong)
-      .getOrElse(1L * 1000L * 1000L)
+  private[graft] val cappedSliceMinNodes: Long = 1L * 1000L * 1000L
 
   /** Capped slices are memoized per clock-cap BUCKET (cap rounded UP to
     * this granularity — a superset slice is exactly as correct as the
     * uncapped pin, which is the ultimate superset): a multi-pair harness
     * issues calls whose cap anchors differ by minutes, and padding lets
     * them share one slice instead of rebuilding per call. */
-  private[graft] val cappedSlicePadSecs: Long =
-    sys.env.get("SPARK_GRAFT_SSSP_CAPPED_SLICE_PAD").map(_.toLong)
-      .getOrElse(3600L)
-
-  /** r15: a capped subgraph carrying a negative PRECEDES Δacum (a
-    * non-monotone feed — arr(u) < dep(u−1) inside the cap) runs the exact
-    * in-heap LABEL-CORRECTING fixpoint (ShortestPaths.spfaCsr) at the same
-    * budget, instead of r14's decline back to the distributed rounds —
-    * which on hub topologies are the 335 s-class path the CSR regime
-    * exists to kill. SPARK_GRAFT_SSSP_CAPPED_DIRTY=0 restores the decline
-    * (the A/B control for measurement campaigns). */
-  private[graft] val cappedDirtyInHeap: Boolean =
-    !sys.env.get("SPARK_GRAFT_SSSP_CAPPED_DIRTY").contains("0")
+  private[graft] val cappedSlicePadSecs: Long = 3600L
 
   /** Serializes the tail-cache build's set/persist/restore of the shared
     * session conf `spark.sql.inMemoryColumnarStorage.batchSize`: two
@@ -406,33 +307,28 @@ object TransitSssp {
   private[graft] def tinyCoalesce(pinned: DataFrame, rows: Long): DataFrame =
     if (rows >= 0 && rows <= TinyPinRows) pinned.coalesce(1) else pinned
 
-  /** Checkpoint at the PIN storage level (static frames). */
-  private[graph] def ckptPin(df: DataFrame,
-      ser: Boolean = serializedGrid): DataFrame =
+  /** Eager local checkpoint, stored SERIALIZED (MEMORY_AND_DISK_SER) —
+    * grids, round outputs and static pins alike. A measured decision: the
+    * ~600 MB/round deserialized grids drove GC spikes that inflated
+    * individual 10×-Modena rounds up to 8× (12-54 s rounds amid 5 s
+    * neighbors); serialized runs capped the spike at ~2.5× (COVERAGE.md
+    * distributed section), and deserializing only the tail base or the
+    * static pins showed no repeatable win. The result is rewrapped
+    * WITHOUT origin statistics (CheckpointBridge.flattenStats): each
+    * round's plan joins the grid with grid-derived candidates, so the
+    * size-only estimator's exponent DOUBLES per checkpointed round — at
+    * 30× Modena (flood + long sparse tail ≈ 32 rounds) the BigInt stats
+    * products first dominate driver time (measured 41 → 165 → 895 s
+    * "rounds" that were pure planning) and then overflow BigInteger
+    * inside Dataset.localCheckpoint's stats rewrite. Flattening keeps
+    * every round's estimate depth-bounded; in-loop join shapes are hint-
+    * or partitioning-driven (broadcast() on the sparse frontier, pinned
+    * SMJ elsewhere) and AQE re-plans from actual sizes, so no plan choice
+    * regresses. */
+  private[graph] def ckpt(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.CheckpointBridge.flattenStats(
-      if (ser && !deserializedPins) df.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      else df.localCheckpoint(true))
-
-  /** Eager local checkpoint at the configured grid storage level. The
-    * result is rewrapped WITHOUT origin statistics
-    * (CheckpointBridge.flattenStats): each round's plan joins the grid
-    * with grid-derived candidates, so the size-only estimator's exponent
-    * DOUBLES per checkpointed round — at 30× Modena (flood + long sparse
-    * tail ≈ 32 rounds) the BigInt stats products first dominate driver
-    * time (measured 41 → 165 → 895 s "rounds" that were pure planning)
-    * and then overflow BigInteger inside Dataset.localCheckpoint's stats
-    * rewrite. Flattening keeps every round's estimate depth-bounded;
-    * in-loop join shapes are hint- or partitioning-driven (broadcast()
-    * on the sparse frontier, pinned SMJ elsewhere) and AQE re-plans from
-    * actual sizes, so no plan choice regresses. */
-  private[graph] def ckpt(df: DataFrame,
-      ser: Boolean = serializedGrid): DataFrame =
-    org.apache.spark.sql.graftbridge.CheckpointBridge.flattenStats(
-      if (ser) df.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      else df.localCheckpoint(true))
-  private def tlog(msg: => String): Unit = if (trace) println(s"[transit-sssp] $msg")
+      df.localCheckpoint(true,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
   /** One-shot convenience over [[TransitSssp]] — for repeated calls against
     * one projection hold an instance (the per-projection Sssp handle does),
@@ -447,12 +343,10 @@ object TransitSssp {
   * call-invariant state: the per-trip ride-cost prefix and the CHANGE edge
   * slice, both checkpointed lazily on first use and shared by every run.
   *
-  * The capped-regime knobs are PER-INSTANCE constructor parameters with the
-  * companion's env-seeded production defaults (r18, r17 verdict #2 — the
-  * @volatile vars they replace were process-global mutable state: the
-  * zero-cycle catalog row's try/finally mutation window disabled the
-  * capped-CSR regime for any concurrent routing call in the JVM). Specs
-  * and the catalog row pass values here; nothing mutates after
+  * The gates specs force onto fixture-scale feeds are PER-INSTANCE
+  * constructor parameters defaulting to the companion's production
+  * constants (r18, r17 verdict #2 — no process-global mutable state).
+  * Specs and the catalog row pass values here; nothing mutates after
   * construction. */
 final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     /** Edge budget for the clock-capped driver-CSR regime; 0 disables it
@@ -463,14 +357,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     cappedSliceMinNodes: Long = TransitSssp.cappedSliceMinNodes,
     /** Clock-cap bucket granularity of the memoized capped slices. */
     cappedSlicePadSecs: Long = TransitSssp.cappedSlicePadSecs,
-    /** false restores the r14 decline on negative-weight capped subgraphs
-      * (the A/B control for measurement campaigns). */
-    cappedDirtyInHeap: Boolean = TransitSssp.cappedDirtyInHeap,
-    /** Grid/round checkpoint storage level (companion val scaladoc). */
-    serializedGrid: Boolean = TransitSssp.serializedGrid,
-    /** Max ride∘change depths per batched sparse-tail round; 1 = the r11
-      * un-batched shape (A/B control). */
-    tailK: Int = TransitSssp.tailK,
     /** Base-row floor for tail batching; specs pass 0 to force the
       * batched path onto fixture graphs. */
     tailBatchMinBase: Long = TransitSssp.tailBatchMinBase,
@@ -479,19 +365,11 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     /** Plain tail rounds before the amortized machinery builds; specs
       * pass 0 to force the builds onto fixture graphs. */
     tailLazyRounds: Int = TransitSssp.tailLazyRounds,
-    /** Session-local regime evidence this instance bumps alongside the
-      * companion's global telemetry counters (r19 — companion class
-      * scaladoc). Callers that need to REQUIRE a regime engaged pass and
-      * read their own instance; the default keeps an unshared one. */
+    /** Regime evidence this instance bumps (companion class scaladoc).
+      * Callers that need to REQUIRE a regime engaged pass and read their
+      * own instance; the default keeps an unshared one. */
     val evidence: TransitSssp.RegimeEvidence = new TransitSssp.RegimeEvidence) {
-
-  /** Instance-level checkpoint helpers at this instance's storage level
-    * (the companion versions keep the env-seeded default for one-shot
-    * diagnostic callers). */
-  private def ckptG(df: DataFrame): DataFrame =
-    TransitSssp.ckpt(df, serializedGrid)
-  private def ckptPinG(df: DataFrame): DataFrame =
-    TransitSssp.ckptPin(df, serializedGrid)
+  import TransitSssp.ckpt
 
   private val spark = nodes.sparkSession
   private val bridge = org.apache.spark.sql.graftbridge.CheckpointBridge
@@ -524,7 +402,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
   @volatile private[graft] var preparedRowCount: Long = -1L
 
   private[graft] lazy val prepared = {
-    val t0 = System.nanoTime()
     val obs = org.apache.spark.sql.Observation(
       s"prefix-pin-rows-${TransitSssp.runSeq.incrementAndGet()}")
     val p = nodes
@@ -553,10 +430,8 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       // the resolution joins, the capped-slice acum lookups — skip a
       // full prefix-side sort per call (25M rows at the 100× point).
       .transform(bridge.pinnedCheckpoint(_, nPart, Seq("trip_id"),
-        Seq("trip_id", "stop_sequence"), ckptPinG))
+        Seq("trip_id", "stop_sequence"), ckpt))
     preparedRowCount = obs.get("rows").asInstanceOf[Long]
-    TransitSssp.tlog(f"trip-prefix pin ($preparedRowCount%d rows) " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
     preparedForced = true
     TransitSssp.tinyCoalesce(p, preparedRowCount)
   }
@@ -595,7 +470,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
   @volatile private[graft] var changeRowCount: Long = -1L
 
   private[graph] lazy val change = {
-    val t0 = System.nanoTime()
     val n = spark.sessionState.conf.numShufflePartitions
     val obs = org.apache.spark.sql.Observation(
       s"change-pin-rows-${TransitSssp.runSeq.incrementAndGet()}")
@@ -630,10 +504,8 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       // Exchange, so the pinned plan itself is unchanged)
       .observe(obs, count(lit(1)).as("rows"))
       .transform(bridge.pinnedCheckpoint(_, n, Seq("s_trip"),
-        Seq("s_trip", "s_seq"), ckptPinG))
+        Seq("s_trip", "s_seq"), ckpt))
     changeRowCount = obs.get("rows").asInstanceOf[Long]
-    TransitSssp.tlog(f"change-slice pin (enriched=$enrichedEdges%s, " +
-      f"$changeRowCount%d rows) ${(System.nanoTime() - t0) / 1e9}%.2f s")
     changeForced = true
     TransitSssp.tinyCoalesce(c, changeRowCount)
   }
@@ -645,10 +517,8 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * engagement only. */
   @volatile private var tripAdjForced = false
   private lazy val tripAdj = {
-    val t0 = System.nanoTime()
     val a = change.select(col("s_trip"), col("d_trip")).distinct()
-      .transform(ckptPinG)
-    TransitSssp.tlog(f"trip-adjacency pin ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      .transform(ckpt)
     tripAdjForced = true
     a
   }
@@ -757,8 +627,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     val estBytes = nCapped * 40L + stats.getLong(1)
     if (nCapped > TransitSssp.cappedSliceMaxRows ||
         estBytes > TransitSssp.cappedSliceMaxBytes) {
-      TransitSssp.tlog(f"capped slice bucket=$bucket%d: $nCapped%d rows / " +
-        f"~$estBytes%d B over broadcast gate - using the uncapped pin")
       RunSlices(change, None)
     } else {
       // pin the capped position dimension first: the two broadcasts
@@ -770,7 +638,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       val pinN = if (nCapped <= TransitSssp.TinyPinRows) 1 else nPart
       val posPin = capped.transform(bridge.pinnedCheckpoint(_, pinN,
         Seq("trip_id"), Seq("trip_id", "stop_sequence"),
-        ckptPinG))
+        ckpt))
       val c = (if (enrichedEdges)
         // enriched edges already carry positions/w_rel — the cap
         // restriction is two broadcast SEMI-joins on bare id sets
@@ -800,10 +668,8 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
             col("d_acum"))
       })
         .transform(bridge.pinnedCheckpoint(_, pinN, Seq("s_trip"),
-          Seq("s_trip", "s_seq"), ckptPinG))
-      TransitSssp.tlog(f"capped slice bucket=$bucket%d ($nCapped%d pos " +
-        f"rows) ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      TransitSssp.cappedBuildNanos.addAndGet(System.nanoTime() - t0)
+          Seq("s_trip", "s_seq"), ckpt))
+      evidence.cappedBuildNanos.addAndGet(System.nanoTime() - t0)
       RunSlices(c, Some(posPin), nCapped)
     }
   }
@@ -840,11 +706,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     // reads off the pinned slice (one cheap count): PRECEDES ≤ nPos.
     val sliceRows = slice.count()
     val est = nPos + sliceRows
-    if (est > cappedCsrMaxEdges) {
-      TransitSssp.tlog(f"capped csr bucket=$bucket%d: ~$est%d edges over " +
-        "budget - staying distributed")
-      return None
-    }
+    if (est > cappedCsrMaxEdges) return None
     val t0 = System.nanoTime()
     val wT = Window.partitionBy("trip_id").orderBy("stop_sequence")
     val prec = posPin
@@ -861,29 +723,16 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         (col("w_rel") - col("s_acum") + col("d_acum")).as("w"))
     import spark.implicits._
     val rows = prec.unionByName(chg).as[(Long, Long, Double)].collect()
-    // Settle-once Dijkstra needs non-negative weights; a non-monotone
-    // feed (arr(u) < dep(u−1)) yields a negative PRECEDES Δacum, where
-    // the distributed rounds are iterate-to-fixpoint (exact under
-    // negative increments). Gate, don't assume: one pass over the
-    // collected rows. Since r15 such feeds STAY in-heap — the run
-    // dispatches to the exact label-correcting fixpoint
+    // A non-monotone feed (arr(u) < dep(u−1)) yields a negative PRECEDES
+    // Δacum, where settle-once Dijkstra is inexact. Such feeds STAY
+    // in-heap (r15): the Csr detects the negative weight
+    // (hasNegative) and the run dispatches to the exact label-correcting fixpoint
     // (ShortestPaths.spfaCsr, same canonical tie-break, parity
     // spec-pinned against the distributed rounds) instead of paying the
-    // 335 s-class hub fallback the r14 decline cost. The knob restores
-    // the decline for A/B control runs.
-    val negative = rows.exists(_._3 < 0.0)
-    if (negative && !cappedDirtyInHeap) {
-      TransitSssp.tlog(f"capped csr bucket=$bucket%d: negative-weight " +
-        "edge (non-monotone feed), in-heap fallback disabled - staying " +
-        "distributed")
-      return None
-    }
+    // 335 s-class hub fallback r14's decline to the distributed rounds
+    // cost.
     val csr = ShortestPaths.buildCsr(rows)
-    TransitSssp.tlog(f"capped csr bucket=$bucket%d (${csr.n}%d vertices, " +
-      f"${rows.length}%d edges${if (negative) ", negative weights -> " +
-        "label-correcting runs" else ""}) " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-    TransitSssp.cappedBuildNanos.addAndGet(System.nanoTime() - t0)
+    evidence.cappedBuildNanos.addAndGet(System.nanoTime() - t0)
     Some(csr)
   }
 
@@ -914,28 +763,18 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     else {
       val cell = bucketCell(clockCap)
       cell.csr.filter { g =>
-        val ok = sources.size.toLong * g.n <= TransitSssp.cappedCsrMaxStateCells
-        if (!ok) TransitSssp.tlog(f"capped csr: ${sources.size}%d sources x " +
-          f"${g.n}%d vertices over state budget - staying distributed")
-        ok
+        sources.size.toLong * g.n <= TransitSssp.cappedCsrMaxStateCells
       }.flatMap { g =>
         try {
           val run = ShortestPaths.runTargetsOnCsr(spark, g, sources, targets)
-          TransitSssp.cappedCsrServed.incrementAndGet()
           evidence.cappedCsrServed.incrementAndGet()
-          if (g.hasNegative) {
-            TransitSssp.cappedCsrNegativeServed.incrementAndGet()
-            evidence.cappedCsrNegativeServed.incrementAndGet()
-          }
+          if (g.hasNegative) evidence.cappedCsrNegativeServed.incrementAndGet()
           Some(run)
         } catch {
           // a reachable negative-total cycle has no fixpoint (corrupt
           // feed; impossible on a time-expanded DAG) — keep the staged
           // distributed flow, whose iteration cap bounds the damage
-          case e: ShortestPaths.NegativeCycleException =>
-            TransitSssp.tlog(s"capped csr: ${e.getMessage} - staying " +
-              "distributed")
-            None
+          case _: ShortestPaths.NegativeCycleException => None
         }
       }
     }
@@ -947,7 +786,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
   @volatile private var tripLenForced = false
   private lazy val tripLen = {
     val d = prepared.groupBy("trip_id").agg(count(lit(1)).as("len"))
-      .transform(ckptPinG)
+      .transform(ckpt)
     tripLenForced = true
     d
   }
@@ -1006,7 +845,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       * [[resolveStateAcyclic]] for the construction and proof. */
     def resolveAcyclic(source: Long): DataFrame = {
       require(sources.contains(source), s"$source is not a seed of this run")
-      TransitSssp.acyclicResolveServed.incrementAndGet()
       evidence.acyclicResolveServed.incrementAndGet()
       resolveStateAcyclic(state.filter(col("src") === source), source,
         selectRun(clockCap).slice, d => { retained.add(d); () })
@@ -1058,17 +896,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * derives sigma/delta from the grid. */
   private[graph] def converge(sources: Set[Long], maxIterations: Int = 1000,
       costCap: Double = Double.PositiveInfinity,
-      clockCap: Double = Double.PositiveInfinity): DataFrame =
-    convergeCounted(sources, maxIterations, costCap, clockCap)._1
-
-  /** converge plus the iteration count the run took — the count bounds the
-    * change-depth of every optimal path, which downstream phases
-    * (TransitBetweenness's sigma/delta sweeps) use as their own round
-    * budget. */
-  private[graph] def convergeCounted(sources: Set[Long],
-      maxIterations: Int,
-      costCap: Double = Double.PositiveInfinity,
-      clockCap: Double = Double.PositiveInfinity): (DataFrame, Int) = {
+      clockCap: Double = Double.PositiveInfinity): DataFrame = {
     import spark.implicits._
     // The iteration STATE is the full (source × stoptime) grid with a
     // nullable dist and a `fresh` flag (dist arrived via a CHANGE merge
@@ -1126,7 +954,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     var sparse = false
     var prevImproved = -1L
     while (it < maxIterations && !converged && !sparse) {
-      val itT0 = System.nanoTime()
       val ride = state.withColumn("rdist", rideCol)
       // Delta frontier: only rows whose value is new since their out-edges
       // last fired can improve a neighbor — ride improvements this round,
@@ -1179,15 +1006,12 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
           col("ndist").as("dist"),
           (col("cdist").isNotNull && (col("rdist").isNull ||
             col("cdist") < col("rdist"))).as("fresh"))
-        .transform(ckptG)
+        .transform(ckpt)
       val improved = obs.get("improved").asInstanceOf[Long]
       converged = improved == 0L
       sparse = !converged && improved <= sparseThreshold &&
         prevImproved >= 0L && improved < prevImproved
       prevImproved = improved
-      TransitSssp.tlog(f"round $it%d improved=$improved%d " +
-        f"${(System.nanoTime() - itT0) / 1e9}%.2f s" +
-        (if (sparse) " -> sparse tail" else ""))
       // newState is materialized (eager checkpoint), so the superseded
       // grid's blocks are dead — release them NOW instead of waiting for
       // the ContextCleaner's GC-driven pass. Without this, a 10×-Modena
@@ -1203,7 +1027,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     if (!converged) throw new IllegalStateException(
       s"TransitSssp did not converge in $maxIterations iterations — " +
         "optimal paths deeper than the bound (raise maxIterations)")
-    (state, it)
+    state
   }
 
   /** Sparse-tail rounds: once the frontier dribbles (late tail of a run —
@@ -1270,7 +1094,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     *    carried entirely by pending).
     * 3. K-DEPTH BATCHING (above [[tailBatchMinBase]] grid
     *    rows): a round may expand the frontier's (src, trip) set up to
-    *    [[tailK]] change-hops through the pinned trip-level
+    *    [[TransitSssp.TailK]] change-hops through the pinned trip-level
     *    adjacency, pull ONE base slice + ONE change slice covering the
     *    expansion, and iterate ride∘change entirely in-slice — depth
     *    d's candidates land within d+1 ≤ k hops, inside the slice by
@@ -1296,25 +1120,16 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * only (the same rows reach the same joins). Pinned by the forced
     * fixture-scale parity specs, cap-parity, both routing oracles, and
     * the cross-regime twin digests. */
-  private def sparseTail(lastFull: DataFrame, itStart: Int,
+  private def sparseTail(base: DataFrame, itStart: Int,
       maxIterations: Int,
       costCap: Double = Double.PositiveInfinity,
-      runChange: DataFrame): (DataFrame, Int) = {
+      runChange: DataFrame): DataFrame = {
     val rel = org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint _
-    val base =
-      if (TransitSssp.deserializedTailBase && serializedGrid) {
-        val t0 = System.nanoTime()
-        val b = org.apache.spark.sql.graftbridge.CheckpointBridge.flattenStats(
-          lastFull.localCheckpoint(true))
-        rel(lastFull)
-        TransitSssp.tlog(f"tail base deser copy ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        b
-      } else lastFull
     val posKey = Seq("src", "trip_id", "stop_sequence")
     var ov = base.filter(col("fresh"))
       .select(col("src"), col("trip_id"), col("stop_sequence"),
         col("dist"), col("fresh"))
-      .transform(ckptG)
+      .transform(ckpt)
     val baseCount = base.count()
     val batchEnabled = baseCount >= tailBatchMinBase
     // ROW-based expansion budget (trip lengths vary 2..500+ across
@@ -1323,7 +1138,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     // touches. The pair cap bounds the broadcast the slice pull ships.
     val rowBudget = math.max(65536L, baseCount / 6L)
     val pairMax = 512L * 1024L
-    val kMax = math.max(1, tailK)
+    val kMax = TransitSssp.TailK
     var it = itStart
     var converged = false
     // entry overlay rows carry the full loop's fresh flags; the first
@@ -1355,17 +1170,13 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     lazy val runTripAdj: DataFrame =
       if (runChange eq change) tripAdj
       else {
-        val t0 = System.nanoTime()
         runAdjBuilt = runChange.select(col("s_trip"), col("d_trip"))
-          .distinct().transform(ckptPinG)
-        TransitSssp.tlog(f"run trip-adjacency pin " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+          .distinct().transform(ckpt)
         runAdjBuilt
       }
     var pruneEnabled = false
     var cachesReady = false
     def ensureCaches(): Unit = if (!cachesReady) {
-      val cT0 = System.nanoTime()
       val spark = base.sparkSession
       val batchKey = "spark.sql.inMemoryColumnarStorage.batchSize"
       // Locked: persist() captures the session batchSize at cache
@@ -1400,9 +1211,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       pruneEnabled = tailPruneForce ||
         baseCount / nTrips >= TransitSssp.tailPruneBatchSize / 4
       probeBase = bc; probeChange = cc; cachesReady = true
-      TransitSssp.tlog(f"tail sorted cache copies ($baseCount%d base rows, " +
-        f"~$nTrips%d trips, prune=$pruneEnabled%s) " +
-        f"${(System.nanoTime() - cT0) / 1e9}%.2f s")
     }
 
     def seedPairs: DataFrame = {
@@ -1432,10 +1240,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     // outcome carries improvement rows (pend=false) and next-pending
     // rows (pend=true); the CALLER owns its release.
     def round(curBase: DataFrame, candEdges: DataFrame, inSlice: Boolean,
-        pend: DataFrame, forceMerge: Boolean, label: String)
-        : (Long, Long, DataFrame) = {
-      val itT0 = System.nanoTime()
-      def lap(t0: Long): String = f"${(System.nanoTime() - t0) / 1e9}%.2f"
+        pend: DataFrame, forceMerge: Boolean): (Long, Long, DataFrame) = {
       val cur0 = curBase
         .join(ov.select(col("src"), col("trip_id"), col("stop_sequence"),
           col("dist").as("o_dist"), col("fresh").as("o_fresh")), posKey, "left")
@@ -1471,12 +1276,9 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       val ride = cur.withColumn("rdist", rideCol)
         .observe(chObs, coalesce(sum(changedPred.cast("long")), lit(0L))
           .as("nch"))
-        .transform(ckptG)
-      val tRide = lap(itT0)
+        .transform(ckpt)
       if (chObs.get("nch").asInstanceOf[Long] == 0L) {
         rel(ride)
-        TransitSssp.tlog(f"sparse round $it%d $label%s terminal " +
-          f"(no changed rows) ${(System.nanoTime() - itT0) / 1e9}%.2f s")
         return (0L, 0L, curBase.limit(0))
       }
       val changed = ride.filter(changedPred)
@@ -1526,17 +1328,15 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
               .select(col("src"), col("trip_id"), col("stop_sequence"),
                 col("cdist").as("dist"), lit(false).as("fresh"),
                 lit(true).as("pend")))
-      val tOut0 = System.nanoTime()
       val obs = org.apache.spark.sql.Observation(
         s"transit-tail-${TransitSssp.runSeq.incrementAndGet()}")
       val out = tagged
         .observe(obs, count(when(!col("pend"), lit(1))).as("nimp"),
           count(when(col("pend"), lit(1))).as("npend"))
-        .transform(ckptG)
+        .transform(ckpt)
       rel(ride)
       val nImp = obs.get("nimp").asInstanceOf[Long]
       val nPend = obs.get("npend").asInstanceOf[Long]
-      val tOut = lap(tOut0)
       if (nImp > 0L || forceMerge) {
         // processed fresh rows have fired all effects — clear the
         // flag; per position keep the best dist (ties prefer fresh =
@@ -1547,13 +1347,10 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
           .unionByName(out.filter(!col("pend")).drop("pend"))
           .withColumn("rn", row_number().over(wPick))
           .filter(col("rn") === 1).drop("rn")
-          .transform(ckptG)
+          .transform(ckpt)
         rel(ov)
         ov = mergedOv
       }
-      TransitSssp.tlog(f"sparse round $it%d $label%s improved=$nImp%d " +
-        f"pending=$nPend%d ${(System.nanoTime() - itT0) / 1e9}%.2f s " +
-        f"(slice+ride $tRide, cand+out $tOut)")
       (nImp, nPend, out)
     }
 
@@ -1573,7 +1370,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         .join(broadcast(pairs), Seq("src", "trip_id"))
       val (nImp, nPend, out) = round(slice,
         prunedScan(probeChange, trips),
-        inSlice = false, pending, forceMerge = ovHasFresh, "pipelined")
+        inSlice = false, pending, forceMerge = ovHasFresh)
       ovHasFresh = false
       if (pendingSrc != null) rel(pendingSrc)
       if (nPend == 0L) {
@@ -1605,7 +1402,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     } else while (it < maxIterations && !converged) {
       if (expansionDead) { pipelinedRound() }
       else {
-      val mT0 = System.nanoTime()
       // ---- expansion: frontier ∪ pending trips + up to kMax change
       // hops, each hop ONE checkpoint job (pair count + slice-row
       // estimate ride on it via observe) ----
@@ -1615,7 +1411,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         val d = df
           .observe(obs, count(lit(1)).as("cnt"),
             coalesce(sum(col("len")), lit(0L)).as("rows"))
-          .transform(ckptG)
+          .transform(ckpt)
         (d, obs.get("cnt").asInstanceOf[Long], obs.get("rows").asInstanceOf[Long])
       }
       val (frontTrips, fCnt, fRows) =
@@ -1664,18 +1460,17 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         val sliceBase = prunedScan(probeBase, expTrips)
           .join(broadcast(pairs), Seq("src", "trip_id"))
           .drop("t_b")
-          .transform(ckptG)
+          .transform(ckpt)
         val candEdges = prunedScan(probeChange, expTrips)
           .join(broadcast(expanded.select(col("trip_id").as("s_trip"))
             .distinct()), Seq("s_trip"))
           .drop("t_b")
-          .transform(ckptG)
-        val tPull = f"${(System.nanoTime() - mT0) / 1e9}%.2f"
+          .transform(ckpt)
         var depth = 0
         while (depth < kEff && !converged && it < maxIterations) {
           val (nImp, _, out) = round(sliceBase, candEdges, inSlice = true,
             if (depth == 0) pending else null,
-            forceMerge = ovHasFresh, s"batch-depth-$depth")
+            forceMerge = ovHasFresh)
           ovHasFresh = false
           if (depth == 0 && pendingSrc != null) {
             rel(pendingSrc); pending = null; pendingSrc = null
@@ -1690,9 +1485,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         // them after their effects fire
         if (!converged) ovHasFresh = true
         rel(sliceBase); rel(candEdges)
-        TransitSssp.tlog(f"sparse batch hops=$hops%d closed=$closed%s " +
-          f"pairs=$expCnt%d rows=$expRows%d depths=$depth%d pull $tPull " +
-          f"${(System.nanoTime() - mT0) / 1e9}%.2f s")
       } else {
         pipelinedRound()
       }
@@ -1717,17 +1509,15 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     if (!converged) throw new IllegalStateException(
       s"TransitSssp did not converge in $maxIterations iterations — " +
         "optimal paths deeper than the bound (raise maxIterations)")
-    val mT0 = System.nanoTime()
     val full = base
       .join(ov.select(col("src"), col("trip_id"), col("stop_sequence"),
         col("dist").as("o_dist")), posKey, "left")
       .select(col("src"), col("trip_id"), col("stop_sequence"),
         coalesce(col("o_dist"), col("dist")).as("dist"),
         lit(false).as("fresh"))
-      .transform(ckptG)
+      .transform(ckpt)
     rel(base); rel(ov)
-    TransitSssp.tlog(f"sparse merge ${(System.nanoTime() - mT0) / 1e9}%.2f s")
-    (full, it)
+    full
   }
 
   /** Release the instance's pinned static frames (trip prefix + CHANGE
@@ -1888,7 +1678,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       .join(broadcast(seed), Seq("trip_id", "stop_sequence"), "left")
       .select(col("trip_id"), col("stop_sequence"), col("dist"),
         when(col("dist") === col("srel"), lit(0L)).as("lev"))
-      .transform(ckptG)
+      .transform(ckpt)
     // ride closure of levels: running min over the row's equal-rel run
     // (contiguous by the non-increasing converged rel; integer-valued
     // doubles, so the (trip_id, dist) partition key is exact)
@@ -1925,7 +1715,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
             .as("unlabeled"))
         .select(col("trip_id"), col("stop_sequence"), col("dist"),
           col("nlev").as("lev"))
-        .transform(ckptG)
+        .transform(ckpt)
       converged = obs.get("improved").asInstanceOf[Long] == 0L
       lastUnlabeled = obs.get("unlabeled").asInstanceOf[Long]
       rel(lev)

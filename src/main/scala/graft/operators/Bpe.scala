@@ -124,18 +124,16 @@ object Bpe {
       overlayMaxWords: Int = SymsOverlayMaxWords,
       baseTopRows: Int = BaseTopRows,
       occIndexAfterSparseRounds: Int = OccIndexAfterSparseRounds,
-      // r18 — the last three @volatile spec/measurement hooks, threaded
-      // the same way: per-call with production defaults, parity-pinned
-      // to identical merges (they shift wall time / storage level, never
-      // answers)
+      // r18 — the last @volatile spec hooks, threaded the same way:
+      // per-call with production defaults, parity-pinned to identical
+      // merges (they shift wall time, never answers)
       inHeapHandoffCheckRounds: Int = InHeapHandoffCheckRounds,
       argmaxHeapMinSlack: Long = ArgmaxHeapMinSlack,
-      serializedCkpt: Boolean = serCkpt,
       occProbeMaxTotalRows: Int = OccProbeMaxTotalRows,
       occIndexRebuildOvWords: Int = OccIndexRebuildOvWords,
-      // session-local regime evidence (r19 — [[TrainTelemetry]] scaladoc):
-      // pass your own instance to require on counters only THIS call
-      // advances; the default keeps an unshared one
+      // per-call regime evidence ([[TrainTelemetry]] scaladoc): pass your
+      // own instance to require on counters only THIS call advances; the
+      // default keeps an unshared one
       telemetry: TrainTelemetry = new TrainTelemetry)
       : Seq[(String, String)] = {
     val spark = words.sparkSession
@@ -162,8 +160,8 @@ object Bpe {
     else trainDistributed(w, numMerges, hybridMaxPairs, inHeapMaxBytes,
       overlayMaxAffected, overlayMaxWords, baseTopRows,
       occIndexAfterSparseRounds, inHeapHandoffCheckRounds,
-      argmaxHeapMinSlack, serializedCkpt, occProbeMaxTotalRows,
-      occIndexRebuildOvWords, telemetry)
+      argmaxHeapMinSlack, occProbeMaxTotalRows, occIndexRebuildOvWords,
+      telemetry)
   }
 
   /** Adjacent-pair weighted counts of a symbol table. */
@@ -298,10 +296,8 @@ object Bpe {
       hybridMaxPairs: Long, inHeapMaxBytes: Long, overlayMaxAffected: Int,
       overlayMaxWords: Int, baseTopRows: Int,
       occIndexAfterSparse: Int, inHeapHandoffCheckRounds: Int,
-      argmaxHeapMinSlack: Long, ser: Boolean,
-      occProbeBudget: Int, occRebuildOvWords: Int,
+      argmaxHeapMinSlack: Long, occProbeBudget: Int, occRebuildOvWords: Int,
       telemetry: TrainTelemetry): Seq[(String, String)] = {
-    def ckpt(df: DataFrame): DataFrame = Bpe.ckpt(df, ser)
     // Eager localCheckpoint, not cache: each round's counts plan references
     // the previous round's syms plan TWICE (before/after aggregation), so
     // chained caches grow the logical plan quadratically — a 100-round run
@@ -314,7 +310,7 @@ object Bpe {
       col("count").cast("long").as("count")).transform(ckpt)
     val counts = pairCounts(syms).transform(ckpt) // the one full aggregation
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    lastRegimes.clear()
+    telemetry.lastRegimes.clear()
     // Hybrid gate: the checkpoint made the row count free, and the pair
     // TABLE (unique adjacent symbol pairs — alphabet-driven) is orders
     // smaller than the word table that failed the local gate, so it almost
@@ -333,8 +329,7 @@ object Bpe {
       val footprint =
         if (inHeapMaxBytes <= 0L) Long.MaxValue else inHeapFootprint(syms)
       if (footprint <= inHeapMaxBytes) {
-        lastRegimes.clear()
-        lastRegimes.add("inheap")
+        telemetry.lastRegimes.add("inheap")
         val rel = org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint _
         val idx = new PairMapIndex(argmaxHeapMinSlack)
         counts.as[(String, String, Long)].collect()
@@ -348,10 +343,10 @@ object Bpe {
       } else trainHybrid(syms, counts, merges, numMerges, hybridMaxPairs,
         inHeapMaxBytes, overlayMaxAffected, overlayMaxWords, baseTopRows,
         occIndexAfterSparse, inHeapHandoffCheckRounds, argmaxHeapMinSlack,
-        ser, occProbeBudget, occRebuildOvWords, telemetry)
+        occProbeBudget, occRebuildOvWords, telemetry)
     } else trainTableLoop(syms, counts, merges, numMerges,
       overlayMaxAffected, overlayMaxWords, baseTopRows, occIndexAfterSparse,
-      ser, occProbeBudget, occRebuildOvWords, telemetry)
+      occProbeBudget, occRebuildOvWords, telemetry)
     merges.toSeq
   }
 
@@ -468,7 +463,6 @@ object Bpe {
     val counts = st.counts
     val vocab = st.vocab
     val index = st.index
-    var round = 0
     // prior grows by exactly the batch each round — maintained
     // incrementally (a per-round rebuild is O(merges) strings, which over
     // a 32k-deep run is O(M^2) of pure overhead in the regime that exists
@@ -476,7 +470,6 @@ object Bpe {
     val prior = scala.collection.mutable.HashSet.empty[String]
     merges.foreach { case (a, b) => prior += (a + b) }
     while (merges.size < numMerges && map.nonEmpty) {
-      val roundT0 = System.nanoTime()
       val batch = selectBatchFromMap(map, prior).take(numMerges - merges.size)
       merges ++= batch
       batch.foreach { case (a, b) => prior += (a + b) }
@@ -494,7 +487,6 @@ object Bpe {
         f
       }
       val visited = new java.util.BitSet(syms.length)
-      var touched = 0
       batchIds.foreach { case (aId, bId, _) =>
         val k0 = pairKey(aId, bId)
         index.get(k0).foreach { occ =>
@@ -519,7 +511,6 @@ object Bpe {
                 i += 1
               }
               if (contains) {
-                touched += 1
                 val c = counts(w)
                 i = 0
                 while (i < s.length - 1) {
@@ -550,11 +541,6 @@ object Bpe {
         }
         index.remove(k0)
       }
-      round += 1
-      if (trace && (round % 1024 == 0 || batch.size > 1))
-        println(f"[bpe] inheap round $round%d batch=${batch.size}%d " +
-          f"merges=${merges.size}%d pairs=${map.size}%d touched=$touched%d " +
-          f"${(System.nanoTime() - roundT0) / 1e9}%.4f s")
     }
   }
 
@@ -626,21 +612,20 @@ object Bpe {
       inHeapMaxBytes: Long, overlayMaxAffected: Int, overlayMaxWords: Int,
       baseTopRows: Int, occIndexAfterSparse: Int,
       inHeapHandoffCheckRounds: Int, argmaxHeapMinSlack: Long,
-      ser: Boolean, occProbeBudget: Int, occRebuildOvWords: Int,
+      occProbeBudget: Int, occRebuildOvWords: Int,
       telemetry: TrainTelemetry): Unit = {
     val spark = symsInit.sparkSession
     import spark.implicits._
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    def ckpt(df: DataFrame): DataFrame = Bpe.ckpt(df, ser)
-    lastRegimes.add("hybrid")
+    telemetry.lastRegimes.add("hybrid")
     val rel = org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint _
     val map = new PairMapIndex(argmaxHeapMinSlack)
     countsInit.as[(String, String, Long)].collect()
       .foreach { case (a, b, n) => map.seed(a, b, n) }
     rel(countsInit)
-    val words = new WordOverlay(symsInit, overlayMaxWords, ser)
+    val words = new WordOverlay(symsInit, overlayMaxWords)
     // r17: the hybrid's deep-round floor was the same per-round affected
     // contains-scan the table loop had (counts live in the driver map
     // here, so the scan was the round's ONLY distributed job) — the
@@ -649,7 +634,6 @@ object Bpe {
       occRebuildOvWords, telemetry)
     var round = 0
     while (merges.size < numMerges && map.nonEmpty) {
-      val roundT0 = System.nanoTime()
       val prior = merges.iterator.map { case (a, b) => a + b }.toSet
       val batch = selectBatchFromMap(map, prior).take(numMerges - merges.size)
       merges ++= batch
@@ -708,19 +692,14 @@ object Bpe {
         occ.onDenseRound() // base replaced — index invalid
       }
       round += 1
-      if (trace) println(f"[bpe] hybrid round $round%d batch=${batch.size}%d " +
-        f"merges=${merges.size}%d pairs=${map.size}%d ovW=${words.overlaySize}%d " +
-        f"aff=${affRows.length}%d idx=${occ.active}%b " +
-        f"${(System.nanoTime() - roundT0) / 1e9}%.2f s")
       if (map.size > hybridMaxPairs + hybridMaxPairs / 2) {
-        if (trace) println(s"[bpe] pair map outgrew the driver bound " +
-          s"(${map.size}) — handing off to the distributed table loop")
+        // the pair map outgrew the driver bound: hand off to the
+        // distributed table loop
         occ.release() // built on a freeze the handoff is about to fold
         val handoff = words.handoff()
         trainTableLoop(handoff, pairCounts(handoff).transform(ckpt),
           merges, numMerges, overlayMaxAffected, overlayMaxWords, baseTopRows,
-          occIndexAfterSparse, ser, occProbeBudget, occRebuildOvWords,
-          telemetry)
+          occIndexAfterSparse, occProbeBudget, occRebuildOvWords, telemetry)
         return
       }
       // Deep-merge hand-off (r14): merging SHRINKS the symbol strings, so
@@ -733,9 +712,7 @@ object Bpe {
           round % inHeapHandoffCheckRounds == 0) {
         val footprint = inHeapFootprint(words.patched)
         if (footprint <= inHeapMaxBytes) {
-          if (trace) println(s"[bpe] encoded state fits the in-heap bound " +
-            s"(~$footprint B) at merge ${merges.size} — handing off in-heap")
-          lastRegimes.add("inheap")
+          telemetry.lastRegimes.add("inheap")
           import scala.jdk.CollectionConverters._
           val state = buildInHeapState(words.patched.select("s", "count")
             .as[(String, Long)].toLocalIterator().asScala)
@@ -1016,9 +993,7 @@ object Bpe {
     * checkpoint on its own bound; dense rounds replace the base outright
     * (folding the overlay in). Owns the base checkpoint — callers exit
     * through [[handoff]] or [[release]]. */
-  private final class WordOverlay(symsInit: DataFrame, maxWords: Int,
-      ser: Boolean = Bpe.serCkpt) {
-    private def ckpt(df: DataFrame): DataFrame = Bpe.ckpt(df, ser)
+  private final class WordOverlay(symsInit: DataFrame, maxWords: Int) {
     private val spark = symsInit.sparkSession
     def session: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
@@ -1231,7 +1206,6 @@ object Bpe {
       // matrix-pinned; runs at round start BEFORE the round derives its
       // word-table view.
       else if (idx.nonEmpty && rebuildOvWords > 0 && ovI.size > rebuildOvWords) {
-        occIndexRebuilds.incrementAndGet()
         telemetry.occIndexRebuilds.incrementAndGet()
         build()
       }
@@ -1288,12 +1262,11 @@ object Bpe {
             }, scala.collection.immutable.ArraySeq.unsafeWrapArray(pids))
           if (parts.exists(_._2)) {
             if (canProve) {
-              occProbeServed.incrementAndGet()
               telemetry.occProbeServed.incrementAndGet()
               Some((IndexedSeq.empty, true)) // dense, proven
             } else {
               // budget-truncated: inconclusive, the scan fallback decides
-              occProbeInconclusive.incrementAndGet()
+              telemetry.occProbeInconclusive.incrementAndGet()
               None
             }
           } else {
@@ -1306,7 +1279,6 @@ object Bpe {
             ovI.foreach { case (wid, (s, c)) =>
               if (needleStrs.exists(s.contains)) out += ((wid, s, c))
             }
-            occProbeServed.incrementAndGet()
             telemetry.occProbeServed.incrementAndGet()
             Some((out.toIndexedSeq, false))
           }
@@ -1417,11 +1389,10 @@ object Bpe {
   private def trainTableLoop(symsInit: DataFrame, countsInit: DataFrame,
       merges: scala.collection.mutable.ArrayBuffer[(String, String)],
       numMerges: Int, overlayMaxAffected: Int, overlayMaxWords: Int,
-      baseTopRows: Int, occIndexAfterSparse: Int, ser: Boolean,
+      baseTopRows: Int, occIndexAfterSparse: Int,
       occProbeBudget: Int, occRebuildOvWords: Int,
       telemetry: TrainTelemetry): Unit = {
-    def ckpt(df: DataFrame): DataFrame = Bpe.ckpt(df, ser)
-    lastRegimes.add("tableloop")
+    telemetry.lastRegimes.add("tableloop")
     val spark = symsInit.sparkSession
     import spark.implicits._
     import scala.concurrent.{Await, Future}
@@ -1431,7 +1402,7 @@ object Bpe {
     // syms: frozen base + bounded driver overlay (see [[WordOverlay]]) —
     // deep rounds touch a handful of words, so materializing a
     // table-sized checkpoint per round is pure write amplification
-    val words = new WordOverlay(symsInit, overlayMaxWords, ser)
+    val words = new WordOverlay(symsInit, overlayMaxWords)
     var base = countsInit
     // overlay: CURRENT count of every pair touched since the freeze
     // (≤ 0 entries retained — they mask a consumed base row); `cand`
@@ -1552,9 +1523,7 @@ object Bpe {
         .unsafeWrapArray(raw), prior, complete = false)._1
     }
     var exhausted = false
-    var round = 0
     while (merges.size < numMerges && !exhausted) {
-      val roundT0 = System.nanoTime()
       val prior = merges.iterator.map { case (a, b) => a + b }.toSet
       var batch = selectBatchFromCand(prior).take(numMerges - merges.size)
       if (batch.isEmpty) {
@@ -1676,12 +1645,6 @@ object Bpe {
           occ.onDenseRound()
           dropBaseIdx()
         }
-        round += 1
-        if (trace) println(f"[bpe] round $round%d batch=${batch.size}%d " +
-          f"merges=${merges.size}%d ov=${ov.size}%d cand=${cand.size}%d " +
-          f"ovW=${words.overlaySize}%d aff=${affRows.length}%d " +
-          f"idx=${occ.active}%b " +
-          f"${(System.nanoTime() - roundT0) / 1e9}%.2f s")
       }
     }
     occ.release()
@@ -1690,50 +1653,10 @@ object Bpe {
     words.release()
   }
 
-  /** SPARK_GRAFT_BPE_TRACE=1 prints one line per distributed round (batch
-    * width, cumulative merges, wall) — the batch-size decay curve that
-    * projects 32k-vocab wall time; off by default. */
-  private val trace: Boolean = sys.env.get("SPARK_GRAFT_BPE_TRACE").contains("1")
-
-  /** SPARK_GRAFT_BPE_SER=1 stores the round checkpoints (syms/counts)
-    * SERIALIZED — measurement knob mirroring TransitSssp's grid storage
-    * decision; off by default pending a measured win (BPE's tables are
-    * ~100 MB of short strings, an order below the grid sizes where heap
-    * churn was the proven pathology). Env-seeded DEFAULT of train's
-    * per-call parameter (r18): the both-levels parity spec passes each
-    * value per call instead of mutating a global. */
-  private[graft] val serCkpt: Boolean =
-    sys.env.get("SPARK_GRAFT_BPE_SER").contains("1")
-
-  /** Eager local checkpoint at the given storage level. */
-  private def ckpt(df: DataFrame, ser: Boolean): DataFrame =
-    if (ser) df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else df.localCheckpoint(true)
-
-  /** Test hook: the loop regimes the most recent distributed train()
-    * traversed, in order ("hybrid", "tableloop") — lets the hand-off spec
-    * assert the overflow path actually fired rather than trusting a
-    * fixture to overflow. Reset per trainDistributed call; not meaningful
-    * under concurrent train() calls. */
-  private[graft] val lastRegimes =
-    new java.util.concurrent.CopyOnWriteArrayList[String]()
-
-  /** Monotonic count of occurrence-index probes that SERVED a round (a
-    * probe returning a usable result — exact affected set or a proven
-    * density verdict). Telemetry, same pattern as
-    * TransitSssp.acyclicResolveServed: the `text_bpe_merges_indexed`
-    * catalog row requires it to advance, so a silent admission regression
-    * (index never builds / probe never serves) fails Verify loudly
-    * instead of quietly riding the scan path. */
-  private[graft] val occProbeServed =
-    new java.util.concurrent.atomic.AtomicLong()
-
-  /** Monotonic count of probes that hit the [[OccProbeMaxTotalRows]]
-    * budget before proving density — the r18 inconclusive path, where
-    * the scan fallback decides. Spec-observed telemetry. */
-  private[graft] val occProbeInconclusive =
-    new java.util.concurrent.atomic.AtomicLong()
+  /** Eager local checkpoint (deserialized: BPE's tables are ~100 MB of
+    * short strings, an order below the grid sizes where TransitSssp's
+    * serialized level paid for itself). */
+  private def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** ovI size past which a LIVE occurrence index proactively REBUILDS at
     * round start instead of carrying the overlay further (r18 — the 16k
@@ -1748,20 +1671,25 @@ object Bpe {
     * train's per-call parameter (measured A/B below pins the win). */
   private[graft] val OccIndexRebuildOvWords: Int = 24 * 1024
 
-  /** Monotonic count of proactive ovI-bound index rebuilds (r18) —
-    * spec-observed telemetry, same pattern as [[occProbeServed]]. */
-  private[graft] val occIndexRebuilds =
-    new java.util.concurrent.atomic.AtomicLong()
-
-  /** PER-CALL training telemetry (r19, r18 verdict #2 — the
-    * TransitSssp.RegimeEvidence pattern): the companion counters above
-    * are process-global, so a regime-proof `require` that diffs them can
-    * be false-passed by a concurrent train() in the same JVM. Callers
-    * that need to REQUIRE a path engaged pass their own instance to
-    * [[train]]; the occurrence index bumps it alongside the globals. */
+  /** PER-CALL training telemetry: callers that need to REQUIRE a path
+    * engaged pass their own instance to [[train]] and read counters only
+    * that call can advance — no process-global copy exists, so a
+    * concurrent train() in the same JVM cannot false-pass the check. */
   final class TrainTelemetry {
+    /** Occurrence-index probes that SERVED a round (exact affected set or
+      * a proven density verdict): the `text_bpe_merges_indexed` catalog
+      * row requires it to advance, so a silent admission regression
+      * (index never builds / probe never serves) fails Verify loudly. */
     val occProbeServed = new java.util.concurrent.atomic.AtomicLong(0L)
+    /** Probes that hit the [[OccProbeMaxTotalRows]] budget before proving
+      * density — the inconclusive path, where the scan fallback decides. */
+    val occProbeInconclusive = new java.util.concurrent.atomic.AtomicLong(0L)
+    /** Proactive ovI-bound index rebuilds (r18). */
     val occIndexRebuilds = new java.util.concurrent.atomic.AtomicLong(0L)
+    /** The loop regimes the distributed trainer traversed, in order
+      * ("hybrid", "tableloop", "inheap") — lets the hand-off specs assert
+      * the overflow path actually fired. Empty when trainLocal ran. */
+    val lastRegimes = new java.util.concurrent.CopyOnWriteArrayList[String]()
   }
 
   /** Spark orders strings by UTF-8 bytes = code-point order — the local

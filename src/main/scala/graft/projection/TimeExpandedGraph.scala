@@ -39,10 +39,9 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     // the same way they pass ssspLocalThreshold
     val cappedCsrMaxEdges: Long = graft.graph.TransitSssp.cappedCsrMaxEdges,
     val cappedSliceMinNodes: Long = graft.graph.TransitSssp.cappedSliceMinNodes,
-    /** Session-local regime evidence the projection's TransitSssp runner
-      * bumps (r19 — TransitSssp.RegimeEvidence scaladoc); the owning
-      * engine passes its own so callers can require regimes engaged
-      * without reading process-global counters. */
+    /** Regime evidence the projection's TransitSssp runner bumps
+      * (TransitSssp.RegimeEvidence scaladoc); the owning engine passes its
+      * own so callers can require regimes engaged per engine. */
     val regimeEvidence: graft.graph.TransitSssp.RegimeEvidence =
       new graft.graph.TransitSssp.RegimeEvidence) {
 
@@ -156,17 +155,12 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     * [[LocalProjection]]) — None in the distributed regime, where callers
     * stay on the declarative DataFrame path. */
   lazy val localIndex: Option[LocalProjection] = {
-    // Resolve the regime with the count-only gate, then run the two
-    // bounded cache reads — the CSR's edge collect and the node-attribute
-    // collect — concurrently instead of back to back (they are the tail of
-    // every fresh projection's first routing call).
-    val r = if (sssp.isUnderCap) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val nodesF = Future { LocalProjection.from(nodes) }
-      sssp.isLocal // builds the CSR while the node collect runs
-      Some(Await.result(nodesF, scala.concurrent.duration.Duration(10, "min")))
-    } else None
+    // The node collect runs on the calling thread, after the regime gate:
+    // this initializer holds the projection's monitor, so work handed to
+    // the shared pool can queue behind pool threads that are themselves
+    // BLOCKED on that monitor (concurrent journey calls entering
+    // localStopDim) and never run — a deadlock.
+    val r = if (sssp.isLocal) Some(LocalProjection.from(nodes)) else None
     localIndexForced = true
     r
   }

@@ -10,30 +10,26 @@ import org.apache.spark.sql.SparkSession
   * reduction. This probe builds [[graft.etl.SyntheticGtfs.hub]] at 10×
   * Modena cardinality (50 spokes × 100 stops × 500 trips = 2.5M
   * stoptimes, ALL transfers at one shared hub stop), routes an
-  * end-to-end spoke pair through the distributed branch with the
-  * per-round trace on, and asserts itinerary parity against a
-  * raised-threshold CSR twin. Interpretation notes:
+  * end-to-end spoke pair through the distributed branch, and asserts
+  * itinerary parity against a raised-threshold CSR twin. Interpretation
+  * notes:
   *  - partial aggregation must absorb the hub's candidate fan (the
   *    groupBy(src, d_trip, d_seq) reduction is map-side combinable);
-  *    the check is that no round stalls on a straggler task — compare
-  *    the trace's round walls against the uniform 10× campaign medians
-  *    in COVERAGE.md.
+  *    the check is that the route's wall stays near the uniform 10×
+  *    campaign medians in COVERAGE.md.
   *  - the hub makes the trip-level adjacency near-complete, so the
   *    sparse tail's expansion budget must trip and fall back to the
-  *    un-batched round shape (trace shows no "sparse batch … depths>1"
-  *    lines at full fan) — the guard under test.
+  *    un-batched round shape — the guard under test.
   * walkRadiusMeters = 50 keeps WALK_TO to self-loops, so the ONLY
   * transfer point is the hub (pure skew, no geometric side-channels).
   *
-  * Recipe: SPARK_GRAFT_SSSP_TRACE=1 SPARK_DRIVER_MEM=24g
-  *   sbt "runMain graft.tools.HubScale"
+  * Recipe: SPARK_DRIVER_MEM=24g sbt "runMain graft.tools.HubScale"
   * Knobs: SPARK_GRAFT_HUB_SPOKES / _STOPS / _TRIPS override the shape;
   * SPARK_GRAFT_HUB_DIRTY=1 rewinds every 17th intra-trip arrival clock by
   * 200 s (arr < previous dep → a negative PRECEDES Δacum inside any
   * cap) — the r15 dirty-feed measurement: the capped CSR must STILL
   * serve, through the label-correcting fixpoint, instead of declining to
-  * the 335 s-class distributed rounds (SPARK_GRAFT_SSSP_CAPPED_DIRTY=0
-  * is the decline control). Departure clocks stay monotone, so the
+  * the 335 s-class distributed rounds. Departure clocks stay monotone, so the
   * perturbation never moves a clock PAST the anchor — capped and
   * uncapped itineraries stay comparable (full parity expected).
   */
@@ -97,7 +93,7 @@ object HubScale {
     // when a zero-total cycle forces a non-canonical tree)
     println(s"hub route endpoints: depart ${rows.head.getAs[String]("departure")}" +
       s" arrive ${rows.last.getAs[String]("arrival")}")
-    val acyc = graft.graph.TransitSssp.acyclicResolveServed.get()
+    val acyc = eng.evidence.acyclicResolveServed.get()
     if (acyc > 0) println(s"acyclic re-resolutions served: $acyc " +
       "(zero-total-cycle repair engaged on the distributed walk)")
 

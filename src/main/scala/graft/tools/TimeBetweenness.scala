@@ -22,8 +22,7 @@ import org.apache.spark.sql.SparkSession
   *    DEFAULT (the measured adjudication in Betweenness.ofProjection's
   *    scaladoc).
   *  - "transit": additionally routes the above-threshold branch to
-  *    `TransitBetweenness` — the trip-collapse alternative. Pair with
-  *    SPARK_GRAFT_BW_TRACE=1 for per-phase round traces. */
+  *    `TransitBetweenness` — the trip-collapse alternative. */
 object TimeBetweenness {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -125,20 +125,20 @@ object TimeScale {
         case Some(sel) => sel.split(",").map(_.trim.toInt).toSeq.map(allPairs)
         case None => allPairs
       }
-      val csrServed0 = graft.graph.TransitSssp.cappedCsrServed.get()
+      val csrServed0 = eng.evidence.cappedCsrServed.get()
       // per-pair split (r18, r17 verdict #7): the one-time capped-bucket
       // build (slice pin + CSR collect, memoized — re-paid only on cold
       // page cache) vs the pure routing component. The campaign's spread
       // gate reads the ROUTING component, so a cold-box first pair no
       // longer fails a gate about routing variance.
       val routeSplits = pairs.map { case (a, b) =>
-        val build0 = graft.graph.TransitSssp.cappedBuildNanos.get()
+        val build0 = eng.evidence.cappedBuildNanos.get()
         val (rows, s) = timed {
           eng.routing("2024-01-18", 1.0, "08:00:00", a, b).collect()
         }
         if (rows.isEmpty) println(s"WARN: no itinerary $a -> $b at scale $sc")
         val buildSec =
-          (graft.graph.TransitSssp.cappedBuildNanos.get() - build0) / 1e9
+          (eng.evidence.cappedBuildNanos.get() - build0) / 1e9
         (s, buildSec)
       }
       val routeSecs = routeSplits.map(_._1)
@@ -150,16 +150,14 @@ object TimeScale {
       // regressed capped-CSR gate — the counter says which regime served.
       // SPARK_GRAFT_SCALE_REQUIRE_CSR=1 (the 10×-campaign recipe) asserts
       // every routed pair rode the capped CSR.
-      val csrServed = graft.graph.TransitSssp.cappedCsrServed.get() - csrServed0
+      val csrServed = eng.evidence.cappedCsrServed.get() - csrServed0
       if (pairs.nonEmpty && !isLocal)
         println(s"  scale $sc capped-CSR served $csrServed/${pairs.size} pairs")
-      // campaign-log counters (r16 verdict #3/#6): a clean feed must show
-      // zero acyclic repairs, and the SPFA worst-case telemetry belongs in
-      // the same log line the gate reads
+      // campaign-log counter (r16 verdict #3): a clean feed must show
+      // zero acyclic repairs
       if (pairs.nonEmpty && !isLocal)
         println(s"  scale $sc counters: acyclicResolveServed=" +
-          s"${graft.graph.TransitSssp.acyclicResolveServed.get()} " +
-          s"spfaMaxDequeues=${graft.graph.ShortestPaths.spfaMaxDequeues.get()}")
+          s"${eng.evidence.acyclicResolveServed.get()}")
       if (sys.env.get("SPARK_GRAFT_SCALE_REQUIRE_CSR").contains("1") &&
           !isLocal && csrServed < pairs.size)
         throw new IllegalStateException(

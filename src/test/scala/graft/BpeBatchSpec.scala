@@ -123,10 +123,8 @@ class BpeBatchSpec extends SparkSpec {
     // trips it); merges must be unchanged and the rebuild counter must
     // advance (proof the path ran)
     locally {
-      // r19: per-call telemetry (Bpe.TrainTelemetry) — the evidence is
-      // SESSION-LOCAL: the run's own instance advances, a bystander
-      // instance stays untouched (the global-counter diff this replaces
-      // could be advanced by any concurrent train in the JVM)
+      // per-call telemetry (Bpe.TrainTelemetry): the run's own instance
+      // advances, a bystander instance stays untouched
       val tel = new Bpe.TrainTelemetry
       val bystander = new Bpe.TrainTelemetry
       assert(Bpe.train(df, 30, localMaxWords = 0L, hybridMaxPairs = 0L,
@@ -148,12 +146,12 @@ class BpeBatchSpec extends SparkSpec {
     // actually advance (proof the None path ran rather than the fixture
     // quietly fitting inside the budget)
     locally {
-      val inc0 = Bpe.occProbeInconclusive.get()
+      val tel = new Bpe.TrainTelemetry
       assert(Bpe.train(df, 30, localMaxWords = 0L, hybridMaxPairs = 0L,
         inHeapMaxBytes = 0L, occIndexAfterSparseRounds = 0,
-        occProbeMaxTotalRows = 1) == local,
+        occProbeMaxTotalRows = 1, telemetry = tel) == local,
         "budget-truncated (inconclusive) probe path diverged")
-      assert(Bpe.occProbeInconclusive.get() > inc0,
+      assert(tel.occProbeInconclusive.get() > 0L,
         "1-entry probe budget never produced an inconclusive probe")
     }
     // the HYBRID loop shares the index (its deep floor was the same scan)
@@ -244,13 +242,14 @@ class BpeBatchSpec extends SparkSpec {
     // the 4x growth bound (>64) and the loop hands off. The regime hook
     // asserts the hand-off actually fired — a fixture that stopped
     // overflowing would fail here, not silently test one loop.
+    val tel = new Bpe.TrainTelemetry
     val crossed = Bpe.train(df, 60, localMaxWords = 0L, hybridMaxPairs = 16L,
-      inHeapMaxBytes = 0L)
+      inHeapMaxBytes = 0L, telemetry = tel)
     assert(crossed == local,
       s"hand-off merges diverge:\n  local:   $local\n  crossed: $crossed")
     import scala.jdk.CollectionConverters._
-    assert(Bpe.lastRegimes.asScala.toSeq == Seq("hybrid", "tableloop"),
-      s"expected a hybrid->tableloop hand-off, got ${Bpe.lastRegimes.asScala}")
+    assert(tel.lastRegimes.asScala.toSeq == Seq("hybrid", "tableloop"),
+      s"expected a hybrid->tableloop hand-off, got ${tel.lastRegimes.asScala}")
   }
 
   test("hybrid hands off to the in-heap regime mid-training (r15 streamed int build)") {
@@ -268,13 +267,14 @@ class BpeBatchSpec extends SparkSpec {
     val local = Bpe.train(df, 10)
     // round-0 footprint: 32 occurrences × 12 + 4 words × 48 = 576
     val budget = 570L
+    val tel = new Bpe.TrainTelemetry
     val handed = Bpe.train(df, 10, localMaxWords = 0L,
-      inHeapMaxBytes = budget, inHeapHandoffCheckRounds = 1)
+      inHeapMaxBytes = budget, inHeapHandoffCheckRounds = 1, telemetry = tel)
     assert(handed == local,
       s"mid-training in-heap hand-off merges diverge:\n" +
         s"  local:  $local\n  handed: $handed")
-    assert(Bpe.lastRegimes.asScala.toSeq == Seq("hybrid", "inheap"),
-      s"expected a hybrid->inheap hand-off, got ${Bpe.lastRegimes.asScala}")
+    assert(tel.lastRegimes.asScala.toSeq == Seq("hybrid", "inheap"),
+      s"expected a hybrid->inheap hand-off, got ${tel.lastRegimes.asScala}")
   }
 
   test("argmax heap mode and scan mode learn identical merges (r15)") {
@@ -297,19 +297,6 @@ class BpeBatchSpec extends SparkSpec {
     assert(viaHeap == viaScan,
       s"argmax modes diverge:\n  heap: $viaHeap\n  scan: $viaScan")
     assert(viaHeap == Bpe.train(df, 40), "distributed diverged from local")
-  }
-
-  test("both checkpoint storage levels produce identical merges") {
-    // Same guard as TransitSsspSpec's storage-level test: the knob must
-    // never change answers and both branches must run under a spec.
-    val words = Seq(("abcabc", 50L), ("abd", 40L), ("xbc", 35L), ("abc", 30L))
-    val df = words.toDF("word", "count")
-    val local = Bpe.train(df, 6)
-    val ser = Bpe.train(df, 6, localMaxWords = 0L, inHeapMaxBytes = 0L,
-      serializedCkpt = true)
-    val deser = Bpe.train(df, 6, localMaxWords = 0L, inHeapMaxBytes = 0L,
-      serializedCkpt = false)
-    assert(ser == local && deser == local)
   }
 
   test("selectBatchEx with a complete table has no probe floor") {

@@ -123,25 +123,29 @@ class GtfsEngineSpec extends SparkSpec {
     // (TransitSssp.runForTargetsCapped). At fixture scale the node-count
     // floor keeps the distributed path, so force the capped machinery on
     // and pin the itinerary against BOTH the capped distributed flow (CSR
-    // budget zeroed) and the plain local branch — the engagement counter
-    // proves the forced run took the CSR path rather than silently
-    // falling back.
-    import graft.graph.TransitSssp
+    // budget zeroed) and the plain local branch — the engine's own
+    // engagement counter proves the forced run took the CSR path rather
+    // than silently falling back.
     val tables = graft.api.DemoGtfs.tables(spark)
-    def viaForced(csrBudget: Long): (Seq[String], Long) = {
-      // r18: gates forced per-engine (constructor params), no global
-      // mutation window
-      val before = TransitSssp.cappedCsrServed.get()
-      val eng = new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
+    // gates forced per-engine (constructor params); each engine's evidence
+    // counts only its own calls
+    def forcedEngine(csrBudget: Long) =
+      new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
         cappedCsrMaxEdges = csrBudget, cappedSliceMinNodes = 0L)
-      val seg = eng.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
+    def route(eng: graft.api.RoutingEngine): Seq[String] =
+      eng.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
         .collect().map(_.toString).toSeq
-      (seg, TransitSssp.cappedCsrServed.get() - before)
-    }
-    val (segCsr, served) = viaForced(1L << 40)
-    assert(served >= 1L, "capped-CSR regime did not engage under forced gates")
-    val (segDist, servedDist) = viaForced(0L)
-    assert(servedDist == 0L, "zeroed CSR budget must keep the distributed flow")
+    val engCsr = forcedEngine(1L << 40)
+    val bystander = forcedEngine(1L << 40)
+    val segCsr = route(engCsr)
+    assert(engCsr.evidence.cappedCsrServed.get() >= 1L,
+      "capped-CSR regime did not engage under forced gates")
+    assert(bystander.evidence.cappedCsrServed.get() == 0L,
+      "an engine that routed nothing must report no capped-CSR runs")
+    val engDist = forcedEngine(0L)
+    val segDist = route(engDist)
+    assert(engDist.evidence.cappedCsrServed.get() == 0L,
+      "zeroed CSR budget must keep the distributed flow")
     val segLocal = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
       .collect().map(_.toString).toSeq
     assert(segCsr == segDist, "capped-CSR itinerary diverged from distributed")
@@ -259,11 +263,10 @@ class GtfsEngineSpec extends SparkSpec {
     val segL = seg(new graft.api.RoutingEngine(tables)) // uncapped CSR
     val segD = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L))
     val segC = { // forced capped-CSR regime on the same feed (per-engine)
-      import graft.graph.TransitSssp
-      val srv0 = TransitSssp.cappedCsrServed.get()
-      val r = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
-        cappedSliceMinNodes = 0L))
-      assert(TransitSssp.cappedCsrServed.get() > srv0); r
+      val eng = new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
+        cappedSliceMinNodes = 0L)
+      val r = seg(eng)
+      assert(eng.evidence.cappedCsrServed.get() > 0L); r
     }
     assert(segD == segC, "the two capped regimes must agree exactly")
     // uncapped keeps the dropped intermediate: one extra ride segment
@@ -289,7 +292,6 @@ class GtfsEngineSpec extends SparkSpec {
     // divergence applies), and the negative-served counter proves the
     // SPFA path ran.
     import graft.functions.TimeFunctions.secondsSinceMidnight
-    import graft.graph.TransitSssp
     val agency = Seq(("A", "http://example.org", "Europe/Rome"))
       .toDF("agency_name", "agency_url", "agency_timezone")
     val routes = Seq(("R1", "1", "Start-Mid", 3), ("R2", "2", "Mid-End", 3))
@@ -320,13 +322,12 @@ class GtfsEngineSpec extends SparkSpec {
     val segL = seg(new graft.api.RoutingEngine(tables)) // uncapped local CSR
     val segD = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L))
     val segC = { // forced capped-CSR regime — must take the SPFA path
-      val (srv0, neg0) = (TransitSssp.cappedCsrServed.get(),
-        TransitSssp.cappedCsrNegativeServed.get())
-      val r = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
-        cappedSliceMinNodes = 0L))
-      assert(TransitSssp.cappedCsrServed.get() > srv0,
+      val eng = new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
+        cappedSliceMinNodes = 0L)
+      val r = seg(eng)
+      assert(eng.evidence.cappedCsrServed.get() > 0L,
         "capped-CSR regime did not engage on the dirty feed")
-      assert(TransitSssp.cappedCsrNegativeServed.get() > neg0,
+      assert(eng.evidence.cappedCsrNegativeServed.get() > 0L,
         "dirty feed did not take the negative-weight in-heap path")
       r
     }
@@ -355,7 +356,6 @@ class GtfsEngineSpec extends SparkSpec {
     // cappedCsrMaxEdges = 0 on top of ssspLocalThreshold = 0 is the
     // over-budget variant: no in-heap regime can serve the route.
     import graft.functions.TimeFunctions.secondsSinceMidnight
-    import graft.graph.TransitSssp
     val agency = Seq(("A", "http://example.org", "Europe/Rome"))
       .toDF("agency_name", "agency_url", "agency_timezone")
     val routes = Seq(("R1", "1", "L1", 3), ("R2", "2", "L2", 3),
@@ -389,11 +389,11 @@ class GtfsEngineSpec extends SparkSpec {
       eng.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq
     val segL = seg(new graft.api.RoutingEngine(tables)) // in-heap strict repair
     assert(segL.nonEmpty, "fixture must route in-heap")
-    val srv0 = TransitSssp.acyclicResolveServed.get()
     // over-budget: distributed only (per-engine zeroed CSR budget)
-    val segD = seg(new graft.api.RoutingEngine(tables,
-      ssspLocalThreshold = 0L, cappedCsrMaxEdges = 0L))
-    assert(TransitSssp.acyclicResolveServed.get() > srv0,
+    val engD = new graft.api.RoutingEngine(tables,
+      ssspLocalThreshold = 0L, cappedCsrMaxEdges = 0L)
+    val segD = seg(engD)
+    assert(engD.evidence.acyclicResolveServed.get() > 0L,
       "the canonical walk did not cycle - the repair path never ran " +
         "(fixture id-order regressed?)")
     assert(segD.nonEmpty,
