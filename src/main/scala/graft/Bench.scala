@@ -185,19 +185,12 @@ object Bench {
     val dr = drift.map(d => math.round(d * 100) / 100.0).mkString("[", ",", "]")
     s"""{"metric":"qms","value":$tot,"adj":$adj,"fx":$fx,"unit":"sec","sf":${jsonStr(sfDir)},"n":${minsSecNameSorted.size},"degraded":$degraded,"drift":$dr,"spr":$spr,"v":$ms}"""
   }
-  def main(args: Array[String]): Unit = {
-    // Timing runs skip the perf-harness's cross-regime verification twin:
-    // the twin is correctness machinery (it re-routes every pair through
-    // the OTHER SSSP regime, ~4.5 s per pair of fixture-scale TransitSssp
-    // iteration scheduling), runs on every Verify/correctness pass where
-    // it belongs, and would otherwise dominate the harness's bench row
-    // (~1 s of measured work vs ~9 s of verification) — the same
-    // bench-totals-stay-clean rule that made the Modena harness twin
-    // opt-in (GraphQueries).
-    sys.props("graft.perfharness.twin") = "0"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "2").toInt.max(1)
+  /** The one SparkSession every graft main runs on, so a tool measures
+    * the same program Bench times: local[cpus] with as many shuffle
+    * partitions, AQE on, UTC session clock, no UI. `defaultCpus` is the
+    * caller's core count when the environment names none. */
+  private[graft] def session(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -215,12 +208,15 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm up codegen/shuffle machinery so the first measured query doesn't
-    // absorb session start-up (~5 s otherwise) — including the parquet
-    // reader path against the actual data dir (region is ~5 rows), so the
-    // alphabetically-first real query isn't charged for footer/codec init.
-    spark.range(1000).repartition(4).groupBy((org.apache.spark.sql.functions
-      .col("id") % 10).as("k")).count().collect()
+    spark
+  }
+
+  /** Warm up codegen/shuffle machinery so the first measured query doesn't
+    * absorb session start-up (~5 s otherwise) — including the parquet
+    * reader path against the actual data dir (region is ~5 rows), so the
+    * alphabetically-first real query isn't charged for footer/codec init. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000).repartition(4).groupBy((col("id") % 10).as("k")).count().collect()
     try spark.read.parquet(s"$sfDir/region.parquet").repartition(2)
       .groupBy("r_name").count().collect()
     catch { case _: Throwable => () }
@@ -243,6 +239,45 @@ object Bench {
         rm(warmDir)
       }
     } catch { case _: Throwable => () }
+  }
+
+  /** One timed run of catalog row `name`: (start epoch seconds, wall
+    * seconds). A row that throws is logged and timed up to the throw; the
+    * caller goes on to the next run. */
+  private[graft] def timeRow(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): (Double, Double) = {
+    val start = System.currentTimeMillis() / 1000.0
+    val t0 = System.nanoTime()
+    // noop sink: forces full evaluation of every column (count() would let
+    // Catalyst prune the plan down to a row count).
+    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+    val dt = (System.nanoTime() - t0) / 1e9
+    // Queries may cache intermediates internally; drop them so one run's
+    // cached blocks neither speed up the next run nor pressure its memory.
+    spark.catalog.clearCache()
+    // clearCache frees the BLOCKS but builder-retained cache handles
+    // would still accumulate plan references across a 96-query run —
+    // drain every global registry too (review r16; r17: through the
+    // one lifecycle surface embedders get)
+    graft.Runtime.releaseAll()
+    (start, dt)
+  }
+
+  def main(args: Array[String]): Unit = {
+    // Timing runs skip the perf-harness's cross-regime verification twin:
+    // the twin is correctness machinery (it re-routes every pair through
+    // the OTHER SSSP regime, ~4.5 s per pair of fixture-scale TransitSssp
+    // iteration scheduling), runs on every Verify/correctness pass where
+    // it belongs, and would otherwise dominate the harness's bench row
+    // (~1 s of measured work vs ~9 s of verification) — the same
+    // bench-totals-stay-clean rule that made the Modena harness twin
+    // opt-in (GraphQueries).
+    sys.props("graft.perfharness.twin") = "0"
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "2").toInt.max(1)
+    val spark = session(32)
+    warmUp(spark, sfDir)
     // Optional subset run for iterating on one query's timing:
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 (driver runs always leave this unset).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
@@ -295,24 +330,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
-      def runOnce(): (Double, Double) = {
-        val start = System.currentTimeMillis() / 1000.0
-        val t0 = System.nanoTime()
-        // noop sink: forces full evaluation of every column (count() would let
-        // Catalyst prune the plan down to a row count).
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Queries may cache intermediates internally; drop them so one run's
-        // cached blocks neither speed up the next run nor pressure its memory.
-        spark.catalog.clearCache()
-        // clearCache frees the BLOCKS but builder-retained cache handles
-        // would still accumulate plan references across a 96-query run —
-        // drain every global registry too (review r16; r17: through the
-        // one lifecycle surface embedders get)
-        graft.Runtime.releaseAll()
-        (start, dt)
-      }
+      def runOnce(): (Double, Double) = timeRow(spark, sfDir, name, fn)
       // Forced-fixture rows run ONCE (r19 — FixtureRows scaladoc): their
       // wall is a scheduling-round floor, so repeats reproduce the same
       // number and min-of-3 only added ~24 s of fixture scheduling per

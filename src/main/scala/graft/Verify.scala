@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -30,17 +29,8 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same cached-plan AQE re-partitioning as Bench (its scaladoc):
-      // correctness runs exercise the exact conf the bench times under
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // correctness runs exercise the exact conf the bench times under
+    val spark = Bench.session(4)
     new java.io.File(outDir).mkdirs()
     // Optional subset for local iteration (SPARK_GRAFT_VERIFY_ONLY=q1,q2);
     // driver runs leave it unset and dump the full catalog.

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` of named catalog queries to files — the
   * optimization rounds' before/after plan evidence
   * (`plans/r20/<query>_<tag>.txt`).
@@ -18,14 +16,7 @@ object ExplainDump {
     val names = args(1).split(",").toSeq
     val outDir = if (args.length > 2) args(2) else "plans/r20"
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(8)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val catalog = graft.queries.Catalog.all.map(q => q.name -> q.run).toMap

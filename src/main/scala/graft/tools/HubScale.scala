@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Hub-skew stress for the distributed routing path (r11 verdict #6).
   *
   * Every scale point so far used the uniform synthetic grid; real feeds
@@ -35,12 +33,7 @@ import org.apache.spark.sql.SparkSession
   */
 object HubScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).repartition(4).count()
 

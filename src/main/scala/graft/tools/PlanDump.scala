@@ -51,17 +51,11 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE off for the audit: the static plan exposes WholeStageCodegen
-      // spans and the worst-case Exchange count (AQE can only remove or
-      // split them at runtime, never add)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(8)
+    // AQE off for the audit: the static plan exposes WholeStageCodegen
+    // spans and the worst-case Exchange count (AQE can only remove or
+    // split them at runtime, never add)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
 
     val skip = skippedQueries

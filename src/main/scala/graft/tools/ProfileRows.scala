@@ -1,21 +1,27 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, StageInfo}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-JOB wall-clock profile of named catalog queries — the "where do the
   * seconds of a bench row actually go" instrument (optimization guide §1:
   * measure first, attribute to operators/call sites before touching code).
   *
-  * For each named query it runs the same protocol as Bench (noop sink,
-  * clearCache + Runtime.releaseAll between runs, min-of-N semantics) but
-  * additionally records every Spark job's submit→complete wall, its task
-  * count, and the first non-Spark call-site frame of its first stage, then
-  * prints the jobs of the FASTEST run grouped by call site. The gap between
-  * the run wall and the sum of job walls is driver-side time (planning,
-  * collects of empty results, pure-driver work).
+  * For each named query it runs Bench's own set-up and per-run protocol
+  * (`Bench.session`, `Bench.warmUp`, `Bench.timeRow`: noop sink, a failing
+  * run logged and skipped past, clearCache + Runtime.releaseAll between
+  * runs; the perf harness's verification twin off, as in `Bench.main`)
+  * with min-of-N semantics, and additionally records every Spark job's
+  * submit→complete wall, its task count, and the first graft call-site
+  * frame of its first stage (else of the SQL execution it ran for), then
+  * prints the jobs of the FASTEST run grouped by call site. The gap
+  * between the run wall and the sum of job walls is driver-side time
+  * (planning, collects of empty results, pure-driver work).
   *
   * `sbt "runMain graft.tools.ProfileRows <name>[,<name>...] [sfDir] [repeats]"`
+  * SPARK_GRAFT_PROFILE_CONF="k=v;k=v" sets runtime SQL confs on top of
+  * Bench's for an ad-hoc experiment.
   */
 object ProfileRows {
   private final case class JobRec(id: Int, desc: String, site: String,
@@ -25,20 +31,12 @@ object ProfileRows {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val repeats = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf experiments: SPARK_GRAFT_PROFILE_CONF="k=v;k=v"
+    // same timing set-up as Bench.main, perf-harness verification twin off
+    sys.props("graft.perfharness.twin") = "0"
+    val spark = graft.Bench.session(32)
     sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
+      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     // per-STAGE record: (name+first graft frame, tasks, wallMs) — the job
@@ -46,23 +44,30 @@ object ProfileRows {
     final case class StageRec(site: String, tasks: Int, var wallMs: Long = -1L,
         var submitNs: Long = 0L)
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRec]()
+    // SQL execution id → long call site of the action that started it
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    def graftFrame(details: String): Option[String] =
+      details.linesIterator.find(_.contains("graft.")).map(_.trim.replaceFirst("^at ", ""))
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => executions.put(x.executionId, x.details)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = js.stageInfos.headOption.map { si =>
-          // first graft frame of the stage's long call site — the stage
-          // name alone reads "withThreadLocalCaptured" for every AQE
-          // stage-materialization future
-          si.details.linesIterator.find(_.contains("graft."))
-            .map(_.trim.replaceFirst("^at ", ""))
-            .getOrElse(si.name)
-        }.getOrElse("?")
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+        // AQE submits stage-materialization jobs from its own threads
+        // (stage name "withThreadLocalCaptured", no graft frame): fall
+        // back to the call site of the SQL execution that owns them
+        val execFrame = prop("spark.sql.execution.id")
+          .flatMap(id => Option(executions.get(id.toLong))).flatMap(graftFrame)
+        def frameOf(si: StageInfo) = graftFrame(si.details).orElse(execFrame)
+        val site = js.stageInfos.headOption
+          .map(si => frameOf(si).getOrElse(si.name)).getOrElse("?")
+        val desc = prop("spark.job.description").getOrElse("")
         jobs.put(js.jobId, JobRec(js.jobId, desc, site,
           js.stageInfos.map(_.numTasks).sum, System.nanoTime()))
         js.stageInfos.foreach { si =>
-          val frame = si.details.linesIterator.find(_.contains("graft."))
-            .map(_.trim.replaceFirst("^at ", "")).getOrElse("-")
+          val frame = frameOf(si).getOrElse("-")
           stages.putIfAbsent(si.stageId,
             StageRec(s"${si.name.takeWhile(_ != '(').trim} | $frame", si.numTasks))
         }
@@ -85,25 +90,16 @@ object ProfileRows {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // same warmup as Bench
-    spark.range(1000).repartition(4)
-      .groupBy((org.apache.spark.sql.functions.col("id") % 10).as("k"))
-      .count().collect()
-    try spark.read.parquet(s"$sfDir/region.parquet").repartition(2)
-      .groupBy("r_name").count().collect()
-    catch { case _: Throwable => () }
+    graft.Bench.warmUp(spark, sfDir)
 
-    val catalog = graft.queries.Catalog.all.map(q => q.name -> q.run).toMap
     names.foreach { name =>
-      val fn = catalog.getOrElse(name, sys.error(s"no catalog query named $name"))
+      val fn = graft.SparkEntry.queries
+        .getOrElse(name, sys.error(s"no catalog query named $name"))
       val runs = (1 to repeats).map { i =>
         jobs.clear()
         stages.clear()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        graft.Runtime.releaseAll()
+        executions.clear()
+        val (_, wall) = graft.Bench.timeRow(spark, sfDir, name, fn)
         val snap = {
           import scala.jdk.CollectionConverters._
           jobs.values.asScala.toIndexedSeq.sortBy(_.id)

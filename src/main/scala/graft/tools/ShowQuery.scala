@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print one catalog query's result (and schema) by name — the manual probe
   * used to pin literal-VALUES golden oracles before they enter the catalog:
   * `sbt "runMain graft.tools.ShowQuery <name> [sfDir]"`. */
@@ -9,14 +7,7 @@ object ShowQuery {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(8)
     val q = graft.queries.Catalog.all.find(_.name == name)
       .getOrElse(sys.error(s"no catalog query named $name"))
     val df = q.run(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: sampled-Brandes betweenness at the reference's graph
   * cardinality — the one diagnostic operator whose catalog oracle runs only
   * at fixture scale (`gtfs_betweenness`, 16 nodes). Builds the synthetic
@@ -25,12 +23,7 @@ import org.apache.spark.sql.SparkSession
   *    `TransitBetweenness` — the trip-collapse alternative. */
 object TimeBetweenness {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).repartition(4).count()
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: per-round cost of the forced-distributed BPE trainer (the
@@ -9,14 +8,9 @@ import org.apache.spark.sql.functions._
   * words), forced onto the distributed branch with localMaxWords = 0. */
 object TimeBpe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "100").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     // the sf documents draw from a ~30-word vocabulary — too small to

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve probe for the flagship projection path: build + route the
@@ -45,12 +44,7 @@ import org.apache.spark.sql.functions._
   */
 object TimeScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).repartition(4).count() // scheduler warm-up
 
@@ -68,8 +62,8 @@ object TimeScale {
     }
 
     // JIT/codegen warm-up at the smallest size so the 1× row doesn't carry
-    // first-compile cost the larger rows then amortize (TimeBuild showed a
-    // 2× cold-vs-warm gap on identical plans).
+    // first-compile cost the larger rows then amortize (a cold projection
+    // build ran 2× its warm time on identical plans).
     locally {
       val g = graft.etl.SyntheticGtfs.grid(spark, 20, 20, 5, directions = 2,
         rowStepDeg = 0.0032)

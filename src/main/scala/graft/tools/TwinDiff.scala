@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Adjudication probe for a cross-regime itinerary divergence surfaced by
   * the harness twin digest (`PerfHarness.twinDigestOk=false`): routes ONE
   * OD pair of the Modena harness through BOTH SSSP regimes and prints the
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_TWIN_PAIR picks the pair (default p8-backwards). */
 object TwinDiff {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val raw = graft.etl.SyntheticGtfs.modena(spark)

@@ -2,7 +2,7 @@
 # Run a graft main class directly on the compiled classes + Spark jars,
 # bypassing sbt (no project-lock contention between concurrent measurement
 # runs; sbt compile must have run first). Usage:
-#   tools/run_tool.sh graft.tools.TimeJourney [args...]
+#   tools/run_tool.sh graft.tools.ProfileRows [args...]
 # Env: SPARK_DRIVER_MEM (default 8g) and the tool's own SPARK_GRAFT_* vars.
 set -euo pipefail
 cd "$(dirname "$0")/.."
