@@ -9,14 +9,15 @@ import org.apache.spark.sql.functions._
   * The trainer's working set is the UNIQUE-WORD table with counts — at
   * 100 TB of corpus that is millions of rows, not the corpus itself. A
   * 32k-vocab training is tens of thousands of SEQUENTIAL rounds, so the
-  * per-round cost decides everything: below [[LocalTrainMaxWords]] unique
-  * words the table is collected ONCE and trained in-heap (each round a
-  * hash-map pair count over the array — microseconds, not a Spark job);
-  * above it, each round is one distributed pair-count aggregation
-  * (map-side combinable) plus a 1-row argmax to the driver. Same gate
-  * shape as ShortestPaths.Sssp.isLocal: one map-side count() answers
-  * "is it local?" without moving a row, and both branches produce
-  * IDENTICAL merges (BpeSpec forces and compares them).
+  * per-round cost decides everything: when the table's int-encoded
+  * footprint fits [[InHeapStateMaxBytes]] it is collected ONCE and
+  * trained incrementally in-heap (each round touches only the words
+  * holding a merged pair — microseconds, not a Spark job); above it the
+  * rounds run against the cluster-resident table (hybrid or table loop).
+  * Same gate shape as ShortestPaths.Sssp.isLocal: one map-side agg
+  * answers "does it fit?" without moving a row, and every regime produces
+  * IDENTICAL merges (BpeSpec and BpeBatchSpec compare each against a
+  * sequential reference trainer).
   *
   * Representation: a word is a symbol string with DOUBLE-space separators
   * and single-space ends — `" l  o  w "`. A merge (a, b) is then the plain
@@ -29,11 +30,6 @@ import org.apache.spark.sql.functions._
   * trainer and the encoder against DuckDB.
   */
 object Bpe {
-
-  /** Unique-word threshold for the in-heap trainer: 2M words × ~30 B of
-    * symbols ≈ 60 MB driver heap — trivial; above it (web-scale
-    * vocabularies) the distributed rounds take over. */
-  val LocalTrainMaxWords: Long = 2000000L
 
   /** Pair-TABLE row bound for the hybrid regime's driver-resident counts
     * map. The pair table is alphabet-driven — unique adjacent SYMBOL pairs,
@@ -56,17 +52,17 @@ object Bpe {
     * `Array[Int]` over an interned symbol vocabulary, cutting resident
     * bytes ~4-8× vs the r14 `Array[Array[String]]` — and the gate
     * measures the ESTIMATED ENCODED FOOTPRINT (occurrences ×
-    * [[InHeapBytesPerSymbol]] + words × [[InHeapBytesPerWord]], one agg
-    * job) instead of the raw `sum(length(s))` proxy, so corpora whose
-    * STRING table failed the old 256 MB gate (and paid the 0.59 s/merge
-    * distributed floor) now train at the 0.06 s/merge regime. The 1.5 GiB
-    * default budgets the actual arrays the trainer holds — word ints +
-    * occurrence index + counts — and assumes a ≥ 4 GB driver; the
-    * handoff additionally STREAMS the collect partition-by-partition
-    * (toLocalIterator), so the transient string peak is one partition,
-    * not the table. Tables over the budget keep the hybrid loop, which
-    * re-checks every [[InHeapHandoffCheckRounds]] rounds (merging shrinks
-    * the table) and hands off mid-training when the budget is met — at
+    * [[InHeapBytesPerSymbol]] + words × [[InHeapBytesPerWord]], read off
+    * [[train]]'s input-contract agg) instead of the raw `sum(length(s))`
+    * proxy, so corpora whose STRING table failed the old 256 MB gate (and
+    * paid the 0.59 s/merge distributed floor) now train at the 0.06 s/merge
+    * regime. The 1.5 GiB default budgets the actual arrays the trainer
+    * holds — word ints + occurrence index + counts — and assumes a ≥ 4 GB
+    * driver; the mid-training handoff STREAMS its collect
+    * partition-by-partition (toLocalIterator). Tables over the budget
+    * keep the hybrid loop, which re-checks every
+    * [[InHeapHandoffCheckRounds]] rounds (merging shrinks the table)
+    * and hands off mid-training when the budget is met — at
     * true web scale (hundreds of millions of distinct words) the table
     * never fits and the executor count stays the lever, exactly as the
     * r13 COVERAGE reading said. */
@@ -92,14 +88,24 @@ object Bpe {
 
   /** "word" → " w  o  r  d " (double-space separators, single-space ends;
     * a trailing extra space is harmless to matching and trimmed before
-    * any split). (?s) so line terminators survive — trainLocal's code-point
-    * loop keeps them, and branch parity requires both sides see identical
-    * symbols. */
+    * any split). (?s) so line terminators survive: every initial symbol is
+    * one code point, which is what the footprint gate in [[train]] counts. */
   def toSymbols(word: Column): Column =
     concat(lit(" "), regexp_replace(word, "(?s)(.)", "$1  "))
 
   /** Symbols of a symbol string (split on the double-space separator). */
   private def symbolsOf(s: Column): Column = split(trim(s), " +")
+
+  /** The driver twin of [[symbolsOf]]: Spark's `trim` strips SPACES only,
+    * so this does too — Java's `String.trim` would also strip a word's
+    * leading or trailing control characters (everything up to U+0020) and
+    * drop a symbol the distributed parse keeps. */
+  private def parseSymbols(s: String): Array[String] = {
+    var b = 0; var e = s.length
+    while (b < e && s.charAt(b) == ' ') b += 1
+    while (e > b && s.charAt(e - 1) == ' ') e -= 1
+    s.substring(b, e).split(" +")
+  }
 
   /** Apply one merge (a, b) → "ab": plain replace, no regex. */
   def applyMerge(sym: Column, a: String, b: String): Column =
@@ -107,11 +113,10 @@ object Bpe {
 
   /** Train `numMerges` merges over (word, count) rows. Deterministic: ties
     * broken by (left symbol, right symbol) ascending in UTF-8 byte order —
-    * Spark's string sort order, which the local branch reproduces exactly;
+    * Spark's string sort order, which every driver-side regime reproduces;
     * pairs seen only once (weighted count 1) still merge, pairs never
     * co-occurring end training early. Returns merges in application order. */
   def train(words: DataFrame, numMerges: Int,
-      localMaxWords: Long = LocalTrainMaxWords,
       hybridMaxPairs: Long = HybridPairMaxRows,
       inHeapMaxBytes: Long = InHeapStateMaxBytes,
       // Cost-shaping bounds of the two distributed loops, threaded as
@@ -140,8 +145,8 @@ object Bpe {
     import spark.implicits._
     val w = words.select(col("word").cast("string").as("word"),
       col("count").cast("long").as("count"))
-    // Local-vs-distributed pre-gate: one parallel agg (per-partition
-    // partials combine map-side) answers the row count AND enforces the
+    // In-heap pre-gate: one parallel agg (per-partition partials combine
+    // map-side) measures the encoded footprint AND enforces the
     // INPUT CONTRACT — words are whitespace-free tokens (standard BPE
     // pre-tokenization). The symbol-string representation (" a  b ",
     // see the class scaladoc) and the affected-word needles REQUIRE it:
@@ -150,14 +155,31 @@ object Bpe {
     // (caught r16 — a byte-overflowing synthetic corpus produced
     // space-bearing words and stale counts). Fail pointedly instead.
     val pre = w.agg(count(lit(1)), coalesce(sum(
-      col("word").rlike("\\s").cast("long")), lit(0L))).head()
+      col("word").rlike("\\s").cast("long")), lit(0L)),
+      // initial symbol occurrences: one per code point (an empty word
+      // still splits to one empty symbol) — the figure inHeapFootprint
+      // reads off the symbol table
+      coalesce(sum(greatest(length(col("word")), lit(1)).cast("long")),
+        lit(0L))).head()
     require(pre.getLong(1) == 0L,
       s"BPE input contract violated: ${pre.getLong(1)} words contain " +
         "whitespace - pre-tokenize the corpus (words must be " +
         "whitespace-free tokens)")
-    if (pre.getLong(0) <= math.min(localMaxWords, (Int.MaxValue - 2).toLong))
-      trainLocal(w.as[(String, Long)].collect(), numMerges)
-    else trainDistributed(w, numMerges, hybridMaxPairs, inHeapMaxBytes,
+    val footprint =
+      pre.getLong(2) * InHeapBytesPerSymbol + pre.getLong(0) * InHeapBytesPerWord
+    telemetry.lastRegimes.clear()
+    if (inHeapMaxBytes > 0L && footprint <= inHeapMaxBytes) {
+      // fits: one collect (a toLocalIterator would run a job per
+      // partition; the transient string peak is the symbol table, once),
+      // then every round is O(affected words) driver work, no Spark job
+      telemetry.lastRegimes.add("inheap")
+      val state = buildInHeapState(w.select(toSymbols(col("word")),
+        col("count")).as[(String, Long)].collect().iterator)
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      trainInHeap(state, seedPairMap(state, argmaxHeapMinSlack), merges,
+        numMerges)
+      merges.toSeq
+    } else trainDistributed(w, numMerges, hybridMaxPairs, inHeapMaxBytes,
       overlayMaxAffected, overlayMaxWords, baseTopRows,
       occIndexAfterSparseRounds, inHeapHandoffCheckRounds,
       argmaxHeapMinSlack, occProbeMaxTotalRows, occIndexRebuildOvWords,
@@ -286,12 +308,11 @@ object Bpe {
     * table. Counts stay bit-identical to a full recount (long arithmetic,
     * exact deltas) and the batch is bit-identical to that many sequential
     * argmax rounds, so merges are unchanged from the naive loop; BpeSpec /
-    * BpeBatchSpec force this branch against the local trainer. Per-round
-    * input drops from |words| to |words containing a merged pair|, and the
-    * sequential-round count drops by the mean batch size — the two factors
-    * that decide 32k-vocab wall time in the >[[LocalTrainMaxWords]] regime
-    * (the one weak regime called out by rounds 7-8; below the threshold
-    * [[trainLocal]] takes over). */
+    * BpeBatchSpec force this branch against a sequential reference trainer.
+    * Per-round input drops from |words| to |words containing a merged
+    * pair|, and the sequential-round count drops by the mean batch size —
+    * the two factors that decide 32k-vocab wall time for tables over
+    * [[InHeapStateMaxBytes]] (the only ones [[train]] sends here). */
   private def trainDistributed(words: DataFrame, numMerges: Int,
       hybridMaxPairs: Long, inHeapMaxBytes: Long, overlayMaxAffected: Int,
       overlayMaxWords: Int, baseTopRows: Int,
@@ -310,41 +331,20 @@ object Bpe {
       col("count").cast("long").as("count")).transform(ckpt)
     val counts = pairCounts(syms).transform(ckpt) // the one full aggregation
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    telemetry.lastRegimes.clear()
     // Hybrid gate: the checkpoint made the row count free, and the pair
     // TABLE (unique adjacent symbol pairs — alphabet-driven) is orders
-    // smaller than the word table that failed the local gate, so it almost
+    // smaller than the word table that failed the in-heap gate, so it almost
     // always fits the driver: argmax + batch selection become in-heap (no
     // TakeOrdered job, no probe floor truncating late tie-heavy batches)
     // and the per-round distributed work drops to the delta aggregation +
     // the syms rewrite, overlapped. Above the bound, the fully-distributed
     // table loop keeps every row on the cluster.
-    if (counts.count() <= hybridMaxPairs) {
-      // In-heap gate on the MEASURED encoded footprint (see
-      // InHeapStateMaxBytes): a word table too big to pass the row gate
-      // can still be a modest int table — collect once (streamed), and
-      // every round is O(affected words) driver work instead of two
-      // full-table Spark jobs.
-      import words.sparkSession.implicits._
-      val footprint =
-        if (inHeapMaxBytes <= 0L) Long.MaxValue else inHeapFootprint(syms)
-      if (footprint <= inHeapMaxBytes) {
-        telemetry.lastRegimes.add("inheap")
-        val rel = org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint _
-        val idx = new PairMapIndex(argmaxHeapMinSlack)
-        counts.as[(String, String, Long)].collect()
-          .foreach { case (a, b, n) => idx.seed(a, b, n) }
-        rel(counts)
-        import scala.jdk.CollectionConverters._
-        val state = buildInHeapState(
-          syms.as[(String, Long)].toLocalIterator().asScala)
-        rel(syms) // encoded; the checkpoint blocks can go
-        trainInHeap(state, idx, merges, numMerges)
-      } else trainHybrid(syms, counts, merges, numMerges, hybridMaxPairs,
+    if (counts.count() <= hybridMaxPairs)
+      trainHybrid(syms, counts, merges, numMerges, hybridMaxPairs,
         inHeapMaxBytes, overlayMaxAffected, overlayMaxWords, baseTopRows,
         occIndexAfterSparse, inHeapHandoffCheckRounds, argmaxHeapMinSlack,
         occProbeBudget, occRebuildOvWords, telemetry)
-    } else trainTableLoop(syms, counts, merges, numMerges,
+    else trainTableLoop(syms, counts, merges, numMerges,
       overlayMaxAffected, overlayMaxWords, baseTopRows, occIndexAfterSparse,
       occProbeBudget, occRebuildOvWords, telemetry)
     merges.toSeq
@@ -424,7 +424,7 @@ object Bpe {
     val countsBuf = new LongBuf(1024)
     var wi = 0
     words.foreach { case (w, c) =>
-      val parts = w.trim.split(" +")
+      val parts = parseSymbols(w)
       val s = new Array[Int](parts.length)
       var i = 0
       while (i < parts.length) { s(i) = intern(parts(i)); i += 1 }
@@ -443,12 +443,35 @@ object Bpe {
     new InHeapState(symsBuf.toArray, countsBuf.toArray, vocab, symId, index)
   }
 
+  /** Pair map of a freshly built in-heap state, counted on the driver —
+    * the int twin of [[pairCounts]], without its shuffle job. */
+  private def seedPairMap(st: InHeapState,
+      argmaxHeapMinSlack: Long): PairMapIndex = {
+    val n = scala.collection.mutable.HashMap.empty[Long, Long]
+    var w = 0
+    while (w < st.syms.length) {
+      val s = st.syms(w)
+      var i = 0
+      while (i < s.length - 1) {
+        val k = pairKey(s(i), s(i + 1))
+        n.update(k, n.getOrElse(k, 0L) + st.counts(w))
+        i += 1
+      }
+      w += 1
+    }
+    val idx = new PairMapIndex(argmaxHeapMinSlack)
+    n.foreach { case (k, c) =>
+      idx.seed(st.vocab((k >>> 32).toInt), st.vocab(k.toInt), c)
+    }
+    idx
+  }
+
   /** Incremental in-heap rounds over the int-encoded word table — the
     * deep-merge regime (see [[InHeapStateMaxBytes]]). The semantics are
     * the hybrid loop's, verbatim: the SAME pair map, the SAME batch
     * selection ([[selectBatchFromMap]]), and a per-word rewrite whose int
-    * comparisons are the interned twins of [[rewriteWord]]'s string
-    * comparisons — so merges are bit-identical across regimes (BpeSpec
+    * comparisons are the interned twins of [[applyMerge]]'s string
+    * replace — so merges are bit-identical across regimes (BpeSpec
     * pins it). The cost model: an occurrence index (pair → word indices,
     * lazily stale — a rewrite appends under every pair that now involves
     * a batch-created symbol, dead entries are skipped at use) makes a
@@ -545,7 +568,7 @@ object Bpe {
   }
 
   /** One merge (aId, bId) → abId applied to an int-encoded symbol array —
-    * left-to-right, non-overlapping: the interned twin of [[rewriteWord]]
+    * left-to-right, non-overlapping: the interned twin of [[applyMerge]]
     * (id equality ⇔ string equality, so match sites are identical).
     * Returns the SAME array when the pair is absent. */
   private def rewriteWordInt(s: Array[Int], a: Int, b: Int,
@@ -1313,12 +1336,12 @@ object Bpe {
   }
 
   /** Signed adjacent-pair fold of one symbol string into a driver delta
-    * map — the driver twin of [[pairCounts]]' explode ∘ zip_with (same
-    * split semantics as [[symbolsOf]]: trim, split on runs of spaces). */
+    * map — the driver twin of [[pairCounts]]' explode ∘ zip_with (the
+    * split is [[parseSymbols]], the driver twin of [[symbolsOf]]). */
   private def addPairDeltas(
       m: scala.collection.mutable.HashMap[(String, String), Long],
       s: String, c: Long): Unit = {
-    val parts = s.trim.split(" +")
+    val parts = parseSymbols(s)
     var i = 0
     while (i < parts.length - 1) {
       val k = (parts(i), parts(i + 1))
@@ -1686,100 +1709,10 @@ object Bpe {
     val occProbeInconclusive = new java.util.concurrent.atomic.AtomicLong(0L)
     /** Proactive ovI-bound index rebuilds (r18). */
     val occIndexRebuilds = new java.util.concurrent.atomic.AtomicLong(0L)
-    /** The loop regimes the distributed trainer traversed, in order
-      * ("hybrid", "tableloop", "inheap") — lets the hand-off specs assert
-      * the overflow path actually fired. Empty when trainLocal ran. */
+    /** The loop regimes the trainer traversed, in order ("inheap",
+      * "hybrid", "tableloop") — lets the hand-off specs assert the
+      * overflow path actually fired. */
     val lastRegimes = new java.util.concurrent.CopyOnWriteArrayList[String]()
-  }
-
-  /** Spark orders strings by UTF-8 bytes = code-point order — the local
-    * tie-break must match the distributed sort exactly (shared helper). */
-  private def utf8Lt(x: String, y: String): Boolean =
-    graft.util.Utf8Order.lt(x, y)
-
-  /** In-heap trainer: identical merges to the distributed rounds (every
-    * adjacent pair occurrence counts, weighted by word count; argmax with
-    * (n desc, a asc, b asc) UTF-8 tie-break; greedy left-to-right
-    * non-overlapping application). Naive full recount per round — at the
-    * ≤2M-word scale this branch admits, a round is milliseconds, so 32k
-    * merges finish in minutes where the per-round-Spark-job loop took
-    * days. Initial symbols are CODE POINTS, matching regexp "(?s)(.)" on
-    * the distributed side. */
-  private[operators] def trainLocal(words: Array[(String, Long)],
-      numMerges: Int): Seq[(String, String)] = {
-    val syms: Array[Array[String]] = words.map { case (w, _) =>
-      val out = new scala.collection.mutable.ArrayBuffer[String](w.length)
-      var i = 0
-      while (i < w.length) {
-        val cp = w.codePointAt(i)
-        out += new String(Character.toChars(cp))
-        i += Character.charCount(cp)
-      }
-      out.toArray
-    }
-    val counts = words.map(_._2)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var rounds = 0
-    var exhausted = false
-    while (rounds < numMerges && !exhausted) {
-      val pair = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      var wi = 0
-      while (wi < syms.length) {
-        val s = syms(wi)
-        val c = counts(wi)
-        var i = 0
-        while (i < s.length - 1) {
-          val k = (s(i), s(i + 1))
-          pair.update(k, pair.getOrElse(k, 0L) + c)
-          i += 1
-        }
-        wi += 1
-      }
-      if (pair.isEmpty) exhausted = true
-      else {
-        var best: (String, String) = null
-        var bestN = Long.MinValue
-        for ((k, n) <- pair) {
-          if (n > bestN || (n == bestN &&
-              (utf8Lt(k._1, best._1) ||
-                (k._1 == best._1 && utf8Lt(k._2, best._2))))) {
-            best = k; bestN = n
-          }
-        }
-        merges += best
-        val (a, b) = best
-        wi = 0
-        while (wi < syms.length) {
-          syms(wi) = rewriteWord(syms(wi), a, b)
-          wi += 1
-        }
-      }
-      rounds += 1
-    }
-    merges.toSeq
-  }
-
-  /** One merge (a, b) applied to a symbol array — left-to-right,
-    * non-overlapping: the in-heap twin of [[applyMerge]]'s string replace
-    * (shared by [[trainLocal]] and [[trainInHeap]] so every regime rewrites
-    * identically). Returns the SAME array when the pair is absent. */
-  private def rewriteWord(s: Array[String], a: String, b: String): Array[String] = {
-    if (s.length < 2) return s
-    var contains = false
-    var i = 0
-    while (i < s.length - 1 && !contains) {
-      if (s(i) == a && s(i + 1) == b) contains = true
-      i += 1
-    }
-    if (!contains) return s
-    val out = new scala.collection.mutable.ArrayBuffer[String](s.length)
-    i = 0
-    while (i < s.length) {
-      if (i + 1 < s.length && s(i) == a && s(i + 1) == b) {
-        out += a + b; i += 2
-      } else { out += s(i); i += 1 }
-    }
-    out.toArray
   }
 
   /** Sub-word count per word after applying `merges` in order — the same

@@ -1286,12 +1286,13 @@ object Pipeline {
              |  FROM scored) WHERE rn <= 5
              |ORDER BY label, rn""".stripMargin)),
 
-    // Distributed BPE tokenizer TRAINING under the hash gate: the classic
-    // Sennrich word-frequency fixture trained for 6 merges (each round =
-    // one distributed pair-count aggregation + a 1-row argmax; ties break
-    // lexicographically). Literal-VALUES golden — BpeSpec hand-derives the
-    // first four merges; the fixture is inline so the answer is
-    // scale-factor-independent (sf documents aren't prefix-stable).
+    // BPE tokenizer TRAINING under the hash gate: the classic Sennrich
+    // word-frequency fixture trained for 6 merges on the default route
+    // (the table fits the driver, so one collect feeds the incremental
+    // in-heap trainer; ties break lexicographically). Literal-VALUES
+    // golden — BpeSpec hand-derives the first four merges; the fixture
+    // is inline so the answer is scale-factor-independent (sf documents
+    // aren't prefix-stable).
     Q("text_bpe_merges", "text,bpe",
       (s, _) => {
         import s.implicits._
@@ -1308,11 +1309,12 @@ object Pipeline {
              |ORDER BY rank""".stripMargin)),
 
     // The OCCURRENCE-INDEX-SERVED table loop under the hash gate (r18,
-    // r17 verdict #8): text_bpe_merges rides the instant local regime, so
-    // r17's biggest lever — the bucketed occurrence index — had no oracled
-    // row. This row forces the distributed TABLE LOOP (localMaxWords = 0,
-    // hybridMaxPairs = 0) with per-call occIndexAfterSparseRounds = 0 so
-    // the index builds immediately and serves every sparse round; the
+    // r17 verdict #8): text_bpe_merges rides the default in-heap regime,
+    // so r17's biggest lever — the bucketed occurrence index — had no
+    // oracled row. This row forces the distributed TABLE LOOP
+    // (inHeapMaxBytes = 0, hybridMaxPairs = 0) with per-call
+    // occIndexAfterSparseRounds = 0 so the index builds immediately and
+    // serves every sparse round; the
     // closure REQUIRES the served counter to have advanced (a silent
     // admission regression fails Verify loudly — the zero-cycle row's
     // counter pattern) and pins the merges against the same run with the
@@ -1329,12 +1331,12 @@ object Pipeline {
         // the JVM cannot false-pass the regime proof
         val tel = new graft.operators.Bpe.TrainTelemetry
         val indexed = graft.operators.Bpe.train(words, 6,
-          localMaxWords = 0L, hybridMaxPairs = 0L,
+          inHeapMaxBytes = 0L, hybridMaxPairs = 0L,
           occIndexAfterSparseRounds = 0, telemetry = tel)
         require(tel.occProbeServed.get() > 0L,
           "indexed BPE row did not serve a round from the occurrence index")
         val scanned = graft.operators.Bpe.train(words, 6,
-          localMaxWords = 0L, hybridMaxPairs = 0L,
+          inHeapMaxBytes = 0L, hybridMaxPairs = 0L,
           occIndexAfterSparseRounds = -1)
         require(indexed == scanned,
           s"occurrence-index merges diverged from the forced-scan control:" +
@@ -1367,13 +1369,13 @@ object Pipeline {
           .toDF("word", "count")
         val tel = new graft.operators.Bpe.TrainTelemetry
         val rebuilt = graft.operators.Bpe.train(words, 6,
-          localMaxWords = 0L, hybridMaxPairs = 0L,
+          inHeapMaxBytes = 0L, hybridMaxPairs = 0L,
           occIndexAfterSparseRounds = 0, occIndexRebuildOvWords = 1,
           telemetry = tel)
         require(tel.occIndexRebuilds.get() > 0L,
           "rebuild BPE row did not take the proactive ovI-bound rebuild path")
         val control = graft.operators.Bpe.train(words, 6,
-          localMaxWords = 0L, hybridMaxPairs = 0L,
+          inHeapMaxBytes = 0L, hybridMaxPairs = 0L,
           occIndexAfterSparseRounds = 0, occIndexRebuildOvWords = 0)
         require(rebuilt == control,
           s"rebuild-path merges diverged from the single-build control:" +

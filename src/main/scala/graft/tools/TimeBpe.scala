@@ -2,13 +2,14 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Dev-only: per-round cost of the forced-distributed BPE trainer (the
-  * >LocalTrainMaxWords regime) — evidence for the delta-recount rewrite.
-  * Word table: the sf0.1 documents' whitespace vocabulary (~100k unique
-  * words), forced onto the distributed branch with localMaxWords = 0. */
+/** Dev-only: wall time and merge digest of the BPE trainer on a
+  * generated word table (SPARK_GRAFT_BPE_WORDS rows, default 300k, in
+  * one of the corpus shapes below). SPARK_GRAFT_BPE_REGIME picks the
+  * route: `auto` (default) is train's own gate, `hybrid` and `tableloop`
+  * force the distributed loops. Two runs on the same corpus must print
+  * the same `mergesDigest` line. */
 object TimeBpe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "100").toInt
     val spark = graft.Bench.session(32)
     spark.sparkContext.setLogLevel("ERROR")
@@ -73,8 +74,9 @@ object TimeBpe {
         expr("greatest(1L, 1000000L div (id + 1))").as("count"))
       .cache()
     println(s"unique words: ${words.count()}")
-    // default exercises the auto gates (in-heap when the measured symbol
-    // bytes fit, else hybrid when the pair table fits, else table loop);
+    // default exercises the auto gates (in-heap when the encoded
+    // footprint fits, else hybrid when the pair table fits, else table
+    // loop);
     // =hybrid disables the in-heap gate (the r13 deep-merge curves were
     // measured on this path — keep it reachable for same-box A/Bs);
     // =tableloop forces the fully-distributed rounds
@@ -97,12 +99,12 @@ object TimeBpe {
       .getOrElse(graft.operators.Bpe.OccIndexRebuildOvWords)
     val tel = new graft.operators.Bpe.TrainTelemetry
     val t0 = System.nanoTime()
-    val merges = graft.operators.Bpe.train(words, nMerges, localMaxWords = 0L,
+    val merges = graft.operators.Bpe.train(words, nMerges,
       hybridMaxPairs = maxPairs, inHeapMaxBytes = maxInHeap,
       occIndexAfterSparseRounds = occIdx, occIndexRebuildOvWords = rebuildOv,
       telemetry = tel)
     val total = (System.nanoTime() - t0) / 1e9
-    println(f"$nMerges merges (forced distributed, regime=$regime): " +
+    println(f"$nMerges merges (regime=$regime): " +
       f"$total%.1f s total, " +
       f"${total / math.max(1, merges.size)}%.3f s/merge, learned ${merges.size}")
     println(s"rebuildOv=$rebuildOv occProbeServed=${tel.occProbeServed.get()} " +

@@ -2,27 +2,25 @@ package graft
 
 import graft.operators.Bpe
 
-/** Pins the distributed trainer's EXACT merge batching (Bpe.selectBatch +
-  * the batched delta rounds) to sequential BPE on the fixtures that break
-  * naive batching: self-pairs whose merges spawn high-count new pairs,
-  * concat collisions (two factorizations of one symbol string), tie
-  * cascades, and a randomized vocabulary. The batched-distributed branch
-  * must reproduce the sequential local trainer merge for merge — batching
-  * is a latency optimization, never an approximation. */
+/** Pins the trainer's EXACT merge batching (Bpe.selectBatch + the batched
+  * delta rounds) to sequential BPE on the fixtures that break naive
+  * batching: self-pairs whose merges spawn high-count new pairs, concat
+  * collisions (two factorizations of one symbol string), tie cascades, and
+  * a randomized vocabulary. Every regime — in-heap, hybrid, table loop and
+  * both hand-offs — must reproduce [[SequentialBpe]] merge for merge:
+  * batching is a latency optimization, never an approximation. */
 class BpeBatchSpec extends SparkSpec {
   import spark.implicits._
 
   private def parity(words: Seq[(String, Long)], n: Int): Unit = {
     val df = words.toDF("word", "count")
-    val local = Bpe.train(df, n) // sequential in-heap reference
-    // forced distributed + in-heap gate off → the HYBRID loop (driver map)
-    val hybrid = Bpe.train(df, n, localMaxWords = 0L, inHeapMaxBytes = 0L)
-    // forced distributed + pair map disallowed → the TABLE loop
-    val tableLoop = Bpe.train(df, n, localMaxWords = 0L, hybridMaxPairs = 0L,
-      inHeapMaxBytes = 0L)
-    // forced past the row gate with the byte gate open → the INCREMENTAL
-    // in-heap regime (r14)
-    val inHeap = Bpe.train(df, n, localMaxWords = 0L)
+    val local = SequentialBpe.train(words, n)
+    // in-heap gate off → the HYBRID loop (driver map)
+    val hybrid = Bpe.train(df, n, inHeapMaxBytes = 0L)
+    // in-heap gate off + pair map disallowed → the TABLE loop
+    val tableLoop = Bpe.train(df, n, hybridMaxPairs = 0L, inHeapMaxBytes = 0L)
+    // the default route: the INCREMENTAL in-heap regime
+    val inHeap = Bpe.train(df, n)
     assert(hybrid == local,
       s"hybrid-distributed merges diverge from sequential:\n" +
         s"  local:  $local\n  hybrid: $hybrid")
@@ -53,6 +51,16 @@ class BpeBatchSpec extends SparkSpec {
       ("abcd", 10L), ("efgh", 10L)), 8)
   }
 
+  test("control characters at word edges parse the same on the driver and in Spark") {
+    // Spark's trim strips spaces only; Java's String.trim also strips
+    // U+0000..U+001F, so a driver parse through it dropped the edge
+    // symbol of these words and every driver-side regime trained on
+    // stale counts (repeating a merge). None of them is \s whitespace,
+    // so the input contract admits them.
+    parity(Seq(("\u0001ab", 9L), ("ab\u0007", 7L), ("abc", 3L),
+      ("\u001fb", 5L)), 6)
+  }
+
   test("randomized vocabulary parity over many rounds") {
     val rnd = new scala.util.Random(7)
     val alphabet = "abcdefg" // small alphabet → heavy overlap + ties
@@ -77,15 +85,15 @@ class BpeBatchSpec extends SparkSpec {
       (w, (rnd.nextInt(30) + 1).toLong)
     }.distinct
     val df = words.toDF("word", "count")
-    val local = Bpe.train(df, 25)
-    def tableLoop() = Bpe.train(df, 25, localMaxWords = 0L,
+    val local = SequentialBpe.train(words, 25)
+    def tableLoop() = Bpe.train(df, 25,
       hybridMaxPairs = 0L, inHeapMaxBytes = 0L)
     assert(tableLoop() == local, "default (sparse) table loop diverged")
     // per-call bounds (r16 ADVICE: the @volatile hook vars are gone)
-    val dense = Bpe.train(df, 25, localMaxWords = 0L, hybridMaxPairs = 0L,
+    val dense = Bpe.train(df, 25, hybridMaxPairs = 0L,
       inHeapMaxBytes = 0L, overlayMaxAffected = 0) // every round dense
     assert(dense == local, "forced-dense table loop diverged")
-    val refrozen = Bpe.train(df, 25, localMaxWords = 0L, hybridMaxPairs = 0L,
+    val refrozen = Bpe.train(df, 25, hybridMaxPairs = 0L,
       inHeapMaxBytes = 0L, overlayMaxWords = 0) // refreeze every sparse round
     assert(refrozen == local, "forced-refreeze table loop diverged")
   }
@@ -105,10 +113,10 @@ class BpeBatchSpec extends SparkSpec {
       (w, (rnd.nextInt(25) + 1).toLong)
     }.distinct
     val df = words.toDF("word", "count")
-    val local = Bpe.train(df, 30)
+    val local = SequentialBpe.train(words, 30)
     def tbl(trigger: Int, affMax: Int = Bpe.SymsOverlayMaxAffected,
         ovMax: Int = Bpe.SymsOverlayMaxWords) =
-      Bpe.train(df, 30, localMaxWords = 0L, hybridMaxPairs = 0L,
+      Bpe.train(df, 30, hybridMaxPairs = 0L,
         inHeapMaxBytes = 0L, overlayMaxAffected = affMax,
         overlayMaxWords = ovMax, occIndexAfterSparseRounds = trigger)
     assert(tbl(trigger = -1) == local, "index-disabled control diverged")
@@ -127,7 +135,7 @@ class BpeBatchSpec extends SparkSpec {
       // advances, a bystander instance stays untouched
       val tel = new Bpe.TrainTelemetry
       val bystander = new Bpe.TrainTelemetry
-      assert(Bpe.train(df, 30, localMaxWords = 0L, hybridMaxPairs = 0L,
+      assert(Bpe.train(df, 30, hybridMaxPairs = 0L,
         inHeapMaxBytes = 0L, occIndexAfterSparseRounds = 0,
         occIndexRebuildOvWords = 1, telemetry = tel) == local,
         "ovI-bound rebuild path diverged")
@@ -147,7 +155,7 @@ class BpeBatchSpec extends SparkSpec {
     // quietly fitting inside the budget)
     locally {
       val tel = new Bpe.TrainTelemetry
-      assert(Bpe.train(df, 30, localMaxWords = 0L, hybridMaxPairs = 0L,
+      assert(Bpe.train(df, 30, hybridMaxPairs = 0L,
         inHeapMaxBytes = 0L, occIndexAfterSparseRounds = 0,
         occProbeMaxTotalRows = 1, telemetry = tel) == local,
         "budget-truncated (inconclusive) probe path diverged")
@@ -156,13 +164,13 @@ class BpeBatchSpec extends SparkSpec {
     }
     // the HYBRID loop shares the index (its deep floor was the same scan)
     def hyb(trigger: Int, ovMax: Int = Bpe.SymsOverlayMaxWords) =
-      Bpe.train(df, 30, localMaxWords = 0L, inHeapMaxBytes = 0L,
+      Bpe.train(df, 30, inHeapMaxBytes = 0L,
         overlayMaxWords = ovMax, occIndexAfterSparseRounds = trigger)
     assert(hyb(trigger = 0) == local, "hybrid index-from-round-0 diverged")
     assert(hyb(trigger = 0, ovMax = 0) == local,
       "hybrid per-round refreeze+rebuild diverged")
     // r18: the proactive ovI-bound rebuild fires in the HYBRID loop too
-    assert(Bpe.train(df, 30, localMaxWords = 0L, inHeapMaxBytes = 0L,
+    assert(Bpe.train(df, 30, inHeapMaxBytes = 0L,
       occIndexAfterSparseRounds = 0, occIndexRebuildOvWords = 1) == local,
       "hybrid ovI-bound rebuild path diverged")
   }
@@ -180,9 +188,9 @@ class BpeBatchSpec extends SparkSpec {
     // ask for MORE merges than exist: the fixture admits exactly 6, so
     // this also pins that genuine exhaustion (empty base) still ends
     // training instead of looping on the probe
-    val local = Bpe.train(df, 10)
+    val local = SequentialBpe.train(words, 10)
     assert(local.size == 6, s"fixture should admit 6 merges, got $local")
-    val plateau = Bpe.train(df, 10, localMaxWords = 0L, hybridMaxPairs = 0L,
+    val plateau = Bpe.train(df, 10, hybridMaxPairs = 0L,
       inHeapMaxBytes = 0L, baseTopRows = 2)
     assert(plateau == local,
       s"plateau table loop diverged:\n  local:   $local\n  plateau: $plateau")
@@ -190,8 +198,8 @@ class BpeBatchSpec extends SparkSpec {
     // the loop hits the plateau mid-run and must keep going
     val mixed = Seq(("xy", 9L)) ++ words
     val mdf = mixed.toDF("word", "count")
-    val mlocal = Bpe.train(mdf, 7)
-    val mplateau = Bpe.train(mdf, 7, localMaxWords = 0L, hybridMaxPairs = 0L,
+    val mlocal = SequentialBpe.train(mixed, 7)
+    val mplateau = Bpe.train(mdf, 7, hybridMaxPairs = 0L,
       inHeapMaxBytes = 0L, baseTopRows = 2)
     assert(mplateau == mlocal,
       s"mid-run plateau diverged:\n  local:   $mlocal\n  plateau: $mplateau")
@@ -236,14 +244,14 @@ class BpeBatchSpec extends SparkSpec {
       (w, (rnd.nextInt(20) + 1).toLong)
     }.distinct
     val df = words.toDF("word", "count")
-    val local = Bpe.train(df, 60)
+    val local = SequentialBpe.train(words, 60)
     // initial pairs over a 4-char alphabet (≤16) fit hybridMaxPairs = 16
     // (the gate admits); merges add new pair types until the map crosses
     // the 4x growth bound (>64) and the loop hands off. The regime hook
     // asserts the hand-off actually fired — a fixture that stopped
     // overflowing would fail here, not silently test one loop.
     val tel = new Bpe.TrainTelemetry
-    val crossed = Bpe.train(df, 60, localMaxWords = 0L, hybridMaxPairs = 16L,
+    val crossed = Bpe.train(df, 60, hybridMaxPairs = 16L,
       inHeapMaxBytes = 0L, telemetry = tel)
     assert(crossed == local,
       s"hand-off merges diverge:\n  local:   $local\n  crossed: $crossed")
@@ -264,11 +272,11 @@ class BpeBatchSpec extends SparkSpec {
     val words = Seq(("aaaaaaaa", 40L), ("aaaabbbb", 30L),
       ("bbbbbbbb", 20L), ("abababab", 10L))
     val df = words.toDF("word", "count")
-    val local = Bpe.train(df, 10)
+    val local = SequentialBpe.train(words, 10)
     // round-0 footprint: 32 occurrences × 12 + 4 words × 48 = 576
     val budget = 570L
     val tel = new Bpe.TrainTelemetry
-    val handed = Bpe.train(df, 10, localMaxWords = 0L,
+    val handed = Bpe.train(df, 10,
       inHeapMaxBytes = budget, inHeapHandoffCheckRounds = 1, telemetry = tel)
     assert(handed == local,
       s"mid-training in-heap hand-off merges diverge:\n" +
@@ -291,12 +299,12 @@ class BpeBatchSpec extends SparkSpec {
       (w, (rnd.nextInt(12) + 1).toLong)
     }.distinct
     val df = words.toDF("word", "count")
-    val viaHeap = Bpe.train(df, 40, localMaxWords = 0L)
-    val viaScan = Bpe.train(df, 40, localMaxWords = 0L,
-      argmaxHeapMinSlack = Long.MinValue / 2)
+    val viaHeap = Bpe.train(df, 40)
+    val viaScan = Bpe.train(df, 40, argmaxHeapMinSlack = Long.MinValue / 2)
     assert(viaHeap == viaScan,
       s"argmax modes diverge:\n  heap: $viaHeap\n  scan: $viaScan")
-    assert(viaHeap == Bpe.train(df, 40), "distributed diverged from local")
+    assert(viaHeap == SequentialBpe.train(words, 40),
+      "in-heap diverged from the sequential reference")
   }
 
   test("selectBatchEx with a complete table has no probe floor") {

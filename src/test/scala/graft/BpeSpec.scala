@@ -11,7 +11,13 @@ class BpeSpec extends SparkSpec {
   test("trainer learns the classic merges; encoder applies them greedily") {
     val words = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
       .toDF("word", "count")
-    val merges = Bpe.train(words, 4)
+    // the table fits the driver: the default route is the in-heap
+    // trainer, recorded in the call's own telemetry
+    val tel = new Bpe.TrainTelemetry
+    val merges = Bpe.train(words, 4, telemetry = tel)
+    import scala.jdk.CollectionConverters._
+    assert(tel.lastRegimes.asScala.toSeq == Seq("inheap"),
+      s"expected the in-heap regime, got ${tel.lastRegimes.asScala}")
     // round 1 pair counts: e-s 9, s-t 9 (tie → lexicographic), l-o 7, o-w 7,
     // w-e 8, n-e 6, e-w 6, e-r 2, w-i/i-d/d-e 3
     assert(merges == Seq(("e", "s"), ("es", "t"), ("l", "o"), ("lo", "w")))
@@ -47,22 +53,25 @@ class BpeSpec extends SparkSpec {
 
   test("local and distributed branches learn identical merges") {
     // A vocabulary with real tie pressure: repeated stems, shared suffixes,
-    // counts that collide. localMaxWords = 0 forces the distributed rounds;
-    // the default takes the in-heap path. The merge sequences must be
-    // EQUAL element-by-element — the local trainer is a fast path, not an
-    // approximation.
-    val words = Seq(
+    // counts that collide. The default takes the in-heap path;
+    // inHeapMaxBytes = 0 forces the distributed rounds (hybrid loop, and
+    // with hybridMaxPairs = 0 the table loop). The merge sequences must be
+    // EQUAL element-by-element to the sequential reference — every regime
+    // is a fast path, not an approximation.
+    val fixture = Seq(
       ("lowering", 4L), ("lowered", 4L), ("lowest", 6L), ("low", 9L),
       ("newest", 6L), ("newer", 3L), ("widest", 3L), ("wider", 3L),
       ("ab", 5L), ("ba", 5L), ("aba", 2L), ("bab", 2L))
-      .toDF("word", "count")
-    val local = Bpe.train(words, 12)
-    val distributed = Bpe.train(words, 12, localMaxWords = 0L,
-      inHeapMaxBytes = 0L)
-    val inHeap = Bpe.train(words, 12, localMaxWords = 0L)
-    assert(local == distributed)
-    assert(local == inHeap) // r14 incremental in-heap regime, same merges
-    assert(local.size == 12)
+    val words = fixture.toDF("word", "count")
+    val reference = SequentialBpe.train(fixture, 12)
+    val inHeap = Bpe.train(words, 12)
+    val distributed = Bpe.train(words, 12, inHeapMaxBytes = 0L)
+    val tableLoop = Bpe.train(words, 12, inHeapMaxBytes = 0L,
+      hybridMaxPairs = 0L)
+    assert(inHeap == reference)
+    assert(distributed == reference)
+    assert(tableLoop == reference)
+    assert(reference.size == 12)
   }
 
   test("local fast path trains 1000+ merges in seconds") {
