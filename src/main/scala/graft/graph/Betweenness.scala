@@ -371,21 +371,19 @@ object Betweenness {
     *
     * Regime: ≤ `localThreshold` edges the graph broadcasts and Brandes
     * runs pivot-parallel over the CSR (via [[run]]); above it — the 100 TB
-    * regime — the default is the generic level-synchronous distributed
-    * Brandes, with [[TransitBetweenness]] (the trip-collapse alternative)
-    * behind `transitAboveThreshold`. That default is a MEASURED
-    * adjudication, not a guess (COVERAGE.md betweenness section): on the
-    * hop metric Brandes uses, shortest paths chain through CHANGE edges
-    * liberally (a change costs 1 hop; measured change-depth ≈ 34 at 1×
-    * Modena vs ≈ 12 for the weighted routing metric), so trip-collapse
-    * pays ~3 × 34 full-grid rounds across its dist/sigma/delta phases —
-    * ≈ 12.5 s/pivot measured — where the level-synchronous loop's ~600
-    * cheap frontier rounds amortize to ≈ 3.6 s/pivot at 64 pivots and
-    * under ~1.5 s/pivot at 256+ at the same cardinality (r11
-    * bitmask-dedup + pinned-edge rewrite; rounds dominate, extra pivots
-    * ride almost free — COVERAGE.md betweenness section). The collapse
-    * that wins for weighted transit SSSP (TransitSssp, round count
-    * 12-15) loses here; both branches are spec-pinned to runLocal
+    * regime — the engine runs the generic level-synchronous distributed
+    * Brandes. That is a MEASURED adjudication (COVERAGE.md betweenness
+    * section): on the hop metric Brandes uses, shortest paths chain
+    * through CHANGE edges liberally (a change costs 1 hop; measured
+    * change-depth ≈ 34 at 1× Modena vs ≈ 12 for the weighted routing
+    * metric), so a trip-collapse Brandes paid ~3 × 34 full-grid rounds
+    * across its dist/sigma/delta phases — ≈ 12.5 s/pivot measured —
+    * where the level-synchronous loop's ~600 cheap frontier rounds
+    * amortize to ≈ 3.6 s/pivot at 64 pivots and ≈ 1.46 s/pivot at 256
+    * at the same cardinality (r11 bitmask-dedup + pinned-edge rewrite;
+    * rounds dominate, extra pivots ride almost free). The collapse that
+    * wins for weighted transit SSSP (TransitSssp, round count 12-15)
+    * loses here. The level-synchronous branch is spec-pinned to runLocal
     * (BetweennessSpec).
     *
     * `localThreshold`: None (the default) uses [[CsrBrandesMaxEdges]] and
@@ -405,14 +403,13 @@ object Betweenness {
   def ofProjection(g: graft.projection.TimeExpandedGraph,
       sources: Option[Seq[Long]] = None, seed: Long = 42L,
       localThreshold: Option[Long] = None,
-      transitAboveThreshold: Boolean = false,
       /** r15: clock cap for WINDOWED betweenness — scores computed over
         * the subgraph of stoptimes departing at or before the cap (the
         * same horizon-bounded subgraph the capped routing regime
         * collects). ∞ (default) keeps whole-projection semantics. */
       clockCap: Double = Double.PositiveInfinity): DataFrame =
-    ofProjectionImpl(g, sources, seed, localThreshold, transitAboveThreshold,
-      clockCap, CsrBrandesMaxEdges)
+    ofProjectionImpl(g, sources, seed, localThreshold, clockCap,
+      CsrBrandesMaxEdges)
 
   /** [[ofProjection]] with the DEFAULT broadcast bound injectable —
     * fixtures are too small to sit between the production bound and the
@@ -421,7 +418,6 @@ object Betweenness {
   private[graft] def ofProjectionImpl(g: graft.projection.TimeExpandedGraph,
       sources: Option[Seq[Long]], seed: Long,
       localThreshold: Option[Long],
-      transitAboveThreshold: Boolean,
       clockCap: Double,
       defaultCsrBound: Long,
       // the capped-budget rung's in-heap budget under the None threshold
@@ -483,7 +479,6 @@ object Betweenness {
     // Option makes that distinction structural (r16; the r15 sentinel
     // compared by VALUE, so an explicit bound equal to the default
     // silently escalated).
-    val effThreshold = localThreshold.getOrElse(defaultCsrBound)
     val inHeapBudget = localThreshold match {
       case Some(x) if x <= 0L => 0L
       case Some(x) => x
@@ -491,59 +486,7 @@ object Betweenness {
         math.max(defaultCsrBound,
           cappedInHeapBudget.getOrElse(g.cappedCsrMaxEdges))
     }
-    // The hop-space collapse derives PRECEDES structure from CONSECUTIVE
-    // rows, so a windowed transit run is exact only when the cap drops a
-    // SUFFIX of each trip it touches. A clock-inconsistent feed can put a
-    // non-monotone dep inside a trip, where the cap drops a MIDDLE row and
-    // re-keyed positions would fabricate a ride edge across the hole —
-    // detect exactly that (r16, r15 ADVICE: test the HOLE itself — a kept
-    // row preceded by a dropped one — not feed-wide monotonicity, so dirty
-    // trips entirely inside or outside the window no longer disable the
-    // fast branch) and keep the edge-list branch, which is exact by
-    // construction. Memoized per (projection, cap) on the projection: a
-    // multi-call harness pays the one window agg once.
-    def windowedDepHole: Boolean =
-      g.depHoleMemo.computeIfAbsent(clockCap, { _ =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("trip_id").orderBy("stop_sequence")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        java.lang.Boolean.valueOf(
-          !g.nodes.select(col("trip_id"), col("stop_sequence"), col("dep_secs"))
-            .withColumn("prev_max", max(col("dep_secs")).over(w))
-            .filter(col("dep_secs") <= clockCap && col("prev_max") > clockCap)
-            .isEmpty)
-      }).booleanValue
-    val scores =
-      // transitAboveThreshold first (r20): the edge count is a Spark job
-      // over the full projected edge set, and the default path
-      // (transitAboveThreshold = false) never needs it — && short-circuits.
-      if (transitAboveThreshold && g.edgeCount > effThreshold &&
-          !(windowed && windowedDepHole)) {
-        // changeEnriched is interchangeable with the 5-column view here:
-        // TransitBetweenness re-keys to HOP space (its own positions,
-        // waiting_time = 1) before its inner TransitSssp ever sees the
-        // frame, so the r14 enrichment neither helps nor hurts this branch.
-        // Windowed runs hand it the CAPPED frames (r15 review): positions
-        // re-key over the filtered nodes, which reproduces the capped
-        // subgraph exactly because a dep-clock cap truncates a SUFFIX of
-        // each trip (see windowedDepHole — non-monotone feeds keep the
-        // edge-list branch), so consecutive rows stay consecutive; CHANGE
-        // edges prune to within-cap endpoints, mirroring scopeEdges'
-        // semi-joins.
-        val ce =
-          if (!windowed) g.changeEnriched
-          else {
-            val within = scopeNodes.select(col("id"))
-            g.changeEnriched
-              .join(within.withColumnRenamed("id", "source"),
-                Seq("source"), "left_semi")
-              .join(within.withColumnRenamed("id", "target"),
-                Seq("target"), "left_semi")
-          }
-        TransitBetweenness.run(if (windowed) scopeNodes else g.nodes, ce, srcs)
-      }
-      else
-        run(scopeEdges, srcs, inHeapBudget)
+    val scores = run(scopeEdges, srcs, inHeapBudget)
     scopeNodes.join(scores, scopeNodes("id") === scores("vertex_id"))
       .select(col("stop_name"), col("dep_secs"), col("lat"), col("lon"),
         (col("score") * scale).as("score"))

@@ -106,31 +106,16 @@ object TransitSssp {
     /** ACYCLIC pred re-resolutions served ([[TransitSssp!.resolveStateAcyclic]]):
       * a PredCycleException fired and the retry routed. */
     val acyclicResolveServed = new java.util.concurrent.atomic.AtomicLong(0L)
+    /** Sparse tails that outlived [[TransitSssp.tailLazyRounds]] and built
+      * the sorted probe caches — the evidence a keep-or-delete A/B of the
+      * batch-pruned probes reads. */
+    val tailCacheBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
     /** Nanos spent building capped-bucket state (CHANGE slice + position
       * pin + driver CSR) — the ONE-TIME component of a routing call's
       * wall, memoized per bucket; TimeScale subtracts it to score the pure
       * routing component. */
     val cappedBuildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
   }
-
-  /** Max ride∘change depths batched per materialized sparse-tail round
-    * (see sparseTail): each materialized round pays the O(grid) slice
-    * pull + fixed scheduling floor ONCE and then iterates the operator up
-    * to this many times over slice-sized frames. The r11 verdict measured
-    * the un-batched tail at ~216 s of a 30× center pair (~17 rounds ×
-    * O(grid) × scheduling floor) and ≈600 s of the 100× probe — round
-    * count and per-round base touch are exactly what batching divides.
-    * The un-batched shape stays reachable below [[tailBatchMinBase]]. */
-  private[graft] val TailK: Int = 8
-
-  /** Tail batching only engages when the frozen base has at least this
-    * many rows: below it a tail round is already sub-second and the
-    * expansion machinery (one checkpoint job per hop) would cost more
-    * than the base touches it saves — fixture-scale runs and the
-    * per-round oracle keep the exact r11 un-batched loop. Specs force
-    * the batched path onto fixture graphs by constructing instances
-    * with 0 (r18 — per-instance param, no mutable global). */
-  private[graft] val tailBatchMinBase: Long = 1L << 20
 
   /** Largest frontier key list the tail turns into a chunked-In
     * batch-pruning predicate; above it the probe falls back to a full
@@ -156,10 +141,9 @@ object TransitSssp {
   private[graft] val tailPruneForce: Boolean = false
 
   /** Tail rounds to run PLAIN (pipelined probes against the raw frozen
-    * base, zero setup) before building the heavy amortized machinery —
-    * the sorted probe caches, the trip adjacency, and the k-depth
-    * expansion attempts. A horizon-capped route often dribbles only 2-3
-    * tail rounds, where the ~10 s of setup can never pay for itself
+    * base, zero setup) before building the sorted probe caches. A
+    * horizon-capped route often dribbles only 2-3 tail rounds, where the
+    * ~10 s of setup can never pay for itself
     * (measured at the 30× center pair: 17.9 s tail with eager setup vs
     * 11.4 s for the r11 shape; at 10× capped the setup landed at round
     * 3 of an 8-round dying dribble — pure overhead). Long tails — the
@@ -168,8 +152,7 @@ object TransitSssp {
     * genuinely long dribble pays the builds (a 10× capped pair-2 A/B:
     * 80.5 s at gate 3, 63.0 at 6, vs the 52.2 s r11 control; the
     * machinery was pure overhead on every ≤14-round tail measured).
-    * Specs pass 0 per instance to force the machinery onto fixture
-    * graphs. */
+    * Specs pass 0 per instance to force the caches onto fixture graphs. */
   private[graft] val tailLazyRounds: Int = 12
 
   /** Membership predicate that SURVIVES cached-batch stat pruning.
@@ -357,13 +340,10 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     cappedSliceMinNodes: Long = TransitSssp.cappedSliceMinNodes,
     /** Clock-cap bucket granularity of the memoized capped slices. */
     cappedSlicePadSecs: Long = TransitSssp.cappedSlicePadSecs,
-    /** Base-row floor for tail batching; specs pass 0 to force the
-      * batched path onto fixture graphs. */
-    tailBatchMinBase: Long = TransitSssp.tailBatchMinBase,
     /** true bypasses the prune granularity gate (spec hook). */
     tailPruneForce: Boolean = TransitSssp.tailPruneForce,
-    /** Plain tail rounds before the amortized machinery builds; specs
-      * pass 0 to force the builds onto fixture graphs. */
+    /** Plain tail rounds before the probe caches build; specs pass 0 to
+      * force the build onto fixture graphs. */
     tailLazyRounds: Int = TransitSssp.tailLazyRounds,
     /** Regime evidence this instance bumps (companion class scaladoc).
       * Callers that need to REQUIRE a regime engaged pass and read their
@@ -386,7 +366,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
   /** Ride closure in rel space: rel after riding from any earlier same-trip
     * row — transitively complete in one window pass (pure prefix-min; the
     * A(u) offsets are already folded out of the representation). */
-  private[graph] val rideCol = least(col("dist"), min(col("dist")).over(pref))
+  private val rideCol = least(col("dist"), min(col("dist")).over(pref))
 
   // Static per-trip ride-cost prefix: A(first) = 0,
   // A(u) = A(u−1) + (arr(u) − dep(u−1)) — so chain cost v→u = A(u) − A(v)
@@ -510,19 +490,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     TransitSssp.tinyCoalesce(c, changeRowCount)
   }
 
-  /** Trip-level CHANGE adjacency (s_trip → d_trip, distinct) — the
-    * dimension the sparse tail expands its frontier trip set through
-    * before pulling a slice (see sparseTail). One row per trip PAIR with
-    * any transfer; derived and pinned lazily on first batched-tail
-    * engagement only. */
-  @volatile private var tripAdjForced = false
-  private lazy val tripAdj = {
-    val a = change.select(col("s_trip"), col("d_trip")).distinct()
-      .transform(ckpt)
-    tripAdjForced = true
-    a
-  }
-
   /** A run's horizon-bounded static frames: the CHANGE slice every round
     * joins, and (when capped) the matching position dimension —
     * [[Staged.distances]] restores ids/absolute distances against `pos`
@@ -576,8 +543,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * evicted bucket's slice pin, and unpersisting a localCheckpoint under
     * a running query fails the query (lineage is truncated) — a
     * correctness hazard to save memory that construction already bounds.
-    * Services that want a hard floor call [[releasePins]] between runs
-    * (the betweenness path does). */
+    * Services that want a hard floor call [[releasePins]] between runs. */
   private val cappedSlices =
     new java.util.concurrent.ConcurrentHashMap[Long, CappedBucket]()
 
@@ -779,18 +745,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       }
     }
 
-  /** Per-trip grid row count — the expansion budget is ROW-based (trip
-    * lengths vary 2 .. 500+ across feeds, so a pair count misprices the
-    * slice). From the UNCAPPED prefix: a clock-capped grid has fewer
-    * rows per trip, so the estimate only overstates — conservative. */
-  @volatile private var tripLenForced = false
-  private lazy val tripLen = {
-    val d = prepared.groupBy("trip_id").agg(count(lit(1)).as("len"))
-      .transform(ckpt)
-    tripLenForced = true
-    d
-  }
-
   /** sources: seed vertex ids (dist 0, pred −1). Output matches
     * ShortestPaths.distancesDF: (vertex_id, source_id, dist, pred). */
   def run(sources: Set[Long], maxIterations: Int = 1000): DataFrame = {
@@ -870,8 +824,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * stops at the horizon instead of relaxing the rest of the service day
     * (the 30×-grid measurement: most of the multi-million-row flood and
     * the long change-depth dribble tail arrive after the horizon). The
-    * full-table contract (oracle `run`, TransitBetweenness) stays
-    * uncapped. */
+    * full-table contract (oracle `run`) stays uncapped. */
   /** `clockCap`: additionally drop grid rows whose departure clock exceeds
     * the cap BEFORE iterating. Exact for the same consumers: event times
     * increase monotonically along a time-expanded path, so every stoptime
@@ -889,12 +842,8 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
 
   /** Label-correcting iteration to the fixpoint; returns the converged
     * grid (src, trip_id, stop_sequence, dist, fresh) with dist in REL
-    * space (dist_abs = dist + A(trip_id, stop_sequence)). Package
-    * access: [[TransitBetweenness]] runs its forward hop-BFS through this
-    * (ride weight = Δposition, change weight = 1 — same operator, where
-    * A(u) = pos(u) − 1 so dist_abs = rel + stop_sequence − 1), then
-    * derives sigma/delta from the grid. */
-  private[graph] def converge(sources: Set[Long], maxIterations: Int = 1000,
+    * space (dist_abs = dist + A(trip_id, stop_sequence)). */
+  private def converge(sources: Set[Long], maxIterations: Int = 1000,
       costCap: Double = Double.PositiveInfinity,
       clockCap: Double = Double.PositiveInfinity): DataFrame = {
     import spark.implicits._
@@ -1049,7 +998,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * merge materializes the final state (replacing N tail-round grid
     * rewrites with one), after which base and overlay are released; the
     * returned frame carries the full-round schema, so every consumer
-    * (Staged, resolveState, TransitBetweenness) is oblivious.
+    * (Staged, resolveState) is oblivious.
     *
     * Overlay merges join on (src, trip_id, stop_sequence) — the grid's
     * primary key in its own partitioning terms — so neither the slice
@@ -1059,58 +1008,41 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * (threshold floor 1024 rows), so every routing parity spec and the
     * per-round `gtfs_routing_distributed` oracle exercise it.
     *
-    * K-DEPTH BATCHING + PENDING PIPELINING + BATCH-PRUNED PROBES (r12 —
-    * the r11 verdict's top item). The r11 tail paid THREE frame-sized
-    * touches per round (base slice pull, full-CHANGE candidate scan,
-    * base candidate-target probe) plus a fixed ~3-job scheduling floor,
-    * for rounds merging only O(1k) improvements — ≈216 s of a 30× center
-    * pair, ≈600 s of the 100× probe. Three composable attacks:
+    * PENDING PIPELINING + BATCH-PRUNED PROBES (r12 — the r11 verdict's
+    * top item). The r11 tail paid THREE frame-sized touches per round
+    * (base slice pull, full-CHANGE candidate scan, base candidate-target
+    * probe) plus a fixed ~3-job scheduling floor, for rounds merging only
+    * O(1k) improvements — ≈216 s of a 30× center pair, ≈600 s of the
+    * 100× probe. Two attacks:
     *
-    * 1. BATCH-PRUNED PROBES: the tail freezes base and the CHANGE slice,
-    *    so both are re-materialized ONCE per tail entry as SORTED
-    *    columnar caches (sortWithinPartitions on the existing pinned
-    *    hash layouts — no Exchange). Every per-round probe then filters
-    *    by the round's frontier trip ids via [[TransitSssp.isinPruned]]
+    * 1. PENDING PIPELINING: a round never probes candidate targets
+    *    against base. The cap-filtered, overlay-prefiltered candidate
+    *    mins are carried to the NEXT round as a small `pending` frame and
+    *    folded into that round's slice — whose trip set includes the
+    *    pending targets' trips by construction — where an improving
+    *    candidate applies and fires BOTH its ride effects (the prefix-min
+    *    window runs after the fold) and its transfer effects (the fold
+    *    marks the row changed) in the same round. One base touch per
+    *    round instead of two, same one-change-depth-per-round cadence.
+    *    Converged = a round whose pending output is EMPTY: every
+    *    improvement's effects fire in its own round, so empty pending
+    *    means no outstanding work (entry fresh rows are covered because
+    *    the first round's slice spans all fresh trips and its forced
+    *    merge clears the flags; afterwards rounds never set fresh, so the
+    *    frontier is carried entirely by pending).
+    * 2. BATCH-PRUNED PROBES (after [[TransitSssp.tailLazyRounds]] plain
+    *    rounds — short tails never pay the build): the tail freezes base
+    *    and the CHANGE slice, so both are re-materialized ONCE per tail
+    *    as SORTED columnar caches (sortWithinPartitions on the existing
+    *    pinned hash layouts — no Exchange). Every later probe filters by
+    *    the round's frontier trip ids via [[TransitSssp.isinPruned]]
     *    chunked-In predicates, and the in-memory cache's per-batch
     *    min/max stats skip every non-matching batch: a probe reads
     *    O(matched batches), not O(grid). This removes the O(grid) term
-    *    from the round floor for the frontier sizes the tail sees
-    *    (tens of trips).
-    * 2. PENDING PIPELINING: an un-batched round no longer probes
-    *    candidate targets against base at all. The cap-filtered,
-    *    overlay-prefiltered candidate mins are carried to the NEXT
-    *    round as a small `pending` frame and folded into that round's
-    *    slice — whose trip set includes the pending targets' trips by
-    *    construction — where an improving candidate applies and fires
-    *    BOTH its ride effects (the prefix-min window runs after the
-    *    fold) and its transfer effects (the fold marks the row changed)
-    *    in the same round. One base touch per round instead of two,
-    *    same one-change-depth-per-round cadence. Converged = a round
-    *    whose pending output is EMPTY: every improvement's effects fire
-    *    in its own round, so empty pending means no outstanding work
-    *    (entry fresh rows are covered because the first round's slice
-    *    spans all fresh trips and its forced merge clears the flags;
-    *    afterwards pipelined rounds never set fresh, so the frontier is
-    *    carried entirely by pending).
-    * 3. K-DEPTH BATCHING (above [[tailBatchMinBase]] grid
-    *    rows): a round may expand the frontier's (src, trip) set up to
-    *    [[TransitSssp.TailK]] change-hops through the pinned trip-level
-    *    adjacency, pull ONE base slice + ONE change slice covering the
-    *    expansion, and iterate ride∘change entirely in-slice — depth
-    *    d's candidates land within d+1 ≤ k hops, inside the slice by
-    *    construction, applied in-round against the slice's own values
-    *    (entering the overlay FRESH; their out-edges fire next inner
-    *    round — the r11-proven shape). The expansion budget is
-    *    ROW-based via the tripLen dimension (trip lengths vary
-    *    2..500+), counts riding each hop's checkpoint via observe();
-    *    an expansion that CLOSES runs inner rounds to convergence with
-    *    no further pulls; an un-closed expansion under 2 hops
-    *    (hub-dense adjacency) falls back to the pipelined round, so
-    *    batching never costs more than the shape it replaces. Carried
-    *    pending folds into the first inner depth (its targets sit in
-    *    the expansion seed).
+    *    from the round floor for the frontier sizes the tail sees (tens
+    *    of trips). The r12 30×-uncapped win (216 → 124 s) rests on it.
     *
-    * Correctness: all three reuse the full round's operators verbatim.
+    * Correctness: both reuse the full round's operators verbatim.
     * Termination: improvements strictly decrease per-position dists
     * over a finite path-cost set; a round with pending but zero
     * improvements and no fresh rows yields an empty changed set, hence
@@ -1130,15 +1062,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       .select(col("src"), col("trip_id"), col("stop_sequence"),
         col("dist"), col("fresh"))
       .transform(ckpt)
-    val baseCount = base.count()
-    val batchEnabled = baseCount >= tailBatchMinBase
-    // ROW-based expansion budget (trip lengths vary 2..500+ across
-    // feeds): a batched slice stays ≤ ~1/6 of base, so k inner rounds
-    // over it cost about one full-base round while replacing k base
-    // touches. The pair cap bounds the broadcast the slice pull ships.
-    val rowBudget = math.max(65536L, baseCount / 6L)
-    val pairMax = 512L * 1024L
-    val kMax = TransitSssp.TailK
     var it = itStart
     var converged = false
     // entry overlay rows carry the full loop's fresh flags; the first
@@ -1148,9 +1071,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     // (src, trip_id, stop_sequence, dist) and its backing checkpoint
     var pending: DataFrame = null
     var pendingSrc: DataFrame = null
-    var expansionDead = false
-    var zeroHopAttempts = 0
-    // Lazy amortized probe state (attack #1): plain rounds probe the raw
+    // Lazy amortized probe state (attack #2): plain rounds probe the raw
     // frozen base/change; once the tail proves LONG (tailLazyRounds),
     // both are re-materialized as SORTED columnar caches — partition-
     // local sorts on the pinned hash layouts, no Exchange — with the
@@ -1160,20 +1081,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     // horizon-capped shape) never pay the build.
     var probeBase = base
     var probeChange = runChange
-    // Trip adjacency matching THIS run's slice: for a capped run the
-    // instance-level adjacency would force the uncapped pin this run
-    // avoided; the capped adjacency is the correct (smaller) one anyway —
-    // candidates only flow through runChange edges, so closure over it
-    // is closure over possible candidate flow. Built lazily on first
-    // batched engagement, released with the tail's other caches.
-    var runAdjBuilt: DataFrame = null
-    lazy val runTripAdj: DataFrame =
-      if (runChange eq change) tripAdj
-      else {
-        runAdjBuilt = runChange.select(col("s_trip"), col("d_trip"))
-          .distinct().transform(ckpt)
-        runAdjBuilt
-      }
     var pruneEnabled = false
     var cachesReady = false
     def ensureCaches(): Unit = if (!cachesReady) {
@@ -1200,8 +1107,11 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         } finally spark.conf.set(batchKey, batchPrev)
       }
-      val nTrips = math.max(1L,
-        bc.agg(approx_count_distinct(col("trip_id"))).head().getLong(0))
+      // one job materializes the base cache and reads both gate inputs
+      val stats = bc.agg(count(lit(1)),
+        approx_count_distinct(col("trip_id"))).head()
+      val baseCount = stats.getLong(0)
+      val nTrips = math.max(1L, stats.getLong(1))
       cc.count()
       // Granularity gate: pruning pays only when a batch spans few
       // trips (rows/trip ≥ batch/4 ⟺ ≤ ~4 trips/batch) — below that
@@ -1211,6 +1121,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       pruneEnabled = tailPruneForce ||
         baseCount / nTrips >= TransitSssp.tailPruneBatchSize / 4
       probeBase = bc; probeChange = cc; cachesReady = true
+      evidence.tailCacheBuilds.incrementAndGet()
     }
 
     def seedPairs: DataFrame = {
@@ -1231,23 +1142,19 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       else cached
 
     // One ride∘change application over curBase ∪ overlay ∪ pend.
-    // inSlice=true (batched segments): candidate targets are inside
-    // curBase by construction — applied in-round against the ride
-    // frame's own values, entering the overlay FRESH (out-edges fire
-    // next inner round); pending output is empty. inSlice=false
-    // (pipelined): candidates never touch base — they are returned as
-    // the next round's pending. Returns (nImp, nPend, outcome ckpt);
-    // outcome carries improvement rows (pend=false) and next-pending
-    // rows (pend=true); the CALLER owns its release.
-    def round(curBase: DataFrame, candEdges: DataFrame, inSlice: Boolean,
-        pend: DataFrame, forceMerge: Boolean): (Long, Long, DataFrame) = {
+    // Candidates never touch base — they are returned as the next
+    // round's pending. Returns (nPend, outcome ckpt); outcome carries
+    // improvement rows (pend=false) and next-pending rows (pend=true);
+    // the CALLER owns its release.
+    def round(curBase: DataFrame, candEdges: DataFrame,
+        pend: DataFrame, forceMerge: Boolean): (Long, DataFrame) = {
       val cur0 = curBase
         .join(ov.select(col("src"), col("trip_id"), col("stop_sequence"),
           col("dist").as("o_dist"), col("fresh").as("o_fresh")), posKey, "left")
         .select(col("src"), col("trip_id"), col("stop_sequence"),
           coalesce(col("o_dist"), col("dist")).as("dist"),
           coalesce(col("o_fresh"), col("fresh")).as("fresh"))
-      // fold carried candidates in (attack #2): an improving pending
+      // fold carried candidates in (attack #1): an improving pending
       // value becomes the row's dist and marks it changed, so its ride
       // AND transfer effects fire in THIS round; applied rows enter
       // the overlay non-fresh
@@ -1279,12 +1186,12 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         .transform(ckpt)
       if (chObs.get("nch").asInstanceOf[Long] == 0L) {
         rel(ride)
-        return (0L, 0L, curBase.limit(0))
+        return (0L, curBase.limit(0))
       }
       val changed = ride.filter(changedPred)
       // broadcast the FRONTIER side: candEdges streams once (batch-
-      // pruned or expansion-sized) instead of shuffling to meet a few
-      // hundred frontier rows
+      // pruned when the caches are built) instead of shuffling to meet a
+      // few hundred frontier rows
       val candRaw = candEdges
         .join(broadcast(changed.select(col("src"), col("trip_id"),
           col("stop_sequence"), col("rdist"))),
@@ -1307,27 +1214,19 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         else rideImp.unionByName(ride.filter(col("p_app"))
           .select(col("src"), col("trip_id"), col("stop_sequence"),
             col("dist"), lit(false).as("fresh")))
-      val tagged =
-        if (inSlice)
-          imps.unionByName(ride.join(broadcast(candMin), posKey)
-              .filter(col("rdist").isNull || col("cdist") < col("rdist"))
-              .select(col("src"), col("trip_id"), col("stop_sequence"),
-                col("cdist").as("dist"), lit(true).as("fresh")))
-            .withColumn("pend", lit(false))
-        else
-          // overlay prefilter: candidates provably not improving the
-          // best-KNOWN value are dropped; the rest carry to the next
-          // round's fold (targets absent from ov may still lose to
-          // their base value there — the fold is the exact check)
-          imps.withColumn("pend", lit(false)).unionByName(
-            candMin
-              .join(broadcast(ov.select(col("src"), col("trip_id"),
-                col("stop_sequence"), col("dist").as("o_dist"))),
-                posKey, "left")
-              .filter(col("o_dist").isNull || col("cdist") < col("o_dist"))
-              .select(col("src"), col("trip_id"), col("stop_sequence"),
-                col("cdist").as("dist"), lit(false).as("fresh"),
-                lit(true).as("pend")))
+      // overlay prefilter: candidates provably not improving the
+      // best-KNOWN value are dropped; the rest carry to the next round's
+      // fold (targets absent from ov may still lose to their base value
+      // there — the fold is the exact check)
+      val tagged = imps.withColumn("pend", lit(false)).unionByName(
+        candMin
+          .join(broadcast(ov.select(col("src"), col("trip_id"),
+            col("stop_sequence"), col("dist").as("o_dist"))),
+            posKey, "left")
+          .filter(col("o_dist").isNull || col("cdist") < col("o_dist"))
+          .select(col("src"), col("trip_id"), col("stop_sequence"),
+            col("cdist").as("dist"), lit(false).as("fresh"),
+            lit(true).as("pend")))
       val obs = org.apache.spark.sql.Observation(
         s"transit-tail-${TransitSssp.runSeq.incrementAndGet()}")
       val out = tagged
@@ -1351,7 +1250,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         rel(ov)
         ov = mergedOv
       }
-      (nImp, nPend, out)
+      (nPend, out)
     }
 
     def pipelinedRound(): Unit = {
@@ -1368,9 +1267,8 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         else IndexedSeq.empty[Int]
       val slice = prunedScan(probeBase, trips)
         .join(broadcast(pairs), Seq("src", "trip_id"))
-      val (nImp, nPend, out) = round(slice,
-        prunedScan(probeChange, trips),
-        inSlice = false, pending, forceMerge = ovHasFresh)
+      val (nPend, out) = round(slice, prunedScan(probeChange, trips),
+        pending, forceMerge = ovHasFresh)
       ovHasFresh = false
       if (pendingSrc != null) rel(pendingSrc)
       if (nPend == 0L) {
@@ -1389,123 +1287,16 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
         && tailRounds < tailLazyRounds) {
       // plain early rounds: pipelined probes on the raw frozen base —
       // zero setup, one base touch per round (short capped tails end
-      // here without ever paying the cache/adjacency builds)
+      // here without ever paying the cache build)
       pipelinedRound()
       tailRounds += 1
     }
     if (!converged) ensureCaches()
-    if (!batchEnabled) {
-      // fixture/small-scale shape: pipelined rounds only — no
-      // expansion machinery (its per-hop checkpoint jobs cost more
-      // than the base touches they save below ~1M grid rows)
-      while (it < maxIterations && !converged) pipelinedRound()
-    } else while (it < maxIterations && !converged) {
-      if (expansionDead) { pipelinedRound() }
-      else {
-      // ---- expansion: frontier ∪ pending trips + up to kMax change
-      // hops, each hop ONE checkpoint job (pair count + slice-row
-      // estimate ride on it via observe) ----
-      def counted(df: DataFrame): (DataFrame, Long, Long) = {
-        val obs = org.apache.spark.sql.Observation(
-          s"transit-exp-${TransitSssp.runSeq.incrementAndGet()}")
-        val d = df
-          .observe(obs, count(lit(1)).as("cnt"),
-            coalesce(sum(col("len")), lit(0L)).as("rows"))
-          .transform(ckpt)
-        (d, obs.get("cnt").asInstanceOf[Long], obs.get("rows").asInstanceOf[Long])
-      }
-      val (frontTrips, fCnt, fRows) =
-        counted(seedPairs.join(broadcast(tripLen), Seq("trip_id"))
-          .select(col("src"), col("trip_id"), col("len")))
-      var expanded = frontTrips
-      var expCnt = fCnt
-      var expRows = fRows
-      var hops = 0
-      var closed = false
-      var budgetHit = expRows > rowBudget || expCnt > pairMax
-      while (hops < kMax && !closed && !budgetHit) {
-        val (grown, c, r) = counted(expanded.unionByName(
-            expanded.select(col("src"), col("trip_id").as("s_trip"))
-              .join(runTripAdj, Seq("s_trip"))
-              .select(col("src"), col("d_trip").as("trip_id"))
-              .join(broadcast(tripLen), Seq("trip_id"))
-              .select(col("src"), col("trip_id"), col("len")))
-          .distinct())
-        if (c > pairMax || r > rowBudget) { rel(grown); budgetHit = true }
-        else {
-          if (expanded ne frontTrips) rel(expanded)
-          closed = c == expCnt
-          expanded = grown; expCnt = c; expRows = r; hops += 1
-        }
-      }
-      // Batch only when it can actually batch: a closed expansion (the
-      // reachable trip set is adjacency-complete — every future
-      // candidate lands in-slice, inner rounds may run to convergence
-      // with no further pulls) or ≥ 2 depths. hops < 2 un-closed means
-      // the expansion budget bit immediately (hub-dense adjacency) —
-      // the slice machinery would cost more than the base touch it
-      // saves, so run the pipelined round instead.
-      if (closed || hops >= 2) {
-        val kEff = if (closed) Int.MaxValue else hops
-        val pairs = expanded.select("src", "trip_id")
-        val expTrips =
-          if (pruneEnabled)
-            expanded.select(TransitSssp.tbCol(col("trip_id")).as("t_b"))
-              .distinct().limit(TransitSssp.tailPruneMaxKeys + 1)
-              .collect().map(_.getInt(0)).toIndexedSeq
-          else IndexedSeq.empty[Int]
-        // ONE batch-pruned base scan and ONE change scan for the whole
-        // batch; both slices are expansion-sized (above the key cap the
-        // pull scans unpruned, paid once per k depths)
-        val sliceBase = prunedScan(probeBase, expTrips)
-          .join(broadcast(pairs), Seq("src", "trip_id"))
-          .drop("t_b")
-          .transform(ckpt)
-        val candEdges = prunedScan(probeChange, expTrips)
-          .join(broadcast(expanded.select(col("trip_id").as("s_trip"))
-            .distinct()), Seq("s_trip"))
-          .drop("t_b")
-          .transform(ckpt)
-        var depth = 0
-        while (depth < kEff && !converged && it < maxIterations) {
-          val (nImp, _, out) = round(sliceBase, candEdges, inSlice = true,
-            if (depth == 0) pending else null,
-            forceMerge = ovHasFresh)
-          ovHasFresh = false
-          if (depth == 0 && pendingSrc != null) {
-            rel(pendingSrc); pending = null; pendingSrc = null
-          }
-          rel(out)
-          converged = nImp == 0L
-          it += 1
-          depth += 1
-        }
-        // an exhausted (non-converged) segment's last inner round left
-        // candidate rows FRESH — the next round's forced merge clears
-        // them after their effects fire
-        if (!converged) ovHasFresh = true
-        rel(sliceBase); rel(candEdges)
-      } else {
-        pipelinedRound()
-      }
-      // Promiscuous trip adjacency (grids, hub feeds) budget-hits at
-      // hop 1 on every attempt — the attempts themselves cost one or
-      // two checkpoint jobs per round, so after two consecutive
-      // zero-hop failures the loop stops trying (a later round's
-      // SMALLER frontier rarely changes the feed's fan-out).
-      if (hops == 0 && !closed) {
-        zeroHopAttempts += 1
-        if (zeroHopAttempts >= 2) expansionDead = true
-      } else zeroHopAttempts = 0
-      if (expanded ne frontTrips) rel(expanded)
-      rel(frontTrips)
-      }
-    }
+    while (it < maxIterations && !converged) pipelinedRound()
     if (cachesReady) {
       probeBase.unpersist(false)
       probeChange.unpersist(false)
     }
-    if (runAdjBuilt != null) rel(runAdjBuilt)
     if (!converged) throw new IllegalStateException(
       s"TransitSssp did not converge in $maxIterations iterations — " +
         "optimal paths deeper than the bound (raise maxIterations)")
@@ -1521,15 +1312,13 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
   }
 
   /** Release the instance's pinned static frames (trip prefix + CHANGE
-    * slice) — for short-lived instances (one betweenness call) that should
-    * not leave checkpoint blocks behind. Projection-held instances keep
-    * their pins for the projection's lifetime and never call this. */
+    * slice) — for short-lived instances that should not leave checkpoint
+    * blocks behind. Projection-held instances keep their pins for the
+    * projection's lifetime and never call this. */
   private[graft] def releasePins(): Unit = {
     val rel = org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint _
     if (preparedForced) rel(prepared)
     if (changeForced) rel(change)
-    if (tripAdjForced) rel(tripAdj)
-    if (tripLenForced) rel(tripLen)
     cappedSlices.values.forEach { cell =>
       if (cell.slicesForced) {
         val rs = cell.slices

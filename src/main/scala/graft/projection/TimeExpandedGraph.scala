@@ -78,14 +78,6 @@ final class TimeExpandedGraph(val nodes: DataFrame,
   def nodeCount: Long = nodes.count()
   def edgeCount: Long = edges.count()
 
-  /** Memo for [[graft.graph.Betweenness]]'s windowed dep-hole guard, keyed
-    * by clock cap — the guard is one window agg over `nodes`, paid once per
-    * (projection, cap) instead of per windowed+transit call (r16, r15
-    * ADVICE). Bounded like the capped-slice buckets: caps are event clocks
-    * within the service day. */
-  private[graft] val depHoleMemo =
-    new java.util.concurrent.ConcurrentHashMap[java.lang.Double, java.lang.Boolean]()
-
   /** Edge list in the shape ShortestPaths.fromDF expects. */
   def weightedEdges: DataFrame =
     edges.select(col("source").as("src"), col("target").as("dst"),

@@ -15,9 +15,6 @@ package graft.tools
   *    groupBy(src, d_trip, d_seq) reduction is map-side combinable);
   *    the check is that the route's wall stays near the uniform 10×
   *    campaign medians in COVERAGE.md.
-  *  - the hub makes the trip-level adjacency near-complete, so the
-  *    sparse tail's expansion budget must trip and fall back to the
-  *    un-batched round shape — the guard under test.
   * walkRadiusMeters = 50 keeps WALK_TO to self-loops, so the ONLY
   * transfer point is the hub (pure skew, no geometric side-channels).
   *

@@ -18,9 +18,7 @@ package graft.tools
   *  - "levelsync": localThreshold forced to 0, so the same pivots run
   *    through the level-synchronous distributed Brandes — the >2M-edge
   *    DEFAULT (the measured adjudication in Betweenness.ofProjection's
-  *    scaladoc).
-  *  - "transit": additionally routes the above-threshold branch to
-  *    `TransitBetweenness` — the trip-collapse alternative. */
+  *    scaladoc). */
 object TimeBetweenness {
   def main(args: Array[String]): Unit = {
     val spark = graft.Bench.session(32)
@@ -61,7 +59,7 @@ object TimeBetweenness {
     }
     val regime = sys.env.getOrElse("SPARK_GRAFT_BW_REGIME", "csr")
     val threshold = regime match {
-      case "transit" | "levelsync" => Some(0L)
+      case "levelsync" => Some(0L)
       case _ => None // default bound + the capped-budget rung
     }
     val t0 = System.nanoTime()
@@ -74,8 +72,7 @@ object TimeBetweenness {
     // how much a limit materializes — that is a Spark implementation
     // detail this tool does not depend on).
     val out = graft.graph.Betweenness.ofProjection(proj, sources = sources,
-        localThreshold = threshold,
-        transitAboveThreshold = regime == "transit", clockCap = cap).cache()
+        localThreshold = threshold, clockCap = cap).cache()
     out.count()
     val top = out.limit(5).collect()
     val sec = (System.nanoTime() - t0) / 1e9

@@ -112,47 +112,6 @@ class BetweennessSpec extends SparkSpec {
     csr.foreach { case (k, v) => assert(math.abs(v - local(k)) < 1e-9, s"vertex $k") }
   }
 
-  test("transit trip-collapse Brandes equals runLocal on the demo projection") {
-    import org.apache.spark.sql.functions.col
-    val g = DemoGtfs.engine(spark).projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-    val edges = g.edges.select(col("source"), col("target"))
-      .as[(Long, Long)].collect().distinct
-    val all = g.nodes.select("id").as[Long].collect().toSeq.sorted
-    // pivotBatch = 5 forces several batches — the cross-batch score sum
-    // and per-batch convergence must compose to the exact answer
-    val transit = graft.graph.TransitBetweenness.run(
-        g.nodes, g.edges.filter(col("type") === "CHANGE"), all, pivotBatch = 5)
-      .as[(Long, Double)].collect().toMap
-    val local = Betweenness.runLocal(edges, all)
-    assert(transit.keySet == local.keySet)
-    transit.foreach { case (k, v) =>
-      assert(math.abs(v - local(k)) < 1e-9, s"vertex $k: $v vs ${local(k)}")
-    }
-  }
-
-  test("transit Brandes equals runLocal on a tie-heavy synthetic grid projection") {
-    import org.apache.spark.sql.functions.col
-    // grid networks give many equal-hop alternatives: multi-block trips,
-    // tied sigma splits, and pivots mid-trip
-    val raw = graft.etl.SyntheticGtfs.grid(spark, 4, 4, 3, directions = 2)
-    val eng = new graft.api.RoutingEngine(raw)
-    try {
-      val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-      val edges = g.edges.select(col("source"), col("target"))
-        .as[(Long, Long)].collect().distinct
-      val pivots = g.nodes.select("id").as[Long].collect().toSeq.sorted
-        .zipWithIndex.filter(_._2 % 3 == 0).map(_._1) // sampled, id gaps
-      val transit = graft.graph.TransitBetweenness.run(
-          g.nodes, g.edges.filter(col("type") === "CHANGE"), pivots)
-        .as[(Long, Double)].collect().toMap
-      val local = Betweenness.runLocal(edges, pivots)
-      assert(transit.keySet == local.keySet)
-      transit.foreach { case (k, v) =>
-        assert(math.abs(v - local(k)) < 1e-9, s"vertex $k: $v vs ${local(k)}")
-      }
-    } finally eng.close()
-  }
-
   test("ofProjection above-threshold regime matches the CSR regime") {
     val g = DemoGtfs.engine(spark).projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -160,18 +119,11 @@ class BetweennessSpec extends SparkSpec {
         r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
       .sortBy(t => (t._1, t._2, t._3)).toSeq
     val viaCsr = rows(Betweenness.ofProjection(g))
-    // both above-threshold branches: the level-synchronous default AND the
-    // trip-collapse alternative must reproduce the CSR rows
+    // the above-threshold branch (level-synchronous) must reproduce the
+    // CSR rows
     val viaLevelSync = rows(Betweenness.ofProjection(g, localThreshold = Some(0L)))
-    val viaTransit = rows(Betweenness.ofProjection(g, localThreshold = Some(0L),
-      transitAboveThreshold = true))
     assert(viaCsr.size == viaLevelSync.size)
     viaCsr.zip(viaLevelSync).foreach { case ((n1, d1, s1), (n2, d2, s2)) =>
-      assert(n1 == n2 && d1 == d2, s"row mismatch: ($n1,$d1) vs ($n2,$d2)")
-      assert(math.abs(s1 - s2) < 1e-9, s"score mismatch at ($n1,$d1): $s1 vs $s2")
-    }
-    assert(viaCsr.size == viaTransit.size)
-    viaCsr.zip(viaTransit).foreach { case ((n1, d1, s1), (n2, d2, s2)) =>
       assert(n1 == n2 && d1 == d2, s"row mismatch: ($n1,$d1) vs ($n2,$d2)")
       assert(math.abs(s1 - s2) < 1e-9, s"score mismatch at ($n1,$d1): $s1 vs $s2")
     }
@@ -199,7 +151,7 @@ class BetweennessSpec extends SparkSpec {
         budget: Long = TransitSssp.cappedCsrMaxEdges) =
       rows(Betweenness.ofProjectionImpl(g,
         sources = None, seed = 42L, localThreshold = None,
-        transitAboveThreshold = false, clockCap = Double.PositiveInfinity,
+        clockCap = Double.PositiveInfinity,
         defaultCsrBound = bound, cappedInHeapBudget = Some(budget)))
     val viaDefault = rows(Betweenness.ofProjection(g))
     val viaRung = viaBound(1L)
@@ -228,19 +180,21 @@ class BetweennessSpec extends SparkSpec {
       .projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
     val viaProjectionDefault = rows(Betweenness.ofProjectionImpl(gNoCsr,
       sources = None, seed = 42L, localThreshold = None,
-      transitAboveThreshold = false, clockCap = Double.PositiveInfinity,
+      clockCap = Double.PositiveInfinity,
       defaultCsrBound = 1L))
     assert(viaProjectionDefault == viaDefault,
       "projection-default (disabled) budget diverged from level-sync")
   }
 
   test("windowed transit on a dep-dirty feed keeps the exact edge-list branch (r15 review)") {
-    // The hop-space collapse derives PRECEDES from consecutive rows, so a
-    // cap that drops a MIDDLE row (possible only when dep_secs runs
-    // backward inside a trip) would fabricate a ride edge across the hole
-    // if positions re-keyed over the filtered nodes. The dep-hole guard
-    // must detect the non-monotone feed and route the windowed transit
-    // call through the edge-list branch — identical to windowed level-sync.
+    // A dep-dirty feed: dep_secs runs backward inside a trip, so the cap
+    // drops a MIDDLE row (a hole) instead of a suffix. Windowed scoring
+    // works on the capped subgraph's edge list, which keeps no ride edge
+    // across the hole, so the in-heap rung and level-sync must agree.
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[String]("stop_name"),
+        r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
+      .sortBy(t => (t._1, t._2, t._3)).toSeq
     import graft.functions.TimeFunctions.secondsSinceMidnight
     import org.apache.spark.sql.functions.col
     val agency = Seq(("A", "http://example.org", "Europe/Rome"))
@@ -257,7 +211,7 @@ class BetweennessSpec extends SparkSpec {
       .toDF("stop_id", "stop_name", "stop_lat", "stop_lon")
     // TB's middle dep (14:45) sits ABOVE the 14:40 cap while its final dep
     // (14:30) sits below AND runs backward — the cap drops only the middle
-    // row, the exact hole the guard exists for. TA feeds a change into TB.
+    // row. TA feeds a change into TB.
     val stopTimes = Seq(
       ("TA", "14:00:00", "14:00:00", "SA", 1),
       ("TA", "14:06:00", "14:07:00", "SB", 2),
@@ -275,17 +229,12 @@ class BetweennessSpec extends SparkSpec {
     val eng = new graft.api.RoutingEngine(tables)
     val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
     val cap = 52800.0 // 14:40
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[String]("stop_name"),
-        r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
-      .sortBy(t => (t._1, t._2, t._3)).toSeq
+    val inHeap = rows(Betweenness.ofProjection(g, clockCap = cap))
     val levelSync = rows(Betweenness.ofProjection(g, localThreshold = Some(0L),
       clockCap = cap))
-    val transit = rows(Betweenness.ofProjection(g, localThreshold = Some(-1L),
-      transitAboveThreshold = true, clockCap = cap))
-    assert(transit == levelSync,
-      "dep-dirty windowed transit diverged from the exact edge-list branch")
-    // the dropped middle row must actually be a hole (guard precondition)
+    assert(inHeap == levelSync,
+      "dep-dirty windowed in-heap betweenness diverged from the exact edge-list branch")
+    // the dropped middle row must actually be a hole (fixture precondition)
     assert(g.nodes.filter(col("dep_secs") > cap).count() == 1)
   }
 
@@ -308,13 +257,6 @@ class BetweennessSpec extends SparkSpec {
     assert(inHeap.size < full.size,
       "the cap should restrict the scored rows to the window")
     assert(inHeap.nonEmpty)
-    // the transit (hop-space) branch must honor the window too (r15
-    // review: it previously scored the FULL graph and only clipped the
-    // output rows) — force it via localThreshold = -1 so edgeCount > -1
-    val transit = rows(Betweenness.ofProjection(g, localThreshold = Some(-1L),
-      transitAboveThreshold = true, clockCap = clk))
-    assert(transit == inHeap,
-      "windowed transit-branch betweenness diverged from the capped subgraph")
   }
 
   test("api betweennessWindow mirrors the windowed rung (r16)") {

@@ -36,46 +36,28 @@ class TransitSsspSpec extends SparkSpec {
     assert(key(transit) == key(local))
   }
 
-  test("batched sparse tail (forced) equals the un-batched loop and Pregel") {
-    // tailBatchMinBase = 0 forces the k-depth batched tail onto the
-    // fixture graph (normally gated to ≥1M-row grids); distances and
-    // predecessors must match the un-batched shape exactly.
-    val sources = g.nodes.orderBy("id").limit(3).select("id")
-      .as[Long].collect().toSet
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("vertex_id", "source_id", "dist", "pred")
-        .as[(Long, Long, Double, Long)].collect().toSet
-    val unbatched = key(TransitSssp.run(g.nodes, changeEdges, sources))
-    // r18: knobs forced per-instance, no global mutation
-    val batched = key(new TransitSssp(g.nodes, changeEdges,
-      tailBatchMinBase = 0L, tailLazyRounds = 0).run(sources))
-    assert(batched == unbatched && batched.nonEmpty)
-    val pregel = ShortestPaths.fromDF(g.weightedEdges, sources, localThreshold = 0)
-      .select("vertex_id", "source_id", "dist")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(batched.map(t => (t._1, t._2, t._3)) == pregel)
-  }
-
   test("batch-pruned tail probes (forced) equal the unpruned shape") {
     // tailPruneForce bypasses the granularity gate so the chunked-In
     // t_b predicates run on the fixture's cached copies — every tail
     // probe goes through the pruned scan; results must be identical.
-    // Run both with batching forced too, so pruned batch PULLS are
-    // exercised alongside pruned pipelined rounds.
     val sources = g.nodes.orderBy("id").limit(3).select("id")
       .as[Long].collect().toSet
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("vertex_id", "source_id", "dist", "pred")
         .as[(Long, Long, Double, Long)].collect().toSet
-    val plain = key(TransitSssp.run(g.nodes, changeEdges, sources))
+    val tsPlain = new TransitSssp(g.nodes, changeEdges)
+    val plain = key(tsPlain.run(sources))
     // r18: knobs forced per-instance, no global mutation
-    val pruned = key(new TransitSssp(g.nodes, changeEdges,
-      tailPruneForce = true, tailLazyRounds = 0).run(sources))
-    val prunedBatched = key(new TransitSssp(g.nodes, changeEdges,
-      tailPruneForce = true, tailBatchMinBase = 0L, tailLazyRounds = 0)
-      .run(sources))
+    val tsPruned = new TransitSssp(g.nodes, changeEdges,
+      tailPruneForce = true, tailLazyRounds = 0)
+    val pruned = key(tsPruned.run(sources))
     assert(pruned == plain && pruned.nonEmpty)
-    assert(prunedBatched == plain)
+    // the forced instance built the probe caches; the default instance's
+    // fixture tail converges inside the lazy gate and never does
+    assert(tsPruned.evidence.tailCacheBuilds.get() >= 1L,
+      "forced instance never built the pruned probe caches")
+    assert(tsPlain.evidence.tailCacheBuilds.get() == 0L,
+      "default instance built probe caches on a fixture-scale tail")
   }
 
   test("pred chain is a valid shortest-path tree pathDistributed can walk") {
@@ -148,18 +130,6 @@ class TransitSsspSpec extends SparkSpec {
     cappedRows.filter(_._3 <= cap).foreach { r =>
       assert(fullRows.contains(r), s"capped run invented/changed $r")
     }
-    // cap × batched-tail interaction: the cost-cap filter runs inside the
-    // batched inner rounds too — force the batch path and re-check
-    val cappedBatched = {
-      // r18: batch path forced per-instance, no global mutation
-      val tsB = new TransitSssp(g.nodes, changeEdges,
-        tailBatchMinBase = 0L, tailLazyRounds = 0)
-      val st = tsB.staged(sources, costCap = cap)
-      val rows = st.distances.as[(Long, Long, Double)].collect().toSet
-      st.release(); rows
-    }
-    assert(cappedBatched == cappedRows,
-      "batched capped run diverged from the un-batched capped run")
   }
 
   test("run-scoped capped CHANGE slice (forced) equals the shared-pin path") {
