@@ -1,8 +1,9 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 import graft.model.GtfsTables
 import graft.etl.GraphBuilder
 import graft.projection.TimeExpandedGraph
@@ -26,8 +27,9 @@ final case class JourneySummary(segments: DataFrame, changes: Long,
 /** One labeled itinerary segment. Both routing branches end by assembling
   * these from driver-resident node records (the local index, or the bounded
   * per-path collect), so the routing result is driver-side FIRST and a
-  * DataFrame second — `journey` reads the rows directly (no collect job on
-  * a LocalRelation), the public routing APIs wrap them via `segmentsDf`. */
+  * DataFrame second — `journey` reads the rows directly, and the public
+  * routing frames wrap them in a LocalRelation via `segmentsDf`, which
+  * collects without a Spark job. */
 private[api] final case class Seg(hop: Int, trip: String, departure: String,
     line: String, startingStopName: String, startingStopId: String,
     startLat: Double, startLon: Double, nextTrip: String, nextStop: String,
@@ -220,9 +222,10 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   }
 
   /** Local regime: candidate selection, SSSP, pair ranking, and segment
-    * labeling all run over driver-resident state — zero Spark jobs until
-    * the final (tiny) segment DataFrame. Ranking key = PairOrder.key, the
-    * same definition the distributed branch orders by. */
+    * labeling all run over driver-resident state, and the segment
+    * DataFrame is a LocalRelation — a warm request runs zero Spark jobs.
+    * Ranking key = PairOrder.key, the same definition the distributed
+    * branch orders by. */
   private def routeLocal(g: TimeExpandedGraph, ix: graft.projection.LocalProjection,
       speed: Double, t0: Long, maxDurationHours: Int,
       src: Endpoint, tgt: Endpoint): Seq[Seg] = {
@@ -273,7 +276,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     val (_, bestSrc, bestTgt) = ranked.minBy(_._1)
     val path = run.path(bestSrc, bestTgt)
     if (path.size < 2) return Nil
-    segmentRows(ix.get, path)
+    RoutingEngine.segmentRows(ix.get, path)
   }
 
   /** Distributed regime: full distance table stays distributed; the path
@@ -482,31 +485,17 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     val byId = graft.projection.LocalProjection.recsOf(
       g.nodes.filter(col("id").isin(path: _*)))
       .map(r => r.id -> r).toMap
-    segmentRows(byId.get, path)
+    RoutingEngine.segmentRows(byId.get, path)
   }
 
-  /** Path → labeled segment rows from any id→node resolver (local index
-    * or a bounded per-path collect); hop-ordered by construction. */
-  private def segmentRows(byId: Long => Option[graft.projection.NodeRec],
-      path: List[Long]): Seq[Seg] = {
-    val hms = graft.functions.TimeFunctions.formatHms _
-    path.zip(path.tail).zipWithIndex.flatMap { case ((a, b), i) =>
-      for (ra <- byId(a); rb <- byId(b)) yield
-        Seg(i + 1, ra.tripId, hms(ra.dep.toInt), ra.routeId,
-          ra.stopName, ra.stopId, ra.lat, ra.lon,
-          rb.tripId, rb.stopName, rb.stopId,
-          rb.lat, rb.lon, rb.routeId, hms(rb.arr.toInt))
-    }
-  }
-
-  /** Driver-side segment rows → the public routing DataFrame shape. */
+  /** Driver-side segment rows → the public routing DataFrame shape. The
+    * rows are hop-ordered by construction and a LocalRelation keeps row
+    * order on collect, so no sort runs; the constant schema spares the
+    * per-call reflective product encoder. Collecting the frame (or a
+    * filter/projection of it) launches no Spark job. */
   private def segmentsDf(rows: Seq[Seg]): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(rows)
-      .toDF("hop", "trip", "departure", "line", "starting_stop_name",
-        "starting_stop_id", "start_lat", "start_lon", "next_trip", "next_stop",
-        "next_stop_id", "next_lat", "next_lon", "next_line", "arrival")
-      .orderBy("hop")
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.map(Row.fromTuple).asJava, RoutingEngine.SegmentSchema)
   }
 
   /** Count of distinct stops served on a date (`main.py:186-191`). */
@@ -550,9 +539,11 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   }
 
   /** Number of line changes in a segment DataFrame — pandas post-processing
-    * analog (`main.py:285-293`). */
+    * analog (`main.py:285-293`). Collects the (few) change rows instead of
+    * `count()`: the filter folds into a routing frame's LocalRelation, where
+    * an aggregate would launch a job. */
   def changeCount(segments: DataFrame): Long =
-    segments.filter(col("trip") =!= col("next_trip")).count()
+    segments.filter(col("trip") =!= col("next_trip")).collect().length
 
   /** Full journey summary — the notebook's composed flow
     * (`routing.ipynb` cells 7-18): nearby-stop search at both endpoints,
@@ -601,10 +592,9 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
       .collect().map(_.getString(0)).toSeq
     val endNames = Await.result(endNamesF, 10.minutes)
     if (startNames.isEmpty || endNames.isEmpty) { drainWarm(); return None }
-    // routeRows, not the public DataFrame wrapper: the segment rows are
-    // driver-side already (hop-ordered by construction) — re-collecting
-    // them through a LocalRelation was one more sequential Spark job on
-    // the journey floor.
+    // routeRows, not the public DataFrame wrapper: the change count,
+    // endpoints and times read the driver-side segment rows (hop-ordered by
+    // construction) directly; the frame is built only for the caller.
     val rows = routeRows(day(date), speed, parseHms(time), maxDurationHours,
       Endpoint(startNames, Some((startLat, startLon))),
       Endpoint(endNames, Some((endLat, endLon))))
@@ -639,9 +629,13 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   }
 
   /** Formatted itinerary printer (F13, `main.py:216-237`): classifies each
-    * boundary row as same-stop change vs walk-transfer vs ride. */
+    * boundary row as same-stop change vs walk-transfer vs ride. Sorts by
+    * the numeric `hop` on the driver (nulls first, as `orderBy` would): a
+    * routing frame collects without a job, a Spark sort would launch one. */
   def formatItinerary(segments: DataFrame): String = {
-    val rows = segments.orderBy("hop").collect()
+    val h = segments.schema.fieldIndex("hop")
+    val rows = segments.collect().sortBy(r =>
+      if (r.isNullAt(h)) Long.MinValue else r.getAs[Number](h).longValue)
     if (rows.isEmpty) return "no itinerary found"
     val sb = new StringBuilder
     val first = rows.head
@@ -673,4 +667,36 @@ object RoutingEngine {
     * while a degenerate name list (every stop in a mega-feed) falls back
     * to the distributed agg + staged flow. */
   val TargetCollectMaxRows: Int = 1 << 20
+
+  /** Schema of every routing frame (`routing`, `routingBetweenTwoPoints`,
+    * `JourneySummary.segments`): [[Seg]]'s fields in order — `hop` and the
+    * coordinates non-null, the labels nullable. */
+  private[api] val SegmentSchema: StructType = {
+    def label(n: String) = StructField(n, StringType)
+    def coord(n: String) = StructField(n, DoubleType, nullable = false)
+    StructType(Seq(StructField("hop", IntegerType, nullable = false),
+      label("trip"), label("departure"), label("line"), label("starting_stop_name"),
+      label("starting_stop_id"), coord("start_lat"), coord("start_lon"),
+      label("next_trip"), label("next_stop"), label("next_stop_id"),
+      coord("next_lat"), coord("next_lon"), label("next_line"), label("arrival")))
+  }
+
+  /** Path → labeled segment rows from any id→node resolver (local index
+    * or a bounded per-path collect); hop `i + 1` for the i-th consecutive
+    * pair, so the rows are hop-ordered by construction. A node the resolver
+    * lacks is a broken projection contract: it fails here, naming the hop,
+    * rather than leaving a gap in the itinerary. */
+  private[api] def segmentRows(byId: Long => Option[graft.projection.NodeRec],
+      path: List[Long]): Seq[Seg] = {
+    val hms = graft.functions.TimeFunctions.formatHms _
+    def rec(hop: Int, id: Long) = byId(id).getOrElse(throw new IllegalStateException(
+      s"segment hop $hop: path node $id is missing from the node resolver"))
+    path.zip(path.tail).zipWithIndex.map { case ((a, b), i) =>
+      val (ra, rb) = (rec(i + 1, a), rec(i + 1, b))
+      Seg(i + 1, ra.tripId, hms(ra.dep.toInt), ra.routeId,
+        ra.stopName, ra.stopId, ra.lat, ra.lon,
+        rb.tripId, rb.stopName, rb.stopId,
+        rb.lat, rb.lon, rb.routeId, hms(rb.arr.toInt))
+    }
+  }
 }

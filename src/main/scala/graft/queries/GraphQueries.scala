@@ -170,15 +170,13 @@ object GraphQueries {
         val eng = new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
           cappedCsrMaxEdges = 0L)
         val d = eng.routing("2024-01-18", 1.0, "13:50:00", "Start", "End")
-        val (schema, rows) = (d.schema, d.collect())
         // SESSION-LOCAL evidence (r19, r18 verdict #2): only this
         // engine's calls advance its evidence counters, so a concurrent
         // routing in the same JVM cannot false-pass the regime proof the
         // way a global-counter diff could.
         require(eng.evidence.acyclicResolveServed.get() > 0L,
           "zero-cycle row did not take the acyclic re-resolution path")
-        s.createDataFrame(s.sparkContext.parallelize(
-          rows.toIndexedSeq, 1), schema).orderBy("hop")
+        d // routing is eager: the rows sit in d's LocalRelation, hop-ordered
       },
       // Golden: Start --TA--> Mid0 (arr 14:20), change to TB 14:25, ride
       // the BACKWARD edge to Mid1 (arr 14:05 — the dirty row), zero-dwell
