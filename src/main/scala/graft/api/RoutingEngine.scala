@@ -352,7 +352,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     // node-count floor): there the collect would be pure waste and the
     // one distributed agg it replaced is the cheaper plan (r14 ADVICE).
     val tgtLocal =
-      if (!g.sssp.cappedMayEngage) None
+      if (!g.transit.cappedEligible) None
       else {
         val rows = targets.limit(RoutingEngine.TargetCollectMaxRows + 1).collect()
         if (rows.length > RoutingEngine.TargetCollectMaxRows) None else Some(rows)
@@ -391,7 +391,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     // and such rows only occur on non-timepoint-blank feeds.
     for (tgtRows <- tgtLocal
            if tgtRows.forall(r => !r.isNullAt(r.fieldIndex("t_arr")));
-         run <- g.sssp.runForTargetsCapped(srcIds,
+         run <- g.transit.runForTargetsCapped(srcIds,
            tgtRows.iterator.map(_.getAs[Long]("t_id")).toSet, capAnchor.toDouble)) {
       // iterators end to end: the pair space is |sources| × up to 1M
       // collected targets — minByOption keeps it O(1) extra memory
@@ -416,7 +416,8 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
 
     val sc = spark.sparkContext
     sc.setJobDescription("route: sssp converge")
-    val staged = g.sssp.runStaged(srcIds, costCap, capAnchor.toDouble)
+    val staged = g.transit.staged(srcIds, costCap = costCap,
+      clockCap = capAnchor.toDouble)
     val dist = staged.distances.cache()
     var predOne: DataFrame = null
     // try/finally, not happy-path cleanup: a throw (or early return) out of
@@ -446,18 +447,13 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
           // with the level-layered acyclic selection and walk that
           // (TransitSssp.resolveStateAcyclic; parity on distances, pred
           // tree non-canonical by the same contract as the in-heap strict
-          // repair). Runners without a structural repair keep the pointed
-          // error.
-          case e: ShortestPaths.PredCycleException =>
+          // repair).
+          case _: ShortestPaths.PredCycleException =>
             sc.setJobDescription("route: acyclic re-resolve + path")
-            staged.resolveAcyclic(bestSrc) match {
-              case Some(repaired) =>
-                predOne.unpersist()
-                predOne = repaired.cache()
-                ShortestPaths.pathDistributed(predOne, bestSrc, bestTgt,
-                  pathDriverWalkMaxRows)
-              case None => throw e
-            }
+            predOne.unpersist()
+            predOne = staged.resolveAcyclic(bestSrc).cache()
+            ShortestPaths.pathDistributed(predOne, bestSrc, bestTgt,
+              pathDriverWalkMaxRows)
         }
       // path ids are collected; every remaining consumer is driver-side
       if (path.size < 2) return Nil

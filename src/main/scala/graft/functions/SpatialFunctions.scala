@@ -37,12 +37,6 @@ object SpatialFunctions {
     2.0 * EarthRadiusMeters * math.asin(math.sqrt(a))
   }
 
-  /** Geohash-style integer cell id at a given cell size (degrees), for
-    * bucketing spatial self-joins instead of a crossJoin (SURVEY §2.3 J5):
-    * equi-join on neighboring cells, then exact haversine filter. */
-  def cellId(lat: Column, lon: Column, cellDeg: Double): Column =
-    (floor(lat / cellDeg).cast("long") * 100000L) + floor(lon / cellDeg).cast("long")
-
   /** Radius predicate with a derived bounding-box pre-filter. The bbox
     * comparisons are plain `lat/lon BETWEEN` predicates Catalyst pushes
     * into the parquet scan (`PushedFilters` → row-group min/max pruning) —

@@ -21,9 +21,6 @@ object TextFunctions {
     filter(split(lower(text), "(?<=[a-z])(?=[^a-z])|(?<=[0-9])(?=[^0-9])|(?<=[^a-z0-9])"),
       t => length(trim(t)) > 0)
 
-  /** Token count under the whitespace tokenizer. */
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** Per-language stopword lists for the n-gram/stopword language-ID
     * heuristic. Tiny, deterministic, public-knowledge lists. */
   val stopwords: Map[String, Seq[String]] = Map(
@@ -75,20 +72,14 @@ object TextFunctions {
     aggregate(tokens(text), lit(0L), (acc, t) =>
       shiftleft(acc, 5).bitwiseOR(shiftrightunsigned(acc, 59)).bitwiseXOR(xxhash64(t)))
 
-  /** Hashed shingle set: sorted distinct xxhash64 of each n-gram shingle —
-    * the set-similarity-friendly representation (exact Jaccard via the
-    * merge-based JaccardSortedExpr; 8-byte elements instead of strings in
-    * every shuffle). */
-  def hashedShingles(text: Column, n: Int): Column =
-    sort_array(array_distinct(transform(shingles(text, n), s => xxhash64(s))))
-
-  /** Exact Jaccard over two hashedShingles columns. */
+  /** Exact Jaccard over two SORTED distinct array<long> columns
+    * ([[md5Prefix60]] output) — one merge pass (JaccardSortedExpr). */
   def jaccardSorted(a: Column, b: Column): Column =
     graft.functions.expressions.JaccardSortedExpr(a, b)
 
   /** Engine-portable hashed shingle set: sorted distinct md5-hex of each
     * n-gram shingle. md5 is bit-identical in Spark and DuckDB, so pipelines
-    * built on this (unlike the xxhash64 [[hashedShingles]]) carry real
+    * built on this (unlike xxhash64-based ones) carry real
     * DuckDB oracles end to end. Single native pass (tokens → shingle md5s
     * → sorted distinct) — see expressions.Md5ShinglesExpr. */
   def md5Shingles(text: Column, n: Int): Column =
@@ -133,13 +124,6 @@ object TextFunctions {
     * Catalyst expression (see expressions.MinHashSignatureExpr). */
   def minhashSignature(shingleCol: Column, k: Int): Column =
     graft.functions.expressions.MinHashSignatureExpr(shingleCol, k)
-
-  /** LSH band keys from a MinHash signature: `bands` hashes over consecutive
-    * rows of the signature. Docs sharing any band key are near-dup candidates. */
-  def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"), xxhash64(concat_ws(",",
-        slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)))).as("key")))
 
   /** 64-bit SimHash over whitespace tokens: per-bit vote of each token's
     * xxhash64; bit set iff the weighted vote is positive. Single-pass native

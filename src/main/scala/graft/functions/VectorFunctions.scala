@@ -34,10 +34,6 @@ object VectorFunctions {
     transform(d(a), x => x / n)
   }
 
-  /** Squared Euclidean distance. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(d(a), d(b), (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
-
   /** Deterministic pseudo-random hyperplanes for sign-LSH: `n` planes of
     * dimension `dim`, seeded; returned as literal nested arrays so the
     * bucketing is a pure expression broadcast with the plan. */

@@ -70,7 +70,7 @@ object SimHash64Expr {
 }
 
 /** MinHash signature over a shingle-set column — array<string> (raw
-  * shingles) or array<long> (hashedShingles): k minimums of seeded xxhash64,
+  * shingles) or array<long> (hashed shingles): k minimums of seeded xxhash64,
   * one pass over the array for all k. */
 case class MinHashSignatureExpr(child: Expression, k: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

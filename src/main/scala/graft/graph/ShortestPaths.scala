@@ -80,43 +80,12 @@ object ShortestPaths {
     result.vertices
   }
 
-  /** Single-source convenience wrapper. */
-  def singleSource(edges: RDD[Edge[Double]], source: VertexId): VertexRDD[State] =
-    multiSource(edges, Set(source))
-
   /** Distances as a DataFrame (vertex_id, source_id, dist). */
   def distancesDF(spark: SparkSession, vertices: VertexRDD[State]): DataFrame = {
     import spark.implicits._
     vertices.flatMap { case (vid, st) =>
       st.iterator.map { case (src, (d, pred)) => (vid, src, d, pred) }
     }.toDF("vertex_id", "source_id", "dist", "pred")
-  }
-
-  /** Reconstruct the best path source→target by walking predecessors.
-    * Collects only the (vertex, pred) chain entries for the chosen source —
-    * tiny relative to the graph (path-length rows), fine on the driver.
-    * Returns vertex ids source-first, or Nil if unreachable. */
-  def pathTo(vertices: VertexRDD[State], source: VertexId, target: VertexId): List[VertexId] = {
-    val chain: Map[VertexId, VertexId] = vertices
-      .flatMap { case (vid, st) => st.get(source).map { case (_, pred) => (vid, pred) } }
-      .collect().toMap
-    if (!chain.contains(target)) return Nil
-    // step-bounded: the distributed fixpoint's canonical tie-break can
-    // emit a CYCLIC pred assignment on zero-total-cycle (dirty-clock)
-    // feeds — fail with a pointed error instead of spinning (r15; the
-    // in-heap regimes repair via acyclicPreds instead)
-    @annotation.tailrec
-    def walk(v: VertexId, acc: List[VertexId], steps: Int): List[VertexId] =
-      if (v == source) v :: acc
-      else if (steps > chain.size) throw new PredCycleException(
-        "predecessor cycle in path walk - canonical ties have no tree on " +
-          "this feed (zero-total cycle); re-resolve acyclically or route " +
-          "through the in-heap regime")
-      else chain.get(v) match {
-        case Some(p) if p != -1L => walk(p, v :: acc, steps + 1)
-        case _ => v :: acc
-      }
-    walk(target, Nil, 0)
   }
 
   /** One-source chain-row count under which pathDistributed collects the
@@ -199,7 +168,10 @@ object ShortestPaths {
         // both walk the same converged predecessor function from target
         // to source; this one resolves it from a collected map.
         val chain = chain0.as[(Long, Long)].collect().toMap
-        // step-bounded against cyclic pred output (see pathTo's guard)
+        // step-bounded: the distributed fixpoint's canonical tie-break can
+        // emit a CYCLIC pred assignment on zero-total-cycle (dirty-clock)
+        // feeds — fail with a pointed error instead of spinning (r15; the
+        // routing engine then re-resolves acyclically)
         @annotation.tailrec
         def walk(v: Long, acc: List[Long], steps: Int): List[Long] =
           if (v == source) v :: acc
@@ -272,49 +244,15 @@ object ShortestPaths {
     * perf harness, the journey API) don't re-count and re-collect the edge
     * list per call.
     *
-    * `distributedRunner` replaces the generic Pregel branch with a
-    * structure-aware algorithm producing the same (vertex_id, source_id,
-    * dist, pred) contract — the time-expanded projection plugs in
-    * [[TransitSssp]], whose iteration count is transfer-bounded instead of
-    * hop-bounded (generic Pregel measured >10 min per routing call at 3×
+    * `distributedRunner`, when given, replaces the generic Pregel branch
+    * above the threshold with a runner producing the same (vertex_id,
+    * source_id, dist, pred) contract — the time-expanded projection passes
+    * [[TransitSssp.run]], whose iteration count is transfer-bounded instead
+    * of hop-bounded (generic Pregel measured >10 min per routing call at 3×
     * Modena; the trip-collapse runs the same query in seconds). The local
     * CSR branch and its threshold gate are unchanged. */
-  /** A distributed run staged for rank-then-path callers: `distances` is
-    * the (vertex_id, source_id, dist) table with NO predecessor-resolution
-    * work behind it, `resolve(source)` yields the full
-    * (vertex_id, source_id, dist, pred) contract for ONE source (what
-    * pathDistributed needs), and `release()` frees any retained state once
-    * every derived frame is consumed. */
-  final class DistRun(val distances: DataFrame,
-      resolveFn: Long => DataFrame, releaseFn: () => Unit = () => (),
-      /** Acyclic pred RE-resolution (r16): same distances as `resolve`,
-        * pred selection guaranteed cycle-free — the zero-total-cycle
-        * repair. None when the runner has no structural repair (generic
-        * fallback); callers then keep the pointed [[PredCycleException]]. */
-      resolveAcyclicFn: Option[Long => DataFrame] = None) {
-    def resolve(source: Long): DataFrame = resolveFn(source)
-    def resolveAcyclic(source: Long): Option[DataFrame] =
-      resolveAcyclicFn.map(f => f(source))
-    def release(): Unit = releaseFn()
-  }
-
   final class Sssp(edges: DataFrame, localThreshold: Long = LocalDijkstraMaxEdges,
-      distributedRunner: Option[Set[Long] => DataFrame] = None,
-      distributedStaged: Option[(Set[Long], Double, Double) => DistRun] = None,
-      /** Clock-capped driver-CSR provider (see [[Sssp.runForTargetsCapped]]):
-        * (sources, targets, clockCap) → a [[TargetRun]] over the
-        * horizon-bounded subgraph when it fits the driver budget, None
-        * otherwise. The transit projection plugs in
-        * [[TransitSssp.runForTargetsCapped]]. */
-      cappedTargets: Option[(Set[Long], Set[Long], Double) => Option[TargetRun]] = None,
-      /** Cheap structural pre-hint that [[runForTargetsCapped]] could ever
-        * engage on this handle (budget knobs on, feed over the node-count
-        * floor) — lets callers skip capped-only preparation work (the
-        * routing engine's bounded target collect) when the regime is
-        * known inactive (r14 ADVICE). False negatives would silently
-        * disable the capped regime; providers derive it from the same
-        * gates runForTargetsCapped checks first. */
-      cappedEligibleHint: () => Boolean = () => false) {
+      distributedRunner: Option[Set[Long] => DataFrame] = None) {
     private val spark = edges.sparkSession
     private val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
       col("weight").cast("double"))
@@ -345,32 +283,6 @@ object ShortestPaths {
 
     def isLocal: Boolean = localCsr.isDefined
 
-    /** Staged run for rank-then-path callers (see [[DistRun]]). With a
-      * structure-aware staged runner (the transit projection) the ranking
-      * phase skips predecessor resolution entirely; otherwise both frames
-      * derive from the ordinary full run.
-      *
-      * `costCap` / `clockCap` are OPTIMIZATION HINTS: the caller promises
-      * to read only distances ≤ costCap toward vertices whose event clock
-      * is ≤ clockCap, letting a structure-aware runner stop relaxing
-      * beyond them (TransitSssp.staged documents the exactness argument).
-      * The generic fallback and the local CSR ignore them. */
-    def runStaged(sources: Set[Long],
-        costCap: Double = Double.PositiveInfinity,
-        clockCap: Double = Double.PositiveInfinity): DistRun =
-      distributedStaged match {
-      case Some(f) if !isLocal => f(sources, costCap, clockCap)
-      case _ =>
-        // Cache the one full run: without it, ranking (distances) and path
-        // resolution would each re-execute the whole SSSP — a latent 2×
-        // regression for any non-staged distributed caller (the local
-        // branch is driver-cheap either way). Released via release().
-        val full = run(sources).cache()
-        new DistRun(full.select("vertex_id", "source_id", "dist"),
-          s => full.filter(col("source_id") === s),
-          () => { full.unpersist(); () })
-    }
-
     /** Distances restricted to `targets`. The local path computes the
       * per-source arrays once and emits ONLY target rows — materializing
       * the full (vertex × source) table through toDF was the routing hot
@@ -391,27 +303,6 @@ object ShortestPaths {
         new TargetRun(() => df, None, Map.empty)
     }
 
-    /** Clock-capped driver-CSR routing run (r14): when a structure-aware
-      * provider can materialize the HORIZON-BOUNDED subgraph as an in-heap
-      * CSR (the caller promises to read only distances/paths toward
-      * vertices whose event clock is ≤ clockCap — the same promise
-      * runStaged's clockCap hint makes), the whole multi-round distributed
-      * relaxation collapses to ns/edge driver work. None when the regime
-      * does not engage (no provider, uncapped call, over-budget subgraph,
-      * or the projection is local anyway) — callers keep the staged
-      * distributed flow, never a wrong plan. */
-    def runForTargetsCapped(sources: Set[Long], targets: Set[Long],
-        clockCap: Double): Option[TargetRun] =
-      if (clockCap.isPosInfinity || isLocal) None
-      else cappedTargets.flatMap(f => f(sources, targets, clockCap))
-
-    /** True when the clock-capped regime could engage for SOME call on
-      * this handle. Callers gate capped-only preparation on it — when
-      * false, the up-to-1M-row bounded target collect in the routing
-      * engine is pure waste and the one distributed agg it replaced is
-      * the cheaper plan (r14 ADVICE). */
-    def cappedMayEngage: Boolean =
-      !isLocal && cappedTargets.isDefined && cappedEligibleHint()
   }
 
   /** Early-terminated multi-source Dijkstra over an in-heap CSR, emitting
@@ -440,7 +331,7 @@ object ShortestPaths {
   }
 
   private def computeOnCsr(g: Csr, sources: Set[Long],
-      targets: Option[Set[Long]] = None): Map[Long, (Array[Double], Array[Int])] = {
+      targets: Option[Set[Long]]): Map[Long, (Array[Double], Array[Int])] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -647,8 +538,8 @@ object ShortestPaths {
     * later than the last candidate target — the routing hot path stops at
     * the horizon instead of flooding the rest of the service day. */
   private def dijkstraCsr(g: Csr, srcIdx: Int,
-      targetStop: Option[(Array[Boolean], Int)] = None,
-      canonicalTies: Boolean = true): (Array[Double], Array[Int]) = {
+      targetStop: Option[(Array[Boolean], Int)],
+      canonicalTies: Boolean): (Array[Double], Array[Int]) = {
     val n = g.n
     val dist = Array.fill(n)(Double.PositiveInfinity)
     val pred = Array.fill(n)(-1)
@@ -748,7 +639,7 @@ object ShortestPaths {
     * DAGs in the event clock, so this is a data-corruption guard, not a
     * live path). */
   private def spfaCsr(g: Csr, srcIdx: Int,
-      canonicalTies: Boolean = true): (Array[Double], Array[Int]) = {
+      canonicalTies: Boolean): (Array[Double], Array[Int]) = {
     val n = g.n
     val dist = Array.fill(n)(Double.PositiveInfinity)
     val pred = Array.fill(n)(-1)

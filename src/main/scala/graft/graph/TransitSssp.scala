@@ -702,16 +702,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     Some(csr)
   }
 
-  /** Clock-capped driver-CSR routing run (r14 — the hub-cadence lever).
-    * Engages when the capped-slice machinery is active for this cap (the
-    * node-count floor and both broadcast gates pass), the subgraph fits
-    * the CSR edge budget, and the sources × vertices state fits the
-    * driver cell budget; None otherwise — the caller keeps the staged
-    * distributed flow. The returned TargetRun's early-terminated
-    * multi-source Dijkstra, canonical tie-break, and path walk are the
-    * SAME in-heap machinery the local regime runs (ShortestPaths), so
-    * regime parity follows from the subgraph-exactness argument on
-    * [[buildCappedCsr]]. */
   /** Structural eligibility of the capped regimes for this instance — the
     * CSR budget is on and the feed clears the node-count floor: the same
     * leading gates [[runForTargetsCapped]] checks, exposed so callers can
@@ -722,6 +712,16 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     cappedCsrMaxEdges > 0L &&
       nodeCount >= cappedSliceMinNodes
 
+  /** Clock-capped driver-CSR routing run (r14 — the hub-cadence lever).
+    * Engages when the capped-slice machinery is active for this cap (the
+    * node-count floor and both broadcast gates pass), the subgraph fits
+    * the CSR edge budget, and the sources × vertices state fits the
+    * driver cell budget; None otherwise — the caller keeps the staged
+    * distributed flow. The returned TargetRun's early-terminated
+    * multi-source Dijkstra, canonical tie-break, and path walk are the
+    * SAME in-heap machinery the local regime runs (ShortestPaths), so
+    * regime parity follows from the subgraph-exactness argument on
+    * [[buildCappedCsr]]. */
   def runForTargetsCapped(sources: Set[Long], targets: Set[Long],
       clockCap: Double): Option[ShortestPaths.TargetRun] =
     if (clockCap.isPosInfinity || cappedCsrMaxEdges <= 0L ||
@@ -843,7 +843,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
   /** Label-correcting iteration to the fixpoint; returns the converged
     * grid (src, trip_id, stop_sequence, dist, fresh) with dist in REL
     * space (dist_abs = dist + A(trip_id, stop_sequence)). */
-  private def converge(sources: Set[Long], maxIterations: Int = 1000,
+  private def converge(sources: Set[Long], maxIterations: Int,
       costCap: Double = Double.PositiveInfinity,
       clockCap: Double = Double.PositiveInfinity): DataFrame = {
     import spark.implicits._
@@ -1054,7 +1054,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * the cross-regime twin digests. */
   private def sparseTail(base: DataFrame, itStart: Int,
       maxIterations: Int,
-      costCap: Double = Double.PositiveInfinity,
+      costCap: Double,
       runChange: DataFrame): DataFrame = {
     val rel = org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint _
     val posKey = Seq("src", "trip_id", "stop_sequence")

@@ -82,11 +82,10 @@ object IvfAnn {
     }
 
   /** Probe-cell assignment for a query *table*: one row per (query,
-    * probe-cell), equi-joinable against `assigned` on `cluster` — the scale
-    * path for a large query set (the per-vector `probeClusters` loop builds
-    * one plan per query and caps at a handful). The centroid table is k rows,
-    * broadcast; squared L2 is expanded as q·q − 2·q·c + c·c so the whole
-    * ranking stays in codegen'd expressions. */
+    * probe-cell), equi-joinable against `assigned` on `cluster` — one plan
+    * for the whole query set. The centroid table is k rows, broadcast;
+    * squared L2 is expanded as q·q − 2·q·c + c·c so the whole ranking
+    * stays in codegen'd expressions. */
   def probe(index: Index, queries: DataFrame, idCol: String, vecCol: String,
       nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
@@ -104,14 +103,4 @@ object IvfAnn {
       .filter(col("__rn") <= nprobe)
       .drop("__d2", "__rn", "__cent")
   }
-
-  /** Nearest `nprobe` cluster ids for one query vector (driver-side: the
-    * centroid table is k rows). */
-  def probeClusters(index: Index, query: Array[Double], nprobe: Int): Seq[Int] =
-    index.centroids.zipWithIndex
-      .map { case (c, i) =>
-        val d = c.zip(query).map { case (a, b) => (a - b) * (a - b) }.sum
-        (d, i)
-      }
-      .sortBy(_._1).take(nprobe).map(_._2).toSeq
 }

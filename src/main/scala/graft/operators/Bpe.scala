@@ -684,7 +684,7 @@ object Bpe {
             acc.replace(s" $a  $b ", s" $a$b ")
           }
           addPairDeltas(deltas, out, c)
-          words.set(wid, out, c)
+          words.set(wid, out)
           occ.recordRewrite(wid, out, c)
         }
         deltas.foreach { case (k, d) => map.add(k, d) }
@@ -1029,16 +1029,6 @@ object Bpe {
       b
     }
     private val ovW = scala.collection.mutable.HashMap.empty[Long, String]
-    // word counts are IMMUTABLE (corpus frequencies) — kept alongside the
-    // overlay strings so the occurrence-index probe can serve overlay
-    // rows without a base lookup (r17)
-    private val ovC = scala.collection.mutable.HashMap.empty[Long, Long]
-    def overlaySize: Int = ovW.size
-    /** Overlay rows as (wid, current symbols, count) — driver-side
-      * reconciliation input for the occurrence-index probe. */
-    def overlayRows: Iterator[(Long, String, Long)] =
-      ovW.iterator.map { case (w, s) => (w, s, ovC(w)) }
-    def overlayContains(wid: Long): Boolean = ovW.contains(wid)
     /** The effective word table: the frozen base patched by the overlay. */
     def patched: DataFrame =
       if (ovW.isEmpty) base
@@ -1046,9 +1036,7 @@ object Bpe {
           .toSeq.toDF("wid", "ov_s")), Seq("wid"), "left")
         .select(col("wid"), coalesce(col("ov_s"), col("s")).as("s"),
           col("count"))
-    def set(wid: Long, s: String, count: Long): Unit = {
-      ovW.update(wid, s); ovC.update(wid, count)
-    }
+    def set(wid: Long, s: String): Unit = ovW.update(wid, s)
     /** Refreezes when the overlay crosses its bound. An overlay refreeze
       * does NOT invalidate a live occurrence index: the index masks
       * rewritten words through its own ovI overlay (every set() lands
@@ -1061,7 +1049,7 @@ object Bpe {
       if (ovW.size > maxWords) { refreeze(); true } else false
     def refreeze(): Unit = if (ovW.nonEmpty) {
       val nb = patched.transform(ckpt)
-      rel(base); base = nb; ovW.clear(); ovC.clear()
+      rel(base); base = nb; ovW.clear()
     }
     /** Freeze-boundary read view for index builds: folds the overlay and
       * returns the (wid, s, count) base. Ownership stays here — callers
@@ -1070,7 +1058,7 @@ object Bpe {
     /** Dense-round replacement; `next` must carry (wid, s, count) and
       * already fold the overlay (derive it from [[patched]]). */
     def replaceBase(next: DataFrame): Unit = {
-      rel(base); base = next; ovW.clear(); ovC.clear()
+      rel(base); base = next; ovW.clear()
     }
     /** Plain (s, count) CHECKPOINT for a successor regime, releasing this
       * overlay's state — unpersistCheckpoint only releases bare
@@ -1621,7 +1609,7 @@ object Bpe {
               acc.replace(s" $a  $b ", s" $a$b ")
             }
             addPairDeltas(deltas, out, c)
-            words.set(wid, out, c)
+            words.set(wid, out)
             occ.recordRewrite(wid, out, c)
           }
           applyDeltas(deltas.iterator.map { case ((a, b), d) => (a, b, d) }

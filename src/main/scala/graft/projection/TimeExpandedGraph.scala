@@ -108,40 +108,27 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     else Some(rows.map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))))
   }
 
-  /** Per-projection SSSP handle: the local-vs-distributed decision and
-    * (when local) the adjacency index happen once, shared by every routing
-    * call against this projection — the reference holds one in-memory CSR
-    * per projection the same way. The distributed branch is the
-    * transit-structured [[graft.graph.TransitSssp]] (trip-collapse rounds,
-    * transfer-bounded) rather than generic hop-bounded Pregel — the
-    * time-expanded day is deep in PRECEDES hops, and this projection knows
-    * its own trip structure. */
-  lazy val sssp: graft.graph.ShortestPaths.Sssp = {
-    // one transit runner per projection: its trip-prefix and CHANGE frames
-    // are call-invariant and pinned on first use, shared across calls —
-    // the distributed twin of the local regime's held CSR
-    lazy val transit = new graft.graph.TransitSssp(nodes, changeEnriched,
+  /** The projection's transit-structured distributed runner (trip-collapse
+    * rounds, transfer-bounded) — the time-expanded day is deep in PRECEDES
+    * hops, and this projection knows its own trip structure. One runner per
+    * projection: its trip-prefix and CHANGE frames are call-invariant and
+    * pinned on first use, shared across calls — the distributed twin of the
+    * local regime's held CSR. The routing engine calls it directly in the
+    * distributed regime (capped CSR, staged rank-then-path). */
+  lazy val transit: graft.graph.TransitSssp =
+    new graft.graph.TransitSssp(nodes, changeEnriched,
       cappedCsrMaxEdges = cappedCsrMaxEdges,
       cappedSliceMinNodes = cappedSliceMinNodes,
       evidence = regimeEvidence)
+
+  /** Per-projection SSSP handle: the local-vs-distributed decision and
+    * (when local) the adjacency index happen once, shared by every routing
+    * call against this projection — the reference holds one in-memory CSR
+    * per projection the same way. Its distributed branch is [[transit]]
+    * rather than generic hop-bounded Pregel. */
+  lazy val sssp: graft.graph.ShortestPaths.Sssp =
     new graft.graph.ShortestPaths.Sssp(weightedEdges, ssspLocalThreshold,
-      distributedRunner = Some(srcs => transit.run(srcs)),
-      distributedStaged = Some { (srcs, costCap, clockCap) =>
-        val st = transit.staged(srcs, costCap = costCap, clockCap = clockCap)
-        new graft.graph.ShortestPaths.DistRun(
-          st.distances, s => st.resolve(s), () => st.release(),
-          // zero-total-cycle repair (r16): level-layered acyclic pred
-          // re-selection, engaged by the router only after a detected
-          // pred cycle — over-budget dirty feeds route instead of erroring
-          resolveAcyclicFn = Some(s => st.resolveAcyclic(s)))
-      },
-      // clock-capped driver-CSR regime (r14): a horizon-bounded subgraph
-      // that fits the driver budget routes in-heap — the hub-cadence lever
-      cappedTargets = Some { (srcs, tgts, cap) =>
-        transit.runForTargetsCapped(srcs, tgts, cap)
-      },
-      cappedEligibleHint = () => transit.cappedEligible)
-  }
+      distributedRunner = Some(transit.run(_)))
 
   /** Driver-resident node attributes, local-SSSP regime only (see
     * [[LocalProjection]]) — None in the distributed regime, where callers

@@ -316,9 +316,8 @@ object Pipeline {
     // Jaccard verify on candidates. Hashing is the engine-portable md5
     // family (bit-identical in DuckDB), so the WHOLE pipeline — shingles,
     // seeded minhash, band keys, candidate join, exact Jaccard — is
-    // oracle-checked, not rows-only. The xxhash64 twins (hashedShingles /
-    // minhashSignature) remain the cheaper production kernels, covered by
-    // PropertySpec.
+    // oracle-checked, not rows-only. The xxhash64 twin (minhashSignature)
+    // remains the cheaper production kernel, covered by PropertySpec.
     Q("dedup_minhash_lsh", "dedup",
       (s, dir) => {
         // tSpread (r21 batch 3): the docs scan is a single narrow file at

@@ -89,6 +89,25 @@ class GtfsEngineSpec extends SparkSpec {
     val local = ShortestPaths.fromDF(g.weightedEdges, Set(aT1))
     assert(local.orderBy("vertex_id").collect().toSeq ==
       dist.orderBy("vertex_id").collect().toSeq)
+    // the target-restricted handle above the threshold (the branch a
+    // walking graph past LocalDijkstraMaxEdges reads): distances carry
+    // only the reached requested target, and the driver-side lookups
+    // answer None/Nil by contract
+    val absent = g.nodes.agg(max("id")).as[Long].head() + 1L
+    val distRun = new ShortestPaths.Sssp(g.weightedEdges, localThreshold = 0)
+      .runForTargets(Set(aT1), Set(eT3, absent))
+    assert(!distRun.isLocal)
+    assert(distRun.distances.select("vertex_id", "source_id", "dist")
+      .as[(Long, Long, Double)].collect().toSeq == Seq((eT3, aT1, 2236.0)))
+    assert(distRun.distance(aT1, eT3).isEmpty)
+    assert(distRun.path(aT1, eT3) == Nil)
+    // … while the default (local) handle serves both from driver state
+    val localRun = new ShortestPaths.Sssp(g.weightedEdges)
+      .runForTargets(Set(aT1), Set(eT3, absent))
+    assert(localRun.isLocal)
+    assert(localRun.distance(aT1, eT3) == Some(2236.0))
+    val path = localRun.path(aT1, eT3)
+    assert(path.head == aT1 && path.last == eT3)
   }
 
   test("golden routing Alpha→Epsilon 14:00: the 5-segment transfer itinerary") {
