@@ -198,22 +198,36 @@ class FootwayEngine(val footNodes: DataFrame, val footEdges: DataFrame,
           .headOption.map(r => (r.getString(0), r.getDouble(1)))
     }
 
-  /** Walking distance in meters from a footnode to a stop across the
-    * pedestrian network (`prova.py:200-226` apoc.algo.dijkstra on `length`);
-    * Double.PositiveInfinity when unreachable (the reference's OPTIONAL
-    * MATCH + `end IS NOT NULL` guard, G5). */
   /** One SSSP handle for the walking graph — repeated distance lookups
     * reuse the resolved adjacency. */
   private lazy val walkingSssp = new ShortestPaths.Sssp(walkingGraphEdges)
 
-  private def networkDistance(srcId: Long, dstId: Long): Double = {
+  /** Network distances for every (source, target) pair the walking graph
+    * connects, out of ONE target-restricted multi-source run. Local
+    * regime: read straight from the run's arrays (no job); distributed:
+    * the target-restricted frame is tiny — collect it. */
+  private def networkDistances(srcIds: Set[Long],
+      targets: Set[Long]): Map[(Long, Long), Double] = {
     import spark.implicits._
-    val dist = walkingSssp.run(Set(srcId))
-      .filter(col("vertex_id") === dstId)
-      .select("dist").as[Double].collect()
-    if (dist.isEmpty) Double.PositiveInfinity else dist.head
+    val run = walkingSssp.runForTargets(srcIds, targets)
+    if (run.isLocal)
+      (for (s <- srcIds.toSeq; v <- targets.toSeq; d <- run.distance(s, v))
+        yield (s, v) -> d).toMap
+    else run.distances
+      .select("source_id", "vertex_id", "dist").as[(Long, Long, Double)].collect()
+      .map { case (s, v, d) => (s, v) -> d }.toMap
   }
 
+  // a node is 0 m from itself even when no walking edge touches it
+  private def networkDistance(srcId: Long, dstId: Long): Double =
+    if (srcId == dstId) 0.0
+    else networkDistances(Set(srcId), Set(dstId))
+      .getOrElse((srcId, dstId), Double.PositiveInfinity)
+
+  /** Walking distance in meters from a footnode to a stop across the
+    * pedestrian network (`prova.py:200-226` apoc.algo.dijkstra on `length`);
+    * Double.PositiveInfinity when unreachable (the reference's OPTIONAL
+    * MATCH + `end IS NOT NULL` guard, G5). */
   def walkingDistance(footNodeId: String, stopId: String): Double =
     networkDistance(footVidLocal(footNodeId), stopVidLocal(stopId))
 
@@ -233,23 +247,12 @@ class FootwayEngine(val footNodes: DataFrame, val footEdges: DataFrame,
     * two walking legs were two separate Dijkstra runs. Returns km per input
     * leg, Infinity when unreachable. */
   def distancesFromStops(legs: Seq[(String, Double, Double)]): Seq[Double] = {
-    import spark.implicits._
     val resolved = legs.map { case (stopId, lat, lon) =>
       (nearestFootNode(lat, lon), stopVidLocal(stopId))
     }
     val srcIds = resolved.flatMap(_._1.map { case (fnId, _) => footVidLocal(fnId) }).toSet
     if (srcIds.isEmpty) return legs.map(_ => Double.PositiveInfinity)
-    val targetVids = resolved.map(_._2).distinct
-    // local regime: distances read straight from the run's arrays (no job);
-    // distributed: the target-restricted frame is tiny — collect it
-    val run = walkingSssp.runForTargets(srcIds, targetVids.toSet)
-    val distMap: Map[(Long, Long), Double] =
-      if (run.isLocal)
-        (for (s <- srcIds.toSeq; v <- targetVids; d <- run.distance(s, v))
-          yield (s, v) -> d).toMap
-      else run.distances
-        .select("source_id", "vertex_id", "dist").as[(Long, Long, Double)].collect()
-        .map { case (s, v, d) => (s, v) -> d }.toMap
+    val distMap = networkDistances(srcIds, resolved.map(_._2).toSet)
     resolved.map {
       case (None, _) => Double.PositiveInfinity
       case (Some((fnId, toFn)), stopVidId) =>

@@ -72,10 +72,10 @@ object PerfHarness {
     // journey() already makes; one tiny job, stats-not-guesses.
     engine.walkTo.count()
     val g = engine.projected(java.sql.Date.valueOf(date), speed)
-    g.localIndex match {
-      case Some(ix) => ix.byName; ix.stopDim // warm the driver-side indexes
-      case None => g.stopDim.count()
-    }
+    g.localIndex.foreach(_.byName) // warm the driver-side candidate index
+    // the stop dimension findNearStops reads: the driver twin, or the
+    // cached distributed one above its row bound
+    if (g.localStopDim.isEmpty) g.stopDim.count()
     val buildSec = (System.nanoTime() - tb) / 1e9
     try pairs.map { p =>
       sc.setJobDescription(s"perf-harness: pair ${p.name}")

@@ -100,37 +100,29 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   private def day(date: String): java.sql.Date = java.sql.Date.valueOf(date)
 
   /** Stops with service on `date` within `radius` m of a point → distinct
-    * names (`main.py:62-71`). Local regime: the few-thousand-row stop
-    * dimension is driver-resident — the exact haversine decides membership
-    * on both paths (the distributed bbox is only a superset pre-filter), so
-    * the result set is identical. */
+    * names (`main.py:62-71`). The few-thousand-row stop dimension is
+    * driver-resident (`localStopDim`, one bounded collect per projection
+    * that does not need the edge build); above its row bound the
+    * distributed stop dimension answers. The exact haversine decides
+    * membership on both paths (the distributed bbox is only a superset
+    * pre-filter), so the result set is identical. */
   def findNearStops(date: String, lat: Double, lon: Double, radius: Double,
       speed: Double = 1.0): DataFrame = {
     val g = projected(day(date), speed)
-    def scan(arr: Iterable[(String, Double, Double)]): DataFrame = {
-      import spark.implicits._
-      arr.iterator.filter { case (_, la, lo) =>
-        graft.functions.SpatialFunctions.haversineMetersScalar(la, lo, lat, lon) < radius
-      }.map(_._1).filter(_ != null) // distributed distinct() tolerated null names; so must we
-        .toSet.toSeq.sorted.toDF("stop_name")
-    }
-    // Peek, don't force: the local-index gate needs the edge count, and a
-    // stop scan must not pay the whole CHANGE build on a fresh projection.
-    // After any routing call has resolved the regime this is an array scan;
-    // before it, the BOUNDED driver stop dimension (one shared small job
-    // per projection) answers unless the feed exceeds its row bound.
-    g.localIndexIfBuilt match {
-      case Some(ix) => scan(ix.stopDim)
-      case None => g.localStopDim match {
-        case Some(arr) => scan(arr)
-        case None =>
-          g.stopDim
-            // bbox + exact haversine: the box predicates prune a columnar
-            // stop store before any trig runs (identical result set)
-            .filter(graft.functions.SpatialFunctions.withinRadius(
-              col("lat"), col("lon"), lat, lon, radius))
-            .select("stop_name").distinct()
-      }
+    g.localStopDim match {
+      case Some(arr) =>
+        import spark.implicits._
+        arr.iterator.filter { case (_, la, lo) =>
+          graft.functions.SpatialFunctions.haversineMetersScalar(la, lo, lat, lon) < radius
+        }.map(_._1).filter(_ != null) // distributed distinct() tolerated null names; so must we
+          .toSet.toSeq.sorted.toDF("stop_name")
+      case None =>
+        g.stopDim
+          // bbox + exact haversine: the box predicates prune a columnar
+          // stop store before any trig runs (identical result set)
+          .filter(graft.functions.SpatialFunctions.withinRadius(
+            col("lat"), col("lon"), lat, lon, radius))
+          .select("stop_name").distinct()
     }
   }
 
@@ -224,8 +216,8 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   /** Local regime: candidate selection, SSSP, pair ranking, and segment
     * labeling all run over driver-resident state, and the segment
     * DataFrame is a LocalRelation — a warm request runs zero Spark jobs.
-    * Ranking key = PairOrder.key, the same definition the distributed
-    * branch orders by. */
+    * Ranking = [[bestPath]], whose key is the same PairOrder definition the
+    * distributed branch orders by. */
   private def routeLocal(g: TimeExpandedGraph, ix: graft.projection.LocalProjection,
       speed: Double, t0: Long, maxDurationHours: Int,
       src: Endpoint, tgt: Endpoint): Seq[Seg] = {
@@ -265,18 +257,29 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     // ONE multi-source SSSP replaces per-pair Dijkstras (SURVEY §7.3); the
     // per-projection handle reuses the resolved CSR across calls.
     val run = g.sssp.runForTargets(srcRows.map(_._1.id).toSet, tgtRows.map(_._1.id).toSet)
+    def cand(rw: (NodeRec, Double)) = (rw._1.id, rw._1.dep, rw._1.arr, rw._2)
+    val path = bestPath(run, srcRows.map(cand), tgtRows.map(cand))
+    if (path.size < 2) Nil else RoutingEngine.segmentRows(ix.get, path)
+  }
+
+  /** The in-heap pair ranking both driver-side regimes share (the local
+    * projection and the capped CSR): over `(id, dep, arr, walk)`
+    * candidates, the [[PairOrder.key]] minimum among the pairs whose
+    * target departs after its source and which `run` connects; that
+    * pair's path, or Nil. Iterators end to end: the capped branch passes
+    * views over up to 1M collected targets, so the |sources| × |targets|
+    * pair space is never materialized. */
+  private def bestPath(run: ShortestPaths.TargetRun,
+      srcs: Iterable[(Long, Long, Long, Double)],
+      tgts: Iterable[(Long, Long, Long, Double)]): List[Long] = {
     val ranked = for {
-      (s, sw) <- srcRows
-      (t, tw) <- tgtRows
+      (s, sDep, _, sw) <- srcs.iterator
+      (t, tDep, tArr, tw) <- tgts.iterator
       // target must depart after its source (`main.py:93,141`)
-      if t.dep > s.dep
-      cost <- run.distance(s.id, t.id)
-    } yield (PairOrder.key(t.arr, tw, cost, sw, s.id, t.id), s.id, t.id)
-    if (ranked.isEmpty) return Nil
-    val (_, bestSrc, bestTgt) = ranked.minBy(_._1)
-    val path = run.path(bestSrc, bestTgt)
-    if (path.size < 2) return Nil
-    RoutingEngine.segmentRows(ix.get, path)
+      if tDep > sDep
+      cost <- run.distance(s, t)
+    } yield (PairOrder.key(tArr, tw, cost, sw, s, t), s, t)
+    ranked.minByOption(_._1).fold(List.empty[Long]) { case (_, s, t) => run.path(s, t) }
   }
 
   /** Distributed regime: full distance table stays distributed; the path
@@ -384,7 +387,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     // shape routeLocal runs, over the clock-capped subgraph instead of the
     // whole projection. On cadence-bounded feeds (hubs) this replaces
     // hundreds of per-CHANGE-depth Spark rounds with ns/edge relaxation.
-    // Ranking key = PairOrder.key, the same definition every branch uses.
+    // Ranking = bestPath, routeLocal's own (PairOrder.key inside).
     // Null-arr targets keep the staged flow: the distributed ranking
     // orders their null (t_arr + t_walk) key nulls-first, a behavior the
     // driver-side key can't express without duplicating the formula —
@@ -393,25 +396,12 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
            if tgtRows.forall(r => !r.isNullAt(r.fieldIndex("t_arr")));
          run <- g.transit.runForTargetsCapped(srcIds,
            tgtRows.iterator.map(_.getAs[Long]("t_id")).toSet, capAnchor.toDouble)) {
-      // iterators end to end: the pair space is |sources| × up to 1M
-      // collected targets — minByOption keeps it O(1) extra memory
-      val ranked = for {
-        s <- srcLocal.iterator
-        t <- tgtRows.iterator
-        if t.getAs[Number]("t_dep").longValue() >
-          s.getAs[Number]("s_dep").longValue() // target departs after source
-        cost <- run.distance(s.getLong(0), t.getAs[Long]("t_id"))
-      } yield (PairOrder.key(t.getAs[Number]("t_arr").longValue(),
-          t.getAs[Double]("t_walk"), cost, s.getAs[Double]("s_walk"),
-          s.getLong(0), t.getAs[Long]("t_id")),
-        s.getLong(0), t.getAs[Long]("t_id"))
-      ranked.minByOption(_._1) match {
-        case None => return Nil
-        case Some((_, bestSrc, bestTgt)) =>
-          val path = run.path(bestSrc, bestTgt)
-          if (path.size < 2) return Nil
-          return segments(g, path)
-      }
+      val path = bestPath(run,
+        srcLocal.view.map(s => (s.getLong(0), s.getAs[Number]("s_dep").longValue(),
+          0L, s.getAs[Double]("s_walk"))),
+        tgtRows.view.map(t => (t.getAs[Long]("t_id"), t.getAs[Number]("t_dep").longValue(),
+          t.getAs[Number]("t_arr").longValue(), t.getAs[Double]("t_walk"))))
+      return if (path.size < 2) Nil else segments(g, path)
     }
 
     val sc = spark.sparkContext
@@ -550,43 +540,37 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
       endLat: Double, endLon: Double, speed: Double, time: String,
       radius: Double = 300.0, footway: Option[FootwayEngine] = None,
       maxDurationHours: Int = 4): Option[JourneySummary] = {
-    // Three independent one-time stacks overlap instead of running back to
-    // back: (1) the footway warm-up (NEAR edges, walking CSR, node index),
-    // (2) the transit projection's edge/CSR/node-index build — journey KNOWS
-    // routing follows, so it forces g.localIndex concurrently while (3) the
-    // two near-stop scans answer from the non-blocking distributed stop
-    // dimension (localIndexIfBuilt reads "not built" until the build
-    // finishes). Engine lazy state is synchronized; Spark schedules
-    // concurrent jobs fine.
+    // Two one-time warm-ups run beside the projection's own work: WALK_TO
+    // (the engine's, day-independent) and the footway (NEAR edges, walking
+    // CSR, node index). Nothing else overlaps: every lazy structure of the
+    // projection — stop dimension, edges, CSR, node index — initializes
+    // under the projection's one monitor, so an index-build future and the
+    // near-stop scans would only queue behind each other. The overlap that
+    // pays (TimeJourney's warm phase, COVERAGE.md): edges+CSR+index ≈1.5 s
+    // beside the footway warm-up ≈1.3 s. Spark schedules concurrent jobs.
     import scala.concurrent.{Await, Future, TimeoutException}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    val g = projected(day(date), speed)
-    // WALK_TO is day-independent and feeds the CHANGE build's first job —
-    // materializing its cache in its own concurrent job takes the spatial
-    // join off the edge chain's critical path (a racing double-compute of
-    // the tiny dimension is harmless; the cache keeps one).
+    // WALK_TO feeds the CHANGE build's first job — materializing its cache
+    // in its own concurrent job takes the spatial join off the edge
+    // chain's critical path (a racing double-compute of the tiny dimension
+    // is harmless; the cache keeps one).
     val walkWarm = Future { walkTo.count() }
-    val idxWarm = Future { g.localIndex.foreach { ix => ix.byName; ix.stopDim } }
     val fwWarm = footway.map(fw => Future { fw.nearestFootNode(startLat, startLon) })
     // Every exit path drains the warm-ups (bounded — a hung build must fail
     // loudly, not hang the call forever or bleed jobs into the caller's next
     // query); Await.ready, not result: a warm-up failure surfaces on the
     // phase that actually needs the state.
     def drainWarm(): Unit =
-      (walkWarm :: idxWarm :: fwWarm.toList).foreach { f =>
+      (walkWarm :: fwWarm.toList).foreach { f =>
         try Await.ready(f, 10.minutes)
         catch { case _: TimeoutException => throw new TimeoutException(
-          "journey(): projection/footway warm-up did not finish within 10 minutes") }
+          "journey(): WALK_TO/footway warm-up did not finish within 10 minutes") }
       }
-    // the two endpoint scans are independent — overlap them too
-    val endNamesF = Future {
-      findNearStops(date, endLat, endLon, radius, speed)
-        .collect().map(_.getString(0)).toSeq
-    }
-    val startNames = findNearStops(date, startLat, startLon, radius, speed)
-      .collect().map(_.getString(0)).toSeq
-    val endNames = Await.result(endNamesF, 10.minutes)
+    def nearNames(lat: Double, lon: Double): Seq[String] =
+      findNearStops(date, lat, lon, radius, speed).collect().map(_.getString(0)).toSeq
+    val startNames = nearNames(startLat, startLon)
+    val endNames = nearNames(endLat, endLon)
     if (startNames.isEmpty || endNames.isEmpty) { drainWarm(); return None }
     // routeRows, not the public DataFrame wrapper: the change count,
     // endpoints and times read the driver-side segment rows (hop-ordered by

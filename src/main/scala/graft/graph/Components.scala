@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.graphx._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Reachability / connected components — the reference's variable-length

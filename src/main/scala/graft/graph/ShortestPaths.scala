@@ -54,10 +54,11 @@ object ShortestPaths {
     * peak state at O(batch) while still decorrelating within a batch. */
   def multiSource(edges: RDD[Edge[Double]], sources: Set[VertexId],
       maxIterations: Int = Int.MaxValue): VertexRDD[State] = {
-    val g: Graph[State, Double] = Graph.fromEdges(edges, Map.empty: State)
-    val init = g.mapVertices { (vid, _) =>
-      if (sources.contains(vid)) Map(vid -> (0.0, -1L)) else Map.empty[VertexId, (Double, VertexId)]
-    }
+    // Seeds are vertices in their own right: a seed no edge touches still
+    // reports itself at distance 0, as the local CSR does.
+    val seeds = edges.sparkContext.parallelize(
+      sources.toSeq.map(s => (s, Map(s -> (0.0, -1L)): State)))
+    val init: Graph[State, Double] = Graph(seeds, edges, Map.empty: State)
     val result = Pregel(init, Map.empty: State, maxIterations, EdgeDirection.Out)(
       vprog = (_, state, msg) => mergeStates(state, msg),
       sendMsg = triplet => {
@@ -354,8 +355,8 @@ object ShortestPaths {
       src -> Future {
         val si = g.indexOf(src)
         if (si < 0) None
-        else if (g.hasNegative) Some(acyclicPreds(g, si, spfaCsr(g, si, _)))
-        else Some(acyclicPreds(g, si, dijkstraCsr(g, si, stop, _)))
+        else if (g.hasNegative) Some(acyclicPreds(spfaCsr(g, si, _)))
+        else Some(acyclicPreds(dijkstraCsr(g, si, stop, _)))
       }
     }
     futures.flatMap { case (s, f) => Await.result(f, Duration.Inf).map(s -> _) }.toMap
@@ -377,7 +378,7 @@ object ShortestPaths {
     * tree is deterministic (fixed relaxation order per regime) but not
     * canonical across regimes; acceptable because it engages only on
     * feeds where the canonical rule HAS no tree. */
-  private def acyclicPreds(g: Csr, srcIdx: Int,
+  private def acyclicPreds(
       run: Boolean => (Array[Double], Array[Int])): (Array[Double], Array[Int]) = {
     val first = run(true)
     if (!predHasCycle(first._2)) first else run(false)
@@ -700,24 +701,18 @@ object ShortestPaths {
     new Sssp(edges, localThreshold).run(sources)
 
   /** Driver-local multi-source Dijkstra over the CSR — same output contract
-    * as the Pregel path. Sources run concurrently (independent searches,
-    * read-only graph). */
+    * as the Pregel path: [[computeOnCsr]]'s per-source searches, rows in
+    * sorted source order; a source absent from the edge list reports
+    * itself at distance 0. */
   private def localDijkstraDF(spark: SparkSession, g: Csr,
       sources: Set[Long]): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futures = sources.toSeq.sorted.map { src =>
-      Future {
-        val si = g.indexOf(src)
-        if (si < 0) Array((src, src, 0.0, -1L)) // source not in the edge list
-        else {
-          val (dist, pred) =
-            if (g.hasNegative) acyclicPreds(g, si, spfaCsr(g, si, _))
-            else acyclicPreds(g, si, dijkstraCsr(g, si, None, _))
-          val b = Array.newBuilder[(Long, Long, Double, Long)]
-          b.sizeHint(g.n / 2)
+    val state = computeOnCsr(g, sources, None)
+    val b = Array.newBuilder[(Long, Long, Double, Long)]
+    sources.toSeq.sorted.foreach { src =>
+      state.get(src) match {
+        case None => b += ((src, src, 0.0, -1L))
+        case Some((dist, pred)) =>
           var v = 0
           while (v < g.n) {
             if (!dist(v).isInfinity) {
@@ -726,11 +721,8 @@ object ShortestPaths {
             }
             v += 1
           }
-          b.result()
-        }
       }
     }
-    val out = futures.flatMap(f => Await.result(f, Duration.Inf))
-    out.toDF("vertex_id", "source_id", "dist", "pred")
+    b.result().toSeq.toDF("vertex_id", "source_id", "dist", "pred")
   }
 }

@@ -518,7 +518,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
       * shared pin or the edge budget is exceeded. Plain driver arrays —
       * no release path; dropped with the bucket map. */
     lazy val csr: Option[ShortestPaths.Csr] =
-      slices.pos.flatMap(p => buildCappedCsr(bucket, slices.slice,
+      slices.pos.flatMap(p => buildCappedCsr(slices.slice,
         p, slices.nPos))
   }
 
@@ -666,7 +666,7 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * vertex. This is the same argument the clock-capped GRID rests on
     * (see [[staged]]); the padded bucket is a superset, correct a
     * fortiori. */
-  private def buildCappedCsr(bucket: Long, slice: DataFrame,
+  private def buildCappedCsr(slice: DataFrame,
       posPin: DataFrame, nPos: Long): Option[ShortestPaths.Csr] = {
     // budget pre-gate on counts the build already knows (positions) or
     // reads off the pinned slice (one cheap count): PRECEDES ≤ nPos.

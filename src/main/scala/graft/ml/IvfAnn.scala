@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import graft.functions.VectorFunctions.{cosine, dot, unitVector}
-import graft.functions.expressions.DotProductExpr
+import graft.functions.VectorFunctions.dot
 
 /** IVF (inverted-file) approximate nearest neighbor — the clustered scale
   * path for similarity search, alongside the sign-LSH variant:

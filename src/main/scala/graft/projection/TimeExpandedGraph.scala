@@ -45,12 +45,10 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     val regimeEvidence: graft.graph.TransitSssp.RegimeEvidence =
       new graft.graph.TransitSssp.RegimeEvidence) {
 
-  // Forced-flags are written inside lazy-val initializers and read from
-  // other threads (journey() warms the index concurrently with near-stop
-  // scans): @volatile for visibility, and set AFTER the build completes so
-  // localIndexIfBuilt peeks from a concurrent reader see "not built yet"
-  // (→ the non-blocking distributed path) instead of blocking on the
-  // initializer's monitor for the whole edge build.
+  // Forced-flags tell unpersist() which lazy caches exist. Every lazy val
+  // of this object initializes under its one monitor, so the flags are
+  // written under it too; @volatile keeps unpersist() from another thread
+  // seeing a stale "not built".
   @volatile private var edgesForced = false
   private lazy val edgesAndSched: (DataFrame, Seq[DataFrame]) = {
     val r = buildEdges()
@@ -96,12 +94,13 @@ final class TimeExpandedGraph(val nodes: DataFrame,
 
   /** Driver-resident twin of [[stopDim]], BOUNDED: the stop dimension is
     * structurally small (distinct physical stops — tens of thousands for a
-    * national feed, vs millions of stoptime nodes), so near-stop search can
-    * be an array scan even before any routing call resolves the regime —
+    * national feed, vs millions of stoptime nodes), so near-stop search is
+    * an array scan in either routing regime and on a fresh projection —
     * one limit-guarded collect per projection instead of a
-    * filter+distinct Spark job per search call. None above the bound
-    * (callers fall back to the distributed scan); the exact haversine
-    * decides membership on every path, so results are identical. */
+    * filter+distinct Spark job per search call, and it does not need the
+    * edge build. None above the bound (callers fall back to the
+    * distributed scan); the exact haversine decides membership on both
+    * paths, so results are identical. */
   lazy val localStopDim: Option[Array[(String, Double, Double)]] = {
     val rows = stopDim.limit(TimeExpandedGraph.LocalStopDimMaxRows + 1).collect()
     if (rows.length > TimeExpandedGraph.LocalStopDimMaxRows) None
@@ -133,25 +132,12 @@ final class TimeExpandedGraph(val nodes: DataFrame,
   /** Driver-resident node attributes, local-SSSP regime only (see
     * [[LocalProjection]]) — None in the distributed regime, where callers
     * stay on the declarative DataFrame path. */
-  lazy val localIndex: Option[LocalProjection] = {
+  lazy val localIndex: Option[LocalProjection] =
     // The node collect runs on the calling thread, after the regime gate:
     // this initializer holds the projection's monitor, so work handed to
     // the shared pool can queue behind pool threads that are themselves
-    // BLOCKED on that monitor (concurrent journey calls entering
-    // localStopDim) and never run — a deadlock.
-    val r = if (sssp.isLocal) Some(LocalProjection.from(nodes)) else None
-    localIndexForced = true
-    r
-  }
-  @volatile private var localIndexForced = false
-
-  /** The local index if a routing call already materialized it, None
-    * otherwise — WITHOUT forcing it. The regime gate (`sssp.isLocal`) needs
-    * an edge count, i.e. the full CHANGE build; a node-only caller
-    * (near-stop search) peeks so a fresh projection answers from the
-    * distributed stop dimension instead of paying that build. */
-  def localIndexIfBuilt: Option[LocalProjection] =
-    if (localIndexForced) localIndex else None
+    // BLOCKED on that monitor and never run — a deadlock.
+    if (sssp.isLocal) Some(LocalProjection.from(nodes)) else None
 
   def unpersist(): Unit = {
     if (stopDimForced) stopDim.unpersist()

@@ -1,8 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.graph.{Components, ShortestPaths}
 
 /** Graph / iterative operators (SURVEY §2.8) demonstrated over deterministic

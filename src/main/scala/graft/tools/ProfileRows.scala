@@ -95,7 +95,7 @@ object ProfileRows {
     names.foreach { name =>
       val fn = graft.SparkEntry.queries
         .getOrElse(name, sys.error(s"no catalog query named $name"))
-      val runs = (1 to repeats).map { i =>
+      val runs = (1 to repeats).map { _ =>
         jobs.clear()
         stages.clear()
         executions.clear()

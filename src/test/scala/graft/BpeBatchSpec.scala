@@ -64,7 +64,7 @@ class BpeBatchSpec extends SparkSpec {
   test("randomized vocabulary parity over many rounds") {
     val rnd = new scala.util.Random(7)
     val alphabet = "abcdefg" // small alphabet → heavy overlap + ties
-    val words = Seq.tabulate(60) { i =>
+    val words = Seq.tabulate(60) { _ =>
       val w = Array.fill(4 + rnd.nextInt(8))(
         alphabet(rnd.nextInt(alphabet.length))).mkString
       (w, (rnd.nextInt(20) + 1).toLong)
@@ -238,7 +238,7 @@ class BpeBatchSpec extends SparkSpec {
     // hand-off.
     val rnd = new scala.util.Random(11)
     val alphabet = "abcd"
-    val words = Seq.tabulate(120) { i =>
+    val words = Seq.tabulate(120) { _ =>
       val w = Array.fill(5 + rnd.nextInt(10))(
         alphabet(rnd.nextInt(alphabet.length))).mkString
       (w, (rnd.nextInt(20) + 1).toLong)
@@ -293,7 +293,7 @@ class BpeBatchSpec extends SparkSpec {
     // the same (n desc, a asc, b asc) argmax sequence.
     val rnd = new scala.util.Random(13)
     val alphabet = "abcde"
-    val words = Seq.tabulate(80) { i =>
+    val words = Seq.tabulate(80) { _ =>
       val w = Array.fill(3 + rnd.nextInt(9))(
         alphabet(rnd.nextInt(alphabet.length))).mkString
       (w, (rnd.nextInt(12) + 1).toLong)

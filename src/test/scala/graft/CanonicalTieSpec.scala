@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.graph.ShortestPaths
 
 /** Pins the CANONICAL equal-cost tie-break across the SSSP engines: on

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
 /** The SQL function surface: GraftExtensions.register wires the same

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.etl.{GtfsLoader, GraphBuilder}
-import graft.projection.TimeExpandedGraph
 import graft.api.RoutingEngine
 import graft.graph.ShortestPaths
 
@@ -465,11 +464,11 @@ class GtfsEngineSpec extends SparkSpec {
     assert(atDelta == Seq("Delta"))
   }
 
-  test("near-stop search is identical across its three execution paths") {
-    // (1) bounded driver stop dim (fresh projection, the r10 default),
-    // (2) distributed stopDim scan (the above-the-bound fallback shape),
-    // (3) local-index array scan (after a routing call resolves the
-    // regime). All three must return the same name set — the exact
+  test("near-stop search is identical across its two stop-dimension sources") {
+    // (1) the bounded driver stop dimension, read on a fresh projection
+    // and again after the regime is resolved (the local index changes
+    // nothing), (2) the distributed stopDim scan (the above-the-bound
+    // fallback shape). Both must return the same name set — the exact
     // haversine decides membership everywhere.
     val eng = new RoutingEngine(gtfs)
     val g = eng.projected(java.sql.Date.valueOf(Day), 1.0)
@@ -480,7 +479,7 @@ class GtfsEngineSpec extends SparkSpec {
       .filter(graft.functions.SpatialFunctions.withinRadius(
         col("lat"), col("lon"), 44.6200, 10.9000, 300))
       .select("stop_name").distinct().as[String].collect().toSet
-    g.localIndex // resolve the regime → the array-scan path
+    g.localIndex // resolve the regime: the search still reads the driver dim
     val viaIndex = eng.findNearStops(Day, 44.6200, 10.9000, 300)
       .as[String].collect().toSet
     assert(viaDriverDim == Set("Gamma", "Gamma Due"))

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.model.GtfsTables
 import graft.api.RoutingEngine
-import graft.functions.TimeFunctions.formatHms
 
 /** Scale smoke: a synthetic network in the Modena order of magnitude
   * (SURVEY §1: 249k nodes / 738k edges at full scale) driven through the
@@ -12,7 +10,6 @@ import graft.functions.TimeFunctions.formatHms
   * mini fixture can't.
   */
 class ScaleSpec extends SparkSpec {
-  import spark.implicits._
 
   /** 40×25 grid, 12 trips per route → 24k stoptimes on one service day
     * (generator shared with the Modena-cardinality bench query —

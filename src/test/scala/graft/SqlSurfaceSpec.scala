@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftFunctions, Skew}
+import graft.functions.GraftFunctions
+import graft.operators.SkewJoin
 
 class SqlSurfaceSpec extends SparkSpec {
   import spark.implicits._
@@ -36,7 +38,11 @@ class SqlSurfaceSpec extends SparkSpec {
     val direct = df.groupBy("l_returnflag")
       .agg(sum($"l_quantity").as("sum_l_quantity"), count(lit(1)).as("count"))
       .orderBy("l_returnflag").collect().toSeq
-    val salted = Skew.saltedSumCount(df, Seq("l_returnflag"), "l_quantity", 8)
+    // a sum partial and a count partial, each finished by a sum
+    def saltedBy(partial: Column, out: String) =
+      SkewJoin.saltedAgg(df, "l_returnflag", "l_orderkey", 8, partial, sum(_), out)
+    val salted = saltedBy(sum($"l_quantity"), "sum_l_quantity")
+      .join(saltedBy(count(lit(1)), "count"), "l_returnflag")
       .orderBy("l_returnflag").collect().toSeq
     assert(salted.map(r => (r.getString(0), r.getDouble(1), r.getLong(2))) ==
       direct.map(r => (r.getString(0), r.getDouble(1), r.getLong(2))))

@@ -255,6 +255,16 @@ class TransitSsspSpec extends SparkSpec {
     val out = TransitSssp.run(g.nodes, changeEdges, Set(-42L))
       .as[(Long, Long, Double, Long)].collect().toSeq
     assert(out == Seq((-42L, -42L, 0.0, -1L)))
+    // the same seed row from both fromDF regimes (local CSR, Pregel), next
+    // to a seed that does reach edges
+    val chain = Seq((1L, 2L, 1.0), (2L, 3L, 2.0)).toDF("src", "dst", "weight")
+    val want = Seq((-42L, -42L, 0.0, -1L), (1L, 1L, 0.0, -1L),
+      (2L, 1L, 1.0, 1L), (3L, 1L, 3.0, 2L))
+    for (threshold <- Seq(Long.MaxValue, 0L)) {
+      val rows = ShortestPaths.fromDF(chain, Set(-42L, 1L), localThreshold = threshold)
+        .as[(Long, Long, Double, Long)].collect().toSeq.sortBy(r => (r._1, r._2))
+      assert(rows == want, s"localThreshold = $threshold")
+    }
   }
 
   test("cap buckets are shared within a pad - the memo's lifetime bound (r15)") {

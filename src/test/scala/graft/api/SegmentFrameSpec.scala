@@ -101,6 +101,19 @@ class SegmentFrameSpec extends graft.SparkSpec {
     assert(changes == 1L && journey.changes == 1L)
   }
 
+  test("warm near-stop search launches no Spark job and keeps its names") {
+    val engine = new RoutingEngine(DemoGtfs.tables(spark))
+    def near() = engine.findNearStops(Day, 44.6200, 10.9000, 300).collect()
+      .map(_.getString(0)).toSeq
+    val first = near() // builds the projection's stop dimension (runs jobs)
+    engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect()
+    var again = Seq.empty[String]
+    val jobs = jobsPerCall(Seq("findNearStops" -> { () => again = near() }))
+    assert(jobs("findNearStops") == 0, s"Spark jobs per call: $jobs")
+    assert(first == Seq("Gamma", "Gamma Due"))
+    assert(again == first)
+  }
+
   test("formatItinerary sorts a shuffled segment frame by hop on the driver") {
     val engine = new RoutingEngine(DemoGtfs.tables(spark))
     val seg = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
