@@ -265,15 +265,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // Timing runs skip the perf-harness's cross-regime verification twin:
-    // the twin is correctness machinery (it re-routes every pair through
-    // the OTHER SSSP regime, ~4.5 s per pair of fixture-scale TransitSssp
-    // iteration scheduling), runs on every Verify/correctness pass where
-    // it belongs, and would otherwise dominate the harness's bench row
-    // (~1 s of measured work vs ~9 s of verification) — the same
-    // bench-totals-stay-clean rule that made the Modena harness twin
-    // opt-in (GraphQueries).
-    sys.props("graft.perfharness.twin") = "0"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "2").toInt.max(1)
     val spark = session(32)

@@ -8,8 +8,8 @@ object Verify {
     * (PerfHarness.itineraryDigest v2, r13+): both fixtures are synthetic
     * and the routing deterministic, so the digest is a constant of the
     * code — the cross-regime twin (forced-TransitSssp) reproduced every
-    * value (perf: in-catalog twin on each run; modena: the per-round
-    * 9/9 campaign twin). Pinning them here makes all 94 correctness rows
+    * value (perf: GtfsEngineSpec's twin on every test run; modena:
+    * `tools.TwinDiff`). Pinning them here makes all 94 correctness rows
     * self-checking: the driver's hash oracle covers 92, these constants
     * cover the harness rows' content. */
   private[graft] val pinnedHarnessDigests: Map[String, Map[String, Long]] = Map(
@@ -39,26 +39,22 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try {
-        val pinned = Verify.pinnedHarnessDigests.contains(name)
-        val df0 = fn(spark, sfDir)
-        // harness rows are tiny; caching keeps the digest check + write
-        // at ONE routing pass instead of two
-        val df = if (pinned) df0.cache() else df0
+        val df = fn(spark, sfDir)
         // r15: the two TIMING harnesses carry no SQL oracle (their timing
         // columns are non-deterministic), but their itinerary CONTENT is
-        // fixture-deterministic — recompute and compare the per-pair
-        // digests against the twin-verified pinned values, so a content
-        // drift fails the row into the correctness file as an error
-        // instead of hiding behind a rows-only check.
-        try {
-          Verify.pinnedHarnessDigests.get(name).foreach { expected =>
-            val got = df.select("name", "itineraryDigest").collect()
-              .map(r => r.getString(0) -> r.getLong(1)).toMap
-            require(got == expected,
-              s"harness itinerary digest drift: got $got expected $expected")
-          }
-          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } finally if (pinned) df.unpersist() // drift must not leak the cache
+        // fixture-deterministic — compare the per-pair digests against the
+        // twin-verified pinned values, so a content drift fails the row
+        // into the correctness file as an error instead of hiding behind a
+        // rows-only check. Both rows route eagerly inside `fn` and return
+        // their measurements as local rows, so reading them twice routes
+        // nothing again.
+        Verify.pinnedHarnessDigests.get(name).foreach { expected =>
+          val got = df.select("name", "itineraryDigest").collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(got == expected,
+            s"harness itinerary digest drift: got $got expected $expected")
+        }
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -78,4 +78,9 @@ object DemoGtfs {
   def engine(spark: SparkSession): RoutingEngine = new RoutingEngine(tables(spark))
 
   def footwayEngine(spark: SparkSession): FootwayEngine = footway(spark)
+
+  /** The demo perf harness's two OD pairs (stop coordinates of the feed). */
+  val harnessPairs: Seq[PerfHarness.OdPair] = Seq(
+    PerfHarness.OdPair("alpha-epsilon", 44.6000, 10.9000, 44.6400, 10.9200),
+    PerfHarness.OdPair("gamma-delta", 44.6200, 10.9000, 44.6300, 10.9100))
 }

@@ -20,14 +20,33 @@ object PerfHarness {
     * the harness emits TIMINGS, which no SQL oracle can pin, so the digest
     * is the self-verification handle: it must be byte-stable across runs,
     * layouts and regimes (the golden itinerary queries pin the same
-    * content through the hash oracle at fixture scale). `twinDigestOk`,
-    * when a twin engine is supplied, asserts exactly that in-query: the
-    * SAME pair routed through the OTHER SSSP regime produced the
-    * identical digest (null = no twin configured). */
+    * content through the hash oracle at fixture scale). The cross-regime
+    * check is a second [[run]] over an engine forced onto TransitSssp
+    * (`ssspLocalThreshold = 0L`), compared digest by digest: GtfsEngineSpec
+    * does it for the demo pairs, `tools.TwinDiff` for [[ModenaPairs]]. */
   final case class Measurement(name: String, straightLineKm: Double,
       findStartStopsSec: Double, findEndStopsSec: Double, routingSec: Double,
-      segments: Long, buildSec: Double, itineraryDigest: Long,
-      twinDigestOk: Option[Boolean])
+      segments: Long, buildSec: Double, itineraryDigest: Long)
+
+  /** The Modena harness's nine OD pairs, on the `SyntheticGtfs.modena`
+    * stop grid (row r, column c). */
+  val ModenaPairs: Seq[OdPair] = {
+    // must track SyntheticGtfs.modena's grid spacing (rowStepDeg 0.0032)
+    def pt(r: Int, c: Int): (Double, Double) = (44.5 + r * 0.0032, 10.8 + c * 0.01)
+    Seq(
+      ("p1-samecol-short", (2, 2), (6, 2)),
+      ("p2-near-diag", (0, 0), (10, 5)),
+      ("p3-samecol-mid", (5, 10), (20, 10)),
+      ("p4-samerow-long", (10, 0), (10, 20)),
+      ("p5-diag-mid", (0, 0), (25, 25)),
+      ("p6-cross-far", (45, 5), (5, 45)),
+      ("p7-offdiag", (40, 10), (45, 40)),
+      ("p8-backwards", (30, 30), (5, 15)),
+      ("p9-corner-corner", (49, 49), (0, 0))).map { case (n, a, b) =>
+      val (aLat, aLon) = pt(a._1, a._2); val (bLat, bLon) = pt(b._1, b._2)
+      OdPair(n, aLat, aLon, bLat, bLon)
+    }
+  }
 
   /** Canonical content hash of a collected itinerary (ordered rows).
     * Fields are joined with \u0001 — a byte that cannot appear in any
@@ -51,9 +70,12 @@ object PerfHarness {
     java.nio.ByteBuffer.wrap(md.digest()).getLong
   }
 
+  /** Times each pair's two near-stop searches and its routing call on
+    * `engine`, after one untimed warm-up of the shared structures
+    * (`buildSec`). Only times: a caller that verifies runs it again on a
+    * second engine and compares the digests. */
   def run(engine: RoutingEngine, date: String, time: String, speed: Double,
-      radius: Double, pairs: Seq[OdPair],
-      twin: Option[RoutingEngine] = None): Seq[Measurement] = {
+      radius: Double, pairs: Seq[OdPair]): Seq[Measurement] = {
     import graft.functions.SpatialFunctions._
     // Warm the shared structures the reference also holds before ITS timed
     // loop (`main.py:313-338` projects the GDS graph first): the (day,
@@ -97,26 +119,17 @@ object PerfHarness {
         else engine.routingBetweenTwoPoints(date, p.startLat, p.startLon,
           p.endLat, p.endLon, startNames, endNames, speed, time).collect()
       val t3 = System.nanoTime()
-      val dg = itineraryDigest(rows)
-      // Twin verification runs AFTER the timed window — it must not
-      // contaminate the per-pair columns the BASELINE comparison reads.
-      val twinOk = twin.map { tw =>
-        val twinRows =
-          if (startNames.isEmpty || endNames.isEmpty)
-            Array.empty[org.apache.spark.sql.Row]
-          else tw.routingBetweenTwoPoints(date, p.startLat, p.startLon,
-            p.endLat, p.endLon, startNames, endNames, speed, time).collect()
-        itineraryDigest(twinRows) == dg
-      }
       val km = haversineMetersScalar(p.startLat, p.startLon,
         p.endLat, p.endLon) / 1000.0
       Measurement(p.name, km, (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
-        rows.length.toLong, buildSec, dg, twinOk)
+        rows.length.toLong, buildSec, itineraryDigest(rows))
     } finally sc.setJobDescription(null)
   }
 
+  /** The measurement table, rows sorted by name on the driver: a Spark
+    * sort over the local rows would launch a range-partition job. */
   def toDF(spark: SparkSession, ms: Seq[Measurement]): DataFrame = {
     import spark.implicits._
-    ms.toDF()
+    ms.sortBy(_.name).toDF()
   }
 }

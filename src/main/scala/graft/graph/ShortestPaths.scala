@@ -29,7 +29,7 @@ object ShortestPaths {
     * shares (TransitSssp.resolveState orders by (prio, pred), the CSR
     * Dijkstra applies the same rule in its relaxation), so equal-cost path
     * multiplicity cannot make regimes return different itineraries
-    * (PerfHarness.twinDigestOk caught exactly that on the Modena grid). */
+    * (the Modena harness twin caught exactly that). */
   private def better(x: (Double, VertexId), y: (Double, VertexId)): (Double, VertexId) =
     if (x._1 < y._1) x else if (y._1 < x._1) y
     else if (x._2 <= y._2) x else y

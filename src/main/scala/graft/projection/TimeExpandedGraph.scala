@@ -84,9 +84,13 @@ final class TimeExpandedGraph(val nodes: DataFrame,
   /** Day-served stop dimension — one row per distinct (stop_name, lat, lon)
     * with service in this projection. Interactive near-stop search only
     * needs this few-thousand-row table, not the full stoptime node set
-    * (249k rows at Modena cardinality); built once per projection, cached. */
+    * (249k rows at Modena cardinality). */
+  private def stopRows: DataFrame = nodes.select("stop_name", "lat", "lon").distinct()
+
+  /** [[stopRows]] cached, for the distributed near-stop scan above the
+    * [[localStopDim]] bound; built on first use. */
   lazy val stopDim: DataFrame = {
-    val d = nodes.select("stop_name", "lat", "lon").distinct().cache()
+    val d = stopRows.cache()
     stopDimForced = true
     d
   }
@@ -100,9 +104,11 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     * filter+distinct Spark job per search call, and it does not need the
     * edge build. None above the bound (callers fall back to the
     * distributed scan); the exact haversine decides membership on both
-    * paths, so results are identical. */
+    * paths, so results are identical. It collects the uncached distinct:
+    * reading through the [[stopDim]] cache launches one more job and
+    * writes a cache the local regime never reads. */
   lazy val localStopDim: Option[Array[(String, Double, Double)]] = {
-    val rows = stopDim.limit(TimeExpandedGraph.LocalStopDimMaxRows + 1).collect()
+    val rows = stopRows.limit(TimeExpandedGraph.LocalStopDimMaxRows + 1).collect()
     if (rows.length > TimeExpandedGraph.LocalStopDimMaxRows) None
     else Some(rows.map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))))
   }

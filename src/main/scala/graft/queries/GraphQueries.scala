@@ -210,7 +210,7 @@ object GraphQueries {
     // fixture-scale iteration scheduling per bench run, and the
     // cross-regime equality of the SAME tie-heavy-grid itineraries is
     // already pinned by CanonicalTieSpec's forced-TransitSssp parity test
-    // plus the perf harness's twin digest.
+    // plus the harness twins (GtfsEngineSpec, tools.TwinDiff).
     Q("gtfs_routing_ties", "G2,G6,J8",
       (s, _) => new graft.api.RoutingEngine(
           graft.etl.SyntheticGtfs.grid(s, rows = 6, cols = 6, tripsPerRoute = 3,
@@ -355,8 +355,7 @@ object GraphQueries {
     Q("gtfs_csv_roundtrip", "S4,S5",
       (s, _) => {
         val stops = graft.api.DemoGtfs.tables(s).stops
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-          "graft_s4_stops").getAbsolutePath
+        val dir = java.nio.file.Files.createTempDirectory("graft_s4_stops").toString
         graft.etl.GraphCsv.exportTable(stops, dir, single = true)
         graft.etl.GraphCsv.importTable(s, dir, stops.schema).orderBy("stop_id")
       },
@@ -475,75 +474,33 @@ object GraphQueries {
         val raw = graft.etl.SyntheticGtfs.modena(s)
         val cached = raw.copy(stopTimes = raw.stopTimes.cache(), stops = raw.stops.cache())
         val eng = new graft.api.RoutingEngine(cached)
-        // must track SyntheticGtfs.modena's grid spacing (rowStepDeg 0.0032)
-        def pt(r: Int, c: Int): (Double, Double) = (44.5 + r * 0.0032, 10.8 + c * 0.01)
-        val specs = Seq(
-          ("p1-samecol-short", (2, 2), (6, 2)),
-          ("p2-near-diag", (0, 0), (10, 5)),
-          ("p3-samecol-mid", (5, 10), (20, 10)),
-          ("p4-samerow-long", (10, 0), (10, 20)),
-          ("p5-diag-mid", (0, 0), (25, 25)),
-          ("p6-cross-far", (45, 5), (5, 45)),
-          ("p7-offdiag", (40, 10), (45, 40)),
-          ("p8-backwards", (30, 30), (5, 15)),
-          ("p9-corner-corner", (49, 49), (0, 0)))
-        val pairs = specs.map { case (n, a, b) =>
-          val (aLat, aLon) = pt(a._1, a._2); val (bLat, bLon) = pt(b._1, b._2)
-          graft.api.PerfHarness.OdPair(n, aLat, aLon, bLat, bLon)
-        }
-        // Cross-REGIME self-verification twin (the digest column's
-        // assert): a second engine forced onto the distributed TransitSssp
-        // branch routes the same pairs untimed. A full-grid converge per
-        // pair costs ~20 s each at this cardinality, so the twin is
-        // opt-in (SPARK_GRAFT_HARNESS_TWIN=1, run once per round and
-        // recorded in COVERAGE.md) — the bench totals BASELINE.md is
-        // compared against stay clean. The demo-scale harness below
-        // always runs its twin.
-        val twin =
-          if (sys.env.get("SPARK_GRAFT_HARNESS_TWIN").contains("1"))
-            Some(new graft.api.RoutingEngine(cached, ssspLocalThreshold = 0L))
-          else None
+        // Timing only: the cross-regime twin over these pairs is
+        // tools.TwinDiff (a forced-TransitSssp converge costs ~20 s per
+        // pair at this cardinality), and Verify pins their digests.
         val ms = try {
           graft.api.PerfHarness.run(eng, "2024-01-18", "08:00:00", 1.0, 300.0,
-            pairs, twin)
+            graft.api.PerfHarness.ModenaPairs)
         } finally {
           // measurements are local scalars by now — drop every cache this
           // run pinned (repeated bench runs share one JVM)
           eng.close()
-          twin.foreach(_.close())
           cached.stopTimes.unpersist(); cached.stops.unpersist()
         }
-        graft.api.PerfHarness.toDF(s, ms).orderBy("name")
+        graft.api.PerfHarness.toDF(s, ms)
       },
       None),
 
     // §6 perf-harness analog: the reference's 9-OD-pair measurement table
     // re-expressed over the demo network (2 pairs) — returns the measured
-    // table itself so the driver sees timing columns.
+    // table itself so the driver sees timing columns. Timing only: the
+    // cross-regime twin over these pairs runs in GtfsEngineSpec on every
+    // test run, and Verify pins their digests.
     Q("gtfs_perf_harness", "perf",
       (s, _) => {
         val eng = graft.api.DemoGtfs.engine(s)
-        // Demo scale asserts the cross-regime digest by DEFAULT: the twin
-        // routes the same pairs through the forced TransitSssp branch,
-        // untimed, and twinDigestOk pins equality — the timing harness
-        // self-verifies its itinerary content on every Verify/correctness
-        // pass even though its rows carry no SQL oracle. Bench.main alone
-        // opts out via the system property (the twin is ~9 s of
-        // fixture-scale TransitSssp iteration scheduling — verification
-        // cost, not the timing under measurement; first caught dominating
-        // the r11 idle bench at 10.2 s for a ~1 s harness).
-        val twin =
-          if (sys.props.getOrElse("graft.perfharness.twin", "1") == "1")
-            Some(new graft.api.RoutingEngine(
-              graft.api.DemoGtfs.tables(s), ssspLocalThreshold = 0L))
-          else None
-        val ms = try {
-          graft.api.PerfHarness.run(eng, "2024-01-18", "14:00:00", 1.0, 300.0, Seq(
-            graft.api.PerfHarness.OdPair("alpha-epsilon", 44.6000, 10.9000, 44.6400, 10.9200),
-            graft.api.PerfHarness.OdPair("gamma-delta", 44.6200, 10.9000, 44.6300, 10.9100)),
-            twin)
-        } finally twin.foreach(_.close())
-        graft.api.PerfHarness.toDF(s, ms).orderBy("name")
+        val ms = try graft.api.PerfHarness.run(eng, "2024-01-18", "14:00:00", 1.0, 300.0,
+          graft.api.DemoGtfs.harnessPairs) finally eng.close()
+        graft.api.PerfHarness.toDF(s, ms)
       },
       None),
   )

@@ -11,8 +11,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * For each named query it runs Bench's own set-up and per-run protocol
   * (`Bench.session`, `Bench.warmUp`, `Bench.timeRow`: noop sink, a failing
   * run logged and skipped past, clearCache + Runtime.releaseAll between
-  * runs; the perf harness's verification twin off, as in `Bench.main`)
-  * with min-of-N semantics, and additionally records every Spark job's
+  * runs) with min-of-N semantics, and additionally records every Spark job's
   * submit→complete wall, its task count, and the first graft call-site
   * frame of its first stage (else of the SQL execution it ran for), then
   * prints the jobs of the FASTEST run grouped by call site. The gap
@@ -31,8 +30,6 @@ object ProfileRows {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val repeats = if (args.length > 2) args(2).toInt else 3
-    // same timing set-up as Bench.main, perf-harness verification twin off
-    sys.props("graft.perfharness.twin") = "0"
     val spark = graft.Bench.session(32)
     sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)

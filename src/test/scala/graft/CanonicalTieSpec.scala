@@ -6,7 +6,7 @@ import graft.graph.ShortestPaths
   * equal distance the smaller predecessor id wins (seed pred −1 first).
   * The pre-existing parity specs compared distances — path multiplicity
   * slipped through them and surfaced as a cross-regime itinerary
-  * divergence on the Modena grid (PerfHarness twinDigestOk=false on
+  * divergence on the Modena grid (the harness twin digests differed on
   * p8-backwards, COVERAGE.md round 11). These tests fail without the
   * canonical rule:
   *  - a unit lattice where EVERY vertex has two equal-cost in-edges, with

@@ -576,16 +576,25 @@ class GtfsEngineSpec extends SparkSpec {
 
   test("perf harness emits a cross-regime-verified itinerary digest") {
     // The timing harnesses are the catalog's only oracle-free rows; the
-    // digest column is their self-verification: same pair, CSR regime vs
-    // forced TransitSssp regime, identical itinerary content hash.
-    val q = graft.queries.Catalog.all.find(_.name == "gtfs_perf_harness").get
-    val rows = q.run(spark, "unused").collect()
-    assert(rows.length == 2)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("segments") > 0L, r.getAs[String]("name"))
-      assert(r.getAs[Long]("itineraryDigest") != 0L)
-      assert(r.getAs[Boolean]("twinDigestOk"), s"cross-regime digest " +
-        s"mismatch for ${r.getAs[String]("name")}")
+    // digest is their self-verification: same pair, CSR regime vs forced
+    // TransitSssp regime, identical itinerary content hash.
+    import graft.api.{DemoGtfs, PerfHarness}
+    def measure(e: RoutingEngine): Seq[PerfHarness.Measurement] =
+      try PerfHarness.run(e, Day, "14:00:00", 1.0, 300.0, DemoGtfs.harnessPairs)
+      finally e.close()
+    val viaCsr = measure(DemoGtfs.engine(spark))
+    val viaGrid = measure(new RoutingEngine(DemoGtfs.tables(spark), ssspLocalThreshold = 0L))
+    assert(viaCsr.map(_.name) == DemoGtfs.harnessPairs.map(_.name))
+    viaCsr.zip(viaGrid).foreach { case (m, t) =>
+      assert(m.segments > 0L, m.name)
+      assert(m.itineraryDigest != 0L, m.name)
+      assert(t.itineraryDigest == m.itineraryDigest,
+        s"cross-regime digest mismatch for ${m.name}")
     }
+    // the catalog row routes the same pairs to the digests Verify pins
+    val q = graft.queries.Catalog.all.find(_.name == "gtfs_perf_harness").get
+    val pinned = q.run(spark, "unused").select("name", "itineraryDigest").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(pinned == Verify.pinnedHarnessDigests("gtfs_perf_harness"))
   }
 }

@@ -3,19 +3,19 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Library code keeps no process-global state: the routing, projection,
-  * operator and API layers take every setting through their own arguments
-  * and report regime evidence through per-instance values
+  * operator, API and query-catalog layers take every setting through their
+  * own arguments and report regime evidence through per-instance values
   * (`RoutingEngine.evidence`, `Bpe.TrainTelemetry`). This spec fails when
-  * an environment read, a `println` trace, or an object-level counter
-  * creeps back into those packages, and when a main anywhere under
-  * `graft` builds its own Spark session instead of taking Bench's. No
-  * Spark session needed — pure file bookkeeping, like
+  * an environment or system-property read, a `println` trace, or an
+  * object-level counter creeps back into those packages, and when a main
+  * anywhere under `graft` builds its own Spark session instead of taking
+  * Bench's. No Spark session needed — pure file bookkeeping, like
   * [[PlansFreshnessSpec]]. */
 class LibraryStateSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
 
   private val mainDir = java.nio.file.Paths.get("src", "main", "scala", "graft")
-  private val libraryDirs = Seq("graph", "operators", "projection", "api")
+  private val libraryDirs = Seq("graph", "operators", "projection", "api", "queries")
     .map(d => mainDir.resolve(d))
 
   /** (path, source text) of every Scala file under `dirs`. */
@@ -31,7 +31,7 @@ class LibraryStateSpec extends AnyFunSuite {
 
   test("library packages read no environment variables and print nothing") {
     assert(sources.nonEmpty)
-    val banned = "sys\\.env|System\\.getenv|println".r
+    val banned = "sys\\.env|System\\.getenv|sys\\.props|System\\.getProperty|println".r
     val hits = for {
       (path, text) <- sources
       (line, i) <- text.split("\n", -1).zipWithIndex

@@ -114,6 +114,30 @@ class SegmentFrameSpec extends graft.SparkSpec {
     assert(again == first)
   }
 
+  test("first near-stop search on a fresh projection collects its stop dimension in few jobs") {
+    // Bench's session lets AQE re-plan cached frames' output partitioning
+    val CachedRepartition = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val before = spark.conf.getOption(CachedRepartition)
+    spark.conf.set(CachedRepartition, "true")
+    // the demo feed moved one degree north: no other engine's cached stop
+    // dimension matches its plan, so the search really starts cold
+    val demo = DemoGtfs.tables(spark)
+    val engine = new RoutingEngine(demo.copy(
+      stops = demo.stops.withColumn("stop_lat", demo.stops("stop_lat") + 1.0)))
+    var names = Seq.empty[String]
+    val jobs = try jobsPerCall(Seq("findNearStops" -> { () =>
+      names = engine.findNearStops(Day, 45.6200, 10.9000, 300).collect()
+        .map(_.getString(0)).toSeq
+    })) finally {
+      engine.close()
+      before.fold(spark.conf.unset(CachedRepartition))(spark.conf.set(CachedRepartition, _))
+    }
+    // the node cache's build and the distinct's collect; reading it
+    // through the stop-dimension cache launched one job more
+    assert(jobs("findNearStops") <= 6, s"Spark jobs per call: $jobs")
+    assert(names == Seq("Gamma", "Gamma Due"))
+  }
+
   test("formatItinerary sorts a shuffled segment frame by hop on the driver") {
     val engine = new RoutingEngine(DemoGtfs.tables(spark))
     val seg = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
