@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftbridge.{ColumnBridge, FunctionRegistryBridge}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.functions.expressions._
 
 /** SQL surface for the engine's native Catalyst expressions.
@@ -31,7 +31,8 @@ object GraftExtensions {
   /** Install the function set into an existing session. Idempotent. */
   def register(spark: SparkSession): Unit =
     all.foreach { case (name, info, builder) =>
-      FunctionRegistryBridge.register(spark, name, info, builder)
+      spark.sessionState.functionRegistry
+        .registerFunction(FunctionIdentifier(name), info, builder)
     }
 
   private def intLit(fn: String, arg: String, e: Expression): Int = {
@@ -96,6 +97,10 @@ object GraftExtensions {
     f("repetition_stats", "repetition_stats(tokens) — per-document gram stats " +
       "struct(n_distinct, big_top, big_total, tri_dup, tri_total)",
       classOf[RepetitionStatsExpr]) { case Seq(t) => RepetitionStatsExpr(t) },
+    f("lang_id", "lang_id(tokens) — stopword-vote language code ('und' when no stopword hits)",
+      classOf[LangScoreExpr]) {
+      case Seq(t) => LangScoreExpr(t, graft.functions.TextFunctions.stopwords.toSeq.sortBy(_._1))
+    },
     f("image_dims", "image_dims(bytes) — struct(width, height) from a PNG/GIF/BMP/JPEG " +
       "header, NULL for non-image bytes",
       classOf[ImageDimsExpr]) { case Seq(b) => ImageDimsExpr(b) },

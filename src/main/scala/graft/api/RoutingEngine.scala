@@ -47,11 +47,6 @@ private[api] final case class Seg(hop: Int, trip: String, departure: String,
   */
 class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     ssspLocalThreshold: Long = ShortestPaths.LocalDijkstraMaxEdges,
-    /** Chain-size bound for the distributed branch's exact driver-walk
-      * path extraction; 0 forces pointer doubling (the 100 TB evidence
-      * path — `gtfs_routing_distributed` runs with 0 so the per-round
-      * oracle keeps exercising it). */
-    pathDriverWalkMaxRows: Long = ShortestPaths.DriverWalkMaxChainRows,
     /** Edge budget of the clock-capped driver-CSR regime (same per-call
       * shape as ssspLocalThreshold — r18, r17 verdict #2); 0 disables it
       * (`gtfs_routing_zero_cycle` passes 0 together with
@@ -283,8 +278,10 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   }
 
   /** Distributed regime: full distance table stays distributed; the path
-    * comes back via pointer doubling (log L self-joins), never the
-    * reachable set. */
+    * comes back through `ShortestPaths.pathDistributed` — a driver walk
+    * of the source's pred chain up to `DriverWalkMaxChainRows` rows,
+    * pointer doubling (log L self-joins) above it — never the reachable
+    * set. */
   private def routeDistributed(g: TimeExpandedGraph, speed: Double, t0: Long,
       maxDurationHours: Int, src: Endpoint, tgt: Endpoint): Seq[Seg] = {
     def walkCol(e: Endpoint): org.apache.spark.sql.Column = e.walkFrom match {
@@ -429,8 +426,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
       sc.setJobDescription("route: pred resolve + path")
       predOne = staged.resolve(bestSrc).cache()
       val path =
-        try ShortestPaths.pathDistributed(predOne, bestSrc, bestTgt,
-          pathDriverWalkMaxRows)
+        try ShortestPaths.pathDistributed(predOne, bestSrc, bestTgt)
         catch {
           // Zero-total-cycle feed (r16): the canonical pred selection has
           // no tree here — distances are final and correct, so re-resolve
@@ -442,8 +438,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
             sc.setJobDescription("route: acyclic re-resolve + path")
             predOne.unpersist()
             predOne = staged.resolveAcyclic(bestSrc).cache()
-            ShortestPaths.pathDistributed(predOne, bestSrc, bestTgt,
-              pathDriverWalkMaxRows)
+            ShortestPaths.pathDistributed(predOne, bestSrc, bestTgt)
         }
       // path ids are collected; every remaining consumer is driver-side
       if (path.size < 2) return Nil

@@ -46,9 +46,8 @@ object Betweenness {
     * graph fit comfortably in one JVM's heap", and the reference's own
     * "distributed" GDS graph is a single-node in-memory CSR at exactly this
     * scale. Above it, the level-synchronous DataFrame branch takes over.
-    * Immutable (r16, r15 ADVICE: the @volatile spec hook made the branch
-    * choice process-global mutable state); the rung spec injects a small
-    * bound via [[ofProjectionImpl]]'s `defaultCsrBound` parameter instead. */
+    * Immutable: [[ofProjection]] always starts from this bound, and
+    * [[inHeapBudget]] is the one place that widens it. */
   private[graft] val CsrBrandesMaxEdges: Long =
     ShortestPaths.LocalDijkstraMaxEdges
 
@@ -392,14 +391,7 @@ object Betweenness {
     * on the driver collect — never escalated (r16, r15 ADVICE: the
     * previous sentinel-by-value-equality made an explicit bound equal to
     * the default indistinguishable from it). `Some(x ≤ 0)` forces the
-    * level-synchronous regime (the measurement convention).
-    *
-    * MIGRATION (r16): `localThreshold` changed `Long` → `Option[Long]` —
-    * a caller that passed a positional/named `Long` bound must wrap it in
-    * `Some(...)`; a caller that passed the old default
-    * `CsrBrandesMaxEdges` to mean "default behavior" should pass `None`
-    * (under the old value-equality sentinel those two were conflated,
-    * which is exactly the bug the Option fixed). */
+    * level-synchronous regime (the measurement convention). */
   def ofProjection(g: graft.projection.TimeExpandedGraph,
       sources: Option[Seq[Long]] = None, seed: Long = 42L,
       localThreshold: Option[Long] = None,
@@ -407,27 +399,7 @@ object Betweenness {
         * the subgraph of stoptimes departing at or before the cap (the
         * same horizon-bounded subgraph the capped routing regime
         * collects). ∞ (default) keeps whole-projection semantics. */
-      clockCap: Double = Double.PositiveInfinity): DataFrame =
-    ofProjectionImpl(g, sources, seed, localThreshold, clockCap,
-      CsrBrandesMaxEdges)
-
-  /** [[ofProjection]] with the DEFAULT broadcast bound injectable —
-    * fixtures are too small to sit between the production bound and the
-    * capped-CSR budget, so the rung spec passes a tiny `defaultCsrBound`
-    * per call instead of mutating a process-global (r15 ADVICE). */
-  private[graft] def ofProjectionImpl(g: graft.projection.TimeExpandedGraph,
-      sources: Option[Seq[Long]], seed: Long,
-      localThreshold: Option[Long],
-      clockCap: Double,
-      defaultCsrBound: Long,
-      // the capped-budget rung's in-heap budget under the None threshold
-      // (r18: per-call — the spec's zeroed level-sync control passes
-      // Some(0) here instead of mutating the companion val). None (the
-      // default) resolves to the PROJECTION's per-instance budget
-      // (r18 ADVICE: defaulting to the companion val meant an engine
-      // built with cappedCsrMaxEdges = 0 still got the driver-collect
-      // rung here while routing had it disabled).
-      cappedInHeapBudget: Option[Long] = None): DataFrame = {
+      clockCap: Double = Double.PositiveInfinity): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val windowed = !clockCap.isPosInfinity
@@ -479,17 +451,21 @@ object Betweenness {
     // Option makes that distinction structural (r16; the r15 sentinel
     // compared by VALUE, so an explicit bound equal to the default
     // silently escalated).
-    val inHeapBudget = localThreshold match {
-      case Some(x) if x <= 0L => 0L
-      case Some(x) => x
-      case None =>
-        math.max(defaultCsrBound,
-          cappedInHeapBudget.getOrElse(g.cappedCsrMaxEdges))
-    }
-    val scores = run(scopeEdges, srcs, inHeapBudget)
+    val scores = run(scopeEdges, srcs, inHeapBudget(g, localThreshold))
     scopeNodes.join(scores, scopeNodes("id") === scores("vertex_id"))
       .select(col("stop_name"), col("dep_secs"), col("lat"), col("lon"),
         (col("score") * scale).as("score"))
       .orderBy(col("score").desc, col("stop_name"), col("dep_secs"))
+  }
+
+  /** Edge budget of [[ofProjection]]'s driver collect: an explicit
+    * `Some(x)` binds exactly (`x ≤ 0` forces level-sync); `None` widens
+    * [[CsrBrandesMaxEdges]] to the PROJECTION's capped-CSR budget, so an
+    * engine built with `cappedCsrMaxEdges = 0` disables the rung here as
+    * it does in routing. */
+  private[graft] def inHeapBudget(g: graft.projection.TimeExpandedGraph,
+      localThreshold: Option[Long]): Long = localThreshold match {
+    case Some(x) => math.max(x, 0L)
+    case None => math.max(CsrBrandesMaxEdges, g.cappedCsrMaxEdges)
   }
 }

@@ -110,14 +110,13 @@ object ShortestPaths {
   /** Distributed path reconstruction — the 100 TB regime, where collecting
     * even one source's reachable set may flood the driver.
     *
-    * PRECONDITION (seed-row contract, r21 — r20 ADVICE asked for it here
-    * rather than in an inline comment): `dist` must be resolveState-shaped
+    * PRECONDITION (seed-row contract): `dist` must be resolveState-shaped
     * output in which the source's own row is present with pred = −1 (the
     * phantom-seed contract — every seed reports itself at dist 0 even when
-    * absent from the projection). target == source therefore returns
-    * List(source) WITHOUT consulting `dist`; a caller passing a filtered
-    * or foreign dist frame lacking the seed row gets that non-empty path
-    * for an absent source, where the pre-r20 code returned Nil.
+    * absent from the projection). A frame without that row fails the
+    * `require`; a pred chain with a gap (a vertex whose pred has no row)
+    * fails either branch with an IllegalStateException naming the vertex,
+    * instead of returning a path that does not start at the source.
     *
     * Two branches, gated on the MEASURED chain size (the count reads the
     * chain's own checkpoint):
@@ -139,30 +138,37 @@ object ShortestPaths {
       driverWalkMaxRows: Long = DriverWalkMaxChainRows): List[Long] = {
     val spark = dist.sparkSession
     import spark.implicits._
-    // Chain size AND target reachability ride the chain checkpoint's own
-    // materialization job via observe() (r20 — previously a separate
-    // reachability filter job over `dist` plus a count() over the
-    // checkpoint: three jobs where one suffices). Reached ⇔ a dist row
-    // exists; the chain drops only pred = −1 rows, and the single-source
-    // resolve emits pred = −1 exactly for the seed — so target reached ⇔
-    // target == source (seed row always present: resolveState's phantom
-    // contract) ∨ target ∈ chain.v.
+    // Chain size, target reachability and the seed row ride the chain
+    // checkpoint's own materialization job via observe(), placed above
+    // the pred filter so it sees the seed row too: one job, no separate
+    // reachability or count pass. Reached ⇔ a dist row exists; the chain
+    // drops only pred = −1 rows, and the single-source resolve emits
+    // pred = −1 exactly for the seed — so target reached ⇔
+    // target == source ∨ target ∈ chain.v.
     val obs = org.apache.spark.sql.Observation(
       s"path-chain-${pathSeq.incrementAndGet()}")
-    val chain0 = dist.filter(col("source_id") === source && col("pred") =!= -1L)
-      .select(col("vertex_id").as("v"), col("pred").as("p"))
+    def tally(c: org.apache.spark.sql.Column) =
+      coalesce(sum(c.cast("long")), lit(0L))
+    val chained = col("pred") =!= -1L
+    val chain0 = dist.filter(col("source_id") === source)
       .observe(obs,
-        count(lit(1)).as("rows"),
-        coalesce(sum((col("v") === target).cast("long")), lit(0L)).as("tgt"))
+        tally(chained).as("rows"),
+        tally(chained && col("vertex_id") === target).as("tgt"),
+        tally(!chained && col("vertex_id") === source).as("seed"))
+      .filter(chained)
+      .select(col("vertex_id").as("v"), col("pred").as("p"))
       .localCheckpoint(true)
     val chainRows = obs.get("rows").asInstanceOf[Long]
     val targetInChain = obs.get("tgt").asInstanceOf[Long] > 0L
     val release = org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint _
+    def chainGap(v: Long) = new IllegalStateException(
+      s"pred chain gap: vertex $v has no row in source $source's pred chain, " +
+        "so the walk cannot reach the source")
     try {
-      if (target == source) {
-        // seed row contract: the source always reports itself at dist 0
-        return List(source)
-      }
+      require(obs.get("seed").asInstanceOf[Long] > 0L,
+        s"pathDistributed: dist has no seed row (vertex_id = $source, pred = -1) " +
+          s"for source $source")
+      if (target == source) return List(source)
       if (!targetInChain) return Nil
       if (chainRows <= driverWalkMaxRows) {
         // Bounded driver walk — identical output to the doubling branch:
@@ -182,7 +188,7 @@ object ShortestPaths {
               "route through the in-heap regime")
           else chain.get(v) match {
             case Some(p) => walk(p, v :: acc, steps + 1)
-            case None => v :: acc // seed row (pred −1) was filtered out
+            case None => throw chainGap(v)
           }
         return walk(target, Nil, 0)
       }
@@ -226,6 +232,8 @@ object ShortestPaths {
       // is a no-op, the guard below skips tail tables only)
       jumps.drop(1).foreach(release)
       release(pos)
+      // the descent stops where the chain does: at the source, or at a gap
+      if (path.head != source) throw chainGap(path.head)
       path
     } finally release(chain0)
   }

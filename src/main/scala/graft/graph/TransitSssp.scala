@@ -1312,9 +1312,11 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
   }
 
   /** Release the instance's pinned static frames (trip prefix + CHANGE
-    * slice) — for short-lived instances that should not leave checkpoint
-    * blocks behind. Projection-held instances keep their pins for the
-    * projection's lifetime and never call this. */
+    * slice + capped slices) — serialized local checkpoints, which neither
+    * `Dataset.unpersist` nor `clearCache` frees. Short-lived instances
+    * call it when done; a projection-held instance keeps its pins for the
+    * projection's lifetime and is released by
+    * `TimeExpandedGraph.unpersist` (so `RoutingEngine.close`). */
   private[graft] def releasePins(): Unit = {
     val rel = org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint _
     if (preparedForced) rel(prepared)

@@ -122,8 +122,7 @@ object Bpe {
       // Cost-shaping bounds of the two distributed loops, threaded as
       // per-call parameters (r16 ADVICE — the @volatile spec-hook vars
       // they replace were process-global mutable state, unsafe under
-      // parallel callers; same fix as Betweenness.ofProjection's
-      // defaultCsrBound): every value is parity-pinned to identical
+      // parallel callers): every value is parity-pinned to identical
       // merges, so these shift wall time, never answers.
       overlayMaxAffected: Int = SymsOverlayMaxAffected,
       overlayMaxWords: Int = SymsOverlayMaxWords,

@@ -120,11 +120,15 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     * pinned on first use, shared across calls — the distributed twin of the
     * local regime's held CSR. The routing engine calls it directly in the
     * distributed regime (capped CSR, staged rank-then-path). */
-  lazy val transit: graft.graph.TransitSssp =
-    new graft.graph.TransitSssp(nodes, changeEnriched,
+  lazy val transit: graft.graph.TransitSssp = {
+    val t = new graft.graph.TransitSssp(nodes, changeEnriched,
       cappedCsrMaxEdges = cappedCsrMaxEdges,
       cappedSliceMinNodes = cappedSliceMinNodes,
       evidence = regimeEvidence)
+    transitForced = true
+    t
+  }
+  @volatile private var transitForced = false
 
   /** Per-projection SSSP handle: the local-vs-distributed decision and
     * (when local) the adjacency index happen once, shared by every routing
@@ -146,6 +150,8 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     if (sssp.isLocal) Some(LocalProjection.from(nodes)) else None
 
   def unpersist(): Unit = {
+    // the runner's pins are local checkpoints, which no cache clear frees
+    if (transitForced) transit.releasePins()
     if (stopDimForced) stopDim.unpersist()
     // unpersist the FULL cached union (edges is a narrowing view whose
     // plan would not match the cache entry)

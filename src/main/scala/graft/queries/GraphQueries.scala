@@ -14,6 +14,16 @@ import graft.graph.{Components, ShortestPaths}
 object GraphQueries {
   import Catalog.t
 
+  /** `f` on `eng`, then the engine closed. The result must not read the
+    * engine's caches: routing and near-stop frames are LocalRelations,
+    * anything else goes through [[collected]]. */
+  private def closing[A](eng: graft.api.RoutingEngine)(f: graft.api.RoutingEngine => A): A =
+    try f(eng) finally eng.close()
+
+  /** `df` copied into a LocalRelation with the same schema and row order. */
+  private def collected(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   def all: Seq[Q] = Seq(
 
     // G2 — weighted SSSP via multi-source Pregel relaxation. Graph: binary
@@ -95,8 +105,8 @@ object GraphQueries {
     // GtfsEngineSpec pins) — the demo network isn't in the sf parquet
     // tables, so the expected rows ARE the SQL.
     Q("gtfs_routing_golden", "G1,G2,G6,J8",
-      (s, _) => graft.api.DemoGtfs.engine(s)
-        .routing("2024-01-18", 1.0, "14:00:00", "Alpha", "Epsilon"),
+      (s, _) => closing(graft.api.DemoGtfs.engine(s))(
+        _.routing("2024-01-18", 1.0, "14:00:00", "Alpha", "Epsilon")),
       Some("""SELECT hop, trip, departure, line, starting_stop_name, starting_stop_id,
              | CAST(start_lat AS DOUBLE) AS start_lat, CAST(start_lon AS DOUBLE) AS start_lon,
              | next_trip, next_stop, next_stop_id,
@@ -115,15 +125,17 @@ object GraphQueries {
     // The production DISTRIBUTED-REGIME path under the hash gate: the same
     // golden itinerary, but the engine is forced past the local threshold
     // (ssspLocalThreshold = 0), so the route runs TransitSssp trip-collapse
-    // rounds + pointer-doubling path extraction — the branch a >2M-edge
-    // (100 TB-scale) projection takes. The oracle being the IDENTICAL
-    // golden VALUES proves regime choice never changes answers, re-checked
-    // by DuckDB every round (specs force this branch too, but this row
-    // puts it under the driver's own hash gate).
+    // rounds + distributed path extraction — the branch a >2M-edge
+    // (100 TB-scale) projection takes. At this cardinality the path comes
+    // back by the bounded driver walk; TransitSsspSpec pins it equal to
+    // pointer doubling over every reachable target. The oracle being the
+    // IDENTICAL golden VALUES proves regime choice never changes answers,
+    // re-checked by DuckDB every round (specs force this branch too, but
+    // this row puts it under the driver's own hash gate).
     Q("gtfs_routing_distributed", "G2,G6,J8",
-      (s, _) => new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(s),
-          ssspLocalThreshold = 0L, pathDriverWalkMaxRows = 0L)
-        .routing("2024-01-18", 1.0, "14:00:00", "Alpha", "Epsilon"),
+      (s, _) => closing(new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(s),
+          ssspLocalThreshold = 0L))(
+        _.routing("2024-01-18", 1.0, "14:00:00", "Alpha", "Epsilon")),
       Some("""SELECT hop, trip, departure, line, starting_stop_name, starting_stop_id,
              | CAST(start_lat AS DOUBLE) AS start_lat, CAST(start_lon AS DOUBLE) AS start_lon,
              | next_trip, next_stop, next_stop_id,
@@ -160,21 +172,20 @@ object GraphQueries {
         // capped-CSR budget): ssspLocalThreshold = 0 kills the in-heap
         // regimes, cappedCsrMaxEdges = 0 kills the capped CSR — only the
         // distributed fixpoint's acyclic repair can serve.
-        // Default path extraction (driver walk at this cardinality):
-        // the row exists to prove the DISTRIBUTED fixpoint's acyclic
-        // repair serves the route — pointer doubling is already under
-        // the oracle via gtfs_routing_distributed, and forcing it here
-        // only adds fixture-scale scheduling rounds to every bench
-        val eng = new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
-          cappedCsrMaxEdges = 0L)
-        val d = eng.routing("2024-01-18", 1.0, "13:50:00", "Start", "End")
-        // SESSION-LOCAL evidence (r19, r18 verdict #2): only this
-        // engine's calls advance its evidence counters, so a concurrent
-        // routing in the same JVM cannot false-pass the regime proof the
-        // way a global-counter diff could.
-        require(eng.evidence.acyclicResolveServed.get() > 0L,
-          "zero-cycle row did not take the acyclic re-resolution path")
-        d // routing is eager: the rows sit in d's LocalRelation, hop-ordered
+        // Path extraction is the driver walk at this cardinality, as in
+        // gtfs_routing_distributed: the row exists to prove the
+        // DISTRIBUTED fixpoint's acyclic repair serves the route.
+        closing(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
+            cappedCsrMaxEdges = 0L)) { eng =>
+          val d = eng.routing("2024-01-18", 1.0, "13:50:00", "Start", "End")
+          // SESSION-LOCAL evidence (r19, r18 verdict #2): only this
+          // engine's calls advance its evidence counters, so a concurrent
+          // routing in the same JVM cannot false-pass the regime proof the
+          // way a global-counter diff could.
+          require(eng.evidence.acyclicResolveServed.get() > 0L,
+            "zero-cycle row did not take the acyclic re-resolution path")
+          d // routing is eager: the rows sit in d's LocalRelation, hop-ordered
+        }
       },
       // Golden: Start --TA--> Mid0 (arr 14:20), change to TB 14:25, ride
       // the BACKWARD edge to Mid1 (arr 14:05 — the dirty row), zero-dwell
@@ -212,10 +223,10 @@ object GraphQueries {
     // already pinned by CanonicalTieSpec's forced-TransitSssp parity test
     // plus the harness twins (GtfsEngineSpec, tools.TwinDiff).
     Q("gtfs_routing_ties", "G2,G6,J8",
-      (s, _) => new graft.api.RoutingEngine(
+      (s, _) => closing(new graft.api.RoutingEngine(
           graft.etl.SyntheticGtfs.grid(s, rows = 6, cols = 6, tripsPerRoute = 3,
-            directions = 2))
-        .routing("2024-01-18", 1.0, "06:00:00", "Stop 1/1", "Stop 4/4"),
+            directions = 2)))(
+        _.routing("2024-01-18", 1.0, "06:00:00", "Stop 1/1", "Stop 4/4")),
       // Grid coordinates are written ARITHMETICALLY (44.5 + r*0.0023,
       // 10.8 + c*0.01) so DuckDB reproduces the generator's exact IEEE
       // doubles instead of re-parsing a decimal rendering. The pinned
@@ -272,11 +283,10 @@ object GraphQueries {
             g, table, s"$dirP/bucketed", buckets = 4)
           val day = java.sql.Date.valueOf("2024-01-18")
           val tables = graft.etl.GtfsWarehouse.loadTablesBucketed(s, table, dirP.toString, day)
-          // the 5-row itinerary is materialized eagerly (lineage severed)
+          // routing is eager: the 5-row itinerary sits in a LocalRelation
           // BEFORE the warehouse dir is deleted underneath the lazy scan
-          new graft.api.RoutingEngine(tables)
-            .routing("2024-01-18", 1.0, "14:00:00", "Alpha", "Epsilon")
-            .localCheckpoint(true)
+          closing(new graft.api.RoutingEngine(tables))(
+            _.routing("2024-01-18", 1.0, "14:00:00", "Alpha", "Epsilon"))
         } finally {
           s.sql(s"DROP TABLE IF EXISTS $table")
           graft.etl.GtfsWarehouse.deleteRecursively(dirP)
@@ -308,9 +318,9 @@ object GraphQueries {
     // (main.py:140) and the (final_time, cost+walks) ranking (main.py:158)
     // carry non-zero walk terms too. Literal-VALUES golden.
     Q("gtfs_point_routing_golden", "P3,P4,P6,O2,G1,G2",
-      (s, _) => graft.api.DemoGtfs.engine(s)
-        .routingBetweenTwoPoints("2024-01-18", 44.5993, 10.9000, 44.6401, 10.9201,
-          Seq("Alpha"), Seq("Epsilon"), 1.0, "14:00:00"),
+      (s, _) => closing(graft.api.DemoGtfs.engine(s))(
+        _.routingBetweenTwoPoints("2024-01-18", 44.5993, 10.9000, 44.6401, 10.9201,
+          Seq("Alpha"), Seq("Epsilon"), 1.0, "14:00:00")),
       Some("""SELECT hop, trip, departure, line, starting_stop_name, starting_stop_id,
              | CAST(start_lat AS DOUBLE) AS start_lat, CAST(start_lon AS DOUBLE) AS start_lon,
              | next_trip, next_stop, next_stop_id,
@@ -332,8 +342,10 @@ object GraphQueries {
         import s.implicits._
         val eng = graft.api.DemoGtfs.engine(s)
         val fw = graft.api.DemoGtfs.footwayEngine(s)
-        val j = eng.journey("2024-01-18", 44.5998, 10.9000, 44.6400, 10.9200,
-          speed = 1.0, time = "14:00:00", footway = Some(fw)).get
+        val j =
+          try eng.journey("2024-01-18", 44.5998, 10.9000, 44.6400, 10.9200,
+            speed = 1.0, time = "14:00:00", footway = Some(fw)).get
+          finally { eng.close(); fw.unpersist() }
         Seq((j.changes, math.round(j.startWalkMeters * 100) / 100.0,
           math.round(j.endWalkMeters * 100) / 100.0,
           math.round(j.totalSeconds * 100) / 100.0))
@@ -389,8 +401,8 @@ object GraphQueries {
     // S1-analog near-stop spatial search on the demo network (F1+P8).
     // Literal-VALUES golden oracle (see gtfs_routing_golden).
     Q("gtfs_near_stops", "F1,P8,A3",
-      (s, _) => graft.api.DemoGtfs.engine(s)
-        .findNearStops("2024-01-18", 44.6200, 10.9000, 300.0).orderBy("stop_name"),
+      (s, _) => closing(graft.api.DemoGtfs.engine(s))(
+        _.findNearStops("2024-01-18", 44.6200, 10.9000, 300.0).orderBy("stop_name")),
       Some("""SELECT * FROM (VALUES ('Gamma'), ('Gamma Due')) AS t(stop_name)
              |ORDER BY stop_name""".stripMargin)),
 
@@ -401,13 +413,15 @@ object GraphQueries {
       (s, _) => {
         import s.implicits._
         val fw = graft.api.DemoGtfs.footwayEngine(s)
-        val rows = Seq(
-          ("F1", "SE", fw.walkingDistance("F1", "SE")),
-          ("F1", "SB", fw.walkingDistance("F1", "SB")),
-          ("F4", "SB", fw.walkingDistance("F4", "SB")),
-          ("F1", "SD2", fw.walkingDistance("F1", "SD2")))
-          .map { case (a, b, d) =>
-            (a, b, if (d.isInfinite) None else Some(math.round(d * 100) / 100.0)) }
+        val dists =
+          try Seq(
+            ("F1", "SE", fw.walkingDistance("F1", "SE")),
+            ("F1", "SB", fw.walkingDistance("F1", "SB")),
+            ("F4", "SB", fw.walkingDistance("F4", "SB")),
+            ("F1", "SD2", fw.walkingDistance("F1", "SD2")))
+          finally fw.unpersist()
+        val rows = dists.map { case (a, b, d) =>
+          (a, b, if (d.isInfinite) None else Some(math.round(d * 100) / 100.0)) }
         rows.toDF("from_footnode", "to_stop", "meters").orderBy("from_footnode", "to_stop")
       },
       // literal-VALUES golden oracle: FootwaySpec derives the same numbers
@@ -422,7 +436,7 @@ object GraphQueries {
     Q("gtfs_betweenness", "G3",
       // through the api method (r16) so the public surface is what the
       // oracle pins
-      (s, _) => graft.api.DemoGtfs.engine(s).betweenness("2024-01-18"),
+      (s, _) => closing(graft.api.DemoGtfs.engine(s))(e => collected(e.betweenness("2024-01-18"))),
       // literal-VALUES golden oracle (exact Brandes on the 16-node demo
       // projection — scores are exact halves, safe as double literals)
       Some("""SELECT stop_name, dep_secs, CAST(lat AS DOUBLE) AS lat,
@@ -445,8 +459,8 @@ object GraphQueries {
       // through the api mirror (r16, r15 verdict #7): the windowed rung is
       // user-reachable, and the oracle pins the public surface — 14:40
       // cap, a proper sub-window of the demo day
-      (s, _) => graft.api.DemoGtfs.engine(s)
-        .betweennessWindow("2024-01-18", "14:40:00"),
+      (s, _) => closing(graft.api.DemoGtfs.engine(s))(e =>
+        collected(e.betweennessWindow("2024-01-18", "14:40:00"))),
       // literal-VALUES golden oracle (exact Brandes over the 8 stoptimes
       // departing ≤ 14:40 — BetweennessSpec pins the in-heap rung ≡
       // level-sync on this capped subgraph)

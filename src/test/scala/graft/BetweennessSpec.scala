@@ -130,60 +130,45 @@ class BetweennessSpec extends SparkSpec {
   }
 
   test("capped-budget in-heap rung equals level-sync above the broadcast bound (r15)") {
-    // Injecting a broadcast bound of 1 (ofProjectionImpl's defaultCsrBound
-    // — a per-call parameter since r16, not a mutated global) puts the
-    // 18-edge fixture ABOVE the broadcast-CSR bound at the DEFAULT
-    // threshold; the rung (budget = TransitSssp.cappedCsrMaxEdges, engaged
-    // only from the None default — an explicit caller threshold binds the
-    // driver collect exactly) must collect and sweep in-heap with scores
-    // identical to the default CSR run AND to forced level-sync, and
-    // zeroing the budget knob must restore pure level-sync (the 100 TB
-    // control). An explicit sub-default threshold must NOT escalate: it
-    // runs level-sync above its own bound (same scores — pinned here so
-    // the path executes under a spec).
+    // The default (None) budget widens the broadcast bound to the
+    // PROJECTION's capped-CSR budget; an explicit threshold binds the
+    // driver collect exactly and Some(x ≤ 0) forces level-sync. An engine
+    // built with cappedCsrMaxEdges = 0 (driver CSR disabled) keeps the
+    // plain broadcast bound. Every budget must give the same scores on
+    // the fixture, whichever branch it selects.
     import graft.graph.TransitSssp
-    val g = DemoGtfs.engine(spark).projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[String]("stop_name"),
         r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
       .sortBy(t => (t._1, t._2, t._3)).toSeq
-    def viaBound(bound: Long,
-        budget: Long = TransitSssp.cappedCsrMaxEdges) =
-      rows(Betweenness.ofProjectionImpl(g,
-        sources = None, seed = 42L, localThreshold = None,
-        clockCap = Double.PositiveInfinity,
-        defaultCsrBound = bound, cappedInHeapBudget = Some(budget)))
-    val viaDefault = rows(Betweenness.ofProjection(g))
-    val viaRung = viaBound(1L)
-    assert(viaRung == viaDefault,
-      "capped-budget in-heap betweenness diverged from the CSR regime")
-    // zeroed-budget control per call (r18 — no companion mutation)
-    val viaControl = viaBound(1L, budget = 0L)
-    assert(viaControl == viaDefault,
-      "budget-zeroed control (level-sync) diverged")
-    // an explicit bound equal to the production default must ALSO bind
-    // exactly (r16 — the r15 value-equality sentinel could not tell them
-    // apart); on this tiny fixture both run the CSR branch, same rows
-    val viaExplicitEqDefault = rows(Betweenness.ofProjection(g,
-      localThreshold = Some(Betweenness.CsrBrandesMaxEdges)))
-    assert(viaExplicitEqDefault == viaDefault)
-    val viaExplicit = rows(Betweenness.ofProjection(g, localThreshold = Some(1L)))
-    assert(viaExplicit == viaDefault,
-      "explicit-threshold level-sync diverged")
-    // r19 (r18 ADVICE): the rung's DEFAULT budget comes from the
-    // PROJECTION, so an engine built with cappedCsrMaxEdges = 0 (driver
-    // CSR disabled) disables the betweenness driver-collect rung too —
-    // under a tiny defaultCsrBound the None budget resolves to 0 and the
-    // call runs level-sync, same scores.
-    val gNoCsr = new graft.api.RoutingEngine(
-      graft.api.DemoGtfs.tables(spark), cappedCsrMaxEdges = 0L)
-      .projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-    val viaProjectionDefault = rows(Betweenness.ofProjectionImpl(gNoCsr,
-      sources = None, seed = 42L, localThreshold = None,
-      clockCap = Double.PositiveInfinity,
-      defaultCsrBound = 1L))
-    assert(viaProjectionDefault == viaDefault,
-      "projection-default (disabled) budget diverged from level-sync")
+    val day = java.sql.Date.valueOf("2024-01-18")
+    val eng = DemoGtfs.engine(spark)
+    val engNoCsr = new graft.api.RoutingEngine(DemoGtfs.tables(spark),
+      cappedCsrMaxEdges = 0L)
+    try {
+      val g = eng.projected(day, 1.0)
+      val gNoCsr = engNoCsr.projected(day, 1.0)
+      assert(Betweenness.inHeapBudget(g, None) == TransitSssp.cappedCsrMaxEdges)
+      assert(TransitSssp.cappedCsrMaxEdges == 6L * 1024 * 1024)
+      assert(Betweenness.inHeapBudget(gNoCsr, None) == Betweenness.CsrBrandesMaxEdges)
+      assert(Betweenness.CsrBrandesMaxEdges == 2000000L)
+      assert(Betweenness.inHeapBudget(g, Some(1L)) == 1L)
+      assert(Betweenness.inHeapBudget(g, Some(0L)) == 0L)
+      val viaDefault = rows(Betweenness.ofProjection(g))
+      assert(rows(Betweenness.ofProjection(g, localThreshold = Some(0L))) == viaDefault,
+        "forced level-sync diverged from the default budget")
+      assert(rows(Betweenness.ofProjection(g, localThreshold = Some(1L))) == viaDefault,
+        "explicit-threshold level-sync diverged")
+      // an explicit bound equal to the production default binds exactly;
+      // on this tiny fixture both run the CSR branch, same rows
+      assert(rows(Betweenness.ofProjection(g,
+        localThreshold = Some(Betweenness.CsrBrandesMaxEdges))) == viaDefault)
+      assert(rows(Betweenness.ofProjection(gNoCsr)) == viaDefault,
+        "projection-default (disabled) budget diverged")
+    } finally {
+      eng.close()
+      engNoCsr.close()
+    }
   }
 
   test("windowed transit on a dep-dirty feed keeps the exact edge-list branch (r15 review)") {

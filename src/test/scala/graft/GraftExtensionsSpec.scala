@@ -79,6 +79,20 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(spark.sql("SELECT image_dims(encode('junk', 'UTF-8'))").head.isNullAt(0))
   }
 
+  test("one SQL surface: literal-only arguments are checked, lang_id is registered") {
+    // k must fold to an Int at analysis time; a column k is rejected by the
+    // same check every literal-argument kernel uses
+    val err = intercept[Exception] {
+      spark.sql("SELECT minhash_signature(s, k) FROM VALUES (array('x'), 4) AS t(s, k)")
+        .collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(_.contains(
+      "minhash_signature: k must be a foldable integer expression")), msgs.mkString(" | "))
+    assert(spark.sql("SELECT lang_id(array('the','cat','and','dog'))").head.getString(0) == "en")
+  }
+
   test("extension class wires the same triples as register()") {
     // the SparkSessionExtensions path can't attach to a running session;
     // prove the class applies cleanly and carries the full set

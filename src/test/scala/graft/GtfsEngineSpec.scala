@@ -126,13 +126,30 @@ class GtfsEngineSpec extends SparkSpec {
   test("routing through the forced-distributed branch equals the local branch") {
     // same golden query, but the engine is constructed with localThreshold 0,
     // forcing the distributed branch: TransitSssp trip-collapse rounds +
-    // pointer-doubling path extraction
+    // distributed path extraction
     val engD = new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark),
       ssspLocalThreshold = 0L)
     val segD = engD.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect()
     val segL = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect()
     assert(segD.toSeq == segL.toSeq)
     assert(segD.length == 5)
+  }
+
+  test("close() releases every persistent RDD a distributed-regime route added") {
+    // the projection's TransitSssp pins (trip prefix, CHANGE slice, capped
+    // slices) are local checkpoints, which no Dataset cache clear frees
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val engD = new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark),
+      ssspLocalThreshold = 0L)
+    val seg = engD.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect()
+    assert(seg.length == 5)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.nonEmpty, "the route persisted nothing: the check is vacuous")
+    engD.close()
+    val left = added.intersect(spark.sparkContext.getPersistentRDDs.keySet)
+    assert(left.isEmpty, s"close() left persistent RDDs ${left.toSeq.sorted}: " +
+      left.toSeq.sorted.map(spark.sparkContext.getPersistentRDDs(_).toDebugString
+        .linesIterator.next()).mkString("; "))
   }
 
   test("routing through the forced capped-CSR regime equals distributed and local") {

@@ -37,6 +37,28 @@ class RuntimeSpec extends SparkSpec {
     assert(Runtime.retainedCount == 0)
   }
 
+  test("demo gtfs catalog rows leave no persistent RDD behind") {
+    // Each row builds its own engine; a row that does not close it leaves
+    // the projection caches (and, in the distributed regime, TransitSssp's
+    // checkpoint pins) for later work in the session to be served from.
+    val names = Seq("gtfs_routing_golden", "gtfs_routing_distributed",
+      "gtfs_routing_zero_cycle", "gtfs_routing_ties", "gtfs_routing_bucketed",
+      "gtfs_point_routing_golden", "gtfs_journey_golden", "gtfs_near_stops",
+      "gtfs_footway_distances", "gtfs_betweenness", "gtfs_betweenness_windowed")
+    val rows = queries.Catalog.all.filter(q => names.contains(q.name))
+    assert(rows.map(_.name).sorted == names.sorted)
+    val sc = spark.sparkContext
+    rows.foreach { q =>
+      val before = sc.getPersistentRDDs.keySet
+      // the demo rows build their own feeds and read no sf tables
+      assert(q.run(spark, "").collect().nonEmpty,
+        s"${q.name} returned no rows")
+      val left = (sc.getPersistentRDDs.keySet -- before).toSeq.sorted
+      assert(left.isEmpty, s"${q.name} left persistent RDDs: " +
+        left.map(sc.getPersistentRDDs(_).name).mkString(", "))
+    }
+  }
+
   test("contamination tool's byte-string parse matches Spark's size-config forms (r19)") {
     import tools.TimeContamination.parseByteString
     // the forms spark.conf.get actually returns for size configs

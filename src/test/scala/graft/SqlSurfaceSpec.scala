@@ -2,18 +2,17 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 import graft.operators.SkewJoin
 
 class SqlSurfaceSpec extends SparkSpec {
   import spark.implicits._
 
   test("registered SQL functions match the Column API") {
-    GraftFunctions.registerAll(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql(
-      """SELECT haversine_m(48.8530, 2.3499, 51.5007, -0.1246) AS d,
+      """SELECT haversine_meters(48.8530, 2.3499, 51.5007, -0.1246) AS d,
         |       seconds_since_midnight('25:10:09') AS s,
-        |       simhash64(array('a','b','c')) AS sh,
+        |       simhash64_tokens(array('a','b','c')) AS sh,
         |       dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp,
         |       jaccard_sorted(array(1L,2L,3L), array(2L,3L,4L)) AS j,
         |       lang_id(array('the','cat','and','dog')) AS lang

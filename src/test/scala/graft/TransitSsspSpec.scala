@@ -106,6 +106,35 @@ class TransitSsspSpec extends SparkSpec {
     } finally dist.unpersist()
   }
 
+  test("pathDistributed: a missing seed row or a pred-chain gap fails pointedly") {
+    val src = g.nodes.orderBy("id").limit(1).select("id").as[Long].head()
+    val dist = TransitSssp.run(g.nodes, changeEdges, Set(src)).cache()
+    try {
+      val far = dist.select("vertex_id", "dist").as[(Long, Double)].collect()
+        .maxBy(r => (r._2, r._1))._1
+      val path = ShortestPaths.pathDistributed(dist, src, far)
+      assert(path.size >= 3, s"fixture path too short for a gap: $path")
+      // no seed row: rejected up front, for target == source too
+      val seedless = dist.filter(col("pred") =!= -1L)
+      Seq(far, src).foreach { tgt =>
+        val e = intercept[IllegalArgumentException] {
+          ShortestPaths.pathDistributed(seedless, src, tgt)
+        }
+        assert(e.getMessage.contains("no seed row"), e.getMessage)
+      }
+      // a gap in the chain: both branches name the vertex whose pred is
+      // missing instead of returning a path that misses the source
+      val mid = path(1)
+      Seq(Long.MaxValue, 0L).foreach { bound =>
+        val e = intercept[IllegalStateException] {
+          ShortestPaths.pathDistributed(dist.filter(col("vertex_id") =!= mid), src, far,
+            driverWalkMaxRows = bound)
+        }
+        assert(e.getMessage.contains(s"pred chain gap: vertex $mid "), e.getMessage)
+      }
+    } finally dist.unpersist()
+  }
+
   test("horizon-capped staged run equals the uncapped run within the cap") {
     // The cap prunes candidate merges whose absolute cost exceeds it —
     // exact for consumers reading only dists ≤ cap (cost is monotone along
