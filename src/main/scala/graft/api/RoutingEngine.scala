@@ -40,10 +40,13 @@ private[api] final case class Seg(hop: Int, trip: String, departure: String,
   *
   * Correlated-Dijkstra decorrelation (SURVEY §7.3): the reference calls
   * `gds.shortestPath.dijkstra` once per candidate (source, target) pair
-  * (`main.py:95,143`); here every routing call runs ONE multi-source Pregel
-  * over the cached time-expanded graph, then joins the distance table
-  * against the candidate targets and takes the top-1 — identical semantics
-  * (each pair's optimal cost is still exact), N× less traversal work.
+  * (`main.py:95,143`). Here a routing call runs one search for all pairs:
+  * in the driver-side regimes (the local projection, the capped CSR) ONE
+  * labelled multi-source Dijkstra whose per-target label is the best
+  * source for that target ([[bestPath]]); in the distributed regime one
+  * multi-source TransitSssp run whose distance table is joined against the
+  * candidate targets and ranked top-1. Same answer as the per-pair
+  * searches, a fraction of the traversal work.
   */
 class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     ssspLocalThreshold: Long = ShortestPaths.LocalDijkstraMaxEdges,
@@ -211,8 +214,10 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   /** Local regime: candidate selection, SSSP, pair ranking, and segment
     * labeling all run over driver-resident state, and the segment
     * DataFrame is a LocalRelation — a warm request runs zero Spark jobs.
-    * Ranking = [[bestPath]], whose key is the same PairOrder definition the
-    * distributed branch orders by. */
+    * The SSSP is one labelled search from every candidate source, capped
+    * at the horizon ([[capAnchor]]) on the projection's arrival clock;
+    * ranking = [[bestPath]], whose key is the same PairOrder definition
+    * the distributed branch orders by. */
   private def routeLocal(g: TimeExpandedGraph, ix: graft.projection.LocalProjection,
       speed: Double, t0: Long, maxDurationHours: Int,
       src: Endpoint, tgt: Endpoint): Seq[Seg] = {
@@ -245,36 +250,89 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     if (srcRows.isEmpty) return Nil
 
     // target predicate: dep + t_walk < t0 + horizon (`main.py:91,139`)
-    val horizon = t0 + maxDurationHours * 3600L
-    val tgtRows = candidates(tgt).filter { case (r, w) => r.dep + w < horizon }
+    val horizonEnd = t0 + maxDurationHours * 3600L
+    val tgtRows = candidates(tgt).filter { case (r, w) => r.dep + w < horizonEnd }
     if (tgtRows.isEmpty) return Nil
+    val anchor = capAnchor(horizonEnd,
+      tgtRows.iterator.map { case (r, _) => math.max(r.arr, r.dep) })
 
-    // ONE multi-source SSSP replaces per-pair Dijkstras (SURVEY §7.3); the
+    // ONE labelled search replaces per-pair Dijkstras (SURVEY §7.3); the
     // per-projection handle reuses the resolved CSR across calls.
-    val run = g.sssp.runForTargets(srcRows.map(_._1.id).toSet, tgtRows.map(_._1.id).toSet)
-    def cand(rw: (NodeRec, Double)) = (rw._1.id, rw._1.dep, rw._1.arr, rw._2)
-    val path = bestPath(run, srcRows.map(cand), tgtRows.map(cand))
+    def cand(rw: (NodeRec, Double)): Cand = (rw._1.id, rw._1.dep, rw._1.arr, rw._2)
+    val srcs = srcRows.map(cand).sortBy(_._1).toIndexedSeq
+    val tgts = tgtRows.map(cand)
+    val path = g.sssp.labelled(srcs.map(s => (s._1, s._4)), tgts.iterator.map(_._1).toSet,
+        g.arrivalClock.map((_, anchor)))
+      .fold(List.empty[Long])(bestPath(_, srcs, tgts))
     if (path.size < 2) Nil else RoutingEngine.segmentRows(ix.get, path)
   }
 
+  /** Candidate stoptime of a routing call: (id, dep, arr, walk seconds). */
+  private type Cand = (Long, Long, Long, Double)
+
+  /** The clock cap both regimes search under: the horizon end, or the
+    * latest target clock when an irregular target row (arr > dep) runs
+    * past it — see routeDistributed for why the anchor sits at the
+    * targets' max(arr, dep).
+    *
+    * The local regime relaxes into a stoptime only when its ARRIVAL
+    * clock is ≤ the anchor (the capped CSR and the distributed grid cap
+    * on departure). Exactness, walking an optimal path back from a target
+    * t, whose arrival and departure are both ≤ the anchor: a PRECEDES
+    * step v → w has arr(v) ≤ dep(v) ≤ arr(w) on a monotone feed, so both
+    * clocks of v stay ≤ the anchor; a CHANGE step v → w boards w after v
+    * arrives (arr(v) + walk < dep(w)), so arr(v) ≤ the anchor whenever
+    * dep(w) is. The one hole is a CHANGE → CHANGE step, boarding w and
+    * leaving it again at once: dep(w) may then exceed the anchor and the
+    * step before it moves the clock backward. Arrival keeps a strict
+    * superset of the departure cap: a trip that arrives before the anchor
+    * but dwells past it can still be alighted, walked from and changed to
+    * the target. A negative-weight feed (non-monotone clocks) searches
+    * uncapped ([[ShortestPaths.Labels]]). */
+  private def capAnchor(horizonEnd: Long, targetClocks: Iterator[Long]): Long =
+    targetClocks.foldLeft(horizonEnd)(math.max)
+
   /** The in-heap pair ranking both driver-side regimes share (the local
-    * projection and the capped CSR): over `(id, dep, arr, walk)`
-    * candidates, the [[PairOrder.key]] minimum among the pairs whose
-    * target departs after its source and which `run` connects; that
-    * pair's path, or Nil. Iterators end to end: the capped branch passes
-    * views over up to 1M collected targets, so the |sources| × |targets|
-    * pair space is never materialized. */
-  private def bestPath(run: ShortestPaths.TargetRun,
-      srcs: Iterable[(Long, Long, Long, Double)],
-      tgts: Iterable[(Long, Long, Long, Double)]): List[Long] = {
-    val ranked = for {
-      (s, sDep, _, sw) <- srcs.iterator
-      (t, tDep, tArr, tw) <- tgts.iterator
-      // target must depart after its source (`main.py:93,141`)
-      if tDep > sDep
-      cost <- run.distance(s, t)
-    } yield (PairOrder.key(tArr, tw, cost, sw, s, t), s, t)
-    ranked.minByOption(_._1).fold(List.empty[Long]) { case (_, s, t) => run.path(s, t) }
+    * projection and the capped CSR): the [[PairOrder.key]] minimum over
+    * the (source, target) pairs whose target departs after its source and
+    * which the search connects; that pair's path, or Nil. `run` is one
+    * labelled search seeded with `srcs` (ascending ids, so seed index =
+    * position in `srcs`), so each target carries its best source already:
+    * PairOrder's primary key does not depend on the source, and its
+    * secondary keys at a fixed target are the label. One label per target
+    * replaces the |sources| × |targets| pair loop.
+    *
+    * The filter `t_dep > s_dep` (`main.py:93,141`) is not implied by the
+    * search: a stoptime that is both a source and a target labels itself
+    * (cost 0, t_dep == s_dep). A target whose winner fails the filter gets
+    * a second run of the same search, seeded only with the sources that
+    * depart before it, unless its primary key already loses to the best
+    * valid pair (no source can change it). */
+  private def bestPath(run: ShortestPaths.Labels, srcs: IndexedSeq[Cand],
+      tgts: Iterable[Cand]): List[Long] = {
+    type Key = (Double, Double, Long, Long)
+    val order = implicitly[Ordering[Key]]
+    def keyOf(lab: ShortestPaths.Labels, t: Cand): Option[(Key, Boolean)] =
+      lab.winner(t._1).map { case (i, cost) =>
+        val (s, sDep, _, sw) = srcs(i)
+        (PairOrder.key(t._3, t._4, cost, sw, s, t._1), t._2 > sDep)
+      }
+    var best: Option[(Key, ShortestPaths.Labels, Long)] = None
+    def offer(k: Key, lab: ShortestPaths.Labels, t: Long): Unit =
+      if (best.forall(b => order.lt(k, b._1))) best = Some((k, lab, t))
+    val invalid = scala.collection.mutable.ArrayBuffer.empty[(Double, Cand)]
+    tgts.foreach { t =>
+      keyOf(run, t).foreach { case (k, valid) =>
+        if (valid) offer(k, run, t._1) else invalid += ((k._1, t))
+      }
+    }
+    invalid.sortBy(_._1).foreach { case (primary, t) =>
+      if (best.forall(b => primary <= b._1._1)) {
+        val again = run.reseeded(i => srcs(i)._2 < t._2, t._1)
+        keyOf(again, t).foreach { case (k, _) => offer(k, again, t._1) }
+      }
+    }
+    best.fold(List.empty[Long]) { case (_, lab, t) => lab.path(t) }
   }
 
   /** Distributed regime: full distance table stays distributed; the path
@@ -365,18 +423,18 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
       val arr = r.getAs[Number]("t_arr")
       if (arr == null) dep else math.max(arr.longValue(), dep)
     }
-    val capAnchor = tgtLocal match {
+    val anchor = tgtLocal match {
       case Some(rows) =>
         if (rows.isEmpty) return Nil // no rankable targets
-        math.max(horizonEnd, rows.iterator.map(clockOf).max)
+        capAnchor(horizonEnd, rows.iterator.map(clockOf))
       case None =>
         val row = targets
           .agg(max(greatest(col("t_arr").cast("long"), col("t_dep").cast("long"))))
           .head()
         if (row.isNullAt(0)) return Nil // no rankable targets
-        math.max(horizonEnd, row.getLong(0))
+        capAnchor(horizonEnd, Iterator.single(row.getLong(0)))
     }
-    val costCap = 2.0 * ((capAnchor + 60L) - minDep).max(0L)
+    val costCap = 2.0 * ((anchor + 60L) - minDep).max(0L)
 
     // Capped-CSR regime (r14): when the horizon-bounded subgraph fits the
     // driver budget (TransitSssp.runForTargetsCapped's gates), SSSP,
@@ -384,18 +442,19 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     // shape routeLocal runs, over the clock-capped subgraph instead of the
     // whole projection. On cadence-bounded feeds (hubs) this replaces
     // hundreds of per-CHANGE-depth Spark rounds with ns/edge relaxation.
-    // Ranking = bestPath, routeLocal's own (PairOrder.key inside).
+    // One labelled search, ranked by bestPath, routeLocal's own
+    // (PairOrder.key inside); the subgraph is already clock-capped.
     // Null-arr targets keep the staged flow: the distributed ranking
     // orders their null (t_arr + t_walk) key nulls-first, a behavior the
     // driver-side key can't express without duplicating the formula —
     // and such rows only occur on non-timepoint-blank feeds.
+    val srcs = srcLocal.map(s => (s.getLong(0), s.getAs[Number]("s_dep").longValue(),
+      0L, s.getAs[Double]("s_walk"))).sortBy(_._1).toIndexedSeq
     for (tgtRows <- tgtLocal
            if tgtRows.forall(r => !r.isNullAt(r.fieldIndex("t_arr")));
-         run <- g.transit.runForTargetsCapped(srcIds,
-           tgtRows.iterator.map(_.getAs[Long]("t_id")).toSet, capAnchor.toDouble)) {
-      val path = bestPath(run,
-        srcLocal.view.map(s => (s.getLong(0), s.getAs[Number]("s_dep").longValue(),
-          0L, s.getAs[Double]("s_walk"))),
+         run <- g.transit.runForTargetsCapped(srcs.map(s => (s._1, s._4)),
+           tgtRows.iterator.map(_.getAs[Long]("t_id")).toSet, anchor.toDouble)) {
+      val path = bestPath(run, srcs,
         tgtRows.view.map(t => (t.getAs[Long]("t_id"), t.getAs[Number]("t_dep").longValue(),
           t.getAs[Number]("t_arr").longValue(), t.getAs[Double]("t_walk"))))
       return if (path.size < 2) Nil else segments(g, path)
@@ -404,7 +463,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     val sc = spark.sparkContext
     sc.setJobDescription("route: sssp converge")
     val staged = g.transit.staged(srcIds, costCap = costCap,
-      clockCap = capAnchor.toDouble)
+      clockCap = anchor.toDouble)
     val dist = staged.distances.cache()
     var predOne: DataFrame = null
     // try/finally, not happy-path cleanup: a throw (or early return) out of

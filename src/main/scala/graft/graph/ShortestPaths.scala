@@ -292,37 +292,40 @@ object ShortestPaths {
 
     def isLocal: Boolean = localCsr.isDefined
 
-    /** Distances restricted to `targets`. The local path computes the
-      * per-source arrays once and emits ONLY target rows — materializing
-      * the full (vertex × source) table through toDF was the routing hot
-      * path's dominant cost at Modena scale (~1M rows per call). The
-      * returned [[TargetRun]] owns THIS call's (dist, pred) state, so
-      * concurrent routing calls cannot observe each other's paths. */
+    /** Distances restricted to `targets`, per source. The local path runs
+      * one target-bounded search per source and emits ONLY target rows —
+      * materializing the full (vertex × source) table through toDF was the
+      * routing hot path's dominant cost at Modena scale (~1M rows per
+      * call). The returned [[TargetRun]] owns THIS call's (dist, pred)
+      * state, so concurrent calls cannot observe each other's paths. The
+      * router does not come here: it ranks one [[labelled]] search. */
     def runForTargets(sources: Set[Long], targets: Set[Long]): TargetRun = localCsr match {
-      case Some(g) =>
-        // Early-terminated per-source Dijkstras: final distances are
-        // guaranteed for the REQUESTED targets (and every vertex on their
-        // shortest-path pred chains) — exactly what TargetRun exposes.
-        // A graph with an unreachable requested target degrades to the
-        // full exploration (its settle never arrives), never to a wrong
-        // answer.
-        runTargetsOnCsr(spark, g, sources, targets)
+      case Some(g) => runTargetsOnCsr(spark, g, sources, targets)
       case None =>
         val df = run(sources).filter(col("vertex_id").isin(targets.toSeq: _*))
         new TargetRun(() => df, None, Map.empty)
     }
 
+    /** Sorted vertex ids of the local CSR — the alignment of the per-vertex
+      * clock a caller hands [[labelled]]; None above the threshold. */
+    private[graft] def localIds: Option[Array[Long]] = localCsr.map(_.ids)
+
+    /** One labelled multi-source search (see [[Labels]]) on the local CSR,
+      * bounded by `targets`; None above the threshold. `cap =
+      * Some((clock, anchor))` relaxes into a vertex only when its clock
+      * (aligned to [[localIds]]) is ≤ anchor. */
+    private[graft] def labelled(seeds: IndexedSeq[(Long, Double)], targets: Set[Long],
+        cap: Option[(Array[Long], Long)]): Option[Labels] =
+      localCsr.map(labels(_, seeds, targets, cap))
   }
 
-  /** Early-terminated multi-source Dijkstra over an in-heap CSR, emitting
-    * the [[Sssp.runForTargets]] contract (target-restricted distance frame
-    * + driver-resident path state). Shared by the local regime and the
-    * clock-capped CSR regime ([[TransitSssp.runForTargetsCapped]]). The
-    * distance FRAME is built lazily on first access (r14 ADVICE): the
-    * capped routing caller ranks and walks paths through the in-heap
-    * state only, so up-to-1M collected targets never pay the boxed
-    * (source × target) tuple builder or its LocalRelation. */
-  private[graph] def runTargetsOnCsr(spark: SparkSession, g: Csr,
+  /** Per-source target-bounded searches over an in-heap CSR, emitting the
+    * [[Sssp.runForTargets]] contract: a target-restricted distance frame
+    * plus driver-resident path state. The distance FRAME is built lazily
+    * on first access (r14 ADVICE): callers that read only
+    * `distance`/`path` never pay the boxed (source × target) tuple builder
+    * or its LocalRelation. */
+  private def runTargetsOnCsr(spark: SparkSession, g: Csr,
       sources: Set[Long], targets: Set[Long]): TargetRun = {
     val state = computeOnCsr(g, sources, Some(targets))
     new TargetRun(() => {
@@ -339,36 +342,85 @@ object ShortestPaths {
     }, Some(g), state)
   }
 
+  /** One search per source, in sorted order on the calling thread: the
+    * [[search]] kernel with that source as its only seed (walk 0), whose
+    * labels are then plain (dist, pred). `targets` bounds each search
+    * (see [[dijkstraCsr]]); None runs it to exhaustion. A source absent
+    * from the CSR has no entry. */
   private def computeOnCsr(g: Csr, sources: Set[Long],
       targets: Option[Set[Long]]): Map[Long, (Array[Double], Array[Int])] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // Target-bounded runs stop each source's Dijkstra once every in-graph
-    // target is SETTLED (first-popped — its distance is final by the
-    // Dijkstra invariant); the flag array is read-only and shared across
-    // the concurrent per-source searches. Negative-weight graphs take the
-    // label-correcting fixpoint instead (spfaCsr) — no settle invariant,
-    // so no early stop; the full fixpoint is final for every vertex.
-    val stop = targets.map { ts =>
-      val flags = new Array[Boolean](g.n)
-      var c = 0
-      ts.foreach { t =>
-        val ti = g.indexOf(t)
-        if (ti >= 0 && !flags(ti)) { flags(ti) = true; c += 1 }
+    val stop = targets.map(targetFlags(g, _))
+    sources.toSeq.sorted.flatMap { src =>
+      val si = g.indexOf(src)
+      if (si < 0) None
+      else {
+        val l = search(g, Array(si), Array(0.0), stop, None)
+        Some(src -> ((l.cost, l.pred)))
       }
-      (flags, c)
-    }
-    val futures = sources.toSeq.sorted.map { src =>
-      src -> Future {
-        val si = g.indexOf(src)
-        if (si < 0) None
-        else if (g.hasNegative) Some(acyclicPreds(spfaCsr(g, si, _)))
-        else Some(acyclicPreds(dijkstraCsr(g, si, stop, _)))
-      }
-    }
-    futures.flatMap { case (s, f) => Await.result(f, Duration.Inf).map(s -> _) }.toMap
+    }.toMap
   }
+
+  /** The target-settle stop of a bounded search: flags over the CSR's dense
+    * ids and the count of distinct in-graph targets. */
+  private def targetFlags(g: Csr, targets: Iterable[Long]): (Array[Boolean], Int) = {
+    val flags = new Array[Boolean](g.n)
+    var c = 0
+    targets.foreach { t =>
+      val ti = g.indexOf(t)
+      if (ti >= 0 && !flags(ti)) { flags(ti) = true; c += 1 }
+    }
+    (flags, c)
+  }
+
+  /** One labelled multi-source search over an in-heap CSR, bounded by
+    * `targets` — the routing kernel of both driver-side regimes (the local
+    * projection and the clock-capped CSR). `seeds` must be in strictly
+    * ascending id order: a seed's index is its rank. */
+  private[graph] def labels(g: Csr, seeds: IndexedSeq[(Long, Double)],
+      targets: Set[Long], cap: Option[(Array[Long], Long)]): Labels = {
+    require(seeds.indices.drop(1).forall(i => seeds(i - 1)._1 < seeds(i)._1),
+      "labelled search: seeds must be in strictly ascending id order")
+    cap.foreach { case (clock, _) => require(clock.length == g.n,
+      s"labelled search: clock has ${clock.length} entries for ${g.n} vertices") }
+    new Labels(g, seeds.map(s => g.indexOf(s._1)).toArray, seeds.map(_._2).toArray,
+      targetFlags(g, targets), cap)
+  }
+
+  /** Per-vertex output of one kernel run over the CSR's dense ids: the
+    * winning seed's index (the seed count when none), the cost accumulated
+    * from that seed (+∞ when none), and the canonical predecessor (−1 at a
+    * seed). */
+  private final class Labelling(val seed: Array[Int], val cost: Array[Double],
+      val pred: Array[Int])
+
+  /** The label order: (cost + w(seed), seed index), then cost. Within one
+    * seed the key is a monotone function of the cost, so the order there
+    * IS the cost order and a one-seed run is plain Dijkstra. `w` holds
+    * every seed's walk plus a trailing 0 for the unreached index, so the
+    * key is recomputed — bit-identically — instead of stored. */
+  private def labelBelow(w: Array[Double], c1: Double, s1: Int, c2: Double, s2: Int): Boolean =
+    if (s1 == s2) c1 < c2
+    else {
+      val k1 = c1 + w(s1); val k2 = c2 + w(s2)
+      k1 < k2 || (k1 == k2 && s1 < s2)
+    }
+
+  /** Fresh kernel state for `walk.length` seeds: the extended walk array
+    * ([[labelBelow]]) and every vertex unreached. */
+  private def unreached(n: Int, walk: Array[Double]): (Array[Double], Labelling) =
+    (java.util.Arrays.copyOf(walk, walk.length + 1), new Labelling(
+      Array.fill(n)(walk.length), Array.fill(n)(Double.PositiveInfinity), Array.fill(n)(-1)))
+
+  /** The one entry every in-heap search goes through: settle-once
+    * [[dijkstraCsr]], or the exact label-correcting [[spfaCsr]] on graphs
+    * with a negative weight (no settle invariant, so neither the target
+    * stop nor the clock cap applies there), both under the zero-total-cycle
+    * pred repair. `seeds(i)` is seed i's CSR index, −1 for a seed absent
+    * from the CSR or left out of this run; `walk(i)` its walk seconds. */
+  private def search(g: Csr, seeds: Array[Int], walk: Array[Double],
+      stop: Option[(Array[Boolean], Int)], cap: Option[(Array[Long], Long)]): Labelling =
+    if (g.hasNegative) acyclicPreds(spfaCsr(g, seeds, walk, _))
+    else acyclicPreds(dijkstraCsr(g, seeds, walk, stop, cap, _))
 
   /** Guard against the zero-total-cycle pathology (r15, found by the
     * dirty-hub measurement): on a feed whose optimal-path structure
@@ -379,17 +431,16 @@ object ShortestPaths {
     * minima themselves form a cycle, and every regime's path walk would
     * spin on it. Detect in O(V) (color-stamped chain walks) and, only
     * then, rerun the SAME search with STRICT-improvement pred updates
-    * only: distances are unchanged (tie-breaks never affect distance) and
-    * the strict pred graph is provably acyclic — setting pred(u)=v
-    * strictly lowers dist(u), so a pred cycle would telescope to a
-    * negative-total cycle, which the run would have rejected. The strict
-    * tree is deterministic (fixed relaxation order per regime) but not
-    * canonical across regimes; acceptable because it engages only on
-    * feeds where the canonical rule HAS no tree. */
-  private def acyclicPreds(
-      run: Boolean => (Array[Double], Array[Int])): (Array[Double], Array[Int]) = {
+    * only: labels are unchanged (tie-breaks never affect them) and the
+    * strict pred graph is provably acyclic — setting pred(u)=v strictly
+    * lowers u's label, so a pred cycle would telescope to a negative-total
+    * cycle, which the run would have rejected. The strict tree is
+    * deterministic (fixed relaxation order per regime) but not canonical
+    * across regimes; acceptable because it engages only on feeds where the
+    * canonical rule HAS no tree. */
+  private def acyclicPreds(run: Boolean => Labelling): Labelling = {
     val first = run(true)
-    if (!predHasCycle(first._2)) first else run(false)
+    if (!predHasCycle(first.pred)) first else run(false)
   }
 
   private def predHasCycle(pred: Array[Int]): Boolean = {
@@ -409,6 +460,22 @@ object ShortestPaths {
     false
   }
 
+  /** Pred chain of CSR index `ti` as global ids, seed first. */
+  private def walkPreds(g: Csr, pred: Array[Int], ti: Int): List[Long] = {
+    var acc: List[Long] = Nil
+    var v = ti
+    var steps = 0
+    while (v >= 0) {
+      // acyclicPreds makes this unreachable; keep the walk from ever
+      // spinning if a future pred producer regresses
+      steps += 1
+      if (steps > g.n) throw new IllegalStateException(
+        "predecessor cycle in path walk (zero-total-cycle feed?)")
+      acc = g.ids(v) :: acc; v = pred(v)
+    }
+    acc
+  }
+
   /** One runForTargets call's result: the target-restricted distance frame
     * plus, in the local regime, a path reconstructor over the call's own
     * immutable (dist, pred) arrays. Distributed-regime callers reconstruct
@@ -420,8 +487,7 @@ object ShortestPaths {
       state: Map[Long, (Array[Double], Array[Int])]) {
 
     /** Target-restricted distance frame, built on FIRST ACCESS: callers
-      * on the in-heap fast path (capped routing) read only
-      * `distance`/`path` and never pay the frame's construction. */
+      * that read only `distance`/`path` never pay its construction. */
     lazy val distances: DataFrame = distancesThunk()
 
     /** True when this run holds driver-resident state (the local regime) —
@@ -444,23 +510,54 @@ object ShortestPaths {
       (csr, state.get(source)) match {
         case (Some(g), Some((dist, pred))) =>
           val ti = g.indexOf(target)
-          if (ti < 0 || dist(ti).isInfinity) Nil
-          else {
-            var acc: List[Long] = Nil
-            var v = ti
-            var steps = 0
-            while (v >= 0) {
-              // acyclicPreds makes this unreachable; keep the walk from
-              // ever spinning if a future pred producer regresses
-              steps += 1
-              if (steps > g.n) throw new IllegalStateException(
-                "predecessor cycle in path walk (zero-total-cycle feed?)")
-              acc = g.ids(v) :: acc; v = pred(v)
-            }
-            acc
-          }
+          if (ti < 0 || dist(ti).isInfinity) Nil else walkPreds(g, pred, ti)
         case _ => Nil
       }
+  }
+
+  /** One labelled multi-source search over an in-heap CSR — the routing
+    * kernel. Seed i (ids ascending, so i is the seed's rank in id order)
+    * starts at cost 0 with walk seconds w_i. A vertex's label is
+    * (cost + w_i, i), compared lexicographically, and each vertex keeps
+    * the least label over all seeds. The cost accumulates from 0 along the
+    * path exactly as a one-seed search's does — w_i enters only the
+    * comparison key — so a one-seed run IS the single-source search, and a
+    * winner's cost is bit-identical to its own search's.
+    *
+    * For the router this is every (source, target) pair's minimum in one
+    * search: at a fixed target, the pair order's secondary keys are
+    * min over sources of (cost + w, source id). Every vertex on the
+    * winner's path carries the winner's label (a lesser label at an
+    * intermediate vertex would carry on to the target), so the canonical
+    * smaller-pred tie-break picks among the same preds a one-seed search
+    * of the winner sees. Exact in real arithmetic; in floating point, two
+    * sources whose cost + w differ only in the last ulp could compare
+    * otherwise than the router's full key does.
+    *
+    * The search stops once every in-graph target is settled (see
+    * [[dijkstraCsr]]); read only target rows and their paths. */
+  final class Labels private[graph] (g: Csr, seeds: Array[Int], walk: Array[Double],
+      stop: (Array[Boolean], Int), cap: Option[(Array[Long], Long)]) {
+    private val l = search(g, seeds, walk, Some(stop), cap)
+
+    /** (seed index, cost from that seed) of `target`'s label; None when the
+      * CSR does not hold it or no seed reaches it. */
+    def winner(target: Long): Option[(Int, Double)] = {
+      val ti = g.indexOf(target)
+      if (ti < 0 || l.cost(ti).isInfinity) None else Some((l.seed(ti), l.cost(ti)))
+    }
+
+    /** The winner's path to `target`, seed first; Nil when unreached. */
+    def path(target: Long): List[Long] = {
+      val ti = g.indexOf(target)
+      if (ti < 0 || l.cost(ti).isInfinity) Nil else walkPreds(g, l.pred, ti)
+    }
+
+    /** The same search (seed indices, walks and cap kept) from the seeds
+      * `keep` admits, bounded by `target` alone. */
+    def reseeded(keep: Int => Boolean, target: Long): Labels =
+      new Labels(g, Array.tabulate(seeds.length)(i => if (keep(i)) seeds(i) else -1),
+        walk, targetFlags(g, Seq(target)), cap)
   }
 
   /** Compressed-sparse-row image of the edge list over a dense Int vertex
@@ -471,8 +568,8 @@ object ShortestPaths {
       val targets: Array[Int], val weights: Array[Double]) {
     def n: Int = ids.length
     def indexOf(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
-    /** True when any edge weight is negative — [[computeOnCsr]] then runs
-      * the exact label-correcting fixpoint ([[spfaCsr]]) instead of
+    /** True when any edge weight is negative — [[search]] then runs the
+      * exact label-correcting fixpoint ([[spfaCsr]]) instead of
       * settle-once Dijkstra, which under-relaxes there. One O(E) scan,
       * memoized; non-negative graphs (every clean feed) pay a single
       * branch per run. */
@@ -531,94 +628,115 @@ object ShortestPaths {
     new Csr(ids, offsets, targets, weights)
   }
 
-  /** Single-source Dijkstra over the CSR: lazy-deletion binary heap on
-    * parallel primitive arrays, (dist, predIdx) out.
+  /** The labelled Dijkstra over the CSR: an indexed binary heap of
+    * vertices ordered by [[labelBelow]]. Labels only grow along an edge
+    * (weights ≥ 0 and float addition is monotone), so a popped label is
+    * final.
     *
     * `targetStop = Some((flags, count))` stops the search once `count`
-    * flagged vertices have been SETTLED (first pop, where the popped key
-    * equals the final distance — strict-improvement pushes mean exactly
-    * one heap entry carries a vertex's final distance, so the counter
-    * decrements once per target). On early stop, distances/preds are
-    * final for every settled vertex — in particular all flagged targets
-    * and their shortest-path ancestors (settled earlier by order) — while
+    * flagged vertices have been SETTLED (popped — each vertex is popped
+    * once, with its final label). On early stop, labels/preds are final
+    * for every settled vertex — in particular all flagged targets and
+    * their shortest-path ancestors (settled earlier by order) — while
     * unsettled vertices may hold tentative labels; callers must read only
-    * target rows, which is the [[Sssp.runForTargets]]/[[TargetRun]]
-    * contract. On a time-expanded day this skips the portion of the grid
-    * later than the last candidate target — the routing hot path stops at
-    * the horizon instead of flooding the rest of the service day. */
-  private def dijkstraCsr(g: Csr, srcIdx: Int,
-      targetStop: Option[(Array[Boolean], Int)],
-      canonicalTies: Boolean): (Array[Double], Array[Int]) = {
+    * target rows, which is the [[TargetRun]]/[[Labels]] contract.
+    *
+    * `cap = Some((clock, anchor))` relaxes into a vertex only when
+    * clock(v) ≤ anchor (seeds are always placed): the local regime's
+    * horizon cap, whose exactness argument is on
+    * [[graft.api.RoutingEngine]]'s `capAnchor`. A target the seeds cannot
+    * reach then floods only the horizon's share of the day instead of the
+    * rest of the service day. */
+  private def dijkstraCsr(g: Csr, seeds: Array[Int], walk: Array[Double],
+      targetStop: Option[(Array[Boolean], Int)], cap: Option[(Array[Long], Long)],
+      canonicalTies: Boolean): Labelling = {
     val n = g.n
-    val dist = Array.fill(n)(Double.PositiveInfinity)
-    val pred = Array.fill(n)(-1)
+    val (w, out) = unreached(n, walk)
+    val (seed, cost, pred) = (out.seed, out.cost, out.pred)
     val tFlags = targetStop.map(_._1).orNull
     var remaining = targetStop.map(_._2).getOrElse(0)
     val bounded = tFlags != null
-    var heapD = new Array[Double](1024)
-    var heapV = new Array[Int](1024)
+    val clock = cap.map(_._1).orNull
+    val anchor = cap.fold(Long.MaxValue)(_._2)
+    // Indexed binary heap of vertices ordered by their current labels: a
+    // relaxation sifts the vertex up in place, so each vertex is queued at
+    // most once and popped once (labels change seed as rival waves
+    // arrive; lazy deletion popped ~3 stale entries per settled vertex).
+    // pos(v): heap slot, −1 never queued, −2 settled.
+    val pos = Array.fill(n)(-1)
+    var heap = new Array[Int](1024)
     var size = 0
-    def push(d: Double, v: Int): Unit = {
-      if (size == heapD.length) {
-        heapD = java.util.Arrays.copyOf(heapD, size * 2)
-        heapV = java.util.Arrays.copyOf(heapV, size * 2)
+    def below(a: Int, b: Int): Boolean = labelBelow(w, cost(a), seed(a), cost(b), seed(b))
+    def place(v: Int, at: Int): Unit = { heap(at) = v; pos(v) = at }
+    def offer(v: Int): Unit = {
+      var i = pos(v)
+      if (i < 0) {
+        if (size == heap.length) heap = java.util.Arrays.copyOf(heap, size * 2)
+        i = size; size += 1
       }
-      var i = size; size += 1
-      while (i > 0 && heapD((i - 1) / 2) > d) {
-        heapD(i) = heapD((i - 1) / 2); heapV(i) = heapV((i - 1) / 2); i = (i - 1) / 2
-      }
-      heapD(i) = d; heapV(i) = v
+      while (i > 0 && below(v, heap((i - 1) / 2))) { place(heap((i - 1) / 2), i); i = (i - 1) / 2 }
+      place(v, i)
     }
-    dist(srcIdx) = 0.0
-    push(0.0, srcIdx)
-    // After the last target settles at `doneLevel`, keep draining heap
-    // entries AT that level: a zero-weight edge from an equal-dist vertex
+    var r = 0
+    while (r < seeds.length) {
+      val v = seeds(r)
+      if (v >= 0 && labelBelow(w, 0.0, r, cost(v), seed(v))) {
+        seed(v) = r; cost(v) = 0.0; offer(v)
+      }
+      r += 1
+    }
+    // After the last target settles with label `done`, keep draining
+    // vertices AT that label: a zero-weight edge from an equal-label vertex
     // could still lower a settled chain vertex's canonical pred. (For
-    // positive weights every optimal in-edge vertex has strictly smaller
-    // dist and settled earlier, so the canonical pred is already final.)
-    var doneLevel = Double.NegativeInfinity
-    while (size > 0 && (!bounded || remaining > 0 || heapD(0) <= doneLevel)) {
-      val popD = heapD(0); val popV = heapV(0)
+    // positive weights every optimal in-edge vertex has a strictly smaller
+    // label and settled earlier, so the canonical pred is already final.)
+    var done = -1
+    while (size > 0 && (!bounded || remaining > 0 || (done >= 0 && !below(done, heap(0))))) {
+      val v = heap(0)
+      pos(v) = -2
       size -= 1
       if (size > 0) { // sift the last leaf down from the root
-        val ld = heapD(size); val lv = heapV(size)
+        val last = heap(size)
         var i = 0
-        var done = false
-        while (!done) {
+        var sifting = true
+        while (sifting) {
           var c = 2 * i + 1
-          if (c >= size) done = true
+          if (c >= size) sifting = false
           else {
-            if (c + 1 < size && heapD(c + 1) < heapD(c)) c += 1
-            if (heapD(c) < ld) { heapD(i) = heapD(c); heapV(i) = heapV(c); i = c }
-            else done = true
+            if (c + 1 < size && below(heap(c + 1), heap(c))) c += 1
+            if (below(heap(c), last)) { place(heap(c), i); i = c } else sifting = false
           }
         }
-        heapD(i) = ld; heapV(i) = lv
+        place(last, i)
       }
-      if (popD <= dist(popV)) {
-        if (bounded && tFlags(popV)) {
-          remaining -= 1
-          if (remaining == 0) doneLevel = popD
-        }
-        var j = g.offsets(popV)
-        val end = g.offsets(popV + 1)
-        while (j < end) {
-          val u = g.targets(j)
-          val nd = popD + g.weights(j)
-          if (nd < dist(u)) { dist(u) = nd; pred(u) = popV; push(nd, u) }
-          // canonical equal-dist tie-break: smaller pred index wins (ids
+      if (bounded && tFlags(v)) {
+        remaining -= 1
+        if (remaining == 0) done = v
+      }
+      val vs = seed(v); val vc = cost(v)
+      var j = g.offsets(v)
+      val end = g.offsets(v + 1)
+      while (j < end) {
+        val u = g.targets(j)
+        if (clock == null || clock(u) <= anchor) {
+          val nc = vc + g.weights(j)
+          if (labelBelow(w, nc, vs, cost(u), seed(u))) {
+            seed(u) = vs; cost(u) = nc; pred(u) = v
+            offer(u)
+          }
+          // canonical equal-label tie-break: smaller pred index wins (ids
           // are sorted, so index order IS global-id order — the same rule
-          // TransitSssp.resolveState applies). Sources keep pred −1
-          // (popV < −1 is never true). No re-push: dist is unchanged.
+          // TransitSssp.resolveState applies). Seeds keep pred −1
+          // (v < −1 is never true). The label is unchanged, so the heap is.
           // canonicalTies=false is the acyclicPreds retry: strict
           // improvements only, whose pred graph is always a tree.
-          else if (canonicalTies && nd == dist(u) && popV < pred(u))
-            pred(u) = popV
-          j += 1
+          else if (canonicalTies && vs == seed(u) && nc == cost(u) && v < pred(u))
+            pred(u) = v
         }
+        j += 1
       }
     }
-    (dist, pred)
+    out
   }
 
   /** Label-correcting fixpoint (SPFA — Bellman–Ford with a worklist) over
@@ -628,30 +746,31 @@ object ShortestPaths {
     * regime DECLINED such feeds back to the 335 s-class distributed
     * rounds; this runs them in-heap at the same budget (r15).
     *
-    * Exactness and tie parity: the relaxation rule and the canonical
-    * equal-dist smaller-pred-index tie-break are [[dijkstraCsr]]'s,
-    * verbatim. Every distance improvement re-enqueues its vertex, so each
-    * in-neighbor v of u relaxes u at least once AFTER dist(v) is final —
-    * at the fixpoint dist is the true shortest distance and pred(u) is
-    * the MIN-INDEX optimal in-neighbor (a non-optimal tentative pred
-    * cannot survive: its equal-cost relaxation implies its final cost
-    * ties or beats, else dist(u) drops and resets it). Hence outputs are
-    * bit-identical to dijkstraCsr on non-negative inputs and to the
-    * distributed fixpoint (same canonical rule) on negative-weight ones.
+    * Exactness and tie parity: seeds, labels, the relaxation rule and the
+    * canonical equal-label smaller-pred-index tie-break are
+    * [[dijkstraCsr]]'s, verbatim; the relaxation is isotone in the label.
+    * Every label improvement re-enqueues its vertex, so each in-neighbor v
+    * of u relaxes u at least once AFTER v's label is final — at the
+    * fixpoint every label is the least one and pred(u) is the MIN-INDEX
+    * optimal in-neighbor (a non-optimal tentative pred cannot survive: its
+    * equal-label relaxation implies its final label ties or beats, else
+    * u's label drops and resets it). Hence outputs are bit-identical to
+    * dijkstraCsr on non-negative inputs and to the distributed fixpoint
+    * (same canonical rule) on negative-weight ones.
     *
-    * No early termination: there is no settle invariant, so
-    * target-bounded callers read the full fixpoint — the capped subgraph
-    * is horizon-bounded and the worklist converges in O(V·E) worst case,
+    * No early termination and no clock cap: there is no settle invariant,
+    * so bounded callers read the full fixpoint — the capped subgraph is
+    * horizon-bounded and the worklist converges in O(V·E) worst case,
     * msec-class at the CSR edge budget. A vertex dequeued more than n
     * times proves a reachable negative cycle: no fixpoint exists and
     * [[NegativeCycleException]] aborts (time-expanded projections are
     * DAGs in the event clock, so this is a data-corruption guard, not a
     * live path). */
-  private def spfaCsr(g: Csr, srcIdx: Int,
-      canonicalTies: Boolean): (Array[Double], Array[Int]) = {
+  private def spfaCsr(g: Csr, seeds: Array[Int], walk: Array[Double],
+      canonicalTies: Boolean): Labelling = {
     val n = g.n
-    val dist = Array.fill(n)(Double.PositiveInfinity)
-    val pred = Array.fill(n)(-1)
+    val (w, out) = unreached(n, walk)
+    val (seed, cost, pred) = (out.seed, out.cost, out.pred)
     val inQueue = new Array[Boolean](n)
     val dequeues = new Array[Int](n)
     var queue = new Array[Int](math.max(1024, math.min(n, 1 << 16)))
@@ -668,8 +787,15 @@ object ShortestPaths {
       size += 1
       inQueue(v) = true
     }
-    dist(srcIdx) = 0.0
-    enqueue(srcIdx)
+    var r = 0
+    while (r < seeds.length) {
+      val v = seeds(r)
+      if (v >= 0 && labelBelow(w, 0.0, r, cost(v), seed(v))) {
+        seed(v) = r; cost(v) = 0.0
+        if (!inQueue(v)) enqueue(v)
+      }
+      r += 1
+    }
     while (size > 0) {
       val v = queue(head)
       head += 1; if (head == queue.length) head = 0
@@ -678,25 +804,25 @@ object ShortestPaths {
       dequeues(v) += 1
       if (dequeues(v) > n)
         throw new NegativeCycleException("no SSSP fixpoint: negative-total " +
-          s"cycle reachable from vertex ${g.ids(srcIdx)}")
-      val dv = dist(v)
+          s"cycle reachable from the seeds (vertex ${g.ids(v)} relaxed more than $n times)")
+      val vs = seed(v); val vc = cost(v)
       var j = g.offsets(v)
       val end = g.offsets(v + 1)
       while (j < end) {
         val u = g.targets(j)
-        val nd = dv + g.weights(j)
-        if (nd < dist(u)) {
-          dist(u) = nd; pred(u) = v
+        val nc = vc + g.weights(j)
+        if (labelBelow(w, nc, vs, cost(u), seed(u))) {
+          seed(u) = vs; cost(u) = nc; pred(u) = v
           if (!inQueue(u)) enqueue(u)
         }
-        // canonical equal-dist tie-break, dijkstraCsr's rule verbatim:
-        // pred-only updates change no distance, so no re-enqueue.
+        // canonical equal-label tie-break, dijkstraCsr's rule verbatim:
+        // pred-only updates change no label, so no re-enqueue.
         // canonicalTies=false is the acyclicPreds retry (see there).
-        else if (canonicalTies && nd == dist(u) && v < pred(u)) pred(u) = v
+        else if (canonicalTies && vs == seed(u) && nc == cost(u) && v < pred(u)) pred(u) = v
         j += 1
       }
     }
-    (dist, pred)
+    out
   }
 
   /** SSSP over an edge DataFrame (src: long, dst: long, weight: double),
@@ -708,10 +834,10 @@ object ShortestPaths {
       localThreshold: Long = LocalDijkstraMaxEdges): DataFrame =
     new Sssp(edges, localThreshold).run(sources)
 
-  /** Driver-local multi-source Dijkstra over the CSR — same output contract
-    * as the Pregel path: [[computeOnCsr]]'s per-source searches, rows in
-    * sorted source order; a source absent from the edge list reports
-    * itself at distance 0. */
+  /** Driver-local SSSP over the CSR — same output contract as the Pregel
+    * path: [[computeOnCsr]]'s per-source searches, rows in sorted source
+    * order; a source absent from the edge list reports itself at
+    * distance 0. */
   private def localDijkstraDF(spark: SparkSession, g: Csr,
       sources: Set[Long]): DataFrame = {
     import spark.implicits._

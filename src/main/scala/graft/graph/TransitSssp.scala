@@ -205,7 +205,7 @@ object TransitSssp {
     * capped run's horizon-bounded subgraph — capped positions (one
     * PRECEDES edge each, less trip tails) plus the capped CHANGE slice —
     * fits this many edges, routing collects it into the proven in-heap
-    * CSR (ShortestPaths.dijkstraCsr) and the whole multi-round
+    * CSR (ShortestPaths' labelled search) and the whole multi-round
     * distributed relaxation becomes ns/edge driver work. This is the
     * scale lever for CADENCE-bounded feeds: a hub's improvement chains
     * advance one CHANGE depth per Spark round through its ~500-deep
@@ -219,20 +219,6 @@ object TransitSssp {
     * projection. 0 disables the regime (specs pin the distributed capped
     * path against it). */
   private[graft] val cappedCsrMaxEdges: Long = 6L * 1024L * 1024L
-
-  /** Driver-state budget for a capped-CSR run: each source holds a
-    * (dist, pred) pair of arrays over the subgraph's vertices
-    * (12 B/cell → 768 MB at the default). Full worst-case driver
-    * arithmetic at the default gates (r14 ADVICE): 768 MB state +
-    * ~90 MB resident CSR arrays (12 B/edge at cappedCsrMaxEdges) +
-    * ~360 MB TRANSIENT boxed tuples while the edge collect streams
-    * (~60 B/row, dead after buildCsr) ≈ 1.2 GB against the documented
-    * ≥ 4 GB driver — the target-restricted distance frame no longer
-    * contributes (built lazily, and the capped caller never reads it).
-    * sources × vertices above this bound falls back to the distributed
-    * staged flow — routing calls carry per-route-earliest source sets
-    * (tens of rows), so the bound only trips on degenerate inputs. */
-  private[graft] val cappedCsrMaxStateCells: Long = 64L * 1024L * 1024L
 
   /** Node-count floor below which capped runs keep the shared uncapped
     * pin: on fixture/Modena-1× feeds the whole-day pin costs ~1-4 s once
@@ -535,8 +521,8 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * ceiling near 48 h), so at the default 1 h pad an instance can
     * materialize at most ~48 buckets over ANY number of routing calls
     * (TransitSsspSpec pins the sharing: same-pad caps hit one bucket).
-    * Worst-case driver residency is therefore ~48 × the per-bucket budget
-    * arithmetic on [[TransitSssp.cappedCsrMaxStateCells]] — large but
+    * Worst-case driver residency is therefore ~48 × the per-bucket CSR
+    * budget ([[TransitSssp.cappedCsrMaxEdges]], ~90 MB) — large but
     * bounded and knob-controlled (shrink the pad multiplies buckets,
     * shrink the budgets caps each one). Eviction was considered and
     * rejected: a concurrent routing call may be mid-iteration over an
@@ -665,7 +651,12 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     * same predecessor chains as the full graph for every within-cap
     * vertex. This is the same argument the clock-capped GRID rests on
     * (see [[staged]]); the padded bucket is a superset, correct a
-    * fortiori. */
+    * fortiori. The argument has holes: a CHANGE → CHANGE step (board a
+    * stoptime and leave it at once) moves the clock backward, and a
+    * DEPARTURE cap also drops a stoptime alighted before the cap whose
+    * trip dwells past it, which a later CHANGE still needs (the local
+    * regime caps on arrival for this reason — RoutingEngine's
+    * `capAnchor`; LabelledRoutingSpec pins the distributed loss). */
   private def buildCappedCsr(slice: DataFrame,
       posPin: DataFrame, nPos: Long): Option[ShortestPaths.Csr] = {
     // budget pre-gate on counts the build already knows (positions) or
@@ -714,34 +705,30 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
 
   /** Clock-capped driver-CSR routing run (r14 — the hub-cadence lever).
     * Engages when the capped-slice machinery is active for this cap (the
-    * node-count floor and both broadcast gates pass), the subgraph fits
-    * the CSR edge budget, and the sources × vertices state fits the
-    * driver cell budget; None otherwise — the caller keeps the staged
-    * distributed flow. The returned TargetRun's early-terminated
-    * multi-source Dijkstra, canonical tie-break, and path walk are the
-    * SAME in-heap machinery the local regime runs (ShortestPaths), so
-    * regime parity follows from the subgraph-exactness argument on
-    * [[buildCappedCsr]]. */
-  def runForTargetsCapped(sources: Set[Long], targets: Set[Long],
-      clockCap: Double): Option[ShortestPaths.TargetRun] =
+    * node-count floor and both broadcast gates pass) and the subgraph fits
+    * the CSR edge budget; None otherwise — the caller keeps the staged
+    * distributed flow. The run is ONE labelled multi-source search
+    * ([[ShortestPaths.Labels]]; `seeds` in ascending id order with their
+    * walk seconds) bounded by `targets`, the same kernel, canonical
+    * tie-break and path walk the local regime runs, so regime parity
+    * follows from the subgraph-exactness argument on [[buildCappedCsr]].
+    * It holds O(vertices) state whatever the seed count. The subgraph is
+    * already clock-capped, so the search takes no further cap. */
+  private[graft] def runForTargetsCapped(seeds: IndexedSeq[(Long, Double)],
+      targets: Set[Long], clockCap: Double): Option[ShortestPaths.Labels] =
     if (clockCap.isPosInfinity || cappedCsrMaxEdges <= 0L ||
         nodeCount < cappedSliceMinNodes) None
-    else {
-      val cell = bucketCell(clockCap)
-      cell.csr.filter { g =>
-        sources.size.toLong * g.n <= TransitSssp.cappedCsrMaxStateCells
-      }.flatMap { g =>
-        try {
-          val run = ShortestPaths.runTargetsOnCsr(spark, g, sources, targets)
-          evidence.cappedCsrServed.incrementAndGet()
-          if (g.hasNegative) evidence.cappedCsrNegativeServed.incrementAndGet()
-          Some(run)
-        } catch {
-          // a reachable negative-total cycle has no fixpoint (corrupt
-          // feed; impossible on a time-expanded DAG) — keep the staged
-          // distributed flow, whose iteration cap bounds the damage
-          case _: ShortestPaths.NegativeCycleException => None
-        }
+    else bucketCell(clockCap).csr.flatMap { g =>
+      try {
+        val run = ShortestPaths.labels(g, seeds, targets, None)
+        evidence.cappedCsrServed.incrementAndGet()
+        if (g.hasNegative) evidence.cappedCsrNegativeServed.incrementAndGet()
+        Some(run)
+      } catch {
+        // a reachable negative-total cycle has no fixpoint (corrupt
+        // feed; impossible on a time-expanded DAG) — keep the staged
+        // distributed flow, whose iteration cap bounds the damage
+        case _: ShortestPaths.NegativeCycleException => None
       }
     }
 

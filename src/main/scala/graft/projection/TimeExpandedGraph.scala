@@ -149,6 +149,18 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     // BLOCKED on that monitor and never run — a deadlock.
     if (sssp.isLocal) Some(LocalProjection.from(nodes)) else None
 
+  /** Arrival clock of every local-CSR vertex, aligned to the CSR's sorted
+    * ids — the clock the local regime's horizon cap reads
+    * (RoutingEngine's `capAnchor`). Built once per projection from
+    * [[localIndex]]'s records, no Spark job; None in the distributed
+    * regime. A vertex without a record (none on a projected feed) gets
+    * Long.MinValue, which no cap drops. */
+  private[graft] lazy val arrivalClock: Option[Array[Long]] =
+    for (ix <- localIndex; ids <- sssp.localIds) yield ids.map { id =>
+      val r = ix.byId.get(id)
+      if (r == null) Long.MinValue else r.arr
+    }
+
   def unpersist(): Unit = {
     // the runner's pins are local checkpoints, which no cache clear frees
     if (transitForced) transit.releasePins()

@@ -113,19 +113,21 @@ class BetweennessSpec extends SparkSpec {
   }
 
   test("ofProjection above-threshold regime matches the CSR regime") {
-    val g = DemoGtfs.engine(spark).projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[String]("stop_name"),
-        r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
-      .sortBy(t => (t._1, t._2, t._3)).toSeq
-    val viaCsr = rows(Betweenness.ofProjection(g))
-    // the above-threshold branch (level-synchronous) must reproduce the
-    // CSR rows
-    val viaLevelSync = rows(Betweenness.ofProjection(g, localThreshold = Some(0L)))
-    assert(viaCsr.size == viaLevelSync.size)
-    viaCsr.zip(viaLevelSync).foreach { case ((n1, d1, s1), (n2, d2, s2)) =>
-      assert(n1 == n2 && d1 == d2, s"row mismatch: ($n1,$d1) vs ($n2,$d2)")
-      assert(math.abs(s1 - s2) < 1e-9, s"score mismatch at ($n1,$d1): $s1 vs $s2")
+    withEngine(DemoGtfs.engine(spark)) { eng =>
+      val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getAs[String]("stop_name"),
+          r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
+        .sortBy(t => (t._1, t._2, t._3)).toSeq
+      val viaCsr = rows(Betweenness.ofProjection(g))
+      // the above-threshold branch (level-synchronous) must reproduce the
+      // CSR rows
+      val viaLevelSync = rows(Betweenness.ofProjection(g, localThreshold = Some(0L)))
+      assert(viaCsr.size == viaLevelSync.size)
+      viaCsr.zip(viaLevelSync).foreach { case ((n1, d1, s1), (n2, d2, s2)) =>
+        assert(n1 == n2 && d1 == d2, s"row mismatch: ($n1,$d1) vs ($n2,$d2)")
+        assert(math.abs(s1 - s2) < 1e-9, s"score mismatch at ($n1,$d1): $s1 vs $s2")
+      }
     }
   }
 
@@ -211,62 +213,68 @@ class BetweennessSpec extends SparkSpec {
       .toDF("service_id", "day", "exception_type")
     val tables = graft.model.GtfsTables(agency, routes, trips, stops,
       stopTimes, calendar)
-    val eng = new graft.api.RoutingEngine(tables)
-    val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-    val cap = 52800.0 // 14:40
-    val inHeap = rows(Betweenness.ofProjection(g, clockCap = cap))
-    val levelSync = rows(Betweenness.ofProjection(g, localThreshold = Some(0L),
-      clockCap = cap))
-    assert(inHeap == levelSync,
-      "dep-dirty windowed in-heap betweenness diverged from the exact edge-list branch")
-    // the dropped middle row must actually be a hole (fixture precondition)
-    assert(g.nodes.filter(col("dep_secs") > cap).count() == 1)
+    withEngine(new graft.api.RoutingEngine(tables)) { eng =>
+      val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
+      val cap = 52800.0 // 14:40
+      val inHeap = rows(Betweenness.ofProjection(g, clockCap = cap))
+      val levelSync = rows(Betweenness.ofProjection(g, localThreshold = Some(0L),
+        clockCap = cap))
+      assert(inHeap == levelSync,
+        "dep-dirty windowed in-heap betweenness diverged from the exact edge-list branch")
+      // the dropped middle row must actually be a hole (fixture precondition)
+      assert(g.nodes.filter(col("dep_secs") > cap).count() == 1)
+    }
   }
 
   test("windowed betweenness: in-heap rung equals level-sync on the capped subgraph (r15)") {
-    val g = DemoGtfs.engine(spark).projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-    import spark.implicits._
-    // cap at the median departure — a proper subgraph (some rows drop)
-    val clk = g.nodes.select(org.apache.spark.sql.functions.col("dep_secs")
-      .cast("double")).as[Double].collect().sorted.apply(g.nodeCount.toInt / 2)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[String]("stop_name"),
-        r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
-      .sortBy(t => (t._1, t._2, t._3)).toSeq
-    val inHeap = rows(Betweenness.ofProjection(g, clockCap = clk))
-    val levelSync = rows(Betweenness.ofProjection(g, localThreshold = Some(0L),
-      clockCap = clk))
-    assert(inHeap == levelSync,
-      "windowed in-heap betweenness diverged from windowed level-sync")
-    val full = rows(Betweenness.ofProjection(g))
-    assert(inHeap.size < full.size,
-      "the cap should restrict the scored rows to the window")
-    assert(inHeap.nonEmpty)
+    withEngine(DemoGtfs.engine(spark)) { eng =>
+      val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
+      import spark.implicits._
+      // cap at the median departure — a proper subgraph (some rows drop)
+      val clk = g.nodes.select(org.apache.spark.sql.functions.col("dep_secs")
+        .cast("double")).as[Double].collect().sorted.apply(g.nodeCount.toInt / 2)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getAs[String]("stop_name"),
+          r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
+        .sortBy(t => (t._1, t._2, t._3)).toSeq
+      val inHeap = rows(Betweenness.ofProjection(g, clockCap = clk))
+      val levelSync = rows(Betweenness.ofProjection(g, localThreshold = Some(0L),
+        clockCap = clk))
+      assert(inHeap == levelSync,
+        "windowed in-heap betweenness diverged from windowed level-sync")
+      val full = rows(Betweenness.ofProjection(g))
+      assert(inHeap.size < full.size,
+        "the cap should restrict the scored rows to the window")
+      assert(inHeap.nonEmpty)
+    }
   }
 
   test("api betweennessWindow mirrors the windowed rung (r16)") {
     // the engine-level mirror of the capped betweenness capability —
     // "HH:mm:ss" cap parses to the same clock the direct call takes
-    val eng = DemoGtfs.engine(spark)
-    val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[String]("stop_name"),
-        r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
-      .sortBy(t => (t._1, t._2, t._3)).toSeq
-    assert(rows(eng.betweennessWindow("2024-01-18", "14:40:00")) ==
-      rows(Betweenness.ofProjection(g, clockCap = 52800.0)))
-    assert(rows(eng.betweenness("2024-01-18")) ==
-      rows(Betweenness.ofProjection(g)))
+    withEngine(DemoGtfs.engine(spark)) { eng =>
+      val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getAs[String]("stop_name"),
+          r.getAs[Number]("dep_secs").longValue(), r.getAs[Double]("score")))
+        .sortBy(t => (t._1, t._2, t._3)).toSeq
+      assert(rows(eng.betweennessWindow("2024-01-18", "14:40:00")) ==
+        rows(Betweenness.ofProjection(g, clockCap = 52800.0)))
+      assert(rows(eng.betweenness("2024-01-18")) ==
+        rows(Betweenness.ofProjection(g)))
+    }
   }
 
   test("betweenness of the projected routing graph ranks transfer stoptimes") {
-    val g = DemoGtfs.engine(spark).projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-    val top = Betweenness.ofProjection(g).collect()
-    assert(top.nonEmpty)
-    // the golden itinerary's mid-path stoptimes (Beta/Gamma on T1) must
-    // outrank terminal stoptimes
-    val byName = top.map(r => (r.getAs[String]("stop_name"), r.getAs[Double]("score")))
-    val best = byName.head
-    assert(best._2 > 0.0)
+    withEngine(DemoGtfs.engine(spark)) { eng =>
+      val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
+      val top = Betweenness.ofProjection(g).collect()
+      assert(top.nonEmpty)
+      // the golden itinerary's mid-path stoptimes (Beta/Gamma on T1) must
+      // outrank terminal stoptimes
+      val byName = top.map(r => (r.getAs[String]("stop_name"), r.getAs[Double]("score")))
+      val best = byName.head
+      assert(best._2 > 0.0)
+    }
   }
 }

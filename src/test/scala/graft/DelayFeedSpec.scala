@@ -42,17 +42,18 @@ class DelayFeedSpec extends SparkSpec {
   }
 
   test("delays shift the projected stoptimes of exactly the delayed trips") {
-    val g = graft.api.DemoGtfs.engine(spark)
-      .projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
-    val delays = Seq(("T1", 300L)).toDF("trip_id", "delay_secs")
-    val base = g.nodes.select(col("trip_id"), col("stop_sequence").cast("int"),
-        col("dep_secs").cast("long"))
-      .as[(String, Int, Long)].collect().toSet
-    val shifted = DelayFeed.applyDelays(g.nodes, delays)
-      .select(col("trip_id"), col("stop_sequence").cast("int"),
-        col("dep_secs").cast("long"))
-      .as[(String, Int, Long)].collect().toSet
-    val expected = base.map { case (t, s, d) => (t, s, if (t == "T1") d + 300L else d) }
-    assert(shifted == expected)
+    withEngine(graft.api.DemoGtfs.engine(spark)) { eng =>
+      val g = eng.projected(java.sql.Date.valueOf("2024-01-18"), 1.0)
+      val delays = Seq(("T1", 300L)).toDF("trip_id", "delay_secs")
+      val base = g.nodes.select(col("trip_id"), col("stop_sequence").cast("int"),
+          col("dep_secs").cast("long"))
+        .as[(String, Int, Long)].collect().toSet
+      val shifted = DelayFeed.applyDelays(g.nodes, delays)
+        .select(col("trip_id"), col("stop_sequence").cast("int"),
+          col("dep_secs").cast("long"))
+        .as[(String, Int, Long)].collect().toSet
+      val expected = base.map { case (t, s, d) => (t, s, if (t == "T1") d + 300L else d) }
+      assert(shifted == expected)
+    }
   }
 }

@@ -127,9 +127,8 @@ class GtfsEngineSpec extends SparkSpec {
     // same golden query, but the engine is constructed with localThreshold 0,
     // forcing the distributed branch: TransitSssp trip-collapse rounds +
     // distributed path extraction
-    val engD = new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark),
-      ssspLocalThreshold = 0L)
-    val segD = engD.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect()
+    val segD = withEngine(new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark),
+      ssspLocalThreshold = 0L))(_.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect())
     val segL = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect()
     assert(segD.toSeq == segL.toSeq)
     assert(segD.length == 5)
@@ -170,17 +169,22 @@ class GtfsEngineSpec extends SparkSpec {
     def route(eng: graft.api.RoutingEngine): Seq[String] =
       eng.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
         .collect().map(_.toString).toSeq
-    val engCsr = forcedEngine(1L << 40)
-    val bystander = forcedEngine(1L << 40)
-    val segCsr = route(engCsr)
-    assert(engCsr.evidence.cappedCsrServed.get() >= 1L,
-      "capped-CSR regime did not engage under forced gates")
-    assert(bystander.evidence.cappedCsrServed.get() == 0L,
-      "an engine that routed nothing must report no capped-CSR runs")
-    val engDist = forcedEngine(0L)
-    val segDist = route(engDist)
-    assert(engDist.evidence.cappedCsrServed.get() == 0L,
-      "zeroed CSR budget must keep the distributed flow")
+    val segCsr = withEngine(forcedEngine(1L << 40)) { engCsr =>
+      withEngine(forcedEngine(1L << 40)) { bystander =>
+        val seg = route(engCsr)
+        assert(engCsr.evidence.cappedCsrServed.get() >= 1L,
+          "capped-CSR regime did not engage under forced gates")
+        assert(bystander.evidence.cappedCsrServed.get() == 0L,
+          "an engine that routed nothing must report no capped-CSR runs")
+        seg
+      }
+    }
+    val segDist = withEngine(forcedEngine(0L)) { engDist =>
+      val seg = route(engDist)
+      assert(engDist.evidence.cappedCsrServed.get() == 0L,
+        "zeroed CSR budget must keep the distributed flow")
+      seg
+    }
     val segLocal = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
       .collect().map(_.toString).toSeq
     assert(segCsr == segDist, "capped-CSR itinerary diverged from distributed")
@@ -194,9 +198,8 @@ class GtfsEngineSpec extends SparkSpec {
     // seconds-since-midnight keep ordering across 24:00, so the cap
     // arithmetic needs no day wraparound. Both branches must return the
     // 1-segment T6 itinerary.
-    val engD = new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark),
-      ssspLocalThreshold = 0L)
-    val segD = engD.routing(Day, 1.0, "23:00:00", "Alpha", "Epsilon").collect()
+    val segD = withEngine(new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark),
+      ssspLocalThreshold = 0L))(_.routing(Day, 1.0, "23:00:00", "Alpha", "Epsilon").collect())
     val segL = engine.routing(Day, 1.0, "23:00:00", "Alpha", "Epsilon").collect()
     assert(segD.toSeq == segL.toSeq)
     assert(segD.length == 1 && segD.head.getAs[String]("trip") == "T6")
@@ -241,10 +244,10 @@ class GtfsEngineSpec extends SparkSpec {
       .toDF("service_id", "day", "exception_type")
     val tables = graft.model.GtfsTables(agency, routes, trips, stops,
       stopTimes, calendar)
-    val engD = new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L)
-    val engL = new graft.api.RoutingEngine(tables)
-    val segD = engD.routing(Day, 1.0, "13:50:00", "Start", "End").collect()
-    val segL = engL.routing(Day, 1.0, "13:50:00", "Start", "End").collect()
+    def seg(eng: graft.api.RoutingEngine) =
+      withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect())
+    val segD = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L))
+    val segL = seg(new graft.api.RoutingEngine(tables))
     assert(segD.toSeq == segL.toSeq,
       s"capped distributed itinerary diverged:\nD=${segD.toSeq}\nL=${segL.toSeq}")
     // the intermediate past-horizon stop must appear (the pre-fix capped
@@ -294,7 +297,7 @@ class GtfsEngineSpec extends SparkSpec {
     val tables = graft.model.GtfsTables(agency, routes, trips, stops,
       stopTimes, calendar)
     def seg(eng: graft.api.RoutingEngine) =
-      eng.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq
+      withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq)
     val segL = seg(new graft.api.RoutingEngine(tables)) // uncapped CSR
     val segD = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L))
     val segC = { // forced capped-CSR regime on the same feed (per-engine)
@@ -353,7 +356,7 @@ class GtfsEngineSpec extends SparkSpec {
     val tables = graft.model.GtfsTables(agency, routes, trips, stops,
       stopTimes, calendar)
     def seg(eng: graft.api.RoutingEngine) =
-      eng.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq
+      withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq)
     val segL = seg(new graft.api.RoutingEngine(tables)) // uncapped local CSR
     val segD = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L))
     val segC = { // forced capped-CSR regime — must take the SPFA path
@@ -421,7 +424,7 @@ class GtfsEngineSpec extends SparkSpec {
     val tables = graft.model.GtfsTables(agency, routes, trips, stops,
       stopTimes, calendar)
     def seg(eng: graft.api.RoutingEngine) =
-      eng.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq
+      withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq)
     val segL = seg(new graft.api.RoutingEngine(tables)) // in-heap strict repair
     assert(segL.nonEmpty, "fixture must route in-heap")
     // over-budget: distributed only (per-engine zeroed CSR budget)
@@ -487,21 +490,22 @@ class GtfsEngineSpec extends SparkSpec {
     // nothing), (2) the distributed stopDim scan (the above-the-bound
     // fallback shape). Both must return the same name set — the exact
     // haversine decides membership everywhere.
-    val eng = new RoutingEngine(gtfs)
-    val g = eng.projected(java.sql.Date.valueOf(Day), 1.0)
-    val viaDriverDim = eng.findNearStops(Day, 44.6200, 10.9000, 300)
-      .as[String].collect().toSet
-    assert(g.localStopDim.isDefined, "demo feed must fit the stop-dim bound")
-    val viaDistributed = g.stopDim
-      .filter(graft.functions.SpatialFunctions.withinRadius(
-        col("lat"), col("lon"), 44.6200, 10.9000, 300))
-      .select("stop_name").distinct().as[String].collect().toSet
-    g.localIndex // resolve the regime: the search still reads the driver dim
-    val viaIndex = eng.findNearStops(Day, 44.6200, 10.9000, 300)
-      .as[String].collect().toSet
-    assert(viaDriverDim == Set("Gamma", "Gamma Due"))
-    assert(viaDistributed == viaDriverDim)
-    assert(viaIndex == viaDriverDim)
+    withEngine(new RoutingEngine(gtfs)) { eng =>
+      val g = eng.projected(java.sql.Date.valueOf(Day), 1.0)
+      val viaDriverDim = eng.findNearStops(Day, 44.6200, 10.9000, 300)
+        .as[String].collect().toSet
+      assert(g.localStopDim.isDefined, "demo feed must fit the stop-dim bound")
+      val viaDistributed = g.stopDim
+        .filter(graft.functions.SpatialFunctions.withinRadius(
+          col("lat"), col("lon"), 44.6200, 10.9000, 300))
+        .select("stop_name").distinct().as[String].collect().toSet
+      g.localIndex // resolve the regime: the search still reads the driver dim
+      val viaIndex = eng.findNearStops(Day, 44.6200, 10.9000, 300)
+        .as[String].collect().toSet
+      assert(viaDriverDim == Set("Gamma", "Gamma Due"))
+      assert(viaDistributed == viaDriverDim)
+      assert(viaIndex == viaDriverDim)
+    }
   }
 
   test("numberOfStops counts distinct served stops") {
@@ -553,18 +557,19 @@ class GtfsEngineSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val eng = new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark))
-    val fw = graft.api.FootwayEngine.load(spark, fixtureDir, gtfs.stops)
-    def call() = Future {
-      eng.journey(Day, 44.5998, 10.9000, 44.6400, 10.9200,
-        speed = 1.0, time = "14:00:00", footway = Some(fw)).map(j =>
-        (j.changes, math.round(j.totalSeconds * 100) / 100.0))
+    withEngine(new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark))) { eng =>
+      val fw = graft.api.FootwayEngine.load(spark, fixtureDir, gtfs.stops)
+      def call() = Future {
+        eng.journey(Day, 44.5998, 10.9000, 44.6400, 10.9200,
+          speed = 1.0, time = "14:00:00", footway = Some(fw)).map(j =>
+          (j.changes, math.round(j.totalSeconds * 100) / 100.0))
+      }
+      val (a, b) = (call(), call())
+      val ra = Await.result(a, 120.seconds)
+      val rb = Await.result(b, 120.seconds)
+      assert(ra.isDefined && ra == rb)
+      assert(ra.get._1 == 1L)
     }
-    val (a, b) = (call(), call())
-    val ra = Await.result(a, 120.seconds)
-    val rb = Await.result(b, 120.seconds)
-    assert(ra.isDefined && ra == rb)
-    assert(ra.get._1 == 1L)
   }
 
   test("Sssp locality probe decides the distributed regime without collecting rows") {

@@ -36,21 +36,23 @@ class GtfsFeedIngestSpec extends SparkSpec {
 
   test("feed directory → warehouse → day-pruned reload → same golden itinerary") {
     val gtfs = GtfsLoader.load(spark, feedDir)
-    val direct = new RoutingEngine(gtfs)
-    // golden: T10A Uno→Tre, line change at Tre, T20A Tre→Vico Due
-    val segD = direct.routing(Day, 1.0, "07:55:00", "Uno", "Vico Due").collect()
-    assert(segD.length == 5)
-    assert(segD.map(_.getAs[String]("trip")).toSeq ==
-      Seq("T10A", "T10A", "T10A", "T20A", "T20A"))
-    assert(segD.head.getAs[String]("departure") == "08:00:00")
-    assert(segD.last.getAs[String]("arrival") == "08:42:00")
-    assert(direct.changeCount(direct.routing(Day, 1.0, "07:55:00", "Uno", "Vico Due")) == 1)
+    val segD = withEngine(new RoutingEngine(gtfs)) { direct =>
+      // golden: T10A Uno→Tre, line change at Tre, T20A Tre→Vico Due
+      val seg = direct.routing(Day, 1.0, "07:55:00", "Uno", "Vico Due").collect()
+      assert(seg.length == 5)
+      assert(seg.map(_.getAs[String]("trip")).toSeq ==
+        Seq("T10A", "T10A", "T10A", "T20A", "T20A"))
+      assert(seg.head.getAs[String]("departure") == "08:00:00")
+      assert(seg.last.getAs[String]("arrival") == "08:42:00")
+      assert(direct.changeCount(direct.routing(Day, 1.0, "07:55:00", "Uno", "Vico Due")) == 1)
+      seg
+    }
 
     val whDir = java.nio.file.Files.createTempDirectory("gtfs-sample-wh").toString
     GtfsWarehouse.write(gtfs, whDir)
     val fromWh = GtfsWarehouse.loadTables(spark, whDir, java.sql.Date.valueOf(Day))
-    val segW = new RoutingEngine(fromWh)
-      .routing(Day, 1.0, "07:55:00", "Uno", "Vico Due").collect()
+    val segW = withEngine(new RoutingEngine(fromWh))(
+      _.routing(Day, 1.0, "07:55:00", "Uno", "Vico Due").collect())
     assert(segW.toSeq == segD.toSeq)
   }
 }

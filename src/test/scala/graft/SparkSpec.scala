@@ -8,6 +8,12 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def fixtureDir: String = getClass.getResource("/gtfs-mini").getPath
+
+  /** Lends `engine` to `body` and closes it after, so its projection
+    * caches (and TransitSssp pins) never serve a later test or suite in
+    * the shared session. */
+  def withEngine[T](engine: graft.api.RoutingEngine)(body: graft.api.RoutingEngine => T): T =
+    try body(engine) finally engine.close()
 }
 
 object SparkSpec {

@@ -22,6 +22,10 @@ class TransitSsspSpec extends SparkSpec {
 
   private def changeEdges = g.edges.filter(col("type") === "CHANGE")
 
+  // the fixture projection's caches must not serve a later suite
+  override def afterAll(): Unit =
+    try g.unpersist() finally super.afterAll()
+
   test("distances equal generic Pregel and local Dijkstra, multi-source") {
     val sources = g.nodes.orderBy("id").limit(3).select("id")
       .as[Long].collect().toSet
@@ -208,17 +212,29 @@ class TransitSsspSpec extends SparkSpec {
       .as[Double].collect().sorted.apply(g.nodes.count().toInt / 2)
     val targets = g.nodes.filter(col("dep_secs") <= clk).select("id")
       .as[Long].collect().toSet
-    val (csrRows, csrPath, pathKey) = {
-      val run = ts.runForTargetsCapped(sources, targets, clk)
+    val seeds = sources.toIndexedSeq.sorted.map((_, 0.0))
+    def capped(seeds: IndexedSeq[(Long, Double)]) =
+      ts.runForTargetsCapped(seeds, targets, clk)
         .getOrElse(fail("forced capped-CSR run did not engage"))
-      val rows = run.distances.select("vertex_id", "source_id", "dist")
-        .as[(Long, Long, Double)].collect().toSet
+    val (csrRows, csrPath, pathKey) = {
+      // one-seed runs: a one-seed labelled search is that source's own
+      val runs = seeds.map(s => s._1 -> capped(IndexedSeq(s))).toMap
+      val rows = for ((s, run) <- runs.toSet[(Long, ShortestPaths.Labels)];
+        t <- targets; (_, d) <- run.winner(t)) yield (t, s, d)
       // deepest reached target of the smallest source — the longest chain
       val (far, src) = rows.filter(_._2 == sources.min) match {
         case s if s.nonEmpty => val m = s.maxBy(r => (r._3, r._1)); (m._1, m._2)
         case _ => fail("capped-CSR run reached no targets")
       }
-      (rows, run.path(src, far), (src, far))
+      (rows, runs(src).path(far), (src, far))
+    }
+    // one search from both seeds labels every target with its best
+    // source: least (dist, source id), as the router's pair order ranks
+    val both = capped(seeds)
+    targets.foreach { t =>
+      val best = csrRows.filter(_._1 == t).map(r => (r._3, r._2)).minOption
+      assert(both.winner(t).map { case (i, d) => (d, seeds(i)._1) } == best,
+        s"two-seed label of $t is not the best one-seed distance")
     }
     val st = ts.staged(sources, clockCap = clk)
     val distRows = st.distances.select("vertex_id", "source_id", "dist")
@@ -551,17 +567,16 @@ class TransitSsspSpec extends SparkSpec {
     val targets = gD.nodes.filter(col("dep_secs") <= clk).select("id")
       .as[Long].collect().toSet
     val (csrRows, csrPath, pathKey) = {
-      val run = ts.runForTargetsCapped(sources, targets, clk)
+      val run = ts.runForTargetsCapped(IndexedSeq((sources.head, 0.0)), targets, clk)
         .getOrElse(fail("dirty-feed capped run did not engage the CSR"))
       assert(ts.evidence.cappedCsrNegativeServed.get() == 1L,
         "the run did not take the negative-weight in-heap path")
-      val rows = run.distances.select("vertex_id", "source_id", "dist")
-        .as[(Long, Long, Double)].collect().toSet
+      val rows = for (t <- targets; (_, d) <- run.winner(t)) yield (t, sources.head, d)
       val (far, src) = rows.filter(_._2 == sources.min) match {
         case s if s.nonEmpty => val m = s.maxBy(r => (r._3, r._1)); (m._1, m._2)
         case _ => fail("dirty-feed capped run reached no targets")
       }
-      (rows, run.path(src, far), (src, far))
+      (rows, run.path(far), (src, far))
     }
     val st = ts.staged(sources, clockCap = clk)
     val distRows = st.distances.select("vertex_id", "source_id", "dist")

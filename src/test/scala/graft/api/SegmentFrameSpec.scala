@@ -64,54 +64,56 @@ class SegmentFrameSpec extends graft.SparkSpec {
   }
 
   test("local-regime routing frames launch no Spark job, keep hop order and the pinned schema") {
-    val engine = new RoutingEngine(DemoGtfs.tables(spark))
-    def stops() = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
-    def points() = engine.routingBetweenTwoPoints(Day, 44.6000, 10.9000, 44.6400, 10.9200,
-      Seq("Alpha"), Seq("Epsilon"), 1.0, "14:00:00")
-    // build and warm the projection, its local index and CSR (these run jobs)
-    assert(engine.projected(java.sql.Date.valueOf(Day), 1.0).localIndex.isDefined,
-      "the demo feed must route in the local regime")
-    stops().collect()
-    points().collect()
-    val journey = engine.journey(Day, 44.5998, 10.9000, 44.6400, 10.9200,
-      speed = 1.0, time = "14:00:00").get
+    withEngine(new RoutingEngine(DemoGtfs.tables(spark))) { engine =>
+      def stops() = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
+      def points() = engine.routingBetweenTwoPoints(Day, 44.6000, 10.9000, 44.6400, 10.9200,
+        Seq("Alpha"), Seq("Epsilon"), 1.0, "14:00:00")
+      // build and warm the projection, its local index and CSR (these run jobs)
+      assert(engine.projected(java.sql.Date.valueOf(Day), 1.0).localIndex.isDefined,
+        "the demo feed must route in the local regime")
+      stops().collect()
+      points().collect()
+      val journey = engine.journey(Day, 44.5998, 10.9000, 44.6400, 10.9200,
+        speed = 1.0, time = "14:00:00").get
 
-    val frames = scala.collection.mutable.Map.empty[String, (StructType, Array[Row])]
-    var itinerary = ""
-    var changes = -1L
-    val jobs = jobsPerCall(Seq(
-      "routing" -> { () => val df = stops(); frames("routing") = (df.schema, df.collect()) },
-      "routingBetweenTwoPoints" -> { () =>
-        val df = points(); frames("routingBetweenTwoPoints") = (df.schema, df.collect()) },
-      "journey.segments" -> { () =>
-        frames("journey.segments") = (journey.segments.schema, journey.segments.collect()) },
-      "formatItinerary" -> { () => itinerary = engine.formatItinerary(stops()) },
-      "changeCount" -> { () => changes = engine.changeCount(stops()) }))
+      val frames = scala.collection.mutable.Map.empty[String, (StructType, Array[Row])]
+      var itinerary = ""
+      var changes = -1L
+      val jobs = jobsPerCall(Seq(
+        "routing" -> { () => val df = stops(); frames("routing") = (df.schema, df.collect()) },
+        "routingBetweenTwoPoints" -> { () =>
+          val df = points(); frames("routingBetweenTwoPoints") = (df.schema, df.collect()) },
+        "journey.segments" -> { () =>
+          frames("journey.segments") = (journey.segments.schema, journey.segments.collect()) },
+        "formatItinerary" -> { () => itinerary = engine.formatItinerary(stops()) },
+        "changeCount" -> { () => changes = engine.changeCount(stops()) }))
 
-    assert(jobs.values.forall(_ == 0), s"Spark jobs per call: $jobs")
-    assert(frames.keySet == Set("routing", "routingBetweenTwoPoints", "journey.segments"))
-    frames.foreach { case (name, (schema, rows)) =>
-      assert(schema == PinnedSchema, s"$name schema")
-      assert(rows.map(_.getInt(0)).toSeq == (1 to 5), s"$name hop order")
-      assert(rows.map(_.getAs[String]("trip")).toSeq == Seq("T1", "T1", "T1", "T3", "T3"), name)
-      assert(rows.last.getAs[String]("arrival") == "14:40:00", name)
+      assert(jobs.values.forall(_ == 0), s"Spark jobs per call: $jobs")
+      assert(frames.keySet == Set("routing", "routingBetweenTwoPoints", "journey.segments"))
+      frames.foreach { case (name, (schema, rows)) =>
+        assert(schema == PinnedSchema, s"$name schema")
+        assert(rows.map(_.getInt(0)).toSeq == (1 to 5), s"$name hop order")
+        assert(rows.map(_.getAs[String]("trip")).toSeq == Seq("T1", "T1", "T1", "T3", "T3"), name)
+        assert(rows.last.getAs[String]("arrival") == "14:40:00", name)
+      }
+      assert(itinerary.startsWith("start trip at 14:01:00 at station Alpha line: R1"))
+      assert(itinerary.endsWith("end trip at 14:40:00 at station Epsilon with line: R2"))
+      assert(changes == 1L && journey.changes == 1L)
     }
-    assert(itinerary.startsWith("start trip at 14:01:00 at station Alpha line: R1"))
-    assert(itinerary.endsWith("end trip at 14:40:00 at station Epsilon with line: R2"))
-    assert(changes == 1L && journey.changes == 1L)
   }
 
   test("warm near-stop search launches no Spark job and keeps its names") {
-    val engine = new RoutingEngine(DemoGtfs.tables(spark))
-    def near() = engine.findNearStops(Day, 44.6200, 10.9000, 300).collect()
-      .map(_.getString(0)).toSeq
-    val first = near() // builds the projection's stop dimension (runs jobs)
-    engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect()
-    var again = Seq.empty[String]
-    val jobs = jobsPerCall(Seq("findNearStops" -> { () => again = near() }))
-    assert(jobs("findNearStops") == 0, s"Spark jobs per call: $jobs")
-    assert(first == Seq("Gamma", "Gamma Due"))
-    assert(again == first)
+    withEngine(new RoutingEngine(DemoGtfs.tables(spark))) { engine =>
+      def near() = engine.findNearStops(Day, 44.6200, 10.9000, 300).collect()
+        .map(_.getString(0)).toSeq
+      val first = near() // builds the projection's stop dimension (runs jobs)
+      engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect()
+      var again = Seq.empty[String]
+      val jobs = jobsPerCall(Seq("findNearStops" -> { () => again = near() }))
+      assert(jobs("findNearStops") == 0, s"Spark jobs per call: $jobs")
+      assert(first == Seq("Gamma", "Gamma Due"))
+      assert(again == first)
+    }
   }
 
   test("first near-stop search on a fresh projection collects its stop dimension in few jobs") {
@@ -139,11 +141,12 @@ class SegmentFrameSpec extends graft.SparkSpec {
   }
 
   test("formatItinerary sorts a shuffled segment frame by hop on the driver") {
-    val engine = new RoutingEngine(DemoGtfs.tables(spark))
-    val seg = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
-    val reversed = spark.createDataFrame(
-      java.util.Arrays.asList(seg.collect().reverse: _*), seg.schema)
-    assert(engine.formatItinerary(reversed) == engine.formatItinerary(seg))
+    withEngine(new RoutingEngine(DemoGtfs.tables(spark))) { engine =>
+      val seg = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
+      val reversed = spark.createDataFrame(
+        java.util.Arrays.asList(seg.collect().reverse: _*), seg.schema)
+      assert(engine.formatItinerary(reversed) == engine.formatItinerary(seg))
+    }
   }
 
   test("segmentRows fails on a path node the resolver lacks, naming the hop and the node") {
