@@ -215,7 +215,8 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     * labeling all run over driver-resident state, and the segment
     * DataFrame is a LocalRelation — a warm request runs zero Spark jobs.
     * The SSSP is one labelled search from every candidate source, capped
-    * at the horizon ([[capAnchor]]) on the projection's arrival clock;
+    * at the horizon ([[capAnchor]]) on the projection's arrival clock
+    * (uncapped on a feed with an arr > dep row);
     * ranking = [[bestPath]], whose key is the same PairOrder definition
     * the distributed branch orders by. */
   private def routeLocal(g: TimeExpandedGraph, ix: graft.projection.LocalProjection,
@@ -261,9 +262,8 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     def cand(rw: (NodeRec, Double)): Cand = (rw._1.id, rw._1.dep, rw._1.arr, rw._2)
     val srcs = srcRows.map(cand).sortBy(_._1).toIndexedSeq
     val tgts = tgtRows.map(cand)
-    val path = g.sssp.labelled(srcs.map(s => (s._1, s._4)), tgts.iterator.map(_._1).toSet,
-        g.arrivalClock.map((_, anchor)))
-      .fold(List.empty[Long])(bestPath(_, srcs, tgts))
+    val path = bestPath(g.sssp.labelled(srcs.map(s => (s._1, s._4)),
+      tgts.iterator.map(_._1).toSet, g.capClock.map((_, anchor))), srcs, tgts)
     if (path.size < 2) Nil else RoutingEngine.segmentRows(ix.get, path)
   }
 
@@ -277,18 +277,23 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     *
     * The local regime relaxes into a stoptime only when its ARRIVAL
     * clock is ≤ the anchor (the capped CSR and the distributed grid cap
-    * on departure). Exactness, walking an optimal path back from a target
-    * t, whose arrival and departure are both ≤ the anchor: a PRECEDES
-    * step v → w has arr(v) ≤ dep(v) ≤ arr(w) on a monotone feed, so both
-    * clocks of v stay ≤ the anchor; a CHANGE step v → w boards w after v
+    * on departure), and only on a feed whose every stoptime has
+    * arr ≤ dep. Exactness, walking an optimal path back from a target t,
+    * whose arrival and departure are both ≤ the anchor: a PRECEDES step
+    * v → w has arr(v) ≤ dep(v) ≤ arr(w) (weights ≥ 0 give the second
+    * step), so arr(v) ≤ the anchor; a CHANGE step v → w boards w after v
     * arrives (arr(v) + walk < dep(w)), so arr(v) ≤ the anchor whenever
-    * dep(w) is. The one hole is a CHANGE → CHANGE step, boarding w and
-    * leaving it again at once: dep(w) may then exceed the anchor and the
-    * step before it moves the clock backward. Arrival keeps a strict
-    * superset of the departure cap: a trip that arrives before the anchor
-    * but dwells past it can still be alighted, walked from and changed to
-    * the target. A negative-weight feed (non-monotone clocks) searches
-    * uncapped ([[ShortestPaths.Labels]]). */
+    * dep(w) is, which holds when w is t or rides on to a PRECEDES step.
+    * The one hole is a CHANGE → CHANGE step, boarding w and leaving it
+    * again at once: dep(w) may then exceed the anchor and the step before
+    * it moves the clock backward. With arr ≤ dep at every vertex, the
+    * arrival cap keeps every vertex the departure cap keeps, plus a trip
+    * that arrives before the anchor but dwells past it
+    * (it can still be alighted, walked from and changed to the target).
+    * A row v with arr > dep breaks the PRECEDES step out of it (nothing
+    * bounds arr(v)), so a feed with such a row searches uncapped
+    * ([[graft.projection.TimeExpandedGraph.capClock]] is None), as does a
+    * negative-weight feed ([[ShortestPaths.Labels]]). */
   private def capAnchor(horizonEnd: Long, targetClocks: Iterator[Long]): Long =
     targetClocks.foldLeft(horizonEnd)(math.max)
 
@@ -300,7 +305,10 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     * position in `srcs`), so each target carries its best source already:
     * PairOrder's primary key does not depend on the source, and its
     * secondary keys at a fixed target are the label. One label per target
-    * replaces the |sources| × |targets| pair loop.
+    * replaces the |sources| × |targets| pair loop. In floating point the
+    * label and the key can disagree on sources one ulp apart (adding
+    * t_walk may round them into a key tie that s_id then breaks the other
+    * way); [[ShortestPaths.Labels]] says more.
     *
     * The filter `t_dep > s_dep` (`main.py:93,141`) is not implied by the
     * search: a stoptime that is both a source and a target labels itself

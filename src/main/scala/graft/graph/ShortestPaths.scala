@@ -307,16 +307,19 @@ object ShortestPaths {
     }
 
     /** Sorted vertex ids of the local CSR — the alignment of the per-vertex
-      * clock a caller hands [[labelled]]; None above the threshold. */
-    private[graft] def localIds: Option[Array[Long]] = localCsr.map(_.ids)
+      * clock a caller hands [[labelled]]. Local regime only. */
+    private[graft] def localIds: Array[Long] = csr.ids
 
     /** One labelled multi-source search (see [[Labels]]) on the local CSR,
-      * bounded by `targets`; None above the threshold. `cap =
-      * Some((clock, anchor))` relaxes into a vertex only when its clock
-      * (aligned to [[localIds]]) is ≤ anchor. */
+      * bounded by `targets`. `cap = Some((clock, anchor))` relaxes into a
+      * vertex only when its clock (aligned to [[localIds]]) is ≤ anchor.
+      * Local regime only. */
     private[graft] def labelled(seeds: IndexedSeq[(Long, Double)], targets: Set[Long],
-        cap: Option[(Array[Long], Long)]): Option[Labels] =
-      localCsr.map(labels(_, seeds, targets, cap))
+        cap: Option[(Array[Long], Long)]): Labels =
+      labels(csr, seeds, targets, cap)
+
+    private def csr: Csr = localCsr.getOrElse(throw new IllegalStateException(
+      s"the graph has more than $localThreshold edges: no local CSR"))
   }
 
   /** Per-source target-bounded searches over an in-heap CSR, emitting the

@@ -149,17 +149,23 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     // BLOCKED on that monitor and never run — a deadlock.
     if (sssp.isLocal) Some(LocalProjection.from(nodes)) else None
 
-  /** Arrival clock of every local-CSR vertex, aligned to the CSR's sorted
-    * ids — the clock the local regime's horizon cap reads
-    * (RoutingEngine's `capAnchor`). Built once per projection from
-    * [[localIndex]]'s records, no Spark job; None in the distributed
-    * regime. A vertex without a record (none on a projected feed) gets
-    * Long.MinValue, which no cap drops. */
-  private[graft] lazy val arrivalClock: Option[Array[Long]] =
-    for (ix <- localIndex; ids <- sssp.localIds) yield ids.map { id =>
+  /** The local regime's horizon-cap clock: the arrival clock of every
+    * local-CSR vertex, aligned to the CSR's sorted ids (RoutingEngine's
+    * `capAnchor` reads it). Built once per projection from
+    * [[localIndex]]'s records, no Spark job. None when some stoptime
+    * arrives after it departs: the cap's exactness rests on arr ≤ dep at
+    * every vertex, so such a feed searches uncapped. A vertex without a
+    * record (none on a projected feed) gets Long.MinValue, which no cap
+    * drops. Local regime only. */
+  private[graft] lazy val capClock: Option[Array[Long]] = {
+    val ix = localIndex.getOrElse(throw new IllegalStateException(
+      "capClock: the projection routes in the distributed regime"))
+    if (ix.recs.exists(r => r.arr > r.dep)) None
+    else Some(sssp.localIds.map { id =>
       val r = ix.byId.get(id)
       if (r == null) Long.MinValue else r.arr
-    }
+    })
+  }
 
   def unpersist(): Unit = {
     // the runner's pins are local checkpoints, which no cache clear frees

@@ -216,8 +216,9 @@ class GtfsEngineSpec extends SparkSpec {
     // horizon-anchored clock cap drops that intermediate row from the
     // capped grid: distances stay exact (rel-space ride is
     // position-independent) but predecessor resolution skips the row, so
-    // the distributed itinerary loses a segment vs the uncapped CSR
-    // branch. The target-clock-anchored cap keeps the whole pred chain.
+    // the distributed itinerary loses a segment vs the local CSR branch
+    // (uncapped: the arr > dep row turns its cap off). The
+    // target-clock-anchored cap keeps the whole pred chain.
     import graft.functions.TimeFunctions.secondsSinceMidnight
     val agency = Seq(("A", "http://example.org", "Europe/Rome"))
       .toDF("agency_name", "agency_url", "agency_timezone")
@@ -266,10 +267,10 @@ class GtfsEngineSpec extends SparkSpec {
     // pinned here so a change in either direction is noticed: cost,
     // endpoints, and arrival stay EXACT (the ride prefix telescopes
     // through dropped rows), but the capped itinerary compresses the ride
-    // SB→ST into one segment where the uncapped CSR lists SB→SM→ST. Both
-    // capped regimes (distributed grid, r14 capped CSR) must agree with
-    // each other exactly — they iterate over the SAME padded position pin
-    // by construction.
+    // SB→ST into one segment where the local CSR (uncapped, the feed has
+    // an arr > dep row) lists SB→SM→ST. Both capped regimes (distributed
+    // grid, r14 capped CSR) must agree with each other exactly — they
+    // iterate over the SAME padded position pin by construction.
     import graft.functions.TimeFunctions.secondsSinceMidnight
     val agency = Seq(("A", "http://example.org", "Europe/Rome"))
       .toDF("agency_name", "agency_url", "agency_timezone")
@@ -298,7 +299,7 @@ class GtfsEngineSpec extends SparkSpec {
       stopTimes, calendar)
     def seg(eng: graft.api.RoutingEngine) =
       withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq)
-    val segL = seg(new graft.api.RoutingEngine(tables)) // uncapped CSR
+    val segL = seg(new graft.api.RoutingEngine(tables)) // local CSR, uncapped
     val segD = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L))
     val segC = { // forced capped-CSR regime on the same feed (per-engine)
       val eng = new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,
@@ -325,10 +326,10 @@ class GtfsEngineSpec extends SparkSpec {
     // fell back to the distributed rounds — the 335 s-class path on hub
     // topologies. r15 serves them through the exact in-heap
     // label-correcting fixpoint. End-to-end pin: the forced capped-CSR
-    // itinerary equals the capped distributed one AND the uncapped local
-    // CSR one (every clock is within the horizon, so no anchor-residual
-    // divergence applies), and the negative-served counter proves the
-    // SPFA path ran.
+    // itinerary equals the capped distributed one AND the local CSR one
+    // (uncapped on a negative-weight feed; every clock is within the
+    // horizon, so no anchor-residual divergence applies), and the
+    // negative-served counter proves the SPFA path ran.
     import graft.functions.TimeFunctions.secondsSinceMidnight
     val agency = Seq(("A", "http://example.org", "Europe/Rome"))
       .toDF("agency_name", "agency_url", "agency_timezone")
@@ -357,7 +358,7 @@ class GtfsEngineSpec extends SparkSpec {
       stopTimes, calendar)
     def seg(eng: graft.api.RoutingEngine) =
       withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq)
-    val segL = seg(new graft.api.RoutingEngine(tables)) // uncapped local CSR
+    val segL = seg(new graft.api.RoutingEngine(tables)) // local CSR, uncapped SPFA
     val segD = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L))
     val segC = { // forced capped-CSR regime — must take the SPFA path
       val eng = new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L,

@@ -9,7 +9,8 @@ import graft.model.GtfsTables
   * pair ranking it replaced — on the full itinerary (chosen pair and every
   * hop): tie-heavy random grids with non-zero dwells, requests whose
   * origin and destination share stops (the `t_dep > s_dep` second run), a
-  * trip that arrives before the horizon anchor and departs after it, and a
+  * trip that arrives before the horizon anchor and departs after it, a
+  * feed with a row that arrives after it departs (uncapped search) and a
   * negative-weight feed (uncapped label-correcting search). */
 class LabelledRoutingSpec extends graft.SparkSpec {
   import spark.implicits._
@@ -156,6 +157,32 @@ class LabelledRoutingSpec extends graft.SparkSpec {
     val segs = withEngine(new RoutingEngine(dwellPastAnchor, ssspLocalThreshold = 0L))(
       _.routing(Day, 1.0, "13:50:00", "Start", "End", Horizon).collect().toSeq)
     assert(segs.isEmpty, s"distributed regime now routes: $segs")
+  }
+
+  test("irregular feed (a row arrives after it departs): uncapped, matches oracle and grid") {
+    // TB's Mid row arrives at 19:00, past the 17:50 anchor, but departs at
+    // 14:35: every weight stays positive, yet an arrival cap would drop
+    // the row and with it the only itinerary
+    val feed = tables(
+      Seq(("R1", "1", "Start-Mid0"), ("R2", "2", "Mid0-End")),
+      Seq(("R1", "TA"), ("R2", "TB")),
+      Seq(("SA", "Start", 44.6000, 10.9000), ("SB", "Mid0", 44.6100, 10.9000),
+        ("SM", "Mid", 44.6200, 10.9000), ("ST", "End", 44.6300, 10.9100)),
+      Seq(("TA", "14:00:00", "14:00:00", "SA", 1), ("TA", "14:20:00", "14:21:00", "SB", 2),
+        ("TB", "14:25:00", "14:30:00", "SB", 1), ("TB", "19:00:00", "14:35:00", "SM", 2),
+        ("TB", "14:50:00", "14:51:00", "ST", 3)))
+    val req = Req(Seq("Start"), Seq("End"), None, None, "13:50:00")
+    val (got, want) = withEngine(new RoutingEngine(feed)) { eng =>
+      val g = eng.projected(java.sql.Date.valueOf(Day), 1.0)
+      assert(g.weightedEdges.filter(col("weight") < 0).count() == 0,
+        "fixture drifted: a negative weight")
+      new Both(eng)(req)
+    }
+    assert(want.map(_(1)) == Seq("TA", "TA", "TB", "TB"), s"fixture drifted: oracle=$want")
+    assert(got == want, s"engine=$got\noracle=$want")
+    val grid = withEngine(new RoutingEngine(feed, ssspLocalThreshold = 0L))(
+      _.routing(Day, 1.0, req.time, "Start", "End", Horizon).collect().map(_.toSeq).toSeq)
+    assert(grid == want, s"distributed=$grid\noracle=$want")
   }
 
   test("negative-weight feed: the uncapped label-correcting search matches the oracle") {
