@@ -602,32 +602,30 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
       endLat: Double, endLon: Double, speed: Double, time: String,
       radius: Double = 300.0, footway: Option[FootwayEngine] = None,
       maxDurationHours: Int = 4): Option[JourneySummary] = {
-    // Two one-time warm-ups run beside the projection's own work: WALK_TO
-    // (the engine's, day-independent) and the footway (NEAR edges, walking
-    // CSR, node index). Nothing else overlaps: every lazy structure of the
-    // projection — stop dimension, edges, CSR, node index — initializes
-    // under the projection's one monitor, so an index-build future and the
-    // near-stop scans would only queue behind each other. The overlap that
-    // pays (TimeJourney's warm phase, COVERAGE.md): edges+CSR+index ≈1.5 s
-    // beside the footway warm-up ≈1.3 s. Spark schedules concurrent jobs.
+    // One one-time warm-up runs beside the projection's own work: the
+    // footway (NEAR edges, walking CSR, node index). Nothing else overlaps:
+    // every lazy structure of the projection — stop dimension, driver
+    // build, node index — initializes under the projection's one monitor,
+    // so an index-build future and the near-stop scans would only queue
+    // behind each other. Measured with ProfileRows gtfs_journey_golden at
+    // sf0.01 (best of 5 runs, five rotating rounds, 4 cores): without the
+    // footway future every round is 0.5–1.9 s slower (median best 2.99 s
+    // against 2.22 s); a WALK_TO warm-up beside it does not pay (2.37 s
+    // with it) now that the driver build collects WALK_TO itself. Spark
+    // schedules concurrent jobs.
     import scala.concurrent.{Await, Future, TimeoutException}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    // WALK_TO feeds the CHANGE build's first job — materializing its cache
-    // in its own concurrent job takes the spatial join off the edge
-    // chain's critical path (a racing double-compute of the tiny dimension
-    // is harmless; the cache keeps one).
-    val walkWarm = Future { walkTo.count() }
     val fwWarm = footway.map(fw => Future { fw.nearestFootNode(startLat, startLon) })
-    // Every exit path drains the warm-ups (bounded — a hung build must fail
+    // Every exit path drains the warm-up (bounded — a hung build must fail
     // loudly, not hang the call forever or bleed jobs into the caller's next
     // query); Await.ready, not result: a warm-up failure surfaces on the
     // phase that actually needs the state.
     def drainWarm(): Unit =
-      (walkWarm :: fwWarm.toList).foreach { f =>
+      fwWarm.foreach { f =>
         try Await.ready(f, 10.minutes)
         catch { case _: TimeoutException => throw new TimeoutException(
-          "journey(): WALK_TO/footway warm-up did not finish within 10 minutes") }
+          "journey(): footway warm-up did not finish within 10 minutes") }
       }
     def nearNames(lat: Double, lon: Double): Seq[String] =
       findNearStops(date, lat, lon, radius, speed).collect().map(_.getString(0)).toSeq

@@ -258,28 +258,21 @@ object ShortestPaths {
     * source_id, dist, pred) contract — the time-expanded projection passes
     * [[TransitSssp.run]], whose iteration count is transfer-bounded instead
     * of hop-bounded (generic Pregel measured >10 min per routing call at 3×
-    * Modena; the trip-collapse runs the same query in seconds). The local
-    * CSR branch and its threshold gate are unchanged. */
-  final class Sssp(edges: DataFrame, localThreshold: Long = LocalDijkstraMaxEdges,
-      distributedRunner: Option[Set[Long] => DataFrame] = None) {
-    private val spark = edges.sparkSession
-    private val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("weight").cast("double"))
-    // Overflow pre-gate: a plain parallel count() answers "is the graph
-    // local?" without moving a single edge row — per-partition counts
-    // combine map-side. (The previous head(cap+1) probe collected up to
-    // threshold+1 tuples, ~100-200 MB, to the driver even when the
-    // answer was "distributed regime, discard"; a limit(cap+1).count()
-    // probe would be no better, gathering the rows into one partition
-    // for the GlobalLimit.)
-    private lazy val localCsr: Option[Csr] = {
-      import spark.implicits._
-      val cap = math.min(localThreshold, (Int.MaxValue - 2).toLong)
-      // The collect runs only when the count proves every edge fits — and
-      // reads the projection's cache, which the count itself populated.
-      if (e.count() <= cap) Some(buildCsr(e.as[(Long, Long, Double)].collect()))
-      else None
-    }
+    * Modena; the trip-collapse runs the same query in seconds).
+    *
+    * The public constructor decides the regime by counting the edge frame;
+    * [[Sssp.decided]] takes a regime its caller already decided — the
+    * time-expanded projection hands over the CSR it built on the driver,
+    * or None when it routes distributed, and never reaches the count. */
+  final class Sssp private[graph] (spark: SparkSession, edges: () => DataFrame,
+      decide: () => Option[Csr],
+      distributedRunner: Option[Set[Long] => DataFrame]) {
+    def this(edges: DataFrame, localThreshold: Long = LocalDijkstraMaxEdges,
+        distributedRunner: Option[Set[Long] => DataFrame] = None) =
+      this(edges.sparkSession, () => edges, () => countedCsr(edges, localThreshold),
+        distributedRunner)
+    private lazy val e = edgeTriples(edges())
+    private lazy val localCsr: Option[Csr] = decide()
     def run(sources: Set[Long]): DataFrame = localCsr match {
       case Some(g) => localDijkstraDF(spark, g, sources)
       case None => distributedRunner match {
@@ -319,8 +312,41 @@ object ShortestPaths {
       labels(csr, seeds, targets, cap)
 
     private def csr: Csr = localCsr.getOrElse(throw new IllegalStateException(
-      s"the graph has more than $localThreshold edges: no local CSR"))
+      "the graph routes in the distributed regime: no local CSR"))
   }
+
+  object Sssp {
+    /** A handle on a regime its caller decided: `csr = Some` routes on that
+      * prebuilt CSR, `None` routes distributed; neither counts `edges`. */
+    private[graft] def decided(spark: SparkSession, csr: Option[Csr], edges: => DataFrame,
+        distributedRunner: Option[Set[Long] => DataFrame]): Sssp =
+      new Sssp(spark, () => edges, () => csr, distributedRunner)
+  }
+
+  private def edgeTriples(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"), col("weight").cast("double"))
+
+  /** The counting regime gate: a plain parallel count() answers "is the
+    * graph local?" without moving a single edge row — per-partition counts
+    * combine map-side. (A head(cap+1) probe would collect up to
+    * threshold+1 tuples, ~100-200 MB, to the driver even when the answer
+    * is "distributed regime, discard"; a limit(cap+1).count() probe would
+    * be no better, gathering the rows into one partition for the
+    * GlobalLimit.) The collect runs only when the count proves every edge
+    * fits, and reads the frame's cache when it has one, which the count
+    * itself populated. */
+  private def countedCsr(edges: DataFrame, localThreshold: Long): Option[Csr] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val e = edgeTriples(edges)
+    if (e.count() <= localCap(localThreshold)) Some(buildCsr(e.as[(Long, Long, Double)].collect()))
+    else None
+  }
+
+  /** The in-heap edge bound a threshold admits: a CSR indexes its edges
+    * with Int offsets. */
+  private[graft] def localCap(localThreshold: Long): Long =
+    math.min(localThreshold, (Int.MaxValue - 2).toLong)
 
   /** Per-source target-bounded searches over an in-heap CSR, emitting the
     * [[Sssp.runForTargets]] contract: a target-restricted distance frame
@@ -567,7 +593,7 @@ object ShortestPaths {
     * numbering — primitive arrays end to end, so the local Dijkstra runs at
     * in-memory-graph speed (the boxed Map/PriorityQueue version measured
     * ~20× slower at the Modena cardinality). */
-  private[graph] final class Csr(val ids: Array[Long], val offsets: Array[Int],
+  private[graft] final class Csr(val ids: Array[Long], val offsets: Array[Int],
       val targets: Array[Int], val weights: Array[Double]) {
     def n: Int = ids.length
     def indexOf(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
@@ -601,34 +627,48 @@ object ShortestPaths {
   final class PredCycleException(msg: String)
     extends IllegalStateException(msg)
 
-  private[graph] def buildCsr(rows: Array[(Long, Long, Double)]): Csr = {
-    val all = new Array[Long](rows.length * 2)
-    var i = 0
-    while (i < rows.length) {
-      all(2 * i) = rows(i)._1; all(2 * i + 1) = rows(i)._2; i += 1
-    }
+  private[graph] def buildCsr(rows: Array[(Long, Long, Double)]): Csr =
+    csrOf(rows.map(_._1), rows.map(_._2), rows.map(_._3))._1
+
+  /** The CSR of the edge list (src(i) → dst(i), weight(i)), plus each
+    * edge's slot in it: row i sits at position slots(i) of `targets` and
+    * `weights`, so a caller can lay per-edge columns out beside the CSR.
+    * Vertices are the edges' endpoints, sorted; a vertex's out-edges keep
+    * their input order. */
+  private[graft] def csrOf(src: Array[Long], dst: Array[Long],
+      weight: Array[Double]): (Csr, Array[Int]) = {
+    val m = src.length
+    val all = new Array[Long](m * 2)
+    System.arraycopy(src, 0, all, 0, m)
+    System.arraycopy(dst, 0, all, m, m)
     java.util.Arrays.sort(all)
     var n = 0
-    i = 0
+    var i = 0
     while (i < all.length) { // dedup in place
       if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
       i += 1
     }
     val ids = java.util.Arrays.copyOf(all, n)
+    val from = new Array[Int](m)
+    i = 0
+    while (i < m) { from(i) = java.util.Arrays.binarySearch(ids, src(i)); i += 1 }
     val offsets = new Array[Int](n + 1)
-    rows.foreach { r => offsets(java.util.Arrays.binarySearch(ids, r._1) + 1) += 1 }
+    from.foreach(s => offsets(s + 1) += 1)
     i = 0
     while (i < n) { offsets(i + 1) += offsets(i); i += 1 }
     val cursor = java.util.Arrays.copyOf(offsets, n)
-    val targets = new Array[Int](rows.length)
-    val weights = new Array[Double](rows.length)
-    rows.foreach { r =>
-      val s = java.util.Arrays.binarySearch(ids, r._1)
-      val c = cursor(s); cursor(s) = c + 1
-      targets(c) = java.util.Arrays.binarySearch(ids, r._2)
-      weights(c) = r._3
+    val targets = new Array[Int](m)
+    val weights = new Array[Double](m)
+    val slots = new Array[Int](m)
+    i = 0
+    while (i < m) {
+      val c = cursor(from(i)); cursor(from(i)) = c + 1
+      targets(c) = java.util.Arrays.binarySearch(ids, dst(i))
+      weights(c) = weight(i)
+      slots(i) = c
+      i += 1
     }
-    new Csr(ids, offsets, targets, weights)
+    (new Csr(ids, offsets, targets, weights), slots)
   }
 
   /** The labelled Dijkstra over the CSR: an indexed binary heap of

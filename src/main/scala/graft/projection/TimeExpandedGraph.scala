@@ -19,31 +19,52 @@ import graft.model.GtfsTables
   * deterministic `xxhash64(trip_id, stop_sequence)` (SURVEY §7.3) — stable
   * across runs and cluster layouts, fits GraphX's Long VertexId.
   *
-  * Both DataFrames are cached: the reference holds the CSR projection
-  * in memory and reuses it across routing calls; re-projection is needed
-  * only per (day, speed), which RoutingEngine keys its cache on.
+  * The regime is decided once, before any edge exists, on first use of the
+  * edges, the SSSP handle or the local index: one count over the cached
+  * `nodes`. When it and the derived edge count are both within
+  * `ssspLocalThreshold`, the projection is built on the driver
+  * ([[DriverBuild]]: one node collect, one WALK_TO collect, the routing CSR
+  * built directly) and routes in the local regime; no edge frame is
+  * cached, and `edges` wraps the driver arrays in a LocalRelation per call.
+  * Over either bound the Spark builder below builds and caches the edge
+  * union, and the projection routes distributed — so a node count over the
+  * bound routes distributed whatever its edge count. The reference holds
+  * its projection in memory and reuses it across routing calls the same
+  * way; re-projection is needed only per (day, speed), which RoutingEngine
+  * keys its cache on.
   */
-final class TimeExpandedGraph(val nodes: DataFrame,
-    /** Deferred CHANGE∪PRECEDES construction → (edges, build-side caches:
-      * schedule dimension first, then any helper frames the build pinned —
-      * all released in unpersist()). Edge generation ends in a
-      * measured-size broadcast decision (one dimension-sized Spark job),
-      * so it must NOT run at build() time: interactive calls that need
-      * only the node side (near-stop search on a fresh projection) would
-      * pay the whole CHANGE pipeline for a stop scan. First
-      * `edges`/`schedCache` access evaluates the thunk once. */
+final class TimeExpandedGraph private[projection] (val nodes: DataFrame,
+    walkToEdges: DataFrame, speed: Double,
+    /** Deferred Spark CHANGE∪PRECEDES construction → (edges, build-side
+      * caches: schedule dimension first, then any helper frames the build
+      * pinned — all released in unpersist()). It runs only for a
+      * projection over the local bound, on first `edges`/`schedCache`
+      * access. */
     buildEdges: () => (DataFrame, Seq[DataFrame]),
-    val ssspLocalThreshold: Long = graft.graph.ShortestPaths.LocalDijkstraMaxEdges,
+    val ssspLocalThreshold: Long,
     // capped-regime knobs of the projection's TransitSssp runner, threaded
     // per-instance (r18, r17 verdict #2) — engine-level callers pass them
     // the same way they pass ssspLocalThreshold
-    val cappedCsrMaxEdges: Long = graft.graph.TransitSssp.cappedCsrMaxEdges,
-    val cappedSliceMinNodes: Long = graft.graph.TransitSssp.cappedSliceMinNodes,
+    val cappedCsrMaxEdges: Long,
+    val cappedSliceMinNodes: Long,
     /** Regime evidence the projection's TransitSssp runner bumps
       * (TransitSssp.RegimeEvidence scaladoc); the owning engine passes its
       * own so callers can require regimes engaged per engine. */
-    val regimeEvidence: graft.graph.TransitSssp.RegimeEvidence =
-      new graft.graph.TransitSssp.RegimeEvidence) {
+    val regimeEvidence: graft.graph.TransitSssp.RegimeEvidence) {
+
+  private def spark = nodes.sparkSession
+
+  /** The driver-built projection, or None when the projection routes
+    * distributed (node count, then derived edge count, over the local
+    * bound). The collects run on the calling thread: this initializer
+    * holds the projection's monitor, so work handed to the shared pool
+    * could queue behind pool threads BLOCKED on that monitor — a
+    * deadlock. */
+  private lazy val driverGraph: Option[DriverGraph] = {
+    val cap = graft.graph.ShortestPaths.localCap(ssspLocalThreshold)
+    if (nodes.count() > cap) None
+    else DriverBuild(nodes, walkToEdges, speed, cap)
+  }
 
   // Forced-flags tell unpersist() which lazy caches exist. Every lazy val
   // of this object initializes under its one monitor, so the flags are
@@ -56,25 +77,34 @@ final class TimeExpandedGraph(val nodes: DataFrame,
     r
   }
   /** Public projected edge list — the 5-column CHANGE ∪ PRECEDES contract.
-    * A narrowing view over the cached (possibly position-enriched) union;
-    * the in-memory cache serves it with the extra columns pruned. */
-  def edges: DataFrame = {
-    val full = edgesAndSched._1
-    if (full.columns.length == 5) full
-    else full.select("source", "target", "type", "waiting_time", "walking_time")
+    * Driver-built: a fresh LocalRelation over the driver arrays per call.
+    * Spark-built: a narrowing view over the cached (possibly
+    * position-enriched) union; the in-memory cache serves it with the
+    * extra columns pruned. */
+  def edges: DataFrame = driverGraph match {
+    case Some(d) => d.edgeFrame(spark)
+    case None =>
+      val full = edgesAndSched._1
+      if (full.columns.length == 5) full
+      else full.select("source", "target", "type", "waiting_time", "walking_time")
   }
-  /** CHANGE edges WITH the position/rel-weight enrichment when the builder
-    * provided it (s_trip/s_seq/d_trip/d_seq/w_rel/d_acum — see build()):
-    * TransitSssp's whole-day slice pin then needs no position joins. */
-  def changeEnriched: DataFrame =
-    edgesAndSched._1.filter(org.apache.spark.sql.functions.col("type") === "CHANGE")
+  /** CHANGE edges WITH the position/rel-weight enrichment when the Spark
+    * builder provided it (s_trip/s_seq/d_trip/d_seq/w_rel/d_acum — see
+    * build()): TransitSssp's whole-day slice pin then needs no position
+    * joins. A driver-built projection's are the plain 5 columns. */
+  def changeEnriched: DataFrame = {
+    val all = if (driverGraph.isDefined) edges else edgesAndSched._1
+    all.filter(col("type") === "CHANGE")
+  }
   /** Persisted per-(stop, distance, service, route) schedule dimension
-    * feeding the CHANGE probe join — held so `edges` (cached lazily) can
-    * materialize from it without recomputation, released in unpersist(). */
-  def schedCache: Option[DataFrame] = edgesAndSched._2.headOption
+    * feeding the Spark builder's CHANGE probe join — held so `edges`
+    * (cached lazily) can materialize from it without recomputation,
+    * released in unpersist(). None on a driver-built projection. */
+  def schedCache: Option[DataFrame] =
+    if (driverGraph.isDefined) None else edgesAndSched._2.headOption
 
   def nodeCount: Long = nodes.count()
-  def edgeCount: Long = edges.count()
+  def edgeCount: Long = driverGraph.fold(edges.count())(_.edgeCount)
 
   /** Edge list in the shape ShortestPaths.fromDF expects. */
   def weightedEdges: DataFrame =
@@ -130,24 +160,20 @@ final class TimeExpandedGraph(val nodes: DataFrame,
   }
   @volatile private var transitForced = false
 
-  /** Per-projection SSSP handle: the local-vs-distributed decision and
-    * (when local) the adjacency index happen once, shared by every routing
-    * call against this projection — the reference holds one in-memory CSR
-    * per projection the same way. Its distributed branch is [[transit]]
-    * rather than generic hop-bounded Pregel. */
+  /** Per-projection SSSP handle on the regime [[driverGraph]] decided:
+    * the driver-built CSR, shared by every routing call against this
+    * projection — the reference holds one in-memory CSR per projection
+    * the same way — or, over the local bound, [[transit]] rather than
+    * generic hop-bounded Pregel. */
   lazy val sssp: graft.graph.ShortestPaths.Sssp =
-    new graft.graph.ShortestPaths.Sssp(weightedEdges, ssspLocalThreshold,
+    graft.graph.ShortestPaths.Sssp.decided(spark, driverGraph.map(_.csr), weightedEdges,
       distributedRunner = Some(transit.run(_)))
 
   /** Driver-resident node attributes, local-SSSP regime only (see
-    * [[LocalProjection]]) — None in the distributed regime, where callers
-    * stay on the declarative DataFrame path. */
-  lazy val localIndex: Option[LocalProjection] =
-    // The node collect runs on the calling thread, after the regime gate:
-    // this initializer holds the projection's monitor, so work handed to
-    // the shared pool can queue behind pool threads that are themselves
-    // BLOCKED on that monitor and never run — a deadlock.
-    if (sssp.isLocal) Some(LocalProjection.from(nodes)) else None
+    * [[LocalProjection]]): the records the driver build collected — None
+    * in the distributed regime, where callers stay on the declarative
+    * DataFrame path. */
+  lazy val localIndex: Option[LocalProjection] = driverGraph.map(_.index)
 
   /** The local regime's horizon-cap clock: the arrival clock of every
     * local-CSR vertex, aligned to the CSR's sorted ids (RoutingEngine's
@@ -238,7 +264,11 @@ object TimeExpandedGraph {
 
   /** Build the projection for one service day at one walking speed.
     * `walkToEdges` is the WALK_TO table (build once via
-    * GraphBuilder.walkTo — day-independent). */
+    * GraphBuilder.walkTo — day-independent). Only the cached node frame is
+    * defined here; the regime decision and the edges wait for first use
+    * (see the class scaladoc). The edge pipeline below is the Spark
+    * builder: the distributed regime's, and the only one that runs over
+    * the local bound. */
   def build(g: GtfsTables, day: java.sql.Date, speed: Double,
       walkToEdges: DataFrame,
       ssspLocalThreshold: Long = graft.graph.ShortestPaths.LocalDijkstraMaxEdges,
@@ -280,7 +310,8 @@ object TimeExpandedGraph {
 
     // Everything below (PRECEDES window, CHANGE schedule aggregation +
     // probe, measured broadcast decision) is deferred: the closure runs on
-    // first `edges` access. Node-only callers never trigger it.
+    // first `edges` access of a projection over the local bound. Node-only
+    // callers never trigger it.
     def edgesAndSched(): (DataFrame, Seq[DataFrame]) = {
     // PRECEDES edges restricted to day-valid trips; weight = next.arrival −
     // this.departure (`new_dbSetup.py:72-74`). Derived from the cached node
@@ -468,7 +499,7 @@ object TimeExpandedGraph {
       Seq(schedAtCached))
     }
 
-    new TimeExpandedGraph(nodes, () => edgesAndSched(), ssspLocalThreshold,
-      cappedCsrMaxEdges, cappedSliceMinNodes, regimeEvidence)
+    new TimeExpandedGraph(nodes, walkToEdges, speed, () => edgesAndSched(),
+      ssspLocalThreshold, cappedCsrMaxEdges, cappedSliceMinNodes, regimeEvidence)
   }
 }

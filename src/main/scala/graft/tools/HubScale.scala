@@ -58,9 +58,9 @@ object HubScale {
       ssspLocalThreshold = graft.graph.ShortestPaths.LocalDijkstraMaxEdges)
     val day = java.sql.Date.valueOf("2024-01-18")
     val (proj, buildSec) = timed {
-      val p = eng.projected(day, 1.0); p.edges.count(); p
+      val p = eng.projected(day, 1.0); p.edgeCount; p
     }
-    val edges = proj.edges.count()
+    val edges = proj.edgeCount
     val hubChange = proj.edges.filter(
       org.apache.spark.sql.functions.col("type") === "CHANGE").count()
     println(f"build $buildSec%.1f s, $edges%d edges ($hubChange%d CHANGE, " +

@@ -128,8 +128,11 @@ object PlanDump {
         Seq("PartitionFilters"))
       // 2-3. projection build, plain vs bucketed layout (the CHANGE +
       // PRECEDES + WALK_TO union that routing runs on)
-      val pb = graft.projection.TimeExpandedGraph.build(plain, day, 1.0, walk)
-      val bb = graft.projection.TimeExpandedGraph.build(bucketed, day, 1.0, walk)
+      // (ssspLocalThreshold = 0: the Spark builder, the one with a plan)
+      val pb = graft.projection.TimeExpandedGraph.build(plain, day, 1.0, walk,
+        ssspLocalThreshold = 0L)
+      val bb = graft.projection.TimeExpandedGraph.build(bucketed, day, 1.0, walk,
+        ssspLocalThreshold = 0L)
       val plainEv = try row("projection edges (plain layout)", pb.edges, Nil)
       finally ()
       val buckEv = row("projection edges (bucketed layout)", bb.edges,

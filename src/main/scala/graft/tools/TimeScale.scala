@@ -87,9 +87,9 @@ object TimeScale {
       val (_, walkSec) = timed { eng.walkTo.count() }
       val day = java.sql.Date.valueOf("2024-01-18")
       val (proj, buildSec) = timed {
-        val p = eng.projected(day, 1.0); p.edges.count(); p
+        val p = eng.projected(day, 1.0); p.edgeCount; p
       }
-      val edges = proj.edges.count()
+      val edges = proj.edgeCount
       val (isLocal, csrSec) = timed { proj.sssp.isLocal }
       val (_, idxSec) = timed { proj.localIndex.foreach(ix => { ix.byName; ix.stopDim }) }
       // three FIXED-SPAN OD name pairs (≈20 grid hops each, one transfer):

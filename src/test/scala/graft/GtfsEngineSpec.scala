@@ -145,10 +145,22 @@ class GtfsEngineSpec extends SparkSpec {
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty, "the route persisted nothing: the check is vacuous")
     engD.close()
+    def described(ids: scala.collection.Set[Int]) = s"${ids.toSeq.sorted}: " +
+      ids.toSeq.sorted.map(spark.sparkContext.getPersistentRDDs(_).toDebugString
+        .linesIterator.next()).mkString("; ")
     val left = added.intersect(spark.sparkContext.getPersistentRDDs.keySet)
-    assert(left.isEmpty, s"close() left persistent RDDs ${left.toSeq.sorted}: " +
-      left.toSeq.sorted.map(spark.sparkContext.getPersistentRDDs(_).toDebugString
-        .linesIterator.next()).mkString("; "))
+    assert(left.isEmpty, s"close() left persistent RDDs ${described(left)}")
+    // a local-regime engine: its nodes and WALK_TO caches, and no edge
+    // frame at all (the driver build pins none), go with close()
+    val beforeLocal = spark.sparkContext.getPersistentRDDs.keySet
+    val engL = new graft.api.RoutingEngine(graft.api.DemoGtfs.tables(spark))
+    assert(engL.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon").collect().length == 5)
+    assert(engL.projected(java.sql.Date.valueOf(Day), 1.0).localIndex.isDefined)
+    assert(spark.sparkContext.getPersistentRDDs.keySet != beforeLocal,
+      "the local route persisted nothing: the check is vacuous")
+    engL.close()
+    val leftLocal = spark.sparkContext.getPersistentRDDs.keySet -- beforeLocal
+    assert(leftLocal.isEmpty, s"close() left persistent RDDs ${described(leftLocal)}")
   }
 
   test("routing through the forced capped-CSR regime equals distributed and local") {
@@ -219,32 +231,7 @@ class GtfsEngineSpec extends SparkSpec {
     // the distributed itinerary loses a segment vs the local CSR branch
     // (uncapped: the arr > dep row turns its cap off). The
     // target-clock-anchored cap keeps the whole pred chain.
-    import graft.functions.TimeFunctions.secondsSinceMidnight
-    val agency = Seq(("A", "http://example.org", "Europe/Rome"))
-      .toDF("agency_name", "agency_url", "agency_timezone")
-    val routes = Seq(("R1", "1", "Start-Mid0", 3), ("R2", "2", "Mid0-End", 3))
-      .toDF("route_id", "short_name", "route_long_name", "route_type")
-    val trips = Seq(("R1", "S1", "TA"), ("R2", "S1", "TB"))
-      .map { case (r, s, t) => (r, s, t, "0", "SH", "h") }
-      .toDF("route_id", "service_id", "trip_id", "direction_id", "shape_id",
-        "trip_headsign")
-    val stops = Seq(
-      ("SA", "Start", 44.6000, 10.9000), ("SB", "Mid0", 44.6100, 10.9000),
-      ("SM", "Mid", 44.6200, 10.9000), ("ST", "End", 44.6300, 10.9100))
-      .toDF("stop_id", "stop_name", "stop_lat", "stop_lon")
-    val stopTimes = Seq(
-      ("TA", "14:00:00", "14:00:00", "SA", 1),
-      ("TA", "14:20:00", "14:21:00", "SB", 2),
-      ("TB", "14:25:00", "14:30:00", "SB", 1),
-      ("TB", "18:10:00", "18:20:00", "SM", 2),
-      ("TB", "18:40:00", "17:00:00", "ST", 3)) // irregular: arr > dep
-      .toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence")
-      .withColumn("arr_secs", secondsSinceMidnight(col("arrival_time")))
-      .withColumn("dep_secs", secondsSinceMidnight(col("departure_time")))
-    val calendar = Seq(("S1", java.sql.Date.valueOf("2024-01-18"), "1"))
-      .toDF("service_id", "day", "exception_type")
-    val tables = graft.model.GtfsTables(agency, routes, trips, stops,
-      stopTimes, calendar)
+    val tables = DirtyFeeds.irregular(spark)
     def seg(eng: graft.api.RoutingEngine) =
       withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect())
     val segD = seg(new graft.api.RoutingEngine(tables, ssspLocalThreshold = 0L))
@@ -271,32 +258,7 @@ class GtfsEngineSpec extends SparkSpec {
     // an arr > dep row) lists SB→SM→ST. Both capped regimes (distributed
     // grid, r14 capped CSR) must agree with each other exactly — they
     // iterate over the SAME padded position pin by construction.
-    import graft.functions.TimeFunctions.secondsSinceMidnight
-    val agency = Seq(("A", "http://example.org", "Europe/Rome"))
-      .toDF("agency_name", "agency_url", "agency_timezone")
-    val routes = Seq(("R1", "1", "Start-Mid0", 3), ("R2", "2", "Mid0-End", 3))
-      .toDF("route_id", "short_name", "route_long_name", "route_type")
-    val trips = Seq(("R1", "S1", "TA"), ("R2", "S1", "TB"))
-      .map { case (r, s, t) => (r, s, t, "0", "SH", "h") }
-      .toDF("route_id", "service_id", "trip_id", "direction_id", "shape_id",
-        "trip_headsign")
-    val stops = Seq(
-      ("SA", "Start", 44.6000, 10.9000), ("SB", "Mid0", 44.6100, 10.9000),
-      ("SM", "Mid", 44.6200, 10.9000), ("ST", "End", 44.6300, 10.9100))
-      .toDF("stop_id", "stop_name", "stop_lat", "stop_lon")
-    val stopTimes = Seq(
-      ("TA", "14:00:00", "14:00:00", "SA", 1),
-      ("TA", "14:20:00", "14:21:00", "SB", 2),
-      ("TB", "14:25:00", "14:30:00", "SB", 1),
-      ("TB", "18:10:00", "19:30:00", "SM", 2), // dep 19:30 > padded cap 19:00
-      ("TB", "18:40:00", "17:00:00", "ST", 3)) // irregular: arr > dep
-      .toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence")
-      .withColumn("arr_secs", secondsSinceMidnight(col("arrival_time")))
-      .withColumn("dep_secs", secondsSinceMidnight(col("departure_time")))
-    val calendar = Seq(("S1", java.sql.Date.valueOf("2024-01-18"), "1"))
-      .toDF("service_id", "day", "exception_type")
-    val tables = graft.model.GtfsTables(agency, routes, trips, stops,
-      stopTimes, calendar)
+    val tables = DirtyFeeds.beyondAnchor(spark)
     def seg(eng: graft.api.RoutingEngine) =
       withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq)
     val segL = seg(new graft.api.RoutingEngine(tables)) // local CSR, uncapped
@@ -330,32 +292,7 @@ class GtfsEngineSpec extends SparkSpec {
     // (uncapped on a negative-weight feed; every clock is within the
     // horizon, so no anchor-residual divergence applies), and the
     // negative-served counter proves the SPFA path ran.
-    import graft.functions.TimeFunctions.secondsSinceMidnight
-    val agency = Seq(("A", "http://example.org", "Europe/Rome"))
-      .toDF("agency_name", "agency_url", "agency_timezone")
-    val routes = Seq(("R1", "1", "Start-Mid", 3), ("R2", "2", "Mid-End", 3))
-      .toDF("route_id", "short_name", "route_long_name", "route_type")
-    val trips = Seq(("R1", "S1", "TA"), ("R2", "S1", "TB"))
-      .map { case (r, s, t) => (r, s, t, "0", "SH", "h") }
-      .toDF("route_id", "service_id", "trip_id", "direction_id", "shape_id",
-        "trip_headsign")
-    val stops = Seq(
-      ("SA", "Start", 44.6000, 10.9000), ("SB", "Mid0", 44.6100, 10.9000),
-      ("SM", "Mid", 44.6200, 10.9000), ("ST", "End", 44.6300, 10.9100))
-      .toDF("stop_id", "stop_name", "stop_lat", "stop_lon")
-    val stopTimes = Seq(
-      ("TA", "14:00:00", "14:00:00", "SA", 1),
-      ("TA", "14:20:00", "14:21:00", "SB", 2),
-      ("TB", "14:25:00", "14:30:00", "SB", 1),
-      ("TB", "14:10:00", "14:45:00", "SM", 2), // arr 14:10 < prev dep 14:30
-      ("TB", "15:00:00", "15:01:00", "ST", 3))
-      .toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence")
-      .withColumn("arr_secs", secondsSinceMidnight(col("arrival_time")))
-      .withColumn("dep_secs", secondsSinceMidnight(col("departure_time")))
-    val calendar = Seq(("S1", java.sql.Date.valueOf("2024-01-18"), "1"))
-      .toDF("service_id", "day", "exception_type")
-    val tables = graft.model.GtfsTables(agency, routes, trips, stops,
-      stopTimes, calendar)
+    val tables = DirtyFeeds.negativeHop(spark)
     def seg(eng: graft.api.RoutingEngine) =
       withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq)
     val segL = seg(new graft.api.RoutingEngine(tables)) // local CSR, uncapped SPFA
@@ -394,36 +331,7 @@ class GtfsEngineSpec extends SparkSpec {
     // the served counter proves the repair path actually ran). Forcing
     // cappedCsrMaxEdges = 0 on top of ssspLocalThreshold = 0 is the
     // over-budget variant: no in-heap regime can serve the route.
-    import graft.functions.TimeFunctions.secondsSinceMidnight
-    val agency = Seq(("A", "http://example.org", "Europe/Rome"))
-      .toDF("agency_name", "agency_url", "agency_timezone")
-    val routes = Seq(("R1", "1", "L1", 3), ("R2", "2", "L2", 3),
-      ("R3", "3", "L3", 3))
-      .toDF("route_id", "short_name", "route_long_name", "route_type")
-    val trips = Seq(("R1", "S1", "TA"), ("R2", "S1", "TB"), ("R3", "S1", "TC"))
-      .map { case (r, s, t) => (r, s, t, "0", "SH", "h") }
-      .toDF("route_id", "service_id", "trip_id", "direction_id", "shape_id",
-        "trip_headsign")
-    // SB/SC/SD co-located (walk 0 between them); Start and End far away
-    val stops = Seq(
-      ("SA", "Start", 44.6000, 10.9000), ("SB", "Mid0", 44.6100, 10.9000),
-      ("SC", "Mid1", 44.6100, 10.9000), ("SD", "Mid2", 44.6100, 10.9000),
-      ("SE", "End", 44.6300, 10.9100))
-      .toDF("stop_id", "stop_name", "stop_lat", "stop_lon")
-    val stopTimes = Seq(
-      ("TA", "14:00:00", "14:00:00", "SA", 1),
-      ("TA", "14:20:00", "14:21:00", "SB", 2),
-      ("TB", "14:25:00", "14:25:00", "SB", 1),
-      ("TB", "14:05:00", "14:05:00", "SC", 2), // arr 14:05 < prev dep 14:25
-      ("TC", "14:10:00", "14:10:00", "SD", 1), // zero dwell → cycle sums 0
-      ("TC", "14:40:00", "14:41:00", "SE", 2))
-      .toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence")
-      .withColumn("arr_secs", secondsSinceMidnight(col("arrival_time")))
-      .withColumn("dep_secs", secondsSinceMidnight(col("departure_time")))
-    val calendar = Seq(("S1", java.sql.Date.valueOf("2024-01-18"), "1"))
-      .toDF("service_id", "day", "exception_type")
-    val tables = graft.model.GtfsTables(agency, routes, trips, stops,
-      stopTimes, calendar)
+    val tables = DirtyFeeds.zeroCycle(spark)
     def seg(eng: graft.api.RoutingEngine) =
       withEngine(eng)(_.routing(Day, 1.0, "13:50:00", "Start", "End").collect().toSeq)
     val segL = seg(new graft.api.RoutingEngine(tables)) // in-heap strict repair

@@ -4,15 +4,22 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** The projection's CHANGE edges come from a two-stage selection (per-stop
-  * schedule-array probe, then a rank window across equidistant stops —
-  * TimeExpandedGraph.build). This spec pins it against the NAIVE one-stage
-  * formulation — expand s ⋈ walk ⋈ stoptimes, rank over (s_id, t_route,
-  * distance), keep ties — on a regular grid network, where equidistant
-  * neighbor stops (the case the second stage exists for) are common, plus
-  * the demo fixture (service boundaries, same-stop transfers past
-  * midnight). Edge sets must match EXACTLY, including tied targets. */
+/** Three independent derivations of the projection's edges must agree as
+  * multisets, weights included:
+  *  - the NAIVE one-stage CHANGE formulation — expand s ⋈ walk ⋈
+  *    stoptimes, rank over (s_id, t_route, distance), keep ties;
+  *  - the Spark builder (forced with `ssspLocalThreshold = 0`): the
+  *    two-stage schedule-array probe over merged equidistant schedules;
+  *  - the driver builder (the default at fixture scale): sorted departures
+  *    and a binary search in plain arrays.
+  * Run on a regular grid (equidistant neighbor stops are common), the demo
+  * fixture (service boundaries, same-stop transfers past midnight) and the
+  * dirty feeds the routing specs route (arr > dep, a negative hop, a
+  * zero-total cycle through co-located stops). Edges are compared as
+  * sorted sequences, so a duplicated edge fails too. */
 class ProjectionParitySpec extends SparkSpec {
+
+  private val day = java.sql.Date.valueOf("2024-01-18")
 
   /** The reference formulation, kept deliberately naive (the shape the
     * rewrite replaced): one big expansion + one rank window. */
@@ -41,22 +48,33 @@ class ProjectionParitySpec extends SparkSpec {
         col("walking_time"))
   }
 
-  private def changeEdgeSet(edges: DataFrame): Set[String] =
-    edges.filter(col("type") === "CHANGE")
-      .select("source", "target", "waiting_time", "walking_time")
-      .collect().map(_.toString).toSet
+  private type E = (Long, Long, String, Long, Long)
+
+  private def edgeSeq(edges: DataFrame): Seq[E] =
+    edges.select("source", "target", "type", "waiting_time", "walking_time")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+        r.getLong(3), r.getLong(4))).toSeq.sorted
 
   private def assertParity(gtfs: graft.model.GtfsTables, speed: Double): Unit = {
-    val day = java.sql.Date.valueOf("2024-01-18")
     val walk = graft.etl.GraphBuilder.walkTo(gtfs.stops, 300.0).localCheckpoint()
-    val g = graft.projection.TimeExpandedGraph.build(gtfs, day, speed, walk)
+    val onDriver = graft.projection.TimeExpandedGraph.build(gtfs, day, speed, walk)
+    val onSpark = graft.projection.TimeExpandedGraph.build(gtfs, day, speed, walk,
+      ssspLocalThreshold = 0L)
     try {
-      val fast = changeEdgeSet(g.edges)
-      val naive = changeEdgeSet(naiveChange(g.nodes, walk, speed))
-      assert(fast.nonEmpty)
-      assert(fast == naive,
-        s"missing=${(naive -- fast).take(5)} extra=${(fast -- naive).take(5)}")
-    } finally g.unpersist()
+      // each builder really ran: the driver one holds the local index and
+      // pins no schedule, the Spark one the reverse
+      assert(onDriver.localIndex.isDefined && onDriver.schedCache.isEmpty)
+      assert(onSpark.localIndex.isEmpty && onSpark.schedCache.isDefined)
+      val (driver, sparkBuilt) = (edgeSeq(onDriver.edges), edgeSeq(onSpark.edges))
+      val naive = edgeSeq(naiveChange(onDriver.nodes, walk, speed))
+      def diff(a: Seq[E], b: Seq[E]) =
+        s"missing=${b.diff(a).take(5)} extra=${a.diff(b).take(5)}"
+      assert(naive.nonEmpty && driver.exists(_._3 == "PRECEDES"))
+      assert(driver == sparkBuilt, s"driver vs Spark builder: ${diff(driver, sparkBuilt)}")
+      val driverChange = driver.filter(_._3 == "CHANGE")
+      assert(driverChange == naive, s"driver vs naive CHANGE: ${diff(driverChange, naive)}")
+      assert(onDriver.edgeCount == sparkBuilt.size)
+    } finally { onDriver.unpersist(); onSpark.unpersist() }
   }
 
   test("grid network (equidistant neighbors): schedule probe == naive rank") {
@@ -65,6 +83,14 @@ class ProjectionParitySpec extends SparkSpec {
   }
 
   test("demo fixture at a non-unit walking speed") {
+    // the demo feed's T6 runs past midnight (dep 24:05)
     assertParity(graft.api.DemoGtfs.tables(spark), speed = 1.4)
+  }
+
+  test("dirty feeds: arr > dep, a negative hop, a zero-total cycle") {
+    assertParity(DirtyFeeds.irregular(spark), speed = 1.0)
+    assertParity(DirtyFeeds.beyondAnchor(spark), speed = 1.0)
+    assertParity(DirtyFeeds.negativeHop(spark), speed = 1.0)
+    assertParity(DirtyFeeds.zeroCycle(spark), speed = 1.0)
   }
 }

@@ -259,10 +259,12 @@ class TransitSsspSpec extends SparkSpec {
     val gE = {
       val gtfs = graft.api.DemoGtfs.tables(spark)
       val walk = graft.etl.GraphBuilder.walkTo(gtfs.stops, 300.0)
-      // forced-enrichment floor per call (r18 — no global mutation)
+      // forced-enrichment floor per call (r18 — no global mutation); the
+      // enrichment is the Spark builder's, which only a projection over
+      // the local bound reaches
       graft.projection.TimeExpandedGraph.build(
         gtfs, java.sql.Date.valueOf("2024-01-18"), 1.0, walk,
-        enrichMinStatBytes = 0L)
+        ssspLocalThreshold = 0L, enrichMinStatBytes = 0L)
     }
     assert(gE.changeEnriched.columns.contains("w_rel"),
       "forced floor did not produce enriched edges")

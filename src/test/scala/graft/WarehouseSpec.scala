@@ -119,8 +119,12 @@ class WarehouseSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val bucketedTables = GtfsWarehouse.loadTablesBucketed(spark, "day_st_proj", dir, day)
       val plainTables = GtfsWarehouse.loadTables(spark, dir, day)
-      val gb = graft.projection.TimeExpandedGraph.build(bucketedTables, day, 1.0, walk)
-      val gp = graft.projection.TimeExpandedGraph.build(plainTables, day, 1.0, walk)
+      // ssspLocalThreshold = 0: the plans under test are the Spark
+      // builder's, which only a projection over the local bound reaches
+      val gb = graft.projection.TimeExpandedGraph.build(bucketedTables, day, 1.0, walk,
+        ssspLocalThreshold = 0L)
+      val gp = graft.projection.TimeExpandedGraph.build(plainTables, day, 1.0, walk,
+        ssspLocalThreshold = 0L)
       try {
         def edgeSet(g: graft.projection.TimeExpandedGraph) =
           g.edges.select("source", "target", "type", "waiting_time")
@@ -154,8 +158,8 @@ class WarehouseSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val g = graft.projection.TimeExpandedGraph
-        .build(gtfs, java.sql.Date.valueOf("2024-01-18"), 1.0, walk)
+      val g = graft.projection.TimeExpandedGraph // the Spark builder, as above
+        .build(gtfs, java.sql.Date.valueOf("2024-01-18"), 1.0, walk, ssspLocalThreshold = 0L)
       try {
         assert(g.edgeCount > 0)
         val plan = g.edges.queryExecution.executedPlan.toString
