@@ -40,13 +40,17 @@ private[api] final case class Seg(hop: Int, trip: String, departure: String,
   *
   * Correlated-Dijkstra decorrelation (SURVEY §7.3): the reference calls
   * `gds.shortestPath.dijkstra` once per candidate (source, target) pair
-  * (`main.py:95,143`). Here a routing call runs one search for all pairs:
-  * in the driver-side regimes (the local projection, the capped CSR) ONE
-  * labelled multi-source Dijkstra whose per-target label is the best
-  * source for that target ([[bestPath]]); in the distributed regime one
-  * multi-source TransitSssp run whose distance table is joined against the
-  * candidate targets and ranked top-1. Same answer as the per-pair
-  * searches, a fraction of the traversal work.
+  * (`main.py:95,143`). Here a routing call runs one flow in every regime:
+  * driver records of the named stops (the local index, or one bounded
+  * collect in the distributed regime) → one candidate selection
+  * ([[select]]: per-route earliest sources, horizon targets, the
+  * [[capAnchor]] clock) → one search for all pairs → the [[PairOrder]]
+  * minimum, ranked on the driver. The search is ONE labelled multi-source
+  * Dijkstra whose per-target label is the best source for that target
+  * ([[bestPath]]) in the driver-side regimes (the local projection, the
+  * capped CSR), or one staged multi-source TransitSssp run whose
+  * distances at the candidate targets are collected and ranked. Same
+  * answer as the per-pair searches, a fraction of the traversal work.
   */
 class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     ssspLocalThreshold: Long = ShortestPaths.LocalDijkstraMaxEdges,
@@ -58,6 +62,8 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     /** Node-count floor of the capped-slice machinery; engine-level specs
       * force the capped path at fixture scale by passing 0. */
     cappedSliceMinNodes: Long = graft.graph.TransitSssp.cappedSliceMinNodes) {
+
+  import RoutingEngine.{Cand, Candidates}
 
   private val spark: SparkSession = gtfs.stops.sparkSession
 
@@ -172,56 +178,55 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
       Endpoint(startNames, Some((startLat, startLon))),
       Endpoint(endNames, Some((endLat, endLon))))
 
-  /** THE best-pair ordering — one definition shared by both routing variants
-    * and both execution branches (r4 advice: the local branch used to
-    * hardcode a tuple that only happened to match the callers' orderCols).
-    * Formula: (t_arr + t_walk, cost + s_walk + t_walk, s_id, t_id). With
-    * zero walks this is exactly the stop-to-stop (arrival, cost) order
-    * (`main.py:102`); with walks it is the point-to-point
-    * (final_time, full_cost) order (`main.py:158-159`). `columns` and `key`
-    * MUST stay the same formula — the forced-Pregel parity spec pins them. */
+  /** THE best-pair ordering — one definition for both routing variants
+    * and every regime. Formula: (t_arr + t_walk, cost + s_walk + t_walk,
+    * s_id, t_id). With zero walks this is exactly the stop-to-stop
+    * (arrival, cost) order (`main.py:102`); with walks it is the
+    * point-to-point (final_time, full_cost) order (`main.py:158-159`). */
   private object PairOrder {
-    def columns: Seq[org.apache.spark.sql.Column] = Seq(
-      col("t_arr") + col("t_walk"), col("cost") + col("s_walk") + col("t_walk"),
-      col("s_id"), col("t_id"))
+    type Key = (Double, Double, Long, Long)
+    val order: Ordering[Key] = implicitly[Ordering[Key]]
     def key(tArr: Long, tWalk: Double, cost: Double, sWalk: Double,
-        sId: Long, tId: Long): (Double, Double, Long, Long) =
+        sId: Long, tId: Long): Key =
       (tArr + tWalk, cost + sWalk + tWalk, sId, tId)
   }
 
-  /** Shared routing core: per-route earliest source selection, one
+  /** Shared routing core: candidate selection ([[select]]), one
     * multi-source SSSP, candidate-pair ranking, path expansion (G6+J8).
     * Dispatches on the projection's regime: driver-side over the local
     * index below the SSSP threshold (the reference's in-memory regime),
-    * declarative DataFrames above it. The forced-Pregel parity spec pins
-    * both branches to identical itineraries. */
+    * TransitSssp above it. The forced-distributed parity specs pin the
+    * regimes to identical itineraries. */
   private def route(d: java.sql.Date, speed: Double, t0: Long,
       maxDurationHours: Int, src: Endpoint, tgt: Endpoint): DataFrame =
     segmentsDf(routeRows(d, speed, t0, maxDurationHours, src, tgt))
 
   /** Routing core returning the driver-side segment rows — `journey`
     * consumes these directly (change count, endpoints, times) without a
-    * round-trip through a LocalRelation collect. */
+    * round-trip through a LocalRelation collect. Both regimes select
+    * their candidates from driver records of the named stops: the local
+    * index, or one bounded collect ([[candidateRecs]]). */
   private def routeRows(d: java.sql.Date, speed: Double, t0: Long,
       maxDurationHours: Int, src: Endpoint, tgt: Endpoint): Seq[Seg] = {
     val g = projected(d, speed)
+    val horizonEnd = t0 + maxDurationHours * 3600L
     g.localIndex match {
-      case Some(ix) => routeLocal(g, ix, speed, t0, maxDurationHours, src, tgt)
-      case None => routeDistributed(g, speed, t0, maxDurationHours, src, tgt)
+      case Some(ix) =>
+        select(ix.byName, speed, t0, horizonEnd, src, tgt)
+          .fold(Seq.empty[Seg])(routeLocal(g, ix, _))
+      case None =>
+        val byName = candidateRecs(g, t0, horizonEnd, src, tgt).groupBy(_.stopName)
+        select(byName, speed, t0, horizonEnd, src, tgt)
+          .fold(Seq.empty[Seg])(routeDistributed(g, _))
     }
   }
 
-  /** Local regime: candidate selection, SSSP, pair ranking, and segment
-    * labeling all run over driver-resident state, and the segment
-    * DataFrame is a LocalRelation — a warm request runs zero Spark jobs.
-    * The SSSP is one labelled search from every candidate source, capped
-    * at the horizon ([[capAnchor]]) on the projection's arrival clock
-    * (uncapped on a feed with an arr > dep row);
-    * ranking = [[bestPath]], whose key is the same PairOrder definition
-    * the distributed branch orders by. */
-  private def routeLocal(g: TimeExpandedGraph, ix: graft.projection.LocalProjection,
-      speed: Double, t0: Long, maxDurationHours: Int,
-      src: Endpoint, tgt: Endpoint): Seq[Seg] = {
+  /** The candidate selection every regime routes from, over driver
+    * records of the named stops (`byName` may hold more rows than the
+    * predicates keep). None when no source or no target qualifies. */
+  private def select(byName: Map[String, Array[graft.projection.NodeRec]],
+      speed: Double, t0: Long, horizonEnd: Long,
+      src: Endpoint, tgt: Endpoint): Option[Candidates] = {
     import graft.projection.NodeRec
     import graft.functions.SpatialFunctions.haversineMetersScalar
     def walkSecs(e: Endpoint)(r: NodeRec): Double = e.walkFrom match {
@@ -230,14 +235,14 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     }
     def candidates(e: Endpoint): Seq[(NodeRec, Double)] =
       e.names.distinct.iterator
-        .flatMap(n => ix.byName.getOrElse(n, Array.empty[NodeRec]))
+        .flatMap(n => byName.getOrElse(n, Array.empty[NodeRec]))
         .map(r => (r, walkSecs(e)(r))).toSeq
 
     // source predicate: dep − s_walk > t0 (zero walk ⇒ dep > t0, `main.py:80`)
     val srcCands = candidates(src).filter { case (r, w) => r.dep - w > t0 }
     // Per-route earliest departure; apoc.agg.minItems + `s[0]` keeps one
-    // item per route (`main.py:84-87`) — deterministic first, same
-    // (dep_secs, trip_id, stop_sequence) order as the distributed window.
+    // item per route (`main.py:84-87`) — deterministic first by
+    // (dep_secs, trip_id, stop_sequence), trip ids in UTF-8 order.
     val srcRows = srcCands.groupBy(_._1.routeId).values.map(_.reduceLeft { (x, y) =>
       val c = java.lang.Long.compare(x._1.dep, y._1.dep) match {
         case 0 => graft.util.Utf8Order.compare(x._1.tripId, y._1.tripId) match {
@@ -248,32 +253,71 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
       }
       if (c <= 0) x else y
     }).toSeq
-    if (srcRows.isEmpty) return Nil
+    if (srcRows.isEmpty) return None
 
     // target predicate: dep + t_walk < t0 + horizon (`main.py:91,139`)
-    val horizonEnd = t0 + maxDurationHours * 3600L
     val tgtRows = candidates(tgt).filter { case (r, w) => r.dep + w < horizonEnd }
-    if (tgtRows.isEmpty) return Nil
+    if (tgtRows.isEmpty) return None
     val anchor = capAnchor(horizonEnd,
       tgtRows.iterator.map { case (r, _) => math.max(r.arr, r.dep) })
 
+    def cand(rw: (NodeRec, Double)): Cand = (rw._1.id, rw._1.dep, rw._1.arr, rw._2)
+    Some(Candidates(srcRows.map(cand).sortBy(_._1).toIndexedSeq, tgtRows.map(cand), anchor))
+  }
+
+  /** The distributed regime's driver records for [[select]]: ONE bounded
+    * collect of the day's stoptimes at the call's named stops — source
+    * names departing after t0, target names departing before the horizon
+    * end, supersets of the walk-adjusted predicates. These are per-stop
+    * schedule rows, not graph-sized; a name list that matches more than
+    * [[RoutingEngine.CandidateCollectMaxRows]] of them is refused with
+    * its row count. */
+  private def candidateRecs(g: TimeExpandedGraph, t0: Long, horizonEnd: Long,
+      src: Endpoint, tgt: Endpoint): Array[graft.projection.NodeRec] = {
+    def at(e: Endpoint) = col("stop_name").isin(e.names.distinct: _*)
+    val rows = g.nodes.filter((at(src) && col("dep_secs") > t0) ||
+      (at(tgt) && col("dep_secs") < horizonEnd))
+    val bound = RoutingEngine.CandidateCollectMaxRows
+    val recs = graft.projection.LocalProjection.recsOf(rows.limit(bound + 1))
+    if (recs.length > bound) throw new IllegalArgumentException(
+      s"routing: the named stops hold ${rows.count()} candidate stoptimes, " +
+        s"over the driver bound of $bound rows; pass fewer stop names")
+    recs
+  }
+
+  /** Local regime: SSSP, pair ranking, and segment labeling all run over
+    * driver-resident state, and the segment DataFrame is a LocalRelation
+    * — a warm request runs zero Spark jobs. The SSSP is one labelled
+    * search from every candidate source, capped at the horizon
+    * ([[capAnchor]]) on the projection's arrival clock (uncapped on a
+    * feed with an arr > dep row); ranking = [[bestPath]]. */
+  private def routeLocal(g: TimeExpandedGraph, ix: graft.projection.LocalProjection,
+      c: Candidates): Seq[Seg] = {
     // ONE labelled search replaces per-pair Dijkstras (SURVEY §7.3); the
     // per-projection handle reuses the resolved CSR across calls.
-    def cand(rw: (NodeRec, Double)): Cand = (rw._1.id, rw._1.dep, rw._1.arr, rw._2)
-    val srcs = srcRows.map(cand).sortBy(_._1).toIndexedSeq
-    val tgts = tgtRows.map(cand)
-    val path = bestPath(g.sssp.labelled(srcs.map(s => (s._1, s._4)),
-      tgts.iterator.map(_._1).toSet, g.capClock.map((_, anchor))), srcs, tgts)
+    val path = bestPath(g.sssp.labelled(c.srcs.map(s => (s._1, s._4)),
+      c.tgts.iterator.map(_._1).toSet, g.capClock.map((_, c.anchor))), c.srcs, c.tgts)
     if (path.size < 2) Nil else RoutingEngine.segmentRows(ix.get, path)
   }
 
-  /** Candidate stoptime of a routing call: (id, dep, arr, walk seconds). */
-  private type Cand = (Long, Long, Long, Double)
-
-  /** The clock cap both regimes search under: the horizon end, or the
-    * latest target clock when an irregular target row (arr > dep) runs
-    * past it — see routeDistributed for why the anchor sits at the
-    * targets' max(arr, dep).
+  /** The clock cap every regime searches under: the horizon end, or the
+    * latest target clock max(arr, dep) when a target row runs past it.
+    *
+    * Why the targets' clocks: rankable targets need only DEPART before
+    * the horizon (`main.py:91`), but a path's cost anchors at the
+    * target's ARRIVAL. On a clean feed arr ≤ dep < horizon end, so the
+    * horizon bounds every clock on an optimal path; a row whose arrival
+    * clock exceeds its departure (dirty data) can carry path clocks past
+    * it. Anchoring at max(horizon end, max over targets of max(arr, dep))
+    * keeps the target row's own clocks under the cap, and every stoptime
+    * on an optimal path to a target departs at or before that target's
+    * clock (event clocks only move forward), so a departure cap keeps the
+    * whole predecessor chain. Residual assumption of the departure caps
+    * (the capped CSR and the distributed grid): intra-trip clocks on the
+    * FINAL leg do not exceed the anchor — a non-monotone intermediate row
+    * whose departure clock exceeds every target's max(arr, dep) is capped
+    * out, and that regime's itinerary loses the row (GtfsEngineSpec pins
+    * the divergence). On clean feeds the anchor is the horizon end.
     *
     * The local regime relaxes into a stoptime only when its ARRIVAL
     * clock is ≤ the anchor (the capped CSR and the distributed grid cap
@@ -318,8 +362,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     * valid pair (no source can change it). */
   private def bestPath(run: ShortestPaths.Labels, srcs: IndexedSeq[Cand],
       tgts: Iterable[Cand]): List[Long] = {
-    type Key = (Double, Double, Long, Long)
-    val order = implicitly[Ordering[Key]]
+    import PairOrder.Key
     def keyOf(lab: ShortestPaths.Labels, t: Cand): Option[(Key, Boolean)] =
       lab.winner(t._1).map { case (i, cost) =>
         val (s, sDep, _, sw) = srcs(i)
@@ -327,7 +370,7 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
       }
     var best: Option[(Key, ShortestPaths.Labels, Long)] = None
     def offer(k: Key, lab: ShortestPaths.Labels, t: Long): Unit =
-      if (best.forall(b => order.lt(k, b._1))) best = Some((k, lab, t))
+      if (best.forall(b => PairOrder.order.lt(k, b._1))) best = Some((k, lab, t))
     val invalid = scala.collection.mutable.ArrayBuffer.empty[(Double, Cand)]
     tgts.foreach { t =>
       keyOf(run, t).foreach { case (k, valid) =>
@@ -343,136 +386,47 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     best.fold(List.empty[Long]) { case (_, lab, t) => lab.path(t) }
   }
 
-  /** Distributed regime: full distance table stays distributed; the path
-    * comes back through `ShortestPaths.pathDistributed` — a driver walk
-    * of the source's pred chain up to `DriverWalkMaxChainRows` rows,
-    * pointer doubling (log L self-joins) above it — never the reachable
-    * set. */
-  private def routeDistributed(g: TimeExpandedGraph, speed: Double, t0: Long,
-      maxDurationHours: Int, src: Endpoint, tgt: Endpoint): Seq[Seg] = {
-    def walkCol(e: Endpoint): org.apache.spark.sql.Column = e.walkFrom match {
-      case Some((la, lo)) => haversineMeters(col("lat"), col("lon"), lit(la), lit(lo)) / speed
-      case None => lit(0.0)
+  /** Distributed regime, from the same [[Candidates]] as the local one.
+    * When the horizon-bounded subgraph fits the capped-CSR budget
+    * (TransitSssp.runForTargetsCapped's gates), SSSP, ranking and path
+    * extraction run in-heap: one labelled search over the clock-capped
+    * subgraph, ranked by [[bestPath]]. Otherwise one staged TransitSssp
+    * run: its distances at the candidate targets — at most |sources| ×
+    * |targets| rows — are collected and ranked on the driver by
+    * [[PairOrder.key]] over the valid (t_dep > s_dep, `main.py:93,141`)
+    * pairs, and the winner's path comes back through
+    * `ShortestPaths.pathDistributed` — a driver walk of the source's pred
+    * chain up to `DriverWalkMaxChainRows` rows, pointer doubling (log L
+    * self-joins) above it — never the reachable set. */
+  private def routeDistributed(g: TimeExpandedGraph, c: Candidates): Seq[Seg] =
+    // Capped-CSR regime (r14): on cadence-bounded feeds (hubs) this
+    // replaces hundreds of per-CHANGE-depth Spark rounds with ns/edge
+    // relaxation; the subgraph is already clock-capped.
+    g.transit.runForTargetsCapped(c.srcs.map(s => (s._1, s._4)),
+        c.tgts.iterator.map(_._1).toSet, c.anchor.toDouble) match {
+      case Some(run) =>
+        val path = bestPath(run, c.srcs, c.tgts)
+        if (path.size < 2) Nil else segments(g, path)
+      case None => routeStaged(g, c)
     }
-    val sWalk = walkCol(src); val tWalk = walkCol(tgt)
-    val sourceCandidates = g.nodes
-      .filter(col("stop_name").isin(src.names.distinct: _*) &&
-        col("dep_secs") - sWalk > t0)
-      .withColumn("s_walk", sWalk)
-    val targets = g.nodes
-      .filter(col("stop_name").isin(tgt.names.distinct: _*) &&
-        col("dep_secs") + tWalk < t0 + maxDurationHours * 3600L)
-      .select(col("id").as("t_id"), col("dep_secs").as("t_dep"),
-        col("arr_secs").as("t_arr"), tWalk.as("t_walk"))
 
-    // Per-route earliest departure (`main.py:84-87`), distributed window.
-    val perRoute = Window.partitionBy("route_id")
-      .orderBy("dep_secs", "trip_id", "stop_sequence")
-    val srcRows = sourceCandidates
-      .withColumn("rn", row_number().over(perRoute)).filter(col("rn") === 1)
-      .select(col("id").as("s_id"), col("dep_secs").as("s_dep"), col("s_walk"))
-    val srcLocal = srcRows.collect() // tiny: one row per route at one stop
-    if (srcLocal.isEmpty) return Nil
-    val srcIds = srcLocal.map(_.getLong(0)).toSet
-
+  /** The staged TransitSssp flow of [[routeDistributed]]. */
+  private def routeStaged(g: TimeExpandedGraph, c: Candidates): Seq[Seg] = {
+    val Candidates(srcs, tgts, anchor) = c
     // Staged run: ranking needs only DISTANCES at the candidate targets —
     // none of the predecessor-resolution windows/joins run for it — and
     // the path needs predecessors for the ONE winning source (exact:
-    // resolution is per-(source, vertex) independent). The k-sources
-    // resolution this replaces was a measurable slice of every
-    // distributed routing call (COVERAGE.md, distributed scale section).
-    //
-    // Horizon cost cap, anchored at the candidate TARGETS' max event
-    // clock (r11 ADVICE): rankable targets need only DEPART before the
-    // horizon (`main.py:91`), and SSSP distances anchor at the target
-    // stoptime's ARRIVAL — on a clean feed arr ≤ dep < horizon_end so
-    // the horizon bounds every clock on an optimal path, but a feed with
-    // irregular rows (arrival clock > departure clock, e.g. dirty data)
-    // can carry path clocks past the horizon. Anchoring at
-    // max(horizon_end, max over targets of max(arr, dep)) restores the
-    // argument for the arr>dep-at-target case: path cost = clock elapsed
-    // + Σ per-change walks with each walk ≤ its change's wait (boarding
-    // requires s_arr + walk < t_dep), so cost ≤ 2 × clock elapsed
-    // < 2 × (anchor + 60 − s_dep), and every stoptime on an optimal path
-    // to a target departs at or before the target's anchor clock (event
-    // clocks only move forward), so the clock cap keeps the whole pred
-    // chain — intermediate rows of a final leg included. Residual
-    // assumption (r12 ADVICE): intra-trip clocks on the FINAL leg do not
-    // exceed the target anchor — a dirty feed with a non-monotone
-    // intermediate row whose dep clock exceeds every target's
-    // max(arr, dep) would have that row clock-capped out of the grid,
-    // losing a pred-chain segment vs the uncapped CSR branch. Exact for
-    // ranking and for the winner's pred chain (cost is monotone along
-    // paths; see TransitSssp.staged). On clean feeds the anchor equals
-    // horizon_end and both caps are unchanged.
-    // dep_secs is IntegerType on CSV-loaded feeds and LongType on others
-    val minDep = srcLocal.map(_.getAs[Number]("s_dep").longValue()).min
-    val horizonEnd = t0 + maxDurationHours * 3600L
-    // Bounded collect of the candidate-target dimension — structurally
-    // per-stop schedule rows (departures at the named stops inside the
-    // horizon), not graph-sized. Driver rows serve (a) the cap anchor
-    // without a separate agg job and (b) the capped-CSR regime's
-    // driver-side ranking below. An oversized dimension keeps the
-    // distributed agg + staged flow — as does a projection where the
-    // capped regime is structurally inactive (budget off, under the
-    // node-count floor): there the collect would be pure waste and the
-    // one distributed agg it replaced is the cheaper plan (r14 ADVICE).
-    val tgtLocal =
-      if (!g.transit.cappedEligible) None
-      else {
-        val rows = targets.limit(RoutingEngine.TargetCollectMaxRows + 1).collect()
-        if (rows.length > RoutingEngine.TargetCollectMaxRows) None else Some(rows)
-      }
-    // greatest()-of-the-replaced-aggregate semantics: GTFS permits blank
-    // non-timepoint arrivals, so a null t_arr contributes its dep clock
-    // only (t_dep is non-null by the horizon filter's null rejection)
-    def clockOf(r: org.apache.spark.sql.Row): Long = {
-      val dep = r.getAs[Number]("t_dep").longValue()
-      val arr = r.getAs[Number]("t_arr")
-      if (arr == null) dep else math.max(arr.longValue(), dep)
-    }
-    val anchor = tgtLocal match {
-      case Some(rows) =>
-        if (rows.isEmpty) return Nil // no rankable targets
-        capAnchor(horizonEnd, rows.iterator.map(clockOf))
-      case None =>
-        val row = targets
-          .agg(max(greatest(col("t_arr").cast("long"), col("t_dep").cast("long"))))
-          .head()
-        if (row.isNullAt(0)) return Nil // no rankable targets
-        capAnchor(horizonEnd, Iterator.single(row.getLong(0)))
-    }
-    val costCap = 2.0 * ((anchor + 60L) - minDep).max(0L)
-
-    // Capped-CSR regime (r14): when the horizon-bounded subgraph fits the
-    // driver budget (TransitSssp.runForTargetsCapped's gates), SSSP,
-    // ranking, and path extraction all run over in-heap state — the exact
-    // shape routeLocal runs, over the clock-capped subgraph instead of the
-    // whole projection. On cadence-bounded feeds (hubs) this replaces
-    // hundreds of per-CHANGE-depth Spark rounds with ns/edge relaxation.
-    // One labelled search, ranked by bestPath, routeLocal's own
-    // (PairOrder.key inside); the subgraph is already clock-capped.
-    // Null-arr targets keep the staged flow: the distributed ranking
-    // orders their null (t_arr + t_walk) key nulls-first, a behavior the
-    // driver-side key can't express without duplicating the formula —
-    // and such rows only occur on non-timepoint-blank feeds.
-    val srcs = srcLocal.map(s => (s.getLong(0), s.getAs[Number]("s_dep").longValue(),
-      0L, s.getAs[Double]("s_walk"))).sortBy(_._1).toIndexedSeq
-    for (tgtRows <- tgtLocal
-           if tgtRows.forall(r => !r.isNullAt(r.fieldIndex("t_arr")));
-         run <- g.transit.runForTargetsCapped(srcs.map(s => (s._1, s._4)),
-           tgtRows.iterator.map(_.getAs[Long]("t_id")).toSet, anchor.toDouble)) {
-      val path = bestPath(run, srcs,
-        tgtRows.view.map(t => (t.getAs[Long]("t_id"), t.getAs[Number]("t_dep").longValue(),
-          t.getAs[Number]("t_arr").longValue(), t.getAs[Double]("t_walk"))))
-      return if (path.size < 2) Nil else segments(g, path)
-    }
-
+    // resolution is per-(source, vertex) independent). Cost cap: path
+    // cost = clock elapsed + Σ per-change walks, each walk ≤ its change's
+    // wait (boarding requires s_arr + walk < t_dep), so cost ≤ 2 × clock
+    // elapsed < 2 × (anchor + 60 − s_dep); exact for ranking and for the
+    // winner's pred chain (cost is monotone along paths; see
+    // TransitSssp.staged).
+    val costCap = 2.0 * ((anchor + 60L) - srcs.iterator.map(_._2).min).max(0L)
     val sc = spark.sparkContext
     sc.setJobDescription("route: sssp converge")
-    val staged = g.transit.staged(srcIds, costCap = costCap,
+    val staged = g.transit.staged(srcs.iterator.map(_._1).toSet, costCap = costCap,
       clockCap = anchor.toDouble)
-    val dist = staged.distances.cache()
     var predOne: DataFrame = null
     // try/finally, not happy-path cleanup: a throw (or early return) out of
     // ranking/resolution/path extraction must still release the staged
@@ -480,16 +434,16 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     // blocks per round that would otherwise wait for the ContextCleaner.
     try {
       sc.setJobDescription("route: pair ranking")
-      val pairs = dist
-        .join(targets, col("vertex_id") === col("t_id"))
-        .join(broadcast(srcRows.withColumnRenamed("s_id", "source_id")), Seq("source_id"))
-        // target must depart after its source (`main.py:93,141`)
-        .filter(col("t_dep") > col("s_dep"))
-        .withColumn("cost", col("dist"))
-        .withColumnRenamed("source_id", "s_id")
-      val row = pairs.orderBy(PairOrder.columns: _*).limit(1).collect().headOption
-        .getOrElse(return Nil)
-      val (bestSrc, bestTgt) = (row.getAs[Long]("s_id"), row.getAs[Long]("t_id"))
+      val srcById = srcs.iterator.map(s => s._1 -> s).toMap
+      val tgtById = tgts.iterator.map(t => t._1 -> t).toMap
+      val best = staged.distances
+        .filter(col("vertex_id").isInCollection(tgtById.keySet))
+        .collect().iterator.flatMap { r =>
+          val (t, s) = (tgtById(r.getLong(0)), srcById(r.getLong(1)))
+          if (t._2 > s._2) Some(PairOrder.key(t._3, t._4, r.getDouble(2), s._4, s._1, t._1))
+          else None
+        }.minOption(PairOrder.order).getOrElse(return Nil)
+      val (bestSrc, bestTgt) = (best._3, best._4)
       sc.setJobDescription("route: pred resolve + path")
       predOne = staged.resolve(bestSrc).cache()
       val path =
@@ -513,7 +467,6 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     } finally {
       sc.setJobDescription(null)
       if (predOne != null) predOne.unpersist()
-      dist.unpersist()
       staged.release()
     }
   }
@@ -700,13 +653,21 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
 }
 
 object RoutingEngine {
-  /** Row bound for routeDistributed's candidate-target collect: targets
-    * are the horizon's departures at the NAMED stops — per-stop schedule
-    * size (hundreds to low tens of thousands on real feeds), not graph
-    * size, so 1M rows (≈ tens of MB driver) covers any plausible call
-    * while a degenerate name list (every stop in a mega-feed) falls back
-    * to the distributed agg + staged flow. */
-  val TargetCollectMaxRows: Int = 1 << 20
+  /** Candidate stoptime of a routing call: (id, dep, arr, walk seconds). */
+  private type Cand = (Long, Long, Long, Double)
+
+  /** The candidates of one routing call: sources in ascending id order
+    * (seed index = position in `srcs`), targets, and the clock cap every
+    * regime searches under. */
+  private final case class Candidates(srcs: IndexedSeq[Cand], tgts: Seq[Cand], anchor: Long)
+
+  /** Row bound of the distributed regime's candidate collect: the
+    * departures at the NAMED stops after the request time (sources) and
+    * before the horizon end (targets) — per-stop schedule size (hundreds
+    * to low tens of thousands on real feeds), not graph size, so 1M rows
+    * (≈ tens of MB driver) covers any plausible call; a degenerate name
+    * list (every stop in a mega-feed) is refused with its row count. */
+  val CandidateCollectMaxRows: Int = 1 << 20
 
   /** Schema of every routing frame (`routing`, `routingBetweenTwoPoints`,
     * `JourneySummary.segments`): [[Seg]]'s fields in order — `hop` and the

@@ -693,16 +693,6 @@ final class TransitSssp(nodes: DataFrame, changeEdges: DataFrame,
     Some(csr)
   }
 
-  /** Structural eligibility of the capped regimes for this instance — the
-    * CSR budget is on and the feed clears the node-count floor: the same
-    * leading gates [[runForTargetsCapped]] checks, exposed so callers can
-    * skip capped-only preparation (the routing engine's bounded target
-    * collect) when the regime can never engage here (r14 ADVICE). The
-    * node count is the memoized projection count — no extra job. */
-  def cappedEligible: Boolean =
-    cappedCsrMaxEdges > 0L &&
-      nodeCount >= cappedSliceMinNodes
-
   /** Clock-capped driver-CSR routing run (r14 — the hub-cadence lever).
     * Engages when the capped-slice machinery is active for this cap (the
     * node-count floor and both broadcast gates pass) and the subgraph fits

@@ -20,8 +20,8 @@ import graft.model.GtfsTables
   * across runs and cluster layouts, fits GraphX's Long VertexId.
   *
   * The regime is decided once, before any edge exists, on first use of the
-  * edges, the SSSP handle or the local index: one count over the cached
-  * `nodes`. When it and the derived edge count are both within
+  * edges, the SSSP handle or the local index: one aggregate over the
+  * cached `nodes`, which also refuses a day with blank stop times. When it and the derived edge count are both within
   * `ssspLocalThreshold`, the projection is built on the driver
   * ([[DriverBuild]]: one node collect, one WALK_TO collect, the routing CSR
   * built directly) and routes in the local regime; no edge frame is
@@ -56,14 +56,36 @@ final class TimeExpandedGraph private[projection] (val nodes: DataFrame,
 
   /** The driver-built projection, or None when the projection routes
     * distributed (node count, then derived edge count, over the local
-    * bound). The collects run on the calling thread: this initializer
+    * bound). Throws IllegalArgumentException, naming the count and the
+    * first (trip_id, stop_sequence), when a node has a blank clock (a
+    * second job, run only then). The collects run on the calling thread: this initializer
     * holds the projection's monitor, so work handed to the shared pool
     * could queue behind pool threads BLOCKED on that monitor — a
     * deadlock. */
   private lazy val driverGraph: Option[DriverGraph] = {
+    val (count, blank) = nodeCounts
+    if (blank > 0) {
+      val first = nodes.filter(blankClock).orderBy("trip_id", "stop_sequence")
+        .select("trip_id", "stop_sequence").head()
+      throw new IllegalArgumentException(s"the day has $blank stoptimes with a " +
+        "blank arrival or departure time, which no routing regime can route; " +
+        s"the first is (trip_id, stop_sequence) = (${first.get(0)}, ${first.get(1)})")
+    }
     val cap = graft.graph.ShortestPaths.localCap(ssspLocalThreshold)
-    if (nodes.count() > cap) None
+    if (count > cap) None
     else DriverBuild(nodes, walkToEdges, speed, cap)
+  }
+
+  private def blankClock = col("arr_secs").isNull || col("dep_secs").isNull
+
+  /** (node count, nodes with a blank arrival or departure time): one
+    * aggregate over the cached nodes, the regime decision's only job.
+    * GTFS allows blank times on non-timepoint stops, but every routing
+    * regime needs both clocks, so [[driverGraph]] refuses such a feed
+    * before either builder runs. */
+  private lazy val nodeCounts: (Long, Long) = {
+    val r = nodes.agg(count(lit(1)), count(when(blankClock, lit(1)))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   // Forced-flags tell unpersist() which lazy caches exist. Every lazy val
@@ -103,7 +125,7 @@ final class TimeExpandedGraph private[projection] (val nodes: DataFrame,
   def schedCache: Option[DataFrame] =
     if (driverGraph.isDefined) None else edgesAndSched._2.headOption
 
-  def nodeCount: Long = nodes.count()
+  def nodeCount: Long = nodeCounts._1
   def edgeCount: Long = driverGraph.fold(edges.count())(_.edgeCount)
 
   /** Edge list in the shape ShortestPaths.fromDF expects. */

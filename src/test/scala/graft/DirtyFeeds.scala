@@ -64,6 +64,13 @@ object DirtyFeeds {
         ("TB", "14:10:00", "14:45:00", "SM", 2),
         ("TB", "15:00:00", "15:01:00", "ST", 3)))
 
+  /** TB's middle row has a blank arrival time, as GTFS allows on a
+    * non-timepoint stop; the CSV loader reads the empty field as null. */
+  def blankArrival(spark: SparkSession): GtfsTables =
+    feed(spark, twoRoutes, twoTrips, fourStops, startLeg ++ Seq(
+      ("TB", null, "14:45:00", "SM", 2),
+      ("TB", "15:00:00", "15:01:00", "ST", 3)))
+
   /** TB runs 20 min backward and TC boards with zero dwell at co-located
     * stops SB/SC/SD (walk 0 between them): the cycle TB1 → TB2 → TC1 → TB1
     * costs exactly 0. */

@@ -355,6 +355,22 @@ class GtfsEngineSpec extends SparkSpec {
       segL.last.getAs[String]("arrival"))
   }
 
+  test("a feed with a blank stop time fails routing pointedly, in both regimes") {
+    // the regime decision counts the blank clocks and refuses the day
+    // before either builder runs; near-stop search needs no edges
+    val tables = DirtyFeeds.blankArrival(spark)
+    for (threshold <- Seq(ShortestPaths.LocalDijkstraMaxEdges, 0L))
+      withEngine(new RoutingEngine(tables, ssspLocalThreshold = threshold)) { eng =>
+        val e = intercept[IllegalArgumentException](
+          eng.routing(Day, 1.0, "13:50:00", "Start", "End"))
+        assert(e.getMessage.contains("1 stoptimes with a blank arrival or departure") &&
+          e.getMessage.contains("(trip_id, stop_sequence) = (TB, 2)"),
+          s"threshold $threshold: ${e.getMessage}")
+        assert(eng.findNearStops(Day, 44.62, 10.9, 300).collect().map(_.getString(0))
+          .toSeq == Seq("Mid"), s"threshold $threshold")
+      }
+  }
+
   test("concurrent routing calls do not corrupt each other's paths") {
     // two threads route different OD pairs against the SAME engine (shared
     // projection + Sssp handle); each TargetRun owns its own path state, so

@@ -11,7 +11,9 @@ import graft.model.GtfsTables
   * origin and destination share stops (the `t_dep > s_dep` second run), a
   * trip that arrives before the horizon anchor and departs after it, a
   * feed with a row that arrives after it departs (uncapped search) and a
-  * negative-weight feed (uncapped label-correcting search). */
+  * negative-weight feed (uncapped label-correcting search). The grid's
+  * first requests also pin the distributed regime's staged flow to the
+  * same oracle. */
 class LabelledRoutingSpec extends graft.SparkSpec {
   import spark.implicits._
 
@@ -30,12 +32,14 @@ class LabelledRoutingSpec extends graft.SparkSpec {
     private val ix = g.localIndex.getOrElse(fail("fixture must route in the local regime"))
     private val edges = g.weightedEdges.as[(Long, Long, Double)].collect().toSeq
 
-    def apply(r: Req): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    /** `via` routes the request (another regime's engine on the same
+      * feed); the oracle always reads this engine's projection. */
+    def apply(r: Req, via: RoutingEngine = eng): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
       val got = ((r.from, r.to) match {
         case (Some((oLa, oLo)), Some((dLa, dLo))) =>
-          eng.routingBetweenTwoPoints(Day, oLa, oLo, dLa, dLo, r.srcNames, r.tgtNames,
+          via.routingBetweenTwoPoints(Day, oLa, oLo, dLa, dLo, r.srcNames, r.tgtNames,
             1.0, r.time, Horizon)
-        case _ => eng.routing(Day, 1.0, r.time, r.srcNames.head, r.tgtNames.head, Horizon)
+        case _ => via.routing(Day, 1.0, r.time, r.srcNames.head, r.tgtNames.head, Horizon)
       }).collect().map(_.toSeq).toSeq
       val (srcs, tgts) = PerSourceRanking.candidates(ix.recs.toSeq, r.srcNames, r.from,
         r.tgtNames, r.to, 1.0, parseHms(r.time), Horizon)
@@ -99,26 +103,35 @@ class LabelledRoutingSpec extends graft.SparkSpec {
         .withColumn("dep_secs", secondsSinceMidnight(col("departure_time"))),
       Seq(("S1", java.sql.Date.valueOf(Day), "1")).toDF("service_id", "day", "exception_type"))
 
+  private val (gridK, gridSeed) = (5, 11L)
+
+  /** The random grid's requests, in order (a fixed seed): every fifth
+    * stop to stop, the rest point to point with near-stop lists read from
+    * `eng`; every other request ends one cell away, so the near-stop sets
+    * overlap. */
+  private def gridRequests(eng: RoutingEngine): Iterator[Req] = {
+    val k = gridK
+    val rnd = new scala.util.Random(gridSeed * 31)
+    def point(r: Int, c: Int) = (44.6 + r * 0.0015, 10.9 + c * 0.002)
+    def near(p: (Double, Double)) =
+      eng.findNearStops(Day, p._1, p._2, 300).collect().map(_.getString(0)).toSeq
+    Iterator.from(0).map { i =>
+      val (r0, c0) = (rnd.nextInt(k), rnd.nextInt(k))
+      val (r1, c1) =
+        if (i % 2 == 0) (rnd.nextInt(k), rnd.nextInt(k))
+        else ((r0 + 1) % k, c0)
+      val (from, to) = (point(r0, c0), point(r1, c1))
+      val time = f"06:${rnd.nextInt(40)}%02d:00"
+      if (i % 5 == 4) Req(Seq(s"Stop $r0/$c0"), Seq(s"Stop $r1/$c1"), None, None, time)
+      else Req(near(from), near(to), Some(from), Some(to), time)
+    }
+  }
+
   test("random tie-heavy grid: the labelled search picks the per-source oracle's itinerary") {
-    val (k, seed) = (5, 11L)
-    withEngine(new RoutingEngine(randomGrid(seed, k, tripsPerRoute = 4))) { eng =>
+    withEngine(new RoutingEngine(randomGrid(gridSeed, gridK, tripsPerRoute = 4))) { eng =>
       val both = new Both(eng)
-      val rnd = new scala.util.Random(seed * 31)
-      def point(r: Int, c: Int) = (44.6 + r * 0.0015, 10.9 + c * 0.002)
-      def near(p: (Double, Double)) =
-        eng.findNearStops(Day, p._1, p._2, 300).collect().map(_.getString(0)).toSeq
       var routed, sharedRouted = 0
-      (0 until 100).foreach { i =>
-        val (r0, c0) = (rnd.nextInt(k), rnd.nextInt(k))
-        // every other request ends one cell away: overlapping near-stop sets
-        val (r1, c1) =
-          if (i % 2 == 0) (rnd.nextInt(k), rnd.nextInt(k))
-          else ((r0 + 1) % k, c0)
-        val (from, to) = (point(r0, c0), point(r1, c1))
-        val time = f"06:${rnd.nextInt(40)}%02d:00"
-        val req =
-          if (i % 5 == 4) Req(Seq(s"Stop $r0/$c0"), Seq(s"Stop $r1/$c1"), None, None, time)
-          else Req(near(from), near(to), Some(from), Some(to), time)
+      gridRequests(eng).take(100).zipWithIndex.foreach { case (req, i) =>
         val (got, want) = both(req)
         assert(got == want, s"request $i ($req):\nengine=$got\noracle=$want")
         if (want.nonEmpty) {
@@ -128,6 +141,27 @@ class LabelledRoutingSpec extends graft.SparkSpec {
       }
       assert(routed >= 80 && sharedRouted >= 30,
         s"fixture drifted: routed $routed, $sharedRouted with a shared stop")
+    }
+  }
+
+  test("random tie-heavy grid: the staged distributed flow picks the oracle's itinerary") {
+    // the first 12 requests of the grid case, walked and stop to stop,
+    // routed by a ssspLocalThreshold = 0 engine (staged TransitSssp: the
+    // capped CSR stays off under its node-count floor)
+    val feed = randomGrid(gridSeed, gridK, tripsPerRoute = 4)
+    withEngine(new RoutingEngine(feed)) { eng =>
+      withEngine(new RoutingEngine(feed, ssspLocalThreshold = 0L)) { engD =>
+        val both = new Both(eng)
+        var routed = 0
+        gridRequests(eng).take(12).zipWithIndex.foreach { case (req, i) =>
+          val (got, want) = both(req, via = engD)
+          assert(got == want, s"request $i ($req):\ndistributed=$got\noracle=$want")
+          if (want.nonEmpty) routed += 1
+        }
+        assert(routed >= 8, s"fixture drifted: routed $routed of 12")
+        assert(engD.projected(java.sql.Date.valueOf(Day), 1.0).localIndex.isEmpty &&
+          engD.evidence.cappedCsrServed.get() == 0L, "the staged flow did not route")
+      }
     }
   }
 
