@@ -115,11 +115,13 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     val g = projected(day(date), speed)
     g.localStopDim match {
       case Some(arr) =>
-        import spark.implicits._
-        arr.iterator.filter { case (_, la, lo) =>
+        import scala.jdk.CollectionConverters._
+        val names = arr.iterator.filter { case (_, la, lo) =>
           graft.functions.SpatialFunctions.haversineMetersScalar(la, lo, lat, lon) < radius
         }.map(_._1).filter(_ != null) // distributed distinct() tolerated null names; so must we
-          .toSet.toSeq.sorted.toDF("stop_name")
+          .toSet.toSeq.sorted
+        // a constant schema spares the per-call reflective encoder, as in segmentsDf
+        spark.createDataFrame(names.map(Row(_)).asJava, RoutingEngine.NearStopSchema)
       case None =>
         g.stopDim
           // bbox + exact haversine: the box predicates prune a columnar
@@ -186,9 +188,12 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   private object PairOrder {
     type Key = (Double, Double, Long, Long)
     val order: Ordering[Key] = implicitly[Ordering[Key]]
+    /** The key's first component, which does not depend on the source —
+      * the labelled search prunes targets by it ([[routeLocal]]). */
+    def primary(tArr: Long, tWalk: Double): Double = tArr + tWalk
     def key(tArr: Long, tWalk: Double, cost: Double, sWalk: Double,
         sId: Long, tId: Long): Key =
-      (tArr + tWalk, cost + sWalk + tWalk, sId, tId)
+      (primary(tArr, tWalk), cost + sWalk + tWalk, sId, tId)
   }
 
   /** Shared routing core: candidate selection ([[select]]), one
@@ -258,11 +263,10 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     // target predicate: dep + t_walk < t0 + horizon (`main.py:91,139`)
     val tgtRows = candidates(tgt).filter { case (r, w) => r.dep + w < horizonEnd }
     if (tgtRows.isEmpty) return None
-    val anchor = capAnchor(horizonEnd,
-      tgtRows.iterator.map { case (r, _) => math.max(r.arr, r.dep) })
-
     def cand(rw: (NodeRec, Double)): Cand = (rw._1.id, rw._1.dep, rw._1.arr, rw._2)
-    Some(Candidates(srcRows.map(cand).sortBy(_._1).toIndexedSeq, tgtRows.map(cand), anchor))
+    val tgts = tgtRows.map(cand)
+    Some(Candidates(srcRows.map(cand).sortBy(_._1).toIndexedSeq, tgts,
+      capAnchor(horizonEnd, tgts.iterator.map(RoutingEngine.clock))))
   }
 
   /** The distributed regime's driver records for [[select]]: ONE bounded
@@ -287,17 +291,41 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
 
   /** Local regime: SSSP, pair ranking, and segment labeling all run over
     * driver-resident state, and the segment DataFrame is a LocalRelation
-    * — a warm request runs zero Spark jobs. The SSSP is one labelled
-    * search from every candidate source, capped at the horizon
-    * ([[capAnchor]]) on the projection's arrival clock (uncapped on a
-    * feed with an arr > dep row); ranking = [[bestPath]]. */
+    * — a warm request runs zero Spark jobs. The SSSP is [[localSearch]];
+    * ranking = [[bestPath]]. */
   private def routeLocal(g: TimeExpandedGraph, ix: graft.projection.LocalProjection,
       c: Candidates): Seq[Seg] = {
-    // ONE labelled search replaces per-pair Dijkstras (SURVEY §7.3); the
-    // per-projection handle reuses the resolved CSR across calls.
-    val path = bestPath(g.sssp.labelled(c.srcs.map(s => (s._1, s._4)),
-      c.tgts.iterator.map(_._1).toSet, g.capClock.map((_, c.anchor))), c.srcs, c.tgts)
+    val path = bestPath(localSearch(g, c), c.srcs, c.tgts)
     if (path.size < 2) Nil else RoutingEngine.segmentRows(ix.get, path)
+  }
+
+  /** The local regime's SSSP: ONE labelled search from every candidate
+    * source (replacing per-pair Dijkstras, SURVEY §7.3; the per-projection
+    * handle reuses the resolved CSR across calls), capped at the horizon
+    * ([[capAnchor]]) on the projection's arrival clock (uncapped on a feed
+    * with an arr > dep row) and pruned by the pair order: once a target
+    * settles with a valid winner, targets whose [[PairOrder.primary]] key
+    * exceeds its key stop being waited for and the cap falls to the
+    * clocks of the targets that can still win
+    * ([[ShortestPaths.Labels]]). */
+  private def localSearch(g: TimeExpandedGraph, c: Candidates): ShortestPaths.Labels =
+    g.sssp.labelled(c.srcs.map(s => (s._1, s._4, s._2)),
+      c.tgts.map(t => ShortestPaths.Goal(t._1, t._2, PairOrder.primary(t._3, t._4),
+        RoutingEngine.clock(t))),
+      g.capClock.map((_, c.anchor)))
+
+  /** [[routingBetweenTwoPoints]]'s labelled search in the local regime —
+    * what [[bestPath]] ranks — so a spec can read its work count; None
+    * when the projection routes distributed or no candidate qualifies. */
+  private[api] def localSearchBetweenTwoPoints(date: String, startLat: Double,
+      startLon: Double, endLat: Double, endLon: Double, startNames: Seq[String],
+      endNames: Seq[String], speed: Double, time: String,
+      maxDurationHours: Int): Option[ShortestPaths.Labels] = {
+    val g = projected(day(date), speed)
+    val t0 = parseHms(time)
+    g.localIndex.flatMap(ix => select(ix.byName, speed, t0, t0 + maxDurationHours * 3600L,
+      Endpoint(startNames, Some((startLat, startLon))),
+      Endpoint(endNames, Some((endLat, endLon))))).map(localSearch(g, _))
   }
 
   /** The clock cap every regime searches under: the horizon end, or the
@@ -337,7 +365,17 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     * A row v with arr > dep breaks the PRECEDES step out of it (nothing
     * bounds arr(v)), so a feed with such a row searches uncapped
     * ([[graft.projection.TimeExpandedGraph.capClock]] is None), as does a
-    * negative-weight feed ([[ShortestPaths.Labels]]). */
+    * negative-weight feed ([[ShortestPaths.Labels]]).
+    *
+    * The local search lowers this anchor as it runs ([[localSearch]]):
+    * once a target settles whose winner forms a valid pair, with primary
+    * key P*, no target whose primary key exceeds P* can win, and the
+    * anchor falls to the greatest max(arr, dep) over the targets whose
+    * primary key is ≤ P*, never above this one. Exact by the argument
+    * above, applied to the targets that can still win: each one's optimal
+    * path keeps its clocks under that target's own max(arr, dep). Lowering
+    * the anchor to P* itself would not be: a kept target may be boarded
+    * after its arrival, along a path whose clocks pass P*. */
   private def capAnchor(horizonEnd: Long, targetClocks: Iterator[Long]): Long =
     targetClocks.foldLeft(horizonEnd)(math.max)
 
@@ -359,7 +397,14 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     * (cost 0, t_dep == s_dep). A target whose winner fails the filter gets
     * a second run of the same search, seeded only with the sources that
     * depart before it, unless its primary key already loses to the best
-    * valid pair (no source can change it). */
+    * valid pair (no source can change it). The second run is unpruned.
+    *
+    * `run` may carry the local regime's target prune ([[localSearch]]):
+    * only a settled target whose winner passes the filter sets the prune's
+    * key P*, every target whose primary key is ≤ P* is settled (or
+    * unreachable) when the search stops, and a target above P* may read as
+    * unreached — it loses to the pair that set P* whatever its label, so
+    * the minimum and the second runs it triggers are unchanged. */
   private def bestPath(run: ShortestPaths.Labels, srcs: IndexedSeq[Cand],
       tgts: Iterable[Cand]): List[Long] = {
     import PairOrder.Key
@@ -656,6 +701,10 @@ object RoutingEngine {
   /** Candidate stoptime of a routing call: (id, dep, arr, walk seconds). */
   private type Cand = (Long, Long, Long, Double)
 
+  /** A target's clock max(arr, dep), which [[RoutingEngine.capAnchor]]
+    * anchors at. */
+  private def clock(t: Cand): Long = math.max(t._2, t._3)
+
   /** The candidates of one routing call: sources in ascending id order
     * (seed index = position in `srcs`), targets, and the clock cap every
     * regime searches under. */
@@ -668,6 +717,11 @@ object RoutingEngine {
     * (≈ tens of MB driver) covers any plausible call; a degenerate name
     * list (every stop in a mega-feed) is refused with its row count. */
   val CandidateCollectMaxRows: Int = 1 << 20
+
+  /** Schema of `findNearStops`' driver-built frame: the one nullable
+    * string column the distributed stop dimension's frame has. */
+  private[api] val NearStopSchema: StructType =
+    StructType(Seq(StructField("stop_name", StringType)))
 
   /** Schema of every routing frame (`routing`, `routingBetweenTwoPoints`,
     * `JourneySummary.segments`): [[Seg]]'s fields in order — `hop` and the

@@ -304,12 +304,20 @@ object ShortestPaths {
     private[graft] def localIds: Array[Long] = csr.ids
 
     /** One labelled multi-source search (see [[Labels]]) on the local CSR,
-      * bounded by `targets`. `cap = Some((clock, anchor))` relaxes into a
-      * vertex only when its clock (aligned to [[localIds]]) is ≤ anchor.
-      * Local regime only. */
-    private[graft] def labelled(seeds: IndexedSeq[(Long, Double)], targets: Set[Long],
-        cap: Option[(Array[Long], Long)]): Labels =
-      labels(csr, seeds, targets, cap)
+      * bounded by `goals` and pruned by their pair order ([[dijkstraCsr]]).
+      * `seeds` are (id, walk seconds, departure) in strictly ascending id
+      * order. `cap = Some((clock, anchor))` relaxes into a vertex only when
+      * its clock (aligned to [[localIds]]) is ≤ anchor; the prune may lower
+      * the anchor, never raise it. Local regime only. */
+    private[graft] def labelled(seeds: IndexedSeq[(Long, Double, Long)], goals: Seq[Goal],
+        cap: Option[(Array[Long], Long)]): Labels = {
+      val g = csr
+      val in = goals.iterator.map(t => (g.indexOf(t.id), t)).filter(_._1 >= 0)
+        .toSeq.distinctBy(_._1).sortBy(_._1)
+      labels(g, seeds.map(s => (s._1, s._2)), goals.iterator.map(_.id).toSet, cap,
+        Some(new Prune(seeds.map(_._3).toArray, in.map(_._1).toArray,
+          in.map(_._2.dep).toArray, in.map(_._2.primary).toArray, in.map(_._2.clock).toArray)))
+    }
 
     private def csr: Csr = localCsr.getOrElse(throw new IllegalStateException(
       "the graph routes in the distributed regime: no local CSR"))
@@ -383,7 +391,7 @@ object ShortestPaths {
       val si = g.indexOf(src)
       if (si < 0) None
       else {
-        val l = search(g, Array(si), Array(0.0), stop, None)
+        val l = search(g, Array(si), Array(0.0), stop, None, None)
         Some(src -> ((l.cost, l.pred)))
       }
     }.toMap
@@ -406,21 +414,38 @@ object ShortestPaths {
     * projection and the clock-capped CSR). `seeds` must be in strictly
     * ascending id order: a seed's index is its rank. */
   private[graph] def labels(g: Csr, seeds: IndexedSeq[(Long, Double)],
-      targets: Set[Long], cap: Option[(Array[Long], Long)]): Labels = {
+      targets: Set[Long], cap: Option[(Array[Long], Long)],
+      prune: Option[Prune] = None): Labels = {
     require(seeds.indices.drop(1).forall(i => seeds(i - 1)._1 < seeds(i)._1),
       "labelled search: seeds must be in strictly ascending id order")
     cap.foreach { case (clock, _) => require(clock.length == g.n,
       s"labelled search: clock has ${clock.length} entries for ${g.n} vertices") }
     new Labels(g, seeds.map(s => g.indexOf(s._1)).toArray, seeds.map(_._2).toArray,
-      targetFlags(g, targets), cap)
+      targetFlags(g, targets), cap, prune)
   }
+
+  /** A routing target as the pair order sees it, for the target prune of
+    * [[Sssp.labelled]]: its departure (a pair is valid when the target
+    * departs after the winning seed), its primary key (which does not
+    * depend on the seed) and its clock max(arr, dep). */
+  private[graft] final case class Goal(id: Long, dep: Long, primary: Double, clock: Long)
+
+  /** [[dijkstraCsr]]'s target prune over the CSR's dense ids: each seed's
+    * departure, and the goals the CSR holds, ascending by index (`at`),
+    * with their departure, primary key and clock. */
+  private[graph] final class Prune(val seedDep: Array[Long], val at: Array[Int],
+      val dep: Array[Long], val primary: Array[Double], val clock: Array[Long])
 
   /** Per-vertex output of one kernel run over the CSR's dense ids: the
     * winning seed's index (the seed count when none), the cost accumulated
     * from that seed (+∞ when none), and the canonical predecessor (−1 at a
     * seed). */
   private final class Labelling(val seed: Array[Int], val cost: Array[Double],
-      val pred: Array[Int])
+      val pred: Array[Int]) {
+    /** Vertices the run settled (the label-correcting run: vertices it
+      * dequeued, each counted once) — the run's work count. */
+    var settled = 0
+  }
 
   /** The label order: (cost + w(seed), seed index), then cost. Within one
     * seed the key is a monotone function of the cost, so the order there
@@ -436,9 +461,15 @@ object ShortestPaths {
 
   /** Fresh kernel state for `walk.length` seeds: the extended walk array
     * ([[labelBelow]]) and every vertex unreached. */
-  private def unreached(n: Int, walk: Array[Double]): (Array[Double], Labelling) =
-    (java.util.Arrays.copyOf(walk, walk.length + 1), new Labelling(
-      Array.fill(n)(walk.length), Array.fill(n)(Double.PositiveInfinity), Array.fill(n)(-1)))
+  private def unreached(n: Int, walk: Array[Double]): (Array[Double], Labelling) = {
+    val seed = new Array[Int](n)
+    val cost = new Array[Double](n)
+    val pred = new Array[Int](n)
+    java.util.Arrays.fill(seed, walk.length)
+    java.util.Arrays.fill(cost, Double.PositiveInfinity)
+    java.util.Arrays.fill(pred, -1)
+    (java.util.Arrays.copyOf(walk, walk.length + 1), new Labelling(seed, cost, pred))
+  }
 
   /** The one entry every in-heap search goes through: settle-once
     * [[dijkstraCsr]], or the exact label-correcting [[spfaCsr]] on graphs
@@ -447,9 +478,10 @@ object ShortestPaths {
     * pred repair. `seeds(i)` is seed i's CSR index, −1 for a seed absent
     * from the CSR or left out of this run; `walk(i)` its walk seconds. */
   private def search(g: Csr, seeds: Array[Int], walk: Array[Double],
-      stop: Option[(Array[Boolean], Int)], cap: Option[(Array[Long], Long)]): Labelling =
+      stop: Option[(Array[Boolean], Int)], cap: Option[(Array[Long], Long)],
+      prune: Option[Prune]): Labelling =
     if (g.hasNegative) acyclicPreds(spfaCsr(g, seeds, walk, _))
-    else acyclicPreds(dijkstraCsr(g, seeds, walk, stop, cap, _))
+    else acyclicPreds(dijkstraCsr(g, seeds, walk, stop, cap, prune, _))
 
   /** Guard against the zero-total-cycle pathology (r15, found by the
     * dirty-hub measurement): on a feed whose optimal-path structure
@@ -563,11 +595,18 @@ object ShortestPaths {
     * sources whose cost + w differ only in the last ulp could compare
     * otherwise than the router's full key does.
     *
-    * The search stops once every in-graph target is settled (see
-    * [[dijkstraCsr]]); read only target rows and their paths. */
+    * The search stops once every in-graph target that can still win is
+    * settled (see [[dijkstraCsr]]: with the router's target prune, a
+    * target whose primary key exceeds a settled valid pair's stops being
+    * waited for); read only target rows and their paths. A target the
+    * prune gave up before it settled reads as unreached. */
   final class Labels private[graph] (g: Csr, seeds: Array[Int], walk: Array[Double],
-      stop: (Array[Boolean], Int), cap: Option[(Array[Long], Long)]) {
-    private val l = search(g, seeds, walk, Some(stop), cap)
+      stop: (Array[Boolean], Int), cap: Option[(Array[Long], Long)],
+      prune: Option[Prune]) {
+    private val l = search(g, seeds, walk, Some(stop), cap, prune)
+
+    /** How many vertices this search settled: its work count. */
+    private[graft] def settled: Int = l.settled
 
     /** (seed index, cost from that seed) of `target`'s label; None when the
       * CSR does not hold it or no seed reaches it. */
@@ -583,10 +622,10 @@ object ShortestPaths {
     }
 
     /** The same search (seed indices, walks and cap kept) from the seeds
-      * `keep` admits, bounded by `target` alone. */
+      * `keep` admits, bounded by `target` alone, without the prune. */
     def reseeded(keep: Int => Boolean, target: Long): Labels =
       new Labels(g, Array.tabulate(seeds.length)(i => if (keep(i)) seeds(i) else -1),
-        walk, targetFlags(g, Seq(target)), cap)
+        walk, targetFlags(g, Seq(target)), cap, None)
   }
 
   /** Compressed-sparse-row image of the edge list over a dense Int vertex
@@ -689,10 +728,23 @@ object ShortestPaths {
     * horizon cap, whose exactness argument is on
     * [[graft.api.RoutingEngine]]'s `capAnchor`. A target the seeds cannot
     * reach then floods only the horizon's share of the day instead of the
-    * rest of the service day. */
+    * rest of the service day.
+    *
+    * `prune` (the router's, with the target stop) is the pair order's
+    * target pruning (Connection Scan's, Dibbelt et al., SEA 2013): its
+    * primary key does not depend on the seed, so once a target settles
+    * whose winning seed forms a valid pair (the target departs after the
+    * seed), with primary key P*, no target whose primary key exceeds P*
+    * can win. The search stops waiting for those (ties are kept: they may
+    * still win on the later keys), and lowers the anchor to the greatest
+    * clock max(arr, dep) over the targets whose primary key is ≤ P*, never
+    * above the anchor it had — `capAnchor`'s argument applied to the
+    * targets that can still win, so each keeps its exact label and
+    * canonical path. A pruned target that has not settled when the search
+    * stops reads as unreached. Seeds' departures come from `prune`. */
   private def dijkstraCsr(g: Csr, seeds: Array[Int], walk: Array[Double],
       targetStop: Option[(Array[Boolean], Int)], cap: Option[(Array[Long], Long)],
-      canonicalTies: Boolean): Labelling = {
+      prune: Option[Prune], canonicalTies: Boolean): Labelling = {
     val n = g.n
     val (w, out) = unreached(n, walk)
     val (seed, cost, pred) = (out.seed, out.cost, out.pred)
@@ -700,13 +752,19 @@ object ShortestPaths {
     var remaining = targetStop.map(_._2).getOrElse(0)
     val bounded = tFlags != null
     val clock = cap.map(_._1).orNull
-    val anchor = cap.fold(Long.MaxValue)(_._2)
+    var anchor = cap.fold(Long.MaxValue)(_._2)
+    val pr = prune.orNull
+    // P*: the least primary key of a settled target with a valid winner.
+    // With a prune, `remaining` counts the unsettled targets whose primary
+    // key is ≤ P*.
+    var bestPrimary = Double.PositiveInfinity
     // Indexed binary heap of vertices ordered by their current labels: a
     // relaxation sifts the vertex up in place, so each vertex is queued at
     // most once and popped once (labels change seed as rival waves
     // arrive; lazy deletion popped ~3 stale entries per settled vertex).
     // pos(v): heap slot, −1 never queued, −2 settled.
-    val pos = Array.fill(n)(-1)
+    val pos = new Array[Int](n)
+    java.util.Arrays.fill(pos, -1)
     var heap = new Array[Int](1024)
     var size = 0
     def below(a: Int, b: Int): Boolean = labelBelow(w, cost(a), seed(a), cost(b), seed(b))
@@ -737,6 +795,7 @@ object ShortestPaths {
     while (size > 0 && (!bounded || remaining > 0 || (done >= 0 && !below(done, heap(0))))) {
       val v = heap(0)
       pos(v) = -2
+      out.settled += 1
       size -= 1
       if (size > 0) { // sift the last leaf down from the root
         val last = heap(size)
@@ -753,7 +812,24 @@ object ShortestPaths {
         place(last, i)
       }
       if (bounded && tFlags(v)) {
-        remaining -= 1
+        val k = if (pr == null) -1 else java.util.Arrays.binarySearch(pr.at, v)
+        if (k < 0 || pr.primary(k) <= bestPrimary) remaining -= 1
+        // a valid pair below P*: it becomes P*, the targets above it stop
+        // being waited for and the anchor falls to the kept targets' clocks
+        if (k >= 0 && pr.primary(k) < bestPrimary && pr.dep(k) > pr.seedDep(seed(v))) {
+          bestPrimary = pr.primary(k)
+          remaining = 0
+          var top = Long.MinValue
+          var i = 0
+          while (i < pr.at.length) {
+            if (pr.primary(i) <= bestPrimary) {
+              if (pos(pr.at(i)) != -2) remaining += 1
+              top = math.max(top, pr.clock(i))
+            }
+            i += 1
+          }
+          anchor = math.min(anchor, top)
+        }
         if (remaining == 0) done = v
       }
       val vs = seed(v); val vc = cost(v)
@@ -778,6 +854,10 @@ object ShortestPaths {
         }
         j += 1
       }
+    }
+    // a pruned target that never settled may hold a tentative label
+    if (pr != null) pr.at.foreach { t =>
+      if (pos(t) != -2) { seed(t) = walk.length; cost(t) = Double.PositiveInfinity; pred(t) = -1 }
     }
     out
   }
@@ -845,6 +925,7 @@ object ShortestPaths {
       size -= 1
       inQueue(v) = false
       dequeues(v) += 1
+      if (dequeues(v) == 1) out.settled += 1
       if (dequeues(v) > n)
         throw new NegativeCycleException("no SSSP fixpoint: negative-total " +
           s"cycle reachable from the seeds (vertex ${g.ids(v)} relaxed more than $n times)")

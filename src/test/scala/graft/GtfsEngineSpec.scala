@@ -417,13 +417,17 @@ class GtfsEngineSpec extends SparkSpec {
     // haversine decides membership everywhere.
     withEngine(new RoutingEngine(gtfs)) { eng =>
       val g = eng.projected(java.sql.Date.valueOf(Day), 1.0)
-      val viaDriverDim = eng.findNearStops(Day, 44.6200, 10.9000, 300)
-        .as[String].collect().toSet
+      val driverFrame = eng.findNearStops(Day, 44.6200, 10.9000, 300)
+      val viaDriverDim = driverFrame.as[String].collect().toSet
       assert(g.localStopDim.isDefined, "demo feed must fit the stop-dim bound")
-      val viaDistributed = g.stopDim
+      val distributedFrame = g.stopDim
         .filter(graft.functions.SpatialFunctions.withinRadius(
           col("lat"), col("lon"), 44.6200, 10.9000, 300))
-        .select("stop_name").distinct().as[String].collect().toSet
+        .select("stop_name").distinct()
+      assert(driverFrame.schema == distributedFrame.schema,
+        s"driver ${driverFrame.schema.treeString} vs distributed " +
+          distributedFrame.schema.treeString)
+      val viaDistributed = distributedFrame.as[String].collect().toSet
       g.localIndex // resolve the regime: the search still reads the driver dim
       val viaIndex = eng.findNearStops(Day, 44.6200, 10.9000, 300)
         .as[String].collect().toSet

@@ -10,10 +10,13 @@ import graft.model.GtfsTables
   * hop): tie-heavy random grids with non-zero dwells, requests whose
   * origin and destination share stops (the `t_dep > s_dep` second run), a
   * trip that arrives before the horizon anchor and departs after it, a
-  * feed with a row that arrives after it departs (uncapped search) and a
-  * negative-weight feed (uncapped label-correcting search). The grid's
-  * first requests also pin the distributed regime's staged flow to the
-  * same oracle. */
+  * feed with a row that arrives after it departs (uncapped search), a
+  * negative-weight feed (uncapped label-correcting search), and the
+  * search's target prune (an unreachable early destination stoptime, a
+  * tie on the winning primary key, an invalid self pair below it). The
+  * grid's first requests also pin the distributed regime's staged flow to
+  * the same oracle, and a warm-routing-shaped request pins the search's
+  * work count. */
 class LabelledRoutingSpec extends graft.SparkSpec {
   import spark.implicits._
 
@@ -25,10 +28,11 @@ class LabelledRoutingSpec extends graft.SparkSpec {
   private final case class Req(srcNames: Seq[String], tgtNames: Seq[String],
       from: Option[(Double, Double)], to: Option[(Double, Double)], time: String)
 
-  /** Engine and oracle itineraries of one request, as segment values;
-    * the oracle reads the engine's projection (edges and node records). */
-  private final class Both(eng: RoutingEngine) {
-    private val g = eng.projected(java.sql.Date.valueOf(Day), 1.0)
+  /** Engine and oracle itineraries of one request at walking `speed`, as
+    * segment values; the oracle reads the engine's projection (edges and
+    * node records). */
+  private final class Both(eng: RoutingEngine, speed: Double = 1.0) {
+    private val g = eng.projected(java.sql.Date.valueOf(Day), speed)
     private val ix = g.localIndex.getOrElse(fail("fixture must route in the local regime"))
     private val edges = g.weightedEdges.as[(Long, Long, Double)].collect().toSeq
 
@@ -38,11 +42,11 @@ class LabelledRoutingSpec extends graft.SparkSpec {
       val got = ((r.from, r.to) match {
         case (Some((oLa, oLo)), Some((dLa, dLo))) =>
           via.routingBetweenTwoPoints(Day, oLa, oLo, dLa, dLo, r.srcNames, r.tgtNames,
-            1.0, r.time, Horizon)
-        case _ => via.routing(Day, 1.0, r.time, r.srcNames.head, r.tgtNames.head, Horizon)
+            speed, r.time, Horizon)
+        case _ => via.routing(Day, speed, r.time, r.srcNames.head, r.tgtNames.head, Horizon)
       }).collect().map(_.toSeq).toSeq
       val (srcs, tgts) = PerSourceRanking.candidates(ix.recs.toSeq, r.srcNames, r.from,
-        r.tgtNames, r.to, 1.0, parseHms(r.time), Horizon)
+        r.tgtNames, r.to, speed, parseHms(r.time), Horizon)
       val path = PerSourceRanking.best(edges, srcs, tgts)
       val want = if (path.size < 2) Nil
         else RoutingEngine.segmentRows(ix.get, path).map(_.productIterator.toSeq)
@@ -162,6 +166,107 @@ class LabelledRoutingSpec extends graft.SparkSpec {
         assert(engD.projected(java.sql.Date.valueOf(Day), 1.0).localIndex.isEmpty &&
           engD.evidence.cappedCsrServed.get() == 0L, "the staged flow did not route")
       }
+    }
+  }
+
+  /** Start → End for the target prune. TA reaches End at 14:30 and is the
+    * first target to settle. TE passes End at 14:10, before any source can
+    * get there: unreachable, with a primary key below every other target's.
+    * TB arrives at End at 14:20 and dwells until 14:45; TC reaches Near2,
+    * 100 m from End, at 14:38 and changes to TB there (cost 2500), which
+    * beats changing from TA at End (cost 2700). Near1 and Near2 arrive
+    * after 14:30, so only a cap that keeps TB's departure clock keeps the
+    * winning path. */
+  private def earlyDestination: GtfsTables = tables(
+    Seq(("R1", "1", "Start-End"), ("R2", "2", "FarB-Beyond"), ("R3", "3", "Start-Near2"),
+      ("R4", "4", "FarE-Beyond")),
+    Seq(("R1", "TA"), ("R2", "TB"), ("R3", "TC"), ("R4", "TE")),
+    Seq(("SA", "Start", 44.6000, 10.9000), ("SM1", "Near1", 44.6100, 10.9000),
+      ("SM2", "Near2", 44.6309, 10.9100), ("ST", "End", 44.6300, 10.9100),
+      ("SF", "FarB", 44.6500, 10.9500), ("SE", "FarE", 44.6600, 10.9600),
+      ("SX", "Beyond", 44.6700, 10.9700)),
+    Seq(("TA", "14:00:00", "14:00:00", "SA", 1), ("TA", "14:30:00", "14:30:00", "ST", 2),
+      ("TC", "14:05:00", "14:05:00", "SA", 1), ("TC", "14:36:00", "14:36:00", "SM1", 2),
+      ("TC", "14:38:00", "14:38:00", "SM2", 3),
+      ("TB", "14:10:00", "14:10:00", "SF", 1), ("TB", "14:20:00", "14:45:00", "ST", 2),
+      ("TB", "14:55:00", "14:55:00", "SX", 3),
+      ("TE", "14:00:00", "14:00:00", "SE", 1), ("TE", "14:10:00", "14:10:00", "ST", 2),
+      ("TE", "14:20:00", "14:20:00", "SX", 3)))
+
+  test("target prune: an unreachable early destination stoptime and a dwelling winner") {
+    val req = Req(Seq("Start"), Seq("End"), None, None, "13:50:00")
+    val (got, want) = withEngine(new RoutingEngine(earlyDestination))(new Both(_)(req))
+    assert(want.map(_(8)) == Seq("TC", "TC", "TB"), s"fixture drifted: oracle=$want")
+    assert(got == want, s"engine=$got\noracle=$want")
+  }
+
+  test("target prune: a target tied on the winning primary key wins on cost after settling") {
+    // From Start (the walk origin, so no start walk): TA reaches EndA at
+    // 14:30, TB leaves a minute later and reaches EndB at 14:32. EndB is
+    // 120 s of walking nearer the destination at the chosen speed, so both
+    // primary keys tie; TA's target settles first (cost 1800 < 1860), TB's
+    // wins on cost + walks (1860 + 280 < 1800 + 400, near enough).
+    import graft.functions.SpatialFunctions.haversineMetersScalar
+    val (la, lo) = (44.6300, 10.9100)
+    val (endA, endB) = ((44.6345, 10.9100), (44.62685, 10.9100))
+    def meters(p: (Double, Double)) = haversineMetersScalar(p._1, p._2, la, lo)
+    val speed = (meters(endA) - meters(endB)) / 120.0
+    assert(parseHms("14:30:00") + meters(endA) / speed ==
+      parseHms("14:32:00") + meters(endB) / speed, "fixture drifted: the primary keys differ")
+    val feed = tables(
+      Seq(("R1", "1", "Start-EndA"), ("R2", "2", "Start-EndB")),
+      Seq(("R1", "TA"), ("R2", "TB")),
+      Seq(("SA", "Start", 44.6000, 10.9000), ("SEA", "EndA", endA._1, endA._2),
+        ("SEB", "EndB", endB._1, endB._2)),
+      Seq(("TA", "14:00:00", "14:00:00", "SA", 1), ("TA", "14:30:00", "14:30:00", "SEA", 2),
+        ("TB", "14:01:00", "14:01:00", "SA", 1), ("TB", "14:32:00", "14:32:00", "SEB", 2)))
+    val req = Req(Seq("Start"), Seq("EndA", "EndB"), Some((44.6000, 10.9000)), Some((la, lo)),
+      "13:50:00")
+    val (got, want) = withEngine(new RoutingEngine(feed))(new Both(_, speed)(req))
+    assert(want.map(_(1)) == Seq("TB"), s"fixture drifted: oracle=$want")
+    assert(got == want, s"engine=$got\noracle=$want")
+  }
+
+  test("target prune: a self pair below the winner's primary key is not a valid winner") {
+    // TB's Mid stoptime is a source and a target; its self pair settles
+    // first but fails t_dep > s_dep (the second run finds no other source
+    // for it), and TA's End stoptime, with a higher primary key, wins
+    val feed = tables(
+      Seq(("R1", "1", "Start-End"), ("R2", "2", "Mid-Far")),
+      Seq(("R1", "TA"), ("R2", "TB")),
+      Seq(("SA", "Start", 44.6000, 10.9000), ("SM", "Mid", 44.6100, 10.9000),
+        ("ST", "End", 44.6300, 10.9100), ("SF", "Far", 44.6500, 10.9500)),
+      Seq(("TA", "14:00:00", "14:00:00", "SA", 1), ("TA", "14:30:00", "14:30:00", "ST", 2),
+        ("TB", "14:08:00", "14:10:00", "SM", 1), ("TB", "14:40:00", "14:40:00", "SF", 2)))
+    val req = Req(Seq("Start", "Mid"), Seq("Mid", "End"), Some((44.6050, 10.9000)),
+      Some((44.6200, 10.9050)), "13:40:00")
+    val (got, want) = withEngine(new RoutingEngine(feed))(new Both(_)(req))
+    assert(want.map(_(1)) == Seq("TA"), s"fixture drifted: oracle=$want")
+    assert(got == want, s"engine=$got\noracle=$want")
+  }
+
+  test("a warm grid request settles under a third of its horizon window") {
+    // warm_routing's feed shape: 16 × 16 stops, a route each way along
+    // every row and column, 25 trips per route
+    val feed = graft.etl.SyntheticGtfs.grid(spark, 16, 16, 25, baseSecs = 5 * 3600,
+      headwaySecs = 2300, hopSecs = 90, directions = 2, rowStepDeg = 0.0032)
+    withEngine(new RoutingEngine(feed)) { eng =>
+      def point(r: Int, c: Int) = (44.5 + r * 0.0032, 10.8 + c * 0.01)
+      def near(p: (Double, Double)) =
+        eng.findNearStops(Day, p._1, p._2, 300).collect().map(_.getString(0)).toSeq
+      val (from, to, time) = (point(3, 2), point(11, 12), "08:00:00")
+      val req = Req(near(from), near(to), Some(from), Some(to), time)
+      val (got, want) = new Both(eng)(req)
+      assert(want.nonEmpty && got == want, s"engine=$got\noracle=$want")
+      val labels = eng.localSearchBetweenTwoPoints(Day, from._1, from._2, to._1, to._2,
+        req.srcNames, req.tgtNames, 1.0, time, Horizon)
+        .getOrElse(fail("the request must search in the local regime"))
+      val t0 = parseHms(time)
+      val window = eng.projected(java.sql.Date.valueOf(Day), 1.0).localIndex.get.recs
+        .count(r => r.arr >= t0 && r.arr <= t0 + Horizon * 3600L)
+      info(s"settled ${labels.settled} of a $window-stoptime horizon window")
+      assert(labels.settled > 0 && labels.settled * 3 < window,
+        s"settled ${labels.settled} of a $window-stoptime horizon window")
     }
   }
 

@@ -113,6 +113,9 @@ class SegmentFrameSpec extends graft.SparkSpec {
       assert(jobs("findNearStops") == 0, s"Spark jobs per call: $jobs")
       assert(first == Seq("Gamma", "Gamma Due"))
       assert(again == first)
+      val schema = engine.findNearStops(Day, 44.6200, 10.9000, 300).schema
+      assert(schema == StructType(Seq(StructField("stop_name", StringType, nullable = true))),
+        s"near-stop schema: ${schema.treeString}")
     }
   }
 
