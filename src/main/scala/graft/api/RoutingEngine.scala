@@ -1,9 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.PlannedFrameBridge
 import graft.model.GtfsTables
 import graft.etl.GraphBuilder
 import graft.projection.TimeExpandedGraph
@@ -27,9 +28,10 @@ final case class JourneySummary(segments: DataFrame, changes: Long,
 /** One labeled itinerary segment. Both routing branches end by assembling
   * these from driver-resident node records (the local index, or the bounded
   * per-path collect), so the routing result is driver-side FIRST and a
-  * DataFrame second — `journey` reads the rows directly, and the public
-  * routing frames wrap them in a LocalRelation via `segmentsDf`, which
-  * collects without a Spark job. */
+  * DataFrame second — `journey` reads the rows directly, and `segmentsDf`
+  * hands the public routing frames over as a LocalRelation frame planned
+  * in advance, which collects without a Spark job, an optimizer pass or
+  * generated code. */
 private[api] final case class Seg(hop: Int, trip: String, departure: String,
     line: String, startingStopName: String, startingStopId: String,
     startLat: Double, startLon: Double, nextTrip: String, nextStop: String,
@@ -115,13 +117,12 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     val g = projected(day(date), speed)
     g.localStopDim match {
       case Some(arr) =>
-        import scala.jdk.CollectionConverters._
         val names = arr.iterator.filter { case (_, la, lo) =>
           graft.functions.SpatialFunctions.haversineMetersScalar(la, lo, lat, lon) < radius
         }.map(_._1).filter(_ != null) // distributed distinct() tolerated null names; so must we
           .toSet.toSeq.sorted
-        // a constant schema spares the per-call reflective encoder, as in segmentsDf
-        spark.createDataFrame(names.map(Row(_)).asJava, RoutingEngine.NearStopSchema)
+        // a frame planned in advance, as segmentsDf's
+        RoutingEngine.NearStopFrames.frame(spark, names.map(Tuple1(_)))
       case None =>
         g.stopDim
           // bbox + exact haversine: the box predicates prune a columnar
@@ -290,9 +291,9 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
   }
 
   /** Local regime: SSSP, pair ranking, and segment labeling all run over
-    * driver-resident state, and the segment DataFrame is a LocalRelation
-    * — a warm request runs zero Spark jobs. The SSSP is [[localSearch]];
-    * ranking = [[bestPath]]. */
+    * driver-resident state, and the segment DataFrame is planned in
+    * advance over a LocalRelation ([[segmentsDf]]) — a warm request runs
+    * zero Spark jobs. The SSSP is [[localSearch]]; ranking = [[bestPath]]. */
   private def routeLocal(g: TimeExpandedGraph, ix: graft.projection.LocalProjection,
       c: Candidates): Seq[Seg] = {
     val path = bestPath(localSearch(g, c), c.srcs, c.tgts)
@@ -534,15 +535,15 @@ class RoutingEngine(val gtfs: GtfsTables, walkRadiusMeters: Double = 300.0,
     RoutingEngine.segmentRows(byId.get, path)
   }
 
-  /** Driver-side segment rows → the public routing DataFrame shape. The
-    * rows are hop-ordered by construction and a LocalRelation keeps row
-    * order on collect, so no sort runs; the constant schema spares the
-    * per-call reflective product encoder. Collecting the frame (or a
-    * filter/projection of it) launches no Spark job. */
-  private def segmentsDf(rows: Seq[Seg]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.map(Row.fromTuple).asJava, RoutingEngine.SegmentSchema)
-  }
+  /** Driver-side segment rows → the public routing DataFrame shape, a
+    * frame planned in advance over a LocalRelation
+    * ([[PlannedFrameBridge.Shape]]): its collect runs no analysis,
+    * optimizer, planner or code generation. The rows are hop-ordered by
+    * construction and the frame keeps row order on collect, so no sort
+    * runs. Collecting the frame (or a filter/projection of it) launches no
+    * Spark job. */
+  private def segmentsDf(rows: Seq[Seg]): DataFrame =
+    RoutingEngine.SegmentFrames.frame(spark, rows)
 
   /** Count of distinct stops served on a date (`main.py:186-191`). */
   def numberOfStops(date: String, speed: Double = 1.0): Long =
@@ -723,6 +724,9 @@ object RoutingEngine {
   private[api] val NearStopSchema: StructType =
     StructType(Seq(StructField("stop_name", StringType)))
 
+  /** `findNearStops`' driver-built frames, planned in advance. */
+  private val NearStopFrames = new PlannedFrameBridge.Shape(NearStopSchema)
+
   /** Schema of every routing frame (`routing`, `routingBetweenTwoPoints`,
     * `JourneySummary.segments`): [[Seg]]'s fields in order — `hop` and the
     * coordinates non-null, the labels nullable. */
@@ -735,6 +739,9 @@ object RoutingEngine {
       label("next_trip"), label("next_stop"), label("next_stop_id"),
       coord("next_lat"), coord("next_lon"), label("next_line"), label("arrival")))
   }
+
+  /** Every routing frame, planned in advance. */
+  private val SegmentFrames = new PlannedFrameBridge.Shape(SegmentSchema)
 
   /** Path → labeled segment rows from any id→node resolver (local index
     * or a bounded per-path collect); hop `i + 1` for the i-th consecutive

@@ -386,28 +386,18 @@ object ShortestPaths {
     * from the CSR has no entry. */
   private def computeOnCsr(g: Csr, sources: Set[Long],
       targets: Option[Set[Long]]): Map[Long, (Array[Double], Array[Int])] = {
-    val stop = targets.map(targetFlags(g, _))
+    val stop = targets.map(targetIndices(g, _))
     sources.toSeq.sorted.flatMap { src =>
       val si = g.indexOf(src)
       if (si < 0) None
-      else {
-        val l = search(g, Array(si), Array(0.0), stop, None, None)
-        Some(src -> ((l.cost, l.pred)))
-      }
+      else Some(src -> search(g, Array(si), Array(0.0), stop, None, None).dense(g.n))
     }.toMap
   }
 
-  /** The target-settle stop of a bounded search: flags over the CSR's dense
-    * ids and the count of distinct in-graph targets. */
-  private def targetFlags(g: Csr, targets: Iterable[Long]): (Array[Boolean], Int) = {
-    val flags = new Array[Boolean](g.n)
-    var c = 0
-    targets.foreach { t =>
-      val ti = g.indexOf(t)
-      if (ti >= 0 && !flags(ti)) { flags(ti) = true; c += 1 }
-    }
-    (flags, c)
-  }
+  /** The target-settle stop of a bounded search: the distinct CSR indices
+    * of the in-graph targets. */
+  private def targetIndices(g: Csr, targets: Iterable[Long]): Array[Int] =
+    targets.iterator.map(g.indexOf).filter(_ >= 0).toArray.distinct
 
   /** One labelled multi-source search over an in-heap CSR, bounded by
     * `targets` — the routing kernel of both driver-side regimes (the local
@@ -421,7 +411,7 @@ object ShortestPaths {
     cap.foreach { case (clock, _) => require(clock.length == g.n,
       s"labelled search: clock has ${clock.length} entries for ${g.n} vertices") }
     new Labels(g, seeds.map(s => g.indexOf(s._1)).toArray, seeds.map(_._2).toArray,
-      targetFlags(g, targets), cap, prune)
+      targetIndices(g, targets), cap, prune)
   }
 
   /** A routing target as the pair order sees it, for the target prune of
@@ -436,22 +426,121 @@ object ShortestPaths {
   private[graph] final class Prune(val seedDep: Array[Long], val at: Array[Int],
       val dep: Array[Long], val primary: Array[Double], val clock: Array[Long])
 
-  /** Per-vertex output of one kernel run over the CSR's dense ids: the
-    * winning seed's index (the seed count when none), the cost accumulated
-    * from that seed (+∞ when none), and the canonical predecessor (−1 at a
-    * seed). */
-  private final class Labelling(val seed: Array[Int], val cost: Array[Double],
-      val pred: Array[Int]) {
-    /** Vertices the run settled (the label-correcting run: vertices it
-      * dequeued, each counted once) — the run's work count. */
-    var settled = 0
+  /** Output of one [[search]] over the CSR's dense ids, kept for the
+    * vertices the run labelled only (`at`, ascending): the winning seed's
+    * index, the cost accumulated from that seed (+∞ for a target the prune
+    * reset), and the canonical predecessor (−1 at a seed). Every other
+    * vertex is unreached. `settled` counts the vertices the run settled
+    * (the label-correcting run: vertices it dequeued, each counted once) —
+    * the run's work count. */
+  private[graph] final class Labelling(at: Array[Int], seedAt: Array[Int], costAt: Array[Double],
+      predAt: Array[Int], val settled: Int) {
+    /** (seed index, cost) of vertex `v`'s label; None when unreached. */
+    def label(v: Int): Option[(Int, Double)] = {
+      val k = java.util.Arrays.binarySearch(at, v)
+      if (k < 0 || costAt(k).isInfinity) None else Some((seedAt(k), costAt(k)))
+    }
+    def pred(v: Int): Int = {
+      val k = java.util.Arrays.binarySearch(at, v)
+      if (k < 0) -1 else predAt(k)
+    }
+    /** (cost, pred) over all `n` vertices: +∞ and −1 where unreached. */
+    def dense(n: Int): (Array[Double], Array[Int]) = {
+      val cost = new Array[Double](n)
+      val pred = new Array[Int](n)
+      java.util.Arrays.fill(cost, Double.PositiveInfinity)
+      java.util.Arrays.fill(pred, -1)
+      var k = 0
+      while (k < at.length) { cost(at(k)) = costAt(k); pred(at(k)) = predAt(k); k += 1 }
+      (cost, pred)
+    }
+  }
+
+  /** One thread's working state for the kernels over one CSR, n-sized and
+    * allocated once: every label unreached (seed 0, cost +∞, pred −1),
+    * every vertex unqueued (`pos` −1), unflagged and unmarked. A run
+    * records each vertex it labels in `touched` and [[clear]] restores
+    * exactly those, so a search costs what it touches, not n. An
+    * unreached vertex's seed is never read: its +∞ cost decides every
+    * [[labelBelow]] comparison, and only a run with a seed compares, so
+    * 0 indexes its walk array. */
+  private[graph] final class Scratch(n: Int) {
+    val seed = new Array[Int](n)
+    val cost = new Array[Double](n)
+    val pred = new Array[Int](n)
+    val pos = new Array[Int](n)
+    val flag = new Array[Boolean](n)
+    val mark = new Array[Byte](n)
+    java.util.Arrays.fill(cost, Double.PositiveInfinity)
+    java.util.Arrays.fill(pred, -1)
+    java.util.Arrays.fill(pos, -1)
+    private var list = new Array[Int](1024)
+    private var size = 0
+
+    /** Records `v` as labelled by this run; call once per vertex. */
+    def touch(v: Int): Unit = {
+      if (size == list.length) list = java.util.Arrays.copyOf(list, size * 2)
+      list(size) = v; size += 1
+    }
+
+    /** The zero-total-cycle check of [[acyclicPreds]] over the touched
+      * vertices: a pred chain starts at a labelled vertex and stays among
+      * them (a pred is a settled, so labelled, vertex), and every other
+      * vertex has pred −1. Colour-stamped chain walks: 1 on the current
+      * walk, 2 done; the marks are cleared on the way out. */
+    def predHasCycle: Boolean = {
+      var cycle = false
+      var i = 0
+      while (!cycle && i < size) {
+        val start = list(i)
+        if (mark(start) == 0) {
+          var v = start
+          while (v >= 0 && mark(v) == 0) { mark(v) = 1; v = pred(v) }
+          cycle = v >= 0 && mark(v) == 1
+          var u = start
+          while (u >= 0 && mark(u) == 1) { mark(u) = 2; u = pred(u) }
+        }
+        i += 1
+      }
+      i = 0
+      while (i < size) { mark(list(i)) = 0; i += 1 }
+      cycle
+    }
+
+    /** The touched vertices' labels, ascending by index. */
+    def snapshot(settled: Int): Labelling = {
+      val at = java.util.Arrays.copyOf(list, size)
+      java.util.Arrays.sort(at)
+      val seedAt = new Array[Int](size)
+      val costAt = new Array[Double](size)
+      val predAt = new Array[Int](size)
+      var k = 0
+      while (k < size) {
+        val v = at(k)
+        seedAt(k) = seed(v); costAt(k) = cost(v); predAt(k) = pred(v)
+        k += 1
+      }
+      new Labelling(at, seedAt, costAt, predAt, settled)
+    }
+
+    /** Back to the all-unreached state. */
+    def clear(): Unit = {
+      var i = 0
+      while (i < size) {
+        val v = list(i)
+        seed(v) = 0; cost(v) = Double.PositiveInfinity; pred(v) = -1; pos(v) = -1
+        i += 1
+      }
+      size = 0
+    }
   }
 
   /** The label order: (cost + w(seed), seed index), then cost. Within one
     * seed the key is a monotone function of the cost, so the order there
     * IS the cost order and a one-seed run is plain Dijkstra. `w` holds
-    * every seed's walk plus a trailing 0 for the unreached index, so the
-    * key is recomputed — bit-identically — instead of stored. */
+    * every seed's walk, so the key is recomputed — bit-identically —
+    * instead of stored; an unreached vertex (seed 0, cost +∞) compares
+    * above every label. */
   private def labelBelow(w: Array[Double], c1: Double, s1: Int, c2: Double, s2: Int): Boolean =
     if (s1 == s2) c1 < c2
     else {
@@ -459,29 +548,27 @@ object ShortestPaths {
       k1 < k2 || (k1 == k2 && s1 < s2)
     }
 
-  /** Fresh kernel state for `walk.length` seeds: the extended walk array
-    * ([[labelBelow]]) and every vertex unreached. */
-  private def unreached(n: Int, walk: Array[Double]): (Array[Double], Labelling) = {
-    val seed = new Array[Int](n)
-    val cost = new Array[Double](n)
-    val pred = new Array[Int](n)
-    java.util.Arrays.fill(seed, walk.length)
-    java.util.Arrays.fill(cost, Double.PositiveInfinity)
-    java.util.Arrays.fill(pred, -1)
-    (java.util.Arrays.copyOf(walk, walk.length + 1), new Labelling(seed, cost, pred))
-  }
-
   /** The one entry every in-heap search goes through: settle-once
     * [[dijkstraCsr]], or the exact label-correcting [[spfaCsr]] on graphs
     * with a negative weight (no settle invariant, so neither the target
     * stop nor the clock cap applies there), both under the zero-total-cycle
     * pred repair. `seeds(i)` is seed i's CSR index, −1 for a seed absent
-    * from the CSR or left out of this run; `walk(i)` its walk seconds. */
+    * from the CSR or left out of this run; `walk(i)` its walk seconds;
+    * `stop` the distinct in-graph target indices. The kernels run on the
+    * calling thread's [[Scratch]] of `g`, which the search leaves cleared:
+    * back-to-back and concurrent searches never see each other's labels. */
   private def search(g: Csr, seeds: Array[Int], walk: Array[Double],
-      stop: Option[(Array[Boolean], Int)], cap: Option[(Array[Long], Long)],
-      prune: Option[Prune]): Labelling =
-    if (g.hasNegative) acyclicPreds(spfaCsr(g, seeds, walk, _))
-    else acyclicPreds(dijkstraCsr(g, seeds, walk, stop, cap, prune, _))
+      stop: Option[Array[Int]], cap: Option[(Array[Long], Long)],
+      prune: Option[Prune]): Labelling = {
+    val s = g.scratch.get()
+    stop.foreach(_.foreach(s.flag(_) = true))
+    try acyclicPreds(s, if (g.hasNegative) spfaCsr(g, s, seeds, walk, _)
+      else dijkstraCsr(g, s, seeds, walk, stop, cap, prune, _))
+    finally {
+      stop.foreach(_.foreach(s.flag(_) = false))
+      s.clear()
+    }
+  }
 
   /** Guard against the zero-total-cycle pathology (r15, found by the
     * dirty-hub measurement): on a feed whose optimal-path structure
@@ -490,39 +577,23 @@ object ShortestPaths {
     * strictly advance around any cycle), the canonical equal-dist
     * smaller-pred tie-break is unsatisfiable as a tree — the per-vertex
     * minima themselves form a cycle, and every regime's path walk would
-    * spin on it. Detect in O(V) (color-stamped chain walks) and, only
-    * then, rerun the SAME search with STRICT-improvement pred updates
-    * only: labels are unchanged (tie-breaks never affect them) and the
+    * spin on it. Detect over the vertices the run labelled
+    * ([[Scratch.predHasCycle]]) and, only then, rerun the SAME search with
+    * STRICT-improvement pred updates only: labels are unchanged (tie-breaks never affect them) and the
     * strict pred graph is provably acyclic — setting pred(u)=v strictly
     * lowers u's label, so a pred cycle would telescope to a negative-total
     * cycle, which the run would have rejected. The strict tree is
     * deterministic (fixed relaxation order per regime) but not canonical
     * across regimes; acceptable because it engages only on feeds where the
     * canonical rule HAS no tree. */
-  private def acyclicPreds(run: Boolean => Labelling): Labelling = {
-    val first = run(true)
-    if (!predHasCycle(first.pred)) first else run(false)
-  }
-
-  private def predHasCycle(pred: Array[Int]): Boolean = {
-    val n = pred.length
-    val state = new Array[Byte](n) // 0 unvisited, 1 on current walk, 2 done
-    var i = 0
-    while (i < n) {
-      if (state(i) == 0) {
-        var v = i
-        while (v >= 0 && state(v) == 0) { state(v) = 1; v = pred(v) }
-        if (v >= 0 && state(v) == 1) return true
-        var u = i
-        while (u >= 0 && state(u) == 1) { state(u) = 2; u = pred(u) }
-      }
-      i += 1
-    }
-    false
+  private def acyclicPreds(s: Scratch, run: Boolean => Int): Labelling = {
+    val settled = run(true)
+    if (!s.predHasCycle) s.snapshot(settled)
+    else { s.clear(); s.snapshot(run(false)) }
   }
 
   /** Pred chain of CSR index `ti` as global ids, seed first. */
-  private def walkPreds(g: Csr, pred: Array[Int], ti: Int): List[Long] = {
+  private def walkPreds(g: Csr, pred: Int => Int, ti: Int): List[Long] = {
     var acc: List[Long] = Nil
     var v = ti
     var steps = 0
@@ -571,7 +642,7 @@ object ShortestPaths {
       (csr, state.get(source)) match {
         case (Some(g), Some((dist, pred))) =>
           val ti = g.indexOf(target)
-          if (ti < 0 || dist(ti).isInfinity) Nil else walkPreds(g, pred, ti)
+          if (ti < 0 || dist(ti).isInfinity) Nil else walkPreds(g, pred(_), ti)
         case _ => Nil
       }
   }
@@ -601,7 +672,7 @@ object ShortestPaths {
     * waited for); read only target rows and their paths. A target the
     * prune gave up before it settled reads as unreached. */
   final class Labels private[graph] (g: Csr, seeds: Array[Int], walk: Array[Double],
-      stop: (Array[Boolean], Int), cap: Option[(Array[Long], Long)],
+      stop: Array[Int], cap: Option[(Array[Long], Long)],
       prune: Option[Prune]) {
     private val l = search(g, seeds, walk, Some(stop), cap, prune)
 
@@ -612,20 +683,20 @@ object ShortestPaths {
       * CSR does not hold it or no seed reaches it. */
     def winner(target: Long): Option[(Int, Double)] = {
       val ti = g.indexOf(target)
-      if (ti < 0 || l.cost(ti).isInfinity) None else Some((l.seed(ti), l.cost(ti)))
+      if (ti < 0) None else l.label(ti)
     }
 
     /** The winner's path to `target`, seed first; Nil when unreached. */
     def path(target: Long): List[Long] = {
       val ti = g.indexOf(target)
-      if (ti < 0 || l.cost(ti).isInfinity) Nil else walkPreds(g, l.pred, ti)
+      if (ti < 0 || l.label(ti).isEmpty) Nil else walkPreds(g, l.pred, ti)
     }
 
     /** The same search (seed indices, walks and cap kept) from the seeds
       * `keep` admits, bounded by `target` alone, without the prune. */
     def reseeded(keep: Int => Boolean, target: Long): Labels =
       new Labels(g, Array.tabulate(seeds.length)(i => if (keep(i)) seeds(i) else -1),
-        walk, targetFlags(g, Seq(target)), cap, None)
+        walk, targetIndices(g, Seq(target)), cap, None)
   }
 
   /** Compressed-sparse-row image of the edge list over a dense Int vertex
@@ -646,6 +717,8 @@ object ShortestPaths {
       while (i < weights.length && weights(i) >= 0.0) i += 1
       i < weights.length
     }
+    /** Each routing thread's kernel state over this CSR ([[search]]). */
+    private[graph] val scratch: ThreadLocal[Scratch] = ThreadLocal.withInitial(() => new Scratch(n))
   }
 
   /** Thrown by the label-correcting in-heap regime when relaxation cannot
@@ -710,18 +783,21 @@ object ShortestPaths {
     (new Csr(ids, offsets, targets, weights), slots)
   }
 
-  /** The labelled Dijkstra over the CSR: an indexed binary heap of
-    * vertices ordered by [[labelBelow]]. Labels only grow along an edge
+  /** The labelled Dijkstra over the CSR, on the caller's cleared
+    * [[Scratch]] `s`, whose flags mark `targetStop`; it returns the settle
+    * count and leaves the labels in `s`. An indexed binary heap of
+    * vertices ordered by [[labelBelow]]: labels only grow along an edge
     * (weights ≥ 0 and float addition is monotone), so a popped label is
     * final.
     *
-    * `targetStop = Some((flags, count))` stops the search once `count`
-    * flagged vertices have been SETTLED (popped — each vertex is popped
-    * once, with its final label). On early stop, labels/preds are final
-    * for every settled vertex — in particular all flagged targets and
-    * their shortest-path ancestors (settled earlier by order) — while
-    * unsettled vertices may hold tentative labels; callers must read only
-    * target rows, which is the [[TargetRun]]/[[Labels]] contract.
+    * `targetStop = Some(targets)` (distinct CSR indices, flagged in `s`)
+    * stops the search once every one of them has been SETTLED (popped —
+    * each vertex is popped once, with its final label). On early stop,
+    * labels/preds are final for every settled vertex — in particular all
+    * flagged targets and their shortest-path ancestors (settled earlier by
+    * order) — while unsettled vertices may hold tentative labels; callers
+    * must read only target rows, which is the [[TargetRun]]/[[Labels]]
+    * contract.
     *
     * `cap = Some((clock, anchor))` relaxes into a vertex only when
     * clock(v) ≤ anchor (seeds are always placed): the local regime's
@@ -742,15 +818,14 @@ object ShortestPaths {
     * targets that can still win, so each keeps its exact label and
     * canonical path. A pruned target that has not settled when the search
     * stops reads as unreached. Seeds' departures come from `prune`. */
-  private def dijkstraCsr(g: Csr, seeds: Array[Int], walk: Array[Double],
-      targetStop: Option[(Array[Boolean], Int)], cap: Option[(Array[Long], Long)],
-      prune: Option[Prune], canonicalTies: Boolean): Labelling = {
-    val n = g.n
-    val (w, out) = unreached(n, walk)
-    val (seed, cost, pred) = (out.seed, out.cost, out.pred)
-    val tFlags = targetStop.map(_._1).orNull
-    var remaining = targetStop.map(_._2).getOrElse(0)
-    val bounded = tFlags != null
+  private def dijkstraCsr(g: Csr, s: Scratch, seeds: Array[Int], walk: Array[Double],
+      targetStop: Option[Array[Int]], cap: Option[(Array[Long], Long)],
+      prune: Option[Prune], canonicalTies: Boolean): Int = {
+    val (seed, cost, pred, pos) = (s.seed, s.cost, s.pred, s.pos)
+    val tFlags = s.flag
+    val bounded = targetStop.isDefined
+    var remaining = targetStop.fold(0)(_.length)
+    var settled = 0
     val clock = cap.map(_._1).orNull
     var anchor = cap.fold(Long.MaxValue)(_._2)
     val pr = prune.orNull
@@ -762,16 +837,16 @@ object ShortestPaths {
     // relaxation sifts the vertex up in place, so each vertex is queued at
     // most once and popped once (labels change seed as rival waves
     // arrive; lazy deletion popped ~3 stale entries per settled vertex).
-    // pos(v): heap slot, −1 never queued, −2 settled.
-    val pos = new Array[Int](n)
-    java.util.Arrays.fill(pos, -1)
+    // pos(v): heap slot, −1 never queued, −2 settled. A vertex is queued
+    // when it is first labelled: that is when the run touches it.
     var heap = new Array[Int](1024)
     var size = 0
-    def below(a: Int, b: Int): Boolean = labelBelow(w, cost(a), seed(a), cost(b), seed(b))
+    def below(a: Int, b: Int): Boolean = labelBelow(walk, cost(a), seed(a), cost(b), seed(b))
     def place(v: Int, at: Int): Unit = { heap(at) = v; pos(v) = at }
     def offer(v: Int): Unit = {
       var i = pos(v)
       if (i < 0) {
+        if (i == -1) s.touch(v)
         if (size == heap.length) heap = java.util.Arrays.copyOf(heap, size * 2)
         i = size; size += 1
       }
@@ -781,7 +856,7 @@ object ShortestPaths {
     var r = 0
     while (r < seeds.length) {
       val v = seeds(r)
-      if (v >= 0 && labelBelow(w, 0.0, r, cost(v), seed(v))) {
+      if (v >= 0 && labelBelow(walk, 0.0, r, cost(v), seed(v))) {
         seed(v) = r; cost(v) = 0.0; offer(v)
       }
       r += 1
@@ -795,7 +870,7 @@ object ShortestPaths {
     while (size > 0 && (!bounded || remaining > 0 || (done >= 0 && !below(done, heap(0))))) {
       val v = heap(0)
       pos(v) = -2
-      out.settled += 1
+      settled += 1
       size -= 1
       if (size > 0) { // sift the last leaf down from the root
         val last = heap(size)
@@ -839,7 +914,7 @@ object ShortestPaths {
         val u = g.targets(j)
         if (clock == null || clock(u) <= anchor) {
           val nc = vc + g.weights(j)
-          if (labelBelow(w, nc, vs, cost(u), seed(u))) {
+          if (labelBelow(walk, nc, vs, cost(u), seed(u))) {
             seed(u) = vs; cost(u) = nc; pred(u) = v
             offer(u)
           }
@@ -857,9 +932,9 @@ object ShortestPaths {
     }
     // a pruned target that never settled may hold a tentative label
     if (pr != null) pr.at.foreach { t =>
-      if (pos(t) != -2) { seed(t) = walk.length; cost(t) = Double.PositiveInfinity; pred(t) = -1 }
+      if (pos(t) != -2) { cost(t) = Double.PositiveInfinity; pred(t) = -1 }
     }
-    out
+    settled
   }
 
   /** Label-correcting fixpoint (SPFA — Bellman–Ford with a worklist) over
@@ -889,11 +964,11 @@ object ShortestPaths {
     * [[NegativeCycleException]] aborts (time-expanded projections are
     * DAGs in the event clock, so this is a data-corruption guard, not a
     * live path). */
-  private def spfaCsr(g: Csr, seeds: Array[Int], walk: Array[Double],
-      canonicalTies: Boolean): Labelling = {
+  private def spfaCsr(g: Csr, s: Scratch, seeds: Array[Int], walk: Array[Double],
+      canonicalTies: Boolean): Int = {
     val n = g.n
-    val (w, out) = unreached(n, walk)
-    val (seed, cost, pred) = (out.seed, out.cost, out.pred)
+    val (seed, cost, pred) = (s.seed, s.cost, s.pred)
+    var settled = 0
     val inQueue = new Array[Boolean](n)
     val dequeues = new Array[Int](n)
     var queue = new Array[Int](math.max(1024, math.min(n, 1 << 16)))
@@ -913,7 +988,8 @@ object ShortestPaths {
     var r = 0
     while (r < seeds.length) {
       val v = seeds(r)
-      if (v >= 0 && labelBelow(w, 0.0, r, cost(v), seed(v))) {
+      if (v >= 0 && labelBelow(walk, 0.0, r, cost(v), seed(v))) {
+        if (cost(v).isPosInfinity) s.touch(v)
         seed(v) = r; cost(v) = 0.0
         if (!inQueue(v)) enqueue(v)
       }
@@ -925,7 +1001,7 @@ object ShortestPaths {
       size -= 1
       inQueue(v) = false
       dequeues(v) += 1
-      if (dequeues(v) == 1) out.settled += 1
+      if (dequeues(v) == 1) settled += 1
       if (dequeues(v) > n)
         throw new NegativeCycleException("no SSSP fixpoint: negative-total " +
           s"cycle reachable from the seeds (vertex ${g.ids(v)} relaxed more than $n times)")
@@ -935,7 +1011,8 @@ object ShortestPaths {
       while (j < end) {
         val u = g.targets(j)
         val nc = vc + g.weights(j)
-        if (labelBelow(w, nc, vs, cost(u), seed(u))) {
+        if (labelBelow(walk, nc, vs, cost(u), seed(u))) {
+          if (cost(u).isPosInfinity) s.touch(u)
           seed(u) = vs; cost(u) = nc; pred(u) = v
           if (!inQueue(u)) enqueue(u)
         }
@@ -946,7 +1023,7 @@ object ShortestPaths {
         j += 1
       }
     }
-    out
+    settled
   }
 
   /** SSSP over an edge DataFrame (src: long, dst: long, weight: double),

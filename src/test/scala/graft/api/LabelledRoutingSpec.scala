@@ -28,6 +28,17 @@ class LabelledRoutingSpec extends graft.SparkSpec {
   private final case class Req(srcNames: Seq[String], tgtNames: Seq[String],
       from: Option[(Double, Double)], to: Option[(Double, Double)], time: String)
 
+  /** `eng`'s itinerary for one request at walking `speed`, as segment
+    * values: point to point when the request has walk origins, else stop
+    * to stop. */
+  private def routed(eng: RoutingEngine, r: Req, speed: Double = 1.0): Seq[Seq[Any]] =
+    ((r.from, r.to) match {
+      case (Some((oLa, oLo)), Some((dLa, dLo))) =>
+        eng.routingBetweenTwoPoints(Day, oLa, oLo, dLa, dLo, r.srcNames, r.tgtNames,
+          speed, r.time, Horizon)
+      case _ => eng.routing(Day, speed, r.time, r.srcNames.head, r.tgtNames.head, Horizon)
+    }).collect().map(_.toSeq).toSeq
+
   /** Engine and oracle itineraries of one request at walking `speed`, as
     * segment values; the oracle reads the engine's projection (edges and
     * node records). */
@@ -39,12 +50,7 @@ class LabelledRoutingSpec extends graft.SparkSpec {
     /** `via` routes the request (another regime's engine on the same
       * feed); the oracle always reads this engine's projection. */
     def apply(r: Req, via: RoutingEngine = eng): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      val got = ((r.from, r.to) match {
-        case (Some((oLa, oLo)), Some((dLa, dLo))) =>
-          via.routingBetweenTwoPoints(Day, oLa, oLo, dLa, dLo, r.srcNames, r.tgtNames,
-            speed, r.time, Horizon)
-        case _ => via.routing(Day, speed, r.time, r.srcNames.head, r.tgtNames.head, Horizon)
-      }).collect().map(_.toSeq).toSeq
+      val got = routed(via, r, speed)
       val (srcs, tgts) = PerSourceRanking.candidates(ix.recs.toSeq, r.srcNames, r.from,
         r.tgtNames, r.to, speed, parseHms(r.time), Horizon)
       val path = PerSourceRanking.best(edges, srcs, tgts)
@@ -243,6 +249,33 @@ class LabelledRoutingSpec extends graft.SparkSpec {
     val (got, want) = withEngine(new RoutingEngine(feed))(new Both(_)(req))
     assert(want.map(_(1)) == Seq("TA"), s"fixture drifted: oracle=$want")
     assert(got == want, s"engine=$got\noracle=$want")
+  }
+
+  test("back-to-back searches on one projection equal searches on fresh state") {
+    withEngine(new RoutingEngine(randomGrid(gridSeed, gridK, tripsPerRoute = 4))) { eng =>
+      // point to point, the search's settle count
+      def settled(r: Req): Option[Int] = for {
+        (oLa, oLo) <- r.from; (dLa, dLo) <- r.to
+        l <- eng.localSearchBetweenTwoPoints(Day, oLa, oLo, dLa, dLo, r.srcNames, r.tgtNames,
+          1.0, r.time, Horizon)
+      } yield l.settled
+      // a search keeps its working state per thread and projection: a new
+      // thread's first search starts from freshly allocated state
+      def onFreshThread[T](f: => T): T = {
+        var out: scala.util.Try[T] = scala.util.Failure(new IllegalStateException("not run"))
+        val t = new Thread(() => out = scala.util.Try(f))
+        t.start(); t.join()
+        out.get
+      }
+      val reqs = gridRequests(eng).take(30).toIndexedSeq
+      val backToBack = reqs.map(r => (routed(eng, r), settled(r)))
+      val fresh = reqs.map(r => (onFreshThread(routed(eng, r)), onFreshThread(settled(r))))
+      reqs.indices.foreach { i =>
+        assert(backToBack(i) == fresh(i), s"request $i (${reqs(i)})")
+      }
+      assert(backToBack.count(_._1.nonEmpty) >= 20 && backToBack.count(_._2.isDefined) >= 20,
+        "fixture drifted: too few routed point-to-point requests")
+    }
   }
 
   test("a warm grid request settles under a third of its horizon window") {

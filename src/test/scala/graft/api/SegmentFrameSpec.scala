@@ -1,9 +1,14 @@
 package graft.api
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{Callable, ConcurrentHashMap, CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.PlannedFrameBridge.PlannedScanExec
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import graft.projection.NodeRec
 
 /** Local-regime routing answers are driver-side: once the projection is
@@ -11,9 +16,15 @@ import graft.projection.NodeRec
   * `changeCount` over it — reaches the caller with no Spark job, rows in
   * hop order, under the same 15-column schema the product encoder used to
   * derive. The schema is pinned here literally, not read back from the
-  * engine, so a drift in either shows. */
+  * engine, so a drift in either shows. The frames arrive planned in
+  * advance (`PlannedFrameBridge`): the cases below pin that they are that
+  * plan, that it prints no rows, and that anything derived from them is
+  * planned as Spark plans any local relation. */
 class SegmentFrameSpec extends graft.SparkSpec {
   val Day = "2024-01-18"
+
+  val PinnedNearStopSchema: StructType =
+    StructType(Seq(StructField("stop_name", StringType, nullable = true)))
 
   val PinnedSchema: StructType = StructType(Seq(
     StructField("hop", IntegerType, nullable = false),
@@ -114,8 +125,7 @@ class SegmentFrameSpec extends graft.SparkSpec {
       assert(first == Seq("Gamma", "Gamma Due"))
       assert(again == first)
       val schema = engine.findNearStops(Day, 44.6200, 10.9000, 300).schema
-      assert(schema == StructType(Seq(StructField("stop_name", StringType, nullable = true))),
-        s"near-stop schema: ${schema.treeString}")
+      assert(schema == PinnedNearStopSchema, s"near-stop schema: ${schema.treeString}")
     }
   }
 
@@ -141,6 +151,118 @@ class SegmentFrameSpec extends graft.SparkSpec {
     // through the stop-dimension cache launched one job more
     assert(jobs("findNearStops") <= 6, s"Spark jobs per call: $jobs")
     assert(names == Seq("Gamma", "Gamma Due"))
+  }
+
+  private def stops(engine: RoutingEngine): DataFrame =
+    engine.routing(Day, 1.0, "14:00:00", "Alpha", "Epsilon")
+  private def points(engine: RoutingEngine): DataFrame =
+    engine.routingBetweenTwoPoints(Day, 44.6000, 10.9000, 44.6400, 10.9200,
+      Seq("Alpha"), Seq("Epsilon"), 1.0, "14:00:00")
+
+  test("routing frames behave as ordinary DataFrames") {
+    withEngine(new RoutingEngine(DemoGtfs.tables(spark))) { engine =>
+      val want = stops(engine).collect().toSeq // builds the projection (runs jobs)
+      val wantPoints = points(engine).collect().toSeq
+      assert(want.map(_.getInt(0)) == (1 to 5) && wantPoints.map(_.getInt(0)) == (1 to 5))
+      def hops(rows: Array[Row]) = rows.map(_.getInt(0)).toSeq
+      var filtered, taken = Seq.empty[Int]
+      var changes = -1L
+      var itinerary = ""
+      val jobs = jobsPerCall(Seq(
+        "filter" -> { () => filtered = hops(stops(engine).filter(col("hop") > 2).collect()) },
+        "take" -> { () => taken = hops(stops(engine).take(2)) },
+        "changeCount" -> { () => changes = engine.changeCount(stops(engine)) },
+        "formatItinerary" -> { () => itinerary = engine.formatItinerary(stops(engine)) }))
+      assert(jobs.values.forall(_ == 0), s"Spark jobs per call: $jobs")
+      assert(filtered == Seq(3, 4, 5) && taken == Seq(1, 2) && changes == 1L)
+      assert(itinerary.startsWith("start trip at 14:01:00 at station Alpha line: R1"))
+
+      assert(stops(engine).union(points(engine)).collect().toSeq == want ++ wantPoints)
+      // two frames of one shape carry fresh attributes: the join resolves
+      val (a, b) = (stops(engine), stops(engine))
+      val joined = a.join(b, a("hop") === b("hop")).select(a("hop"), b("trip"))
+        .orderBy("hop").collect()
+      assert(hops(joined) == (1 to 5) && joined.map(_.getString(1)).toSeq == want.map(_.getString(1)))
+
+      val cached = stops(engine).cache()
+      try {
+        assert(cached.storageLevel != StorageLevel.NONE)
+        assert(cached.count() == 5L && cached.collect().toSeq == want)
+      } finally cached.unpersist(blocking = true)
+      assert(cached.storageLevel == StorageLevel.NONE)
+
+      assert(stops(engine).rdd.count() == 5L)
+      assert(stops(engine).rdd.map(_.getInt(0)).collect().toSeq == (1 to 5))
+      assert(stops(engine).count() == 5L)
+    }
+  }
+
+  test("an empty near-stop frame and an empty route frame keep their schemas") {
+    withEngine(new RoutingEngine(DemoGtfs.tables(spark))) { engine =>
+      val near = engine.findNearStops(Day, 45.0, 11.5, 300) // no stop within 300 m
+      val route = engine.routing(Day, 1.0, "14:00:00", "Alpha", "Omega") // no such stop
+      assert(near.schema == PinnedNearStopSchema && route.schema == PinnedSchema)
+      assert(near.collect().isEmpty && near.count() == 0L && near.rdd.count() == 0L)
+      assert(route.collect().isEmpty && route.count() == 0L && route.rdd.count() == 0L)
+      assert(route.filter(col("hop") > 0).collect().isEmpty && engine.changeCount(route) == 0L)
+      assert(near.union(near).collect().isEmpty && route.take(1).isEmpty)
+    }
+  }
+
+  test("a routing frame's executed plan is the planned leaf, which prints no row data") {
+    withEngine(new RoutingEngine(DemoGtfs.tables(spark))) { engine =>
+      for (df <- Seq(stops(engine), points(engine),
+          engine.findNearStops(Day, 44.6200, 10.9000, 300))) {
+        val qe = df.queryExecution
+        val values = df.collect().flatMap(_.toSeq).collect { case v: String => v }.toSet
+        assert(values.nonEmpty)
+        assert(qe.executedPlan.isInstanceOf[PlannedScanExec], qe.executedPlan.treeString)
+        assert(qe.optimizedPlan.isInstanceOf[LocalRelation], qe.optimizedPlan.treeString)
+        assert(qe.analyzed eq qe.optimizedPlan)
+        val shown = Seq(qe.executedPlan.treeString(verbose = true), qe.simpleString)
+        shown.foreach(text => assert(!values.exists(text.contains), text))
+        // a derived frame is planned as Spark plans any local relation:
+        // the filter folds into a LocalRelation, scanned as usual
+        val derived = df.filter(col(df.columns.head).isNotNull).queryExecution
+        assert(derived.optimizedPlan.isInstanceOf[LocalRelation], derived.optimizedPlan.treeString)
+        assert(derived.executedPlan.isInstanceOf[LocalTableScanExec], derived.executedPlan.treeString)
+      }
+    }
+  }
+
+  test("eight threads building routing frames on one engine read the single-threaded answers") {
+    withEngine(new RoutingEngine(DemoGtfs.tables(spark))) { engine =>
+      val near: IndexedSeq[() => DataFrame] = IndexedSeq(
+        () => engine.findNearStops(Day, 44.6200, 10.9000, 300),
+        () => engine.findNearStops(Day, 44.6000, 10.9000, 300),
+        () => engine.findNearStops(Day, 44.6400, 10.9200, 300))
+      val routes: IndexedSeq[() => DataFrame] = IndexedSeq(() => stops(engine),
+        () => points(engine), () => engine.routing(Day, 1.0, "14:00:00", "Alpha", "Gamma"))
+      val wantNear = near.map(_().collect().toSeq) // builds the projection (runs jobs)
+      val wantRoutes = routes.map(_().collect().toSeq)
+      assert(wantNear.forall(_.nonEmpty) && wantRoutes.forall(_.nonEmpty), "fixture drifted")
+      val (threads, perThread) = (8, 50)
+      val pool = Executors.newFixedThreadPool(threads)
+      try {
+        val go = new CountDownLatch(1)
+        val results = (0 until threads).map { t =>
+          pool.submit(new Callable[Seq[String]] {
+            def call(): Seq[String] = {
+              go.await()
+              (0 until perThread).flatMap { i =>
+                val (k, j) = ((t + i) % near.size, (t + 2 * i) % routes.size)
+                val (gotNear, gotRoute) = (near(k)().collect().toSeq, routes(j)().collect().toSeq)
+                (if (gotNear == wantNear(k)) None else Some(s"thread $t call $i near $k: $gotNear")) ++
+                  (if (gotRoute == wantRoutes(j)) None else Some(s"thread $t call $i route $j: $gotRoute"))
+              }
+            }
+          })
+        }
+        go.countDown()
+        val wrong = results.flatMap(_.get(5, TimeUnit.MINUTES))
+        assert(wrong.isEmpty, wrong.take(5).mkString("\n"))
+      } finally pool.shutdownNow()
+    }
   }
 
   test("formatItinerary sorts a shuffled segment frame by hop on the driver") {
